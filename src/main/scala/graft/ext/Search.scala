@@ -331,12 +331,11 @@ object Search {
   def appendIndex(df: DataFrame, idCol: String, textCol: String,
                   dir: String, filesPerBucket: Int = 1): Unit = {
     val spark = df.sparkSession
-    // fail BEFORE staging: an append onto a legacy (pre-manifest)
-    // index would otherwise publish a manifest listing only the new
-    // segment and silently drop the old corpus from every query
+    // fail BEFORE staging: a dir holding no index manifest (never
+    // built, or a pre-manifest layout) has no segment list to extend
     require(graft.sources.Maintenance.manifestVersions(spark, dir).nonEmpty,
-      s"$dir is a pre-manifest index — rebuild it (buildIndex) before " +
-        "appending")
+      s"$dir holds no index manifest (not built, or a pre-manifest " +
+        "layout) — build it (buildIndex) before appending")
     val segs = graft.sources.Maintenance.listSegments(spark, dir)
     val nBuckets = statsOf(spark, segs)._3
     // positional layout detection from ONE parquet footer, read
@@ -346,19 +345,20 @@ object Search {
     // Scans SEGMENTS until one with postings is found: an empty first
     // segment (no bucket= dirs — an empty batch writes only _SUCCESS)
     // must not silently flip a positional index to non-positional for
-    // every doc appended after it.
+    // every doc appended after it. Bucket dirs are walked lazily, so
+    // the listing stops at the first one holding a parquet file.
     val conf = spark.sparkContext.hadoopConfiguration
     val positions = segs.iterator.flatMap { seg =>
       val root = new org.apache.hadoop.fs.Path(seg + "/postings")
       val fs = root.getFileSystem(conf)
       val dirs =
-        try fs.listStatus(root).toSeq
-        catch { case _: java.io.FileNotFoundException => Seq.empty }
+        try fs.listStatus(root).iterator
+        catch { case _: java.io.FileNotFoundException => Iterator.empty }
       dirs.filter(s => s.isDirectory &&
           s.getPath.getName.startsWith("bucket="))
-        .flatMap(d => fs.listStatus(d.getPath).toSeq
+        .flatMap(d => fs.listStatus(d.getPath).iterator
           .filter(_.getPath.getName.endsWith(".parquet")))
-        .headOption
+        .nextOption()
         .map { f =>
           val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile
@@ -409,15 +409,11 @@ object Search {
     if (all.length < minSegments) return
     val target = smallestK match {
       case Some(k) if k < all.length =>
-        // per-segment bytes from the MANIFEST (recorded at each commit
-        // since r15), not a recursive dir walk per segment per pass;
-        // a legacy segment missing from the map falls back to the walk
-        val recorded = M.readManifest(spark, dir).rows
+        // per-segment bytes from the MANIFEST (recorded at each
+        // commit), not a recursive dir walk per segment per pass
+        val recorded = M.readManifest(spark, dir).bytes
         val prefix = dir.replaceAll("/+$", "") + "/"
-        def bytesOf(s: String): Long =
-          recorded.getOrElse(s.stripPrefix(prefix),
-            M.dirBytes(spark, s))
-        all.sortBy(bytesOf).take(k)
+        all.sortBy(s => recorded(s.stripPrefix(prefix))).take(k)
       case _ => all
     }
     val (nDocsAll, sdlAll, nBuckets) = statsOf(spark, target)

@@ -2522,8 +2522,7 @@ object Interp {
           // watermark to equal the PINNED version — a base commit
           // after the read must not change what the frame answers.
           // Explicitly version-pinned reads stay plain scans.
-          if (ver.isEmpty && graft.sources.Maintenance.manifestVersions(
-            spark, litString(args(0).value)).nonEmpty) {
+          if (ver.isEmpty) {
             val (kdf, kv) = graft.sources.Maintenance.readKeyedPinned(
               spark, litString(args(0).value))
             new PTable(kdf, graft.types.TableMeta.empty,

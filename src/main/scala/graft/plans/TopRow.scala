@@ -74,10 +74,13 @@ case class TopRow(ordExpr: Expression, valExpr: Expression,
 
   override def eval(buf: TopRowBuf): Any = buf.value
 
+  // the projection reuses one output buffer, and UnsafeRow.getBytes
+  // hands that buffer back whenever it is exactly full — copy first so
+  // a later serialize never rewrites bytes already returned
   override def serialize(buf: TopRowBuf): Array[Byte] =
     if (buf.ord == null) Array.emptyByteArray
     else serProj(new GenericInternalRow(Array[Any](buf.ord, buf.value)))
-      .getBytes
+      .copy().getBytes
 
   override def deserialize(bytes: Array[Byte]): TopRowBuf = {
     val buf = new TopRowBuf

@@ -40,4 +40,30 @@ object Fs {
       .filter(s => s.isDirectory && s.getPath.getName.matches(pattern))
       .map(_.getPath.toString)
   }
+
+  /** Atomically publish the fully-written file `tmp` as `dst` UNLESS
+    * `dst` already exists; true when this call created `dst`. This is
+    * the commit point of every manifest publish and lease acquisition,
+    * so it must be rename-IF-ABSENT. HDFS rename fails when the
+    * destination exists; the LOCAL filesystem's does NOT
+    * (RawLocalFileSystem.rename is POSIX renameTo, which silently
+    * REPLACES the destination — two writers racing one version would
+    * both "succeed" and the second would erase the first's commit).
+    * On the `file` scheme the publish is therefore a HARD LINK:
+    * link(2) fails EEXIST atomically when `dst` is taken, and the
+    * linked file is already complete. `tmp` is always removed.
+    */
+  def publishIfAbsent(fs: FileSystem, tmp: Path, dst: Path): Boolean =
+    try {
+      if (fs.getScheme == "file")
+        try {
+          java.nio.file.Files.createLink(
+            java.nio.file.Paths.get(dst.toUri.getPath),
+            java.nio.file.Paths.get(tmp.toUri.getPath))
+          true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException => false
+        }
+      else fs.rename(tmp, dst)
+    } finally fs.delete(tmp, false)
 }

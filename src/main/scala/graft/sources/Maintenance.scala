@@ -67,7 +67,7 @@ object Maintenance {
   //   dir/
   //     b00003_g000000001/part-*.parquet   immutable bucket-generation dirs
   //     b00007_g000000002/...              (kb kept as a DATA column)
-  //     _manifests/v000000001.json         {"version":1,"buckets":{"3":"b00003_g000000001",...}}
+  //     _manifests/v000000001.json         {"format":1,...,"buckets":{"3":"b00003_g000000001",...}}
   //     _manifests/v000000002.json
   //
   // A commit writes NEW bucket-generation dirs (never visible to any
@@ -159,69 +159,51 @@ object Maintenance {
     fine % n
   }
 
-  /** A resolved table snapshot: manifest version → live dir per bucket.
-    * `keyCol`/`nBuckets` are TABLE METADATA recorded at writeKeyed time
-    * (empty/0 for versioned datasets and pre-metadata manifests) — a
-    * querier guessing a different bucket count would compute wrong
-    * bucket ids and silently prune away real rows, the same rule as
-    * the inverted index's n_buckets.
-    *
-    * r9 additions (all optional — pre-r9 manifests parse with the
-    * defaults and newly-written manifests stay readable by shape):
-    *  - `schemaDdl`: the snapshot's schema as Spark DDL, so a legally
-    *    EMPTY snapshot stays self-describing after vacuum GCs every
-    *    prior generation (it used to borrow a prior manifest's files).
-    *  - `deltas`: per-bucket ordered MERGE-ON-READ delta dirs — a
-    *    small CDC batch appends one delta dir per touched bucket
-    *    instead of rewriting the whole bucket (bytes written ∝ batch,
-    *    not bucket); readers resolve base ⊕ deltas last-wins and
-    *    `compactKeyed` folds chains back into base generations.
-    *  - `rows`: row count per referenced dir, recorded at commit time
-    *    from the staged parquet footers, so `keyedStats` and merge
-    *    planning read the MANIFEST instead of scanning the table.
-    *
-    * r10 additions (same compatibility rule):
-    *  - `ts`: the commit wall-clock millis, stamped at publish — so
-    *    `versionAt` timestamp time travel reads the manifest BODY
-    *    instead of trusting FS mtime semantics (object-store "rename"
-    *    is a copy that rewrites times; pre-r10 manifests fall back to
-    *    mtime, which the atomic rename does set on HDFS/local).
-    *  - `statsCols` + `colstats`: per-dir MIN/MAX zone maps for a
-    *    column list declared at writeKeyed time, folded from the same
-    *    commit-time footer pass that records `rows` — `readKeyedRange`
-    *    prunes whole buckets against non-key range predicates
-    *    (Iceberg/Delta-style data skipping).
-    *  - `resolve`: the table's DELTA-RESOLUTION DISCIPLINE. Empty =
-    *    last-wins per key (row data). "agg" = the delta chains hold
-    *    AGGREGATE PARTIALS and resolution is RE-AGGREGATION
-    *    (`readAggStateKeyed`); the generic last-wins readers fail
-    *    loudly on such tables instead of silently keeping only the
-    *    newest partial per key. The merge discipline is table
-    *    metadata, not a caller guess — same rule as keyCol/nBuckets.
+  /** One committed snapshot: the decoded `_manifests/v<N>.json`. Keyed
+    * tables use every field; versioned datasets, segmented datasets
+    * and commit groups reuse the format with a subset (noted below).
+    *  - `version`: the manifest version (from the file name).
+    *  - `buckets`: live dir per bucket — the base generation of each
+    *    keyed bucket, the single generation (key 0) of a versioned
+    *    dataset, or ordinal → segment dir of a segmented dataset.
+    *  - `keyCol`: the key column list, comma-joined (composite keys).
+    *  - `nBuckets`: the base bucket count; 0 = not a keyed table.
+    *    Like `keyCol` and `depths` it is LAYOUT TRUTH: a querier
+    *    guessing a different count would compute wrong bucket ids and
+    *    silently prune away real rows.
+    *  - `schemaDdl`: the snapshot schema as Spark DDL (additively
+    *    unioned across commits), so reads plan without footer scans and
+    *    an emptied snapshot stays self-describing.
+    *  - `deltas`: per-bucket ordered MERGE-ON-READ delta dirs; readers
+    *    resolve base ⊕ deltas (last-wins, max-seq-wins or
+    *    re-aggregation) and compaction folds chains back into bases.
+    *  - `rows`: ROW count per referenced dir, from the staged parquet
+    *    footers — `keyedStats` and merge planning read the manifest
+    *    instead of scanning the table.
+    *  - `bytes`: on-disk BYTES per segment dir (segmented datasets) —
+    *    the tiered-compaction input of `Search.compactIndex`.
+    *  - `tsMillis`: the commit wall-clock millis, stamped at publish —
+    *    `versionAt` reads it instead of FS mtimes (object-store
+    *    "renames" copy and rewrite them).
+    *  - `statsCols` + `colStats`: per-dir MIN/MAX zone maps for the
+    *    columns declared at writeKeyed time; range and predicate reads
+    *    prune whole buckets against them.
+    *  - `resolve`: the delta-resolution discipline — empty = last-wins
+    *    row data, "agg" = the chains hold aggregate partials and
+    *    resolution is re-aggregation (the last-wins readers refuse).
     *  - `txn`: writer-app transaction watermarks (appId → last applied
-    *    batch id), the Delta-style idempotent-sink slot. CARRIED
-    *    FORWARD through every commit (merge, delta append, compaction)
-    *    so an interleaved maintenance commit can never blank it; a
-    *    streaming sink whose batch id ≤ the recorded watermark skips
-    *    the replay instead of double-counting — the watermark and the
-    *    data land in the SAME atomic manifest publish, which is what
-    *    makes at-least-once delivery exactly-once in effect.
-    *  - `aggP` / `aggK`: the agg state's HLL precision and bounded-
-    *    sample size, recorded at build time (resolve=agg tables only)
-    *    and carried forward — so reads and compactions self-describe
-    *    instead of trusting the caller to repeat the build's numbers
-    *    (a wrong p would silently mis-merge registers). 0 / -1 =
-    *    unrecorded (pre-r10 states fall back to the old defaults).
-    *
-    * r11 addition:
-    *  - `depths`: per-LEAF-bucket split depth for extendible-hashing
-    *    bucket splits (`splitKeyed`) — a leaf at depth d holds the keys
-    *    with h mod (nBuckets·2^d) = leaf id. Absent/empty = the flat
-    *    layout (every leaf at depth 0, id = h mod nBuckets), which is
-    *    every pre-r11 table. The depth map is LAYOUT TRUTH like
-    *    keyCol/nBuckets: every reader and writer derives its bucket
-    *    function from it, so a caller can never hash a batch under a
-    *    stale layout without the guards noticing.
+    *    batch id), carried forward through every commit so the
+    *    watermark and the data land in one atomic publish (exactly-once
+    *    sinks); commit groups store their pins here (table → version).
+    *  - `aggP` / `aggK` / `aggSU`: an agg state's HLL precision, bounded
+    *    sample size and sample-grain column, recorded at build time so
+    *    reads, merges and rebuilds never trust the caller to repeat
+    *    them (0 / -1 / "" on non-agg tables).
+    *  - `depths`: per-leaf split depth of the extendible-hashing layout
+    *    (`splitKeyed`); a leaf at depth d holds the keys with
+    *    h mod (nBuckets·2^d) = leaf id; absent = depth 0.
+    *  - `seqCol`: the SEQUENCE column; once set, delta resolution is
+    *    max-seq-wins instead of chain-order-wins.
     */
   final case class KeyedManifest(version: Int, buckets: Map[Int, String],
                                  keyCol: String = "", nBuckets: Int = 0,
@@ -236,13 +218,117 @@ object Maintenance {
                                  aggP: Int = 0, aggK: Int = -1,
                                  depths: Map[Int, Int] = Map.empty,
                                  aggSU: String = "",
-                                 seqCol: String = "") {
-    /** The key as a COLUMN LIST: r10 composite keys store the names
+                                 seqCol: String = "",
+                                 bytes: Map[String, Long] = Map.empty) {
+    /** The key as a COLUMN LIST: composite keys store the names
       * comma-joined in `keyCol` (column names in this engine never
       * carry commas — the DDL round-trip would reject them).
       */
     def keyCols: Seq[String] =
       if (keyCol.isEmpty) Seq.empty else keyCol.split(",").toSeq
+  }
+
+  /** The on-disk manifest codec: compact JSON stamped `"format": 1`.
+    * A field equal to its default is omitted (the manifest is read on
+    * every keyed read and counted in stored bytes), and decoding
+    * restores the default, so `decode(m.version, encode(m)) == m`.
+    * The version lives in the file name, not the body.
+    */
+  object KeyedManifest {
+    val Format = 1
+
+    private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    private type Node = com.fasterxml.jackson.databind.JsonNode
+    private type Obj = com.fasterxml.jackson.databind.node.ObjectNode
+
+    def encode(m: KeyedManifest): String = {
+      val o = json.createObjectNode()
+      o.put("format", Format)
+      def str(k: String, v: String): Unit = if (v.nonEmpty) o.put(k, v)
+      def obj[K: Ordering, V](k: String, mp: Map[K, V])
+                            (put: (Obj, String, V) => Unit): Unit =
+        if (mp.nonEmpty) {
+          val n = o.putObject(k)
+          mp.toSeq.sortBy(_._1).foreach { case (key, v) =>
+            put(n, key.toString, v) }
+        }
+      def strs(n: com.fasterxml.jackson.databind.node.ArrayNode,
+               vs: Seq[String]): Unit = vs.foreach(v => n.add(v))
+      str("keyCol", m.keyCol)
+      if (m.nBuckets != 0) o.put("nBuckets", m.nBuckets)
+      str("schema", m.schemaDdl)
+      obj("buckets", m.buckets)((n, k, d) => n.put(k, d))
+      obj("deltas", m.deltas)((n, k, ds) => strs(n.putArray(k), ds))
+      obj("rows", m.rows)((n, k, v) => n.put(k, v))
+      obj("bytes", m.bytes)((n, k, v) => n.put(k, v))
+      if (m.statsCols.nonEmpty) strs(o.putArray("statsCols"), m.statsCols)
+      obj("colstats", m.colStats) { (n, d, cs) =>
+        val per = n.putObject(d)
+        cs.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
+          per.putArray(c).add(lo).add(hi) }
+      }
+      str("resolve", m.resolve)
+      obj("txn", m.txn)((n, k, v) => n.put(k, v))
+      if (m.aggP != 0) o.put("aggP", m.aggP)
+      if (m.aggK != -1) o.put("aggK", m.aggK)
+      str("aggSU", m.aggSU)
+      str("seqCol", m.seqCol)
+      obj("depths", m.depths)((n, k, v) => n.put(k, v))
+      if (m.tsMillis != 0L) o.put("ts", m.tsMillis)
+      json.writeValueAsString(o)
+    }
+
+    /** Decode the manifest body of `version`. Refuses (with
+      * IllegalArgumentException) anything that is not a JSON object
+      * stamped with exactly this codec's format.
+      */
+    def decode(version: Int, text: String): KeyedManifest = {
+      import scala.jdk.CollectionConverters._
+      val o =
+        try json.readTree(text)
+        catch {
+          case e: com.fasterxml.jackson.core.JsonProcessingException =>
+            throw new IllegalArgumentException(
+              s"manifest v$version is not JSON: ${e.getOriginalMessage}")
+        }
+      if (o == null || !o.isObject)
+        throw new IllegalArgumentException(
+          s"manifest v$version is not a JSON object")
+      val fmt = o.get("format")
+      if (fmt == null || !fmt.isInt || fmt.intValue != Format)
+        throw new IllegalArgumentException(
+          s"manifest v$version has format " +
+            s"${Option(fmt).fold("(missing)")(_.toString)}; this engine " +
+            s"reads format $Format only")
+      def str(k: String): String = Option(o.get(k)).fold("")(_.asText)
+      def int(k: String, dflt: Int): Int = Option(o.get(k)).fold(dflt)(_.asInt)
+      def fields(n: Node): Seq[(String, Node)] =
+        if (n == null) Nil
+        else n.properties().asScala.toSeq.map(e => e.getKey -> e.getValue)
+      def obj[K, V](k: String)(key: String => K, v: Node => V): Map[K, V] =
+        fields(o.get(k)).map { case (fk, fv) => key(fk) -> v(fv) }.toMap
+      def strs(n: Node): Seq[String] = n.elements().asScala.map(_.asText).toSeq
+      KeyedManifest(version,
+        buckets = obj("buckets")(_.toInt, _.asText),
+        keyCol = str("keyCol"),
+        nBuckets = int("nBuckets", 0),
+        schemaDdl = str("schema"),
+        deltas = obj("deltas")(_.toInt, strs),
+        rows = obj("rows")(identity, _.asLong),
+        tsMillis = Option(o.get("ts")).fold(0L)(_.asLong),
+        statsCols = Option(o.get("statsCols")).fold(Seq.empty[String])(strs),
+        colStats = obj("colstats")(identity, per => fields(per).map {
+          case (c, lh) => c -> (lh.get(0).asText, lh.get(1).asText)
+        }.toMap),
+        resolve = str("resolve"),
+        txn = obj("txn")(identity, _.asLong),
+        aggP = int("aggP", 0),
+        aggK = int("aggK", -1),
+        depths = obj("depths")(_.toInt, _.asInt),
+        aggSU = str("aggSU"),
+        seqCol = str("seqCol"),
+        bytes = obj("bytes")(identity, _.asLong))
+    }
   }
 
   /** Memoized `StructType.fromDDL`: the recorded snapshot schema is
@@ -286,37 +372,6 @@ object Maintenance {
       s"-${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}"
 
   private val ManifestName = """v(\d{9})\.json""".r
-  private val BucketEntry = """"(\d+)"\s*:\s*"([^"]+)"""".r
-  private val KeyColEntry = """"keyCol"\s*:\s*"([^"]*)"""".r
-  private val NBucketsEntry = """"nBuckets"\s*:\s*(\d+)""".r
-  private val SchemaEntry = """"schemaB64"\s*:\s*"([^"]*)"""".r
-  // section bodies: every value inside is a string / number / flat
-  // array (never an object), so the first '}' closes the section
-  private val BucketsSection = """"buckets"\s*:\s*\{([^}]*)\}""".r
-  private val DeltasSection = """"deltas"\s*:\s*\{([^}]*)\}""".r
-  private val RowsSection = """"rows"\s*:\s*\{([^}]*)\}""".r
-  private val DeltaEntry = """"(\d+)"\s*:\s*\[([^\]]*)\]""".r
-  private val QuotedString = """"([^"]+)"""".r
-  private val RowEntry = """"([^"]+)"\s*:\s*(\d+)""".r
-  private val TsEntry = """"ts"\s*:\s*(\d+)""".r
-  private val ResolveEntry = """"resolve"\s*:\s*"([^"]*)"""".r
-  private val TxnSection = """"txn"\s*:\s*\{([^}]*)\}""".r
-  private val TxnEntry = """"([^"]+)"\s*:\s*(-?\d+)""".r
-  private val AggPEntry = """"aggP"\s*:\s*(\d+)""".r
-  private val AggKEntry = """"aggK"\s*:\s*(\d+)""".r
-  private val AggSUEntry = """"aggSU"\s*:\s*"([^"]*)"""".r
-  private val SeqColEntry = """"seqCol"\s*:\s*"([^"]*)"""".r
-  private val StatsColsEntry = """"statsCols"\s*:\s*"([^"]*)"""".r
-  private val DepthsSection = """"depths"\s*:\s*\{([^}]*)\}""".r
-  private val DepthEntry = """"(\d+)"\s*:\s*(\d+)""".r
-  private val ColStatsSection = """"colstats"\s*:\s*\{([^}]*)\}""".r
-  private val ColStatEntry = """"([^"]+)\|([^"]+)"\s*:\s*"([^",]*),([^"]*)"""".r
-
-  private def b64enc(s: String): String =
-    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-  private def b64dec(s: String): String =
-    new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
-
   /** Union two snapshot schemas field-by-name (additive evolution:
     * the recorded schema only ever grows; types never change — a batch
     * retyping an existing column FAILS here, loudly, instead of the
@@ -347,10 +402,7 @@ object Maintenance {
     }.sorted
   }
 
-  /** Resolve the manifest at `version` (latest when None). The JSON is
-    * engine-written with a fixed shape, so a sectioned-regex parse is
-    * exact.
-    */
+  /** Resolve the manifest at `version` (latest when None). */
   def readManifest(spark: SparkSession, dir: String,
                    version: Option[Int] = None): KeyedManifest = {
     val clean = cleanDir(dir)
@@ -369,9 +421,9 @@ object Maintenance {
     * file's (mtime, length) identity, never just its path: a recreated
     * v1 parses fresh instead of serving the dead table's entry. The
     * payoff is every repeated read/merge/poll of the same snapshot:
-    * r10 manifests carry rows/colstats/txn on every commit (~10× the
-    * r8 bytes), and the re-open + regex re-parse per readManifest call
-    * was measurable on delta-heavy paths (ql51/x98). Bounded LRU.
+    * manifests carry rows/colstats/txn on every commit, and the
+    * re-open + re-decode per readManifest call was measurable on
+    * delta-heavy paths (ql51/x98). Bounded LRU.
     */
   private val manifestCache =
     new java.util.LinkedHashMap[(String, Long, Long), KeyedManifest](
@@ -403,166 +455,40 @@ object Maintenance {
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
       } catch { case _: java.io.FileNotFoundException => return None }
-    // sectioned parse: `rows` keys are dir names and `deltas` values
-    // are arrays, so the flat "digits": "string" regex is scoped to
-    // the buckets section (pre-r9 manifests have no sections beyond
-    // buckets — the same extraction still matches them)
-    val bucketsBody = BucketsSection.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse(txt)
-    val buckets = BucketEntry.findAllMatchIn(bucketsBody)
-      .map(m => m.group(1).toInt -> m.group(2)).toMap
-    val deltas = DeltasSection.findFirstMatchIn(txt).map(_.group(1))
-      .map(body => DeltaEntry.findAllMatchIn(body).map { m =>
-        m.group(1).toInt ->
-          QuotedString.findAllMatchIn(m.group(2)).map(_.group(1)).toSeq
-      }.toMap).getOrElse(Map.empty[Int, Seq[String]])
-    val rows = RowsSection.findFirstMatchIn(txt).map(_.group(1))
-      .map(body => RowEntry.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap)
-      .getOrElse(Map.empty[String, Long])
-    val colStats = ColStatsSection.findFirstMatchIn(txt).map(_.group(1))
-      .map(body => ColStatEntry.findAllMatchIn(body).toSeq
-        .groupBy(_.group(1)).map { case (d, ms) =>
-          d -> ms.map(m =>
-            m.group(2) -> (b64dec(m.group(3)), b64dec(m.group(4)))).toMap
-        })
-      .getOrElse(Map.empty[String, Map[String, (String, String)]])
-    val parsed = KeyedManifest(v, buckets,
-      KeyColEntry.findFirstMatchIn(txt).map(_.group(1)).getOrElse(""),
-      NBucketsEntry.findFirstMatchIn(txt).map(_.group(1).toInt).getOrElse(0),
-      SchemaEntry.findFirstMatchIn(txt).map(m => b64dec(m.group(1)))
-        .getOrElse(""),
-      deltas, rows,
-      TsEntry.findFirstMatchIn(txt).map(_.group(1).toLong).getOrElse(0L),
-      StatsColsEntry.findFirstMatchIn(txt).map(_.group(1))
-        .filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Seq.empty),
-      colStats,
-      ResolveEntry.findFirstMatchIn(txt).map(_.group(1)).getOrElse(""),
-      TxnSection.findFirstMatchIn(txt).map(_.group(1))
-        .map(body => TxnEntry.findAllMatchIn(body)
-          .map(m => b64dec(m.group(1)) -> m.group(2).toLong).toMap)
-        .getOrElse(Map.empty[String, Long]),
-      AggPEntry.findFirstMatchIn(txt).map(_.group(1).toInt).getOrElse(0),
-      AggKEntry.findFirstMatchIn(txt).map(_.group(1).toInt).getOrElse(-1),
-      DepthsSection.findFirstMatchIn(txt).map(_.group(1))
-        .map(body => DepthEntry.findAllMatchIn(body)
-          .map(m => m.group(1).toInt -> m.group(2).toInt).toMap)
-        .getOrElse(Map.empty[Int, Int]),
-      AggSUEntry.findFirstMatchIn(txt).map(m => b64dec(m.group(1)))
-        .getOrElse(""),
-      SeqColEntry.findFirstMatchIn(txt).map(m => b64dec(m.group(1)))
-        .getOrElse(""))
+    val parsed =
+      try KeyedManifest.decode(v, txt)
+      catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"$p: ${e.getMessage}", e)
+      }
     manifestCache.synchronized(manifestCache.put(cacheKey, parsed))
     Some(parsed)
   }
 
-  /** Publish a manifest: write to a dot-temp in `_manifests`, then one
-    * rename to the final `v<N>.json` (on an object store, use a
-    * conditional PUT — same atomicity). This rename IS the commit
-    * point — everything else a commit did is invisible until it — and
-    * because HDFS/local rename FAILS when the destination exists, a
-    * concurrent writer racing to the same version loses cleanly: the
-    * loser gets a CommitConflict and retries against the fresh
-    * snapshot (optimistic concurrency, Delta-style).
+  /** Publish a manifest: write to a dot-temp in `_manifests`, then
+    * publish it as `v<N>.json` through `Fs.publishIfAbsent`. That
+    * publish IS the commit point — everything else a commit did is
+    * invisible until it — and because it fails when the version
+    * exists, a concurrent writer racing to the same version loses
+    * cleanly: the loser gets a CommitConflict and retries against the
+    * fresh snapshot (optimistic concurrency, Delta-style). The commit
+    * wall-clock `ts` is stamped here.
     */
   private def writeManifest(spark: SparkSession, clean: String,
                             m: KeyedManifest): Unit = {
     val md = manifestDir(clean)
     val fs = hadoopFs(spark, md)
     fs.mkdirs(md)
-    val meta =
-      if (m.nBuckets > 0) s""""keyCol": "${m.keyCol}", "nBuckets": ${m.nBuckets}, """
-      else ""
-    val schema =
-      if (m.schemaDdl.nonEmpty) s""""schemaB64": "${b64enc(m.schemaDdl)}", """
-      else ""
-    val deltas =
-      if (m.deltas.isEmpty) ""
-      else m.deltas.toSeq.sortBy(_._1).map { case (b, ds) =>
-        s""""$b": ${ds.map(d => s""""$d"""").mkString("[", ", ", "]")}"""
-      }.mkString(""", "deltas": {""", ", ", "}")
-    val rows =
-      if (m.rows.isEmpty) ""
-      else m.rows.toSeq.sortBy(_._1).map { case (d, n) => s""""$d": $n""" }
-        .mkString(""", "rows": {""", ", ", "}")
-    val statsCols =
-      if (m.statsCols.isEmpty) ""
-      else s""", "statsCols": "${m.statsCols.mkString(",")}""""
-    val colStats =
-      if (m.colStats.isEmpty) ""
-      else m.colStats.toSeq.sortBy(_._1).flatMap { case (d, cs) =>
-        cs.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-          s""""$d|$c": "${b64enc(lo)},${b64enc(hi)}""""
-        }
-      }.mkString(""", "colstats": {""", ", ", "}")
-    val resolve =
-      if (m.resolve.isEmpty) "" else s""", "resolve": "${m.resolve}""""
-    // appIds are b64-encoded: a writer-chosen id must never break the
-    // fixed-shape JSON (quotes, braces)
-    val txn =
-      if (m.txn.isEmpty) ""
-      else m.txn.toSeq.sortBy(_._1).map { case (app, v) =>
-        s""""${b64enc(app)}": $v"""
-      }.mkString(""", "txn": {""", ", ", "}")
-    val aggMeta =
-      (if (m.aggP > 0) s""", "aggP": ${m.aggP}""" else "") +
-        (if (m.aggK >= 0) s""", "aggK": ${m.aggK}""" else "") +
-        // the sample GRAIN column (b64: caller-chosen name) — part of
-        // the state's identity, recorded so rebuild/merge default to
-        // the BUILD's grain instead of trusting the caller to repeat it
-        (if (m.aggSU.nonEmpty) s""", "aggSU": "${b64enc(m.aggSU)}"""" else "") +
-        // the SEQUENCE column (b64): once set, delta resolution is
-        // max-seq-wins instead of chain-order-wins — the out-of-order
-        // CDC contract, part of the table's identity like keyCol
-        (if (m.seqCol.nonEmpty) s""", "seqCol": "${b64enc(m.seqCol)}""""
-         else "")
-    val depths =
-      if (m.depths.isEmpty) ""
-      else m.depths.toSeq.sorted.map { case (b, dep) => s""""$b": $dep""" }
-        .mkString(""", "depths": {""", ", ", "}")
-    // the commit wall-clock stamp: the manifest body is the
-    // FS-independent truth for `versionAt` (mtime is only a pre-r10
-    // fallback)
-    val ts = s""", "ts": ${
-      if (m.tsMillis > 0) m.tsMillis else System.currentTimeMillis()}"""
-    val body = m.buckets.toSeq.sortBy(_._1)
-      .map { case (b, d) => s""""$b": "$d"""" }
-      .mkString(s"""{"version": ${m.version}, $meta$schema"buckets": {""",
-        ", ", "}") + deltas + rows + statsCols + colStats + resolve +
-      txn + aggMeta + depths + ts + "}"
+    val body = KeyedManifest.encode(
+      m.copy(tsMillis = System.currentTimeMillis()))
     val tmp = new Path(md,
       s".tmp_v${m.version}_${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}")
     val out = fs.create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
-    val dst = new Path(md, f"v${m.version}%09d.json")
-    // THE commit point must be atomic rename-IF-ABSENT. HDFS rename
-    // fails when the destination exists; the LOCAL filesystem does
-    // NOT — RawLocalFileSystem.rename is POSIX renameTo, which
-    // silently REPLACES an existing destination, so two writers
-    // racing the same version could both "succeed" and the second
-    // would overwrite the first's commit (a silent lost update — the
-    // 4-writer hammer caught exactly this as a missing batch). On the
-    // file scheme the publish is a HARD LINK instead: link(2) fails
-    // EEXIST atomically when the version is taken, and the linked
-    // file is already fully written.
-    val committed =
-      if (fs.getScheme == "file") {
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(dst.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      } else fs.rename(tmp, dst)
-    if (!committed) {
-      fs.delete(tmp, false)
+    if (!Fs.publishIfAbsent(fs, tmp, new Path(md, f"v${m.version}%09d.json")))
       throw new CommitConflict(
         s"version ${m.version} of $clean was committed by a concurrent " +
           "writer; recompute against the fresh snapshot and retry")
-    }
-    if (fs.getScheme == "file") fs.delete(tmp, false)
   }
 
   /** Optimistic-concurrency retry: re-run `body` (which must re-read
@@ -595,27 +521,15 @@ object Maintenance {
   /** The newest manifest version whose COMMIT TIME is ≤ `tsMillis`:
     * timestamp-based time travel, `readKeyed(dir, Some(versionAt(…)))`.
     * The commit time is the `ts` the manifest BODY records at publish
-    * (FS-independent — object-store "renames" copy and rewrite mtime);
-    * pre-r10 manifests fall back to the file mtime, which the atomic
-    * publish rename does set on HDFS/local. A manifest a concurrent
-    * vacuum deletes between the listing and the read is skipped (it
-    * was a dropped version anyway); errors when no snapshot existed
-    * yet at that time.
+    * (FS-independent — object-store "renames" copy and rewrite mtime).
+    * A manifest a concurrent vacuum deletes between the listing and the
+    * read is skipped (it was a dropped version anyway); errors when no
+    * snapshot existed yet at that time.
     */
   def versionAt(spark: SparkSession, dir: String, tsMillis: Long): Int = {
     val clean = cleanDir(dir)
-    val fs = hadoopFs(spark, manifestDir(clean))
-    val at = manifestVersions(spark, dir).filter { v =>
-      tryReadManifest(spark, clean, v).exists { m =>
-        val commitTs =
-          if (m.tsMillis > 0) m.tsMillis
-          else try fs.getFileStatus(
-            new Path(manifestDir(clean), f"v$v%09d.json"))
-            .getModificationTime
-          catch { case _: java.io.FileNotFoundException => Long.MaxValue }
-        commitTs <= tsMillis
-      }
-    }
+    val at = manifestVersions(spark, dir).filter(v =>
+      tryReadManifest(spark, clean, v).exists(_.tsMillis <= tsMillis))
     require(at.nonEmpty,
       s"no snapshot of $clean existed at $tsMillis (oldest retained " +
         s"commit is newer — vacuumed, or the table is younger)")
@@ -626,17 +540,14 @@ object Maintenance {
     * Scans exactly the bucket dirs the manifest lists; `kb` is a data
     * column in the files. Buckets with merge-on-read delta chains are
     * resolved last-wins (see `resolveBuckets`); buckets without deltas
-    * read straight through with NO resolution shuffle. Falls back to a
-    * plain partitioned read for pre-manifest directories.
+    * read straight through with NO resolution shuffle.
     */
   def readKeyed(spark: SparkSession, dir: String,
                 version: Option[Int] = None): DataFrame = {
     val clean = cleanDir(dir)
-    if (manifestVersions(spark, dir).isEmpty)
-      return spark.read.parquet(clean) // legacy kb=N layout
     val m = readManifest(spark, dir, version)
     val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-    if (live.isEmpty) return emptySnapshot(spark, clean, m)
+    if (live.isEmpty) return emptySnapshot(spark, m)
     resolveBuckets(spark, clean, m, live, None)
   }
 
@@ -654,7 +565,7 @@ object Maintenance {
     val m = readManifest(spark, dir)
     val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
     val df =
-      if (live.isEmpty) emptySnapshot(spark, clean, m)
+      if (live.isEmpty) emptySnapshot(spark, m)
       else resolveBuckets(spark, clean, m, live, None)
     (df, m.version)
   }
@@ -681,15 +592,11 @@ object Maintenance {
                      version: Option[Int] = None): DataFrame = {
     val clean = cleanDir(dir)
     val filt = F.col(colName) >= F.lit(lo) && F.col(colName) <= F.lit(hi)
-    if (manifestVersions(spark, dir).isEmpty)
-      return spark.read.parquet(clean).filter(filt)
     val m = readManifest(spark, dir, version)
     val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-    if (live.isEmpty) return emptySnapshot(spark, clean, m).filter(filt)
-    val dt: Option[org.apache.spark.sql.types.DataType] =
-      if (m.schemaDdl.isEmpty) None
-      else parseDdl(m.schemaDdl)
-        .fields.find(_.name == colName).map(_.dataType)
+    if (live.isEmpty) return emptySnapshot(spark, m).filter(filt)
+    val dt = parseDdl(m.schemaDdl).fields.find(_.name == colName)
+      .map(_.dataType)
     val kept = live.filter { b =>
       val dirs = m.buckets.get(b).toSeq ++ m.deltas.getOrElse(b, Nil)
       dirs.exists { d =>
@@ -699,7 +606,7 @@ object Maintenance {
         }
       }
     }
-    if (kept.isEmpty) emptySnapshot(spark, clean, m).filter(filt)
+    if (kept.isEmpty) emptySnapshot(spark, m).filter(filt)
     else resolveBuckets(spark, clean, m, kept, None).filter(filt)
   }
 
@@ -730,11 +637,9 @@ object Maintenance {
                      version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.catalyst.{expressions => E}
     val clean = cleanDir(dir)
-    if (manifestVersions(spark, dir).isEmpty)
-      return spark.read.parquet(clean).filter(cond)
     val m = readManifest(spark, dir, version)
     val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-    if (live.isEmpty) return emptySnapshot(spark, clean, m).filter(cond)
+    if (live.isEmpty) return emptySnapshot(spark, m).filter(cond)
     def conjuncts(e: E.Expression): Seq[E.Expression] = e match {
       case E.And(l, r) => conjuncts(l) ++ conjuncts(r)
       case x => Seq(x)
@@ -806,9 +711,9 @@ object Maintenance {
     // a filter over the EMPTY snapshot (zero IO): the Filter node's
     // condition is the resolved expression tree — attribute names
     // case-normalized, literal-side casts explicit. Unanalyzable
-    // predicates (or schema-less pre-r9 tables) prune nothing.
+    // predicates prune nothing.
     val cs = scala.util.Try {
-      emptySnapshot(spark, clean, m).filter(cond)
+      emptySnapshot(spark, m).filter(cond)
         .queryExecution.analyzed.collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
             f.condition
@@ -889,10 +794,8 @@ object Maintenance {
             .map(v => (Some(v), Some(v)))))
       case _ => bounds(e).map { case (n, lo, hi) => (n, Seq((lo, hi))) }
     }
-    val types: Map[String, org.apache.spark.sql.types.DataType] =
-      if (m.schemaDdl.isEmpty) Map.empty
-      else parseDdl(m.schemaDdl)
-        .fields.map(f => f.name -> f.dataType).toMap
+    val types = parseDdl(m.schemaDdl).fields
+      .map(f => f.name -> f.dataType).toMap
     val zone = cs.flatMap(ranges(_)).flatMap { case (n, rs) =>
       m.statsCols.find(_.equalsIgnoreCase(n)).map(real => (real, rs))
     }
@@ -912,7 +815,7 @@ object Maintenance {
         }
       }
     }
-    if (kept.isEmpty) emptySnapshot(spark, clean, m).filter(cond)
+    if (kept.isEmpty) emptySnapshot(spark, m).filter(cond)
     else resolveBuckets(spark, clean, m, kept, None).filter(cond)
   }
 
@@ -960,25 +863,14 @@ object Maintenance {
   }
 
   /** A fully-emptied table is a legal snapshot: an EMPTY frame with
-    * the schema the manifest records (r9+ manifests are
-    * self-describing, so this survives vacuuming every prior
-    * generation); pre-r9 manifests fall back to the latest earlier
-    * non-empty snapshot's files.
+    * the schema the manifest records (self-describing, so this
+    * survives vacuuming every prior generation).
     */
-  private def emptySnapshot(spark: SparkSession, clean: String,
-                            m: KeyedManifest): DataFrame = {
-    if (m.schemaDdl.nonEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        parseDdl(m.schemaDdl))
-    val prior = manifestVersions(spark, clean).filter(_ < m.version)
-      .reverse.map(v => readManifest(spark, clean, Some(v)))
-      .find(_.buckets.nonEmpty)
-      .getOrElse(throw new IllegalArgumentException(
-        s"snapshot v${m.version} of $clean is empty and no prior " +
-          "snapshot remains to supply a schema"))
-    spark.read.parquet(s"$clean/${prior.buckets.head._2}").limit(0)
-  }
+  private def emptySnapshot(spark: SparkSession,
+                            m: KeyedManifest): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      parseDdl(m.schemaDdl))
 
   /** Parquet read of generation/delta dirs with the manifest's OWN
     * recorded schema instead of `mergeSchema` footer inference: every
@@ -989,26 +881,21 @@ object Maintenance {
     * and at 100 TB a footer sweep of a wide snapshot is real IO).
     * Dirs missing a newer column surface it as NULL exactly as the
     * mergeSchema read did; `asNullable` mirrors parquet inference
-    * (file-source columns are always nullable on read). Pre-r9
-    * manifests (no recorded schema) keep the mergeSchema path.
+    * (file-source columns are always nullable on read).
     */
   private def readGenDirs(spark: SparkSession, clean: String,
                           m: KeyedManifest, dirs: Seq[String],
                           withTomb: Boolean): DataFrame = {
-    val paths = dirs.sorted.map(d => s"$clean/$d")
-    if (m.schemaDdl.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    else {
-      val base = parseDdl(m.schemaDdl)
-      val sch =
-        if (withTomb && !base.fieldNames.contains("__tomb"))
-          base.add("__tomb", org.apache.spark.sql.types.BooleanType)
-        else base
-      // fields forced nullable like parquet inference (asNullable is
-      // private[spark]); fromDDL already made nested levels nullable
-      spark.read.schema(org.apache.spark.sql.types.StructType(
-        sch.fields.map(_.copy(nullable = true)))).parquet(paths: _*)
-    }
+    val base = parseDdl(m.schemaDdl)
+    val sch =
+      if (withTomb && !base.fieldNames.contains("__tomb"))
+        base.add("__tomb", org.apache.spark.sql.types.BooleanType)
+      else base
+    // fields forced nullable like parquet inference (asNullable is
+    // private[spark]); fromDDL already made nested levels nullable
+    spark.read.schema(org.apache.spark.sql.types.StructType(
+      sch.fields.map(_.copy(nullable = true))))
+      .parquet(dirs.sorted.map(d => s"$clean/$d"): _*)
   }
 
   /** The live rows of `buckets` under manifest `m`: plain buckets read
@@ -1093,7 +980,7 @@ object Maintenance {
       case (Some(p), Some(r)) => p.unionByName(r, allowMissingColumns = true)
       case (Some(p), None) => p
       case (None, Some(r)) => r
-      case (None, None) => emptySnapshot(spark, clean, m)
+      case (None, None) => emptySnapshot(spark, m)
     }
   }
 
@@ -1395,9 +1282,8 @@ object Maintenance {
     // makes the manifest rename fail instead (CommitConflict → the
     // caller recomputes against the fresh snapshot).
     val (staged, stagedRows, stagedStats) = stageBuckets(spark, clean,
-      merged, base.version + 1,
-      if (base.keyCol.nonEmpty) base.keyCols else Seq("kb"),
-      base.statsCols, nBuckets = base.nBuckets)
+      merged, base.version + 1, base.keyCols, base.statsCols,
+      nBuckets = base.nBuckets)
     // a touched bucket absent from staging lost ALL its rows (delete
     // path): it simply leaves the manifest
     val next = base.buckets -- touched ++ staged
@@ -1411,18 +1297,10 @@ object Maintenance {
       stagedStats
     // snapshot schema grows additively across merges: prior schema
     // ∪ the merged frame's (which carries any new batch columns)
-    val schema =
-      if (base.schemaDdl.isEmpty) merged.schema.toDDL
-      else unionSchema(
-        parseDdl(base.schemaDdl),
-        merged.schema).toDDL
-    PendingCommit(clean,
-      KeyedManifest(base.version + 1, next, base.keyCol, base.nBuckets,
-        schema, nextDeltas, nextRows,
-        statsCols = base.statsCols, colStats = nextStats,
-        resolve = base.resolve, txn = base.txn ++ txn,
-        aggP = base.aggP, aggK = base.aggK, depths = base.depths,
-        aggSU = base.aggSU, seqCol = base.seqCol))
+    val schema = unionSchema(parseDdl(base.schemaDdl), merged.schema).toDDL
+    PendingCommit(clean, base.copy(version = base.version + 1,
+      buckets = next, schemaDdl = schema, deltas = nextDeltas,
+      rows = nextRows, colStats = nextStats, txn = base.txn ++ txn))
   }
 
   private[graft] def commitKeyed(spark: SparkSession,
@@ -1645,8 +1523,7 @@ object Maintenance {
         s"updateKeyedWhereDelta cannot reassign key column '$c'")
       // a typo'd assignment would otherwise report matches while
       // changing nothing (r13 ADVICE)
-      require(c != "kb" && (m.schemaDdl.isEmpty ||
-        parseDdl(m.schemaDdl).fieldNames.contains(c)),
+      require(c != "kb" && parseDdl(m.schemaDdl).fieldNames.contains(c),
         s"updateKeyedWhereDelta: '$c' is not a column of $clean")
     }
     // every row of the pruned read MATCHES cond, so assignments apply
@@ -1687,11 +1564,10 @@ object Maintenance {
             "would change buckets) — delete + re-insert instead")
         // a typo'd assignment name would otherwise report a nonzero
         // matched count while changing nothing (r13 ADVICE)
-        require(c != "kb" && (m.schemaDdl.isEmpty ||
-          parseDdl(m.schemaDdl).fieldNames.contains(c)),
+        val have = parseDdl(m.schemaDdl).fieldNames
+        require(c != "kb" && have.contains(c),
           s"updateKeyedWhere: '$c' is not a column of $clean " +
-            s"(have ${if (m.schemaDdl.isEmpty) "?"
-              else parseDdl(m.schemaDdl).fieldNames.mkString(",")})")
+            s"(have ${have.mkString(",")})")
       })
       // a NONDETERMINISTIC predicate would match different rows when a
       // lost commit race re-runs the body — refuse up front (analyzed
@@ -1702,7 +1578,7 @@ object Maintenance {
       // refused explicitly (r13 ADVICE).
       val det = scala.util.Try {
         import org.apache.spark.sql.catalyst.{expressions => E}
-        val exprs = emptySnapshot(spark, clean, m).filter(cond)
+        val exprs = emptySnapshot(spark, m).filter(cond)
           .queryExecution.analyzed.expressions
         exprs.forall(_.deterministic) && !exprs.exists(_.exists {
           case _: E.CurrentTimestamp | _: E.CurrentDate | _: E.Now |
@@ -1852,7 +1728,7 @@ object Maintenance {
     val keyCol = keyCols.mkString(",")
     // a mismatched bucket count or key would hash the batch into the
     // WRONG buckets and silently merge against the wrong base slices
-    require(m.nBuckets == 0 || (m.nBuckets == nBuckets && m.keyCol == keyCol),
+    require(m.nBuckets == nBuckets && m.keyCol == keyCol,
       s"keyed table $clean is (${m.keyCol}, ${m.nBuckets}) buckets; " +
         s"caller passed ($keyCol, $nBuckets)")
     // a SEQUENCE-resolved table's winner is max-seq, not batch-wins:
@@ -1869,9 +1745,7 @@ object Maintenance {
       resolveBuckets(spark, clean, m, live, None)
     else if (m.buckets.nonEmpty)
       spark.read.parquet(s"$clean/${m.buckets.head._2}").limit(0)
-    else if (m.schemaDdl.nonEmpty)
-      emptySnapshot(spark, clean, m) // emptied table keeps its schema
-    else batch.limit(0)
+    else emptySnapshot(spark, m) // emptied table keeps its schema
   }
 
   /** MERGE-ON-READ upsert: append the batch as per-bucket DELTA dirs
@@ -1948,8 +1822,7 @@ object Maintenance {
       ups.unionByName(sel.withColumn("__tomb", F.lit(true)),
         allowMissingColumns = true)
     }
-    require(m0.nBuckets == 0 ||
-      (m0.nBuckets == nBuckets && m0.keyCol == keyCol),
+    require(m0.nBuckets == nBuckets && m0.keyCol == keyCol,
       s"keyed table $clean is (${m0.keyCol}, ${m0.nBuckets}) buckets; " +
         s"caller passed ($keyCol, $nBuckets)")
     val withKb = all.withColumn("kb",
@@ -1990,8 +1863,7 @@ object Maintenance {
       // re-bootstrap may have changed the bucket layout since m0, and
       // publishing deltas hashed under the OLD layout would park keys
       // in buckets they no longer hash to (silently unreachable rows)
-      require((m.nBuckets == 0 ||
-        (m.nBuckets == nBuckets && m.keyCol == keyCol)) &&
+      require(m.nBuckets == nBuckets && m.keyCol == keyCol &&
         m.depths == m0.depths,
         s"keyed table $clean re-bootstrapped/re-bucketed to " +
           s"(${m.keyCol}, ${m.nBuckets}) buckets mid-append; caller " +
@@ -1999,19 +1871,12 @@ object Maintenance {
       val nextDeltas = m.deltas ++ staged.map { case (b, d) =>
         b -> (m.deltas.getOrElse(b, Seq.empty) :+ d)
       }
-      val schema =
-        if (m.schemaDdl.isEmpty) withKb.drop("__tomb").schema.toDDL
-        else unionSchema(
-          parseDdl(m.schemaDdl),
-          withKb.drop("__tomb").schema).toDDL
-      writeManifest(spark, clean, KeyedManifest(m.version + 1, m.buckets,
-        m.keyCol, m.nBuckets, schema, nextDeltas, m.rows ++ stagedRows,
-        statsCols = m.statsCols, colStats = m.colStats ++ stagedStats,
-        resolve = m.resolve, txn = m.txn ++ txn,
-        aggP = m.aggP, aggK = m.aggK, depths = m.depths,
-        aggSU = m.aggSU,
-        seqCol = seqEff.orElse(Option(m.seqCol).filter(_.nonEmpty))
-          .getOrElse("")))
+      val schema = unionSchema(parseDdl(m.schemaDdl),
+        withKb.drop("__tomb").schema).toDDL
+      writeManifest(spark, clean, m.copy(version = m.version + 1,
+        schemaDdl = schema, deltas = nextDeltas, rows = m.rows ++ stagedRows,
+        colStats = m.colStats ++ stagedStats, txn = m.txn ++ txn,
+        seqCol = seqEff.getOrElse(m.seqCol)))
     }
   }
 
@@ -2146,12 +2011,8 @@ object Maintenance {
         m.deltas.get(b).exists(_.nonEmpty))
       if (live.isEmpty) {
         // depth-only commit: the merged leaves held no rows
-        writeManifest(spark, clean, KeyedManifest(m.version + 1,
-          m.buckets, m.keyCol, m.nBuckets, m.schemaDdl, m.deltas, m.rows,
-          statsCols = m.statsCols, colStats = m.colStats,
-          resolve = m.resolve, txn = m.txn,
-          aggP = m.aggP, aggK = m.aggK, depths = newDepths,
-          aggSU = m.aggSU, seqCol = m.seqCol))
+        writeManifest(spark, clean,
+          m.copy(version = m.version + 1, depths = newDepths))
       } else {
         // resolve by the table's own discipline (chains fold here,
         // exactly like their compaction), rehash under the SHRUNK map
@@ -2235,7 +2096,7 @@ object Maintenance {
     val clean = cleanDir(dir)
     val live = buckets.filter(b => m.buckets.contains(b) ||
       m.deltas.get(b).exists(_.nonEmpty))
-    if (live.isEmpty) emptySnapshot(spark, clean, m)
+    if (live.isEmpty) emptySnapshot(spark, m)
     else resolveBuckets(spark, clean, m, live, None)
   }
 
@@ -2246,7 +2107,7 @@ object Maintenance {
     val clean = cleanDir(dir)
     val live = buckets.filter(b => m.buckets.contains(b) ||
       m.deltas.get(b).exists(_.nonEmpty))
-    if (live.isEmpty) emptySnapshot(spark, clean, m).drop("kb", "__tomb")
+    if (live.isEmpty) emptySnapshot(spark, m).drop("kb", "__tomb")
     else readAggStateBuckets(spark, clean, m, live)
   }
 
@@ -2300,12 +2161,8 @@ object Maintenance {
         m.deltas.get(b).exists(_.nonEmpty))
       if (live.isEmpty) {
         // depth-only commit: the split buckets held no rows
-        writeManifest(spark, clean, KeyedManifest(m.version + 1,
-          m.buckets, m.keyCol, m.nBuckets, m.schemaDdl, m.deltas, m.rows,
-          statsCols = m.statsCols, colStats = m.colStats,
-          resolve = m.resolve, txn = m.txn,
-          aggP = m.aggP, aggK = m.aggK, depths = newDepths,
-          aggSU = m.aggSU, seqCol = m.seqCol))
+        writeManifest(spark, clean,
+          m.copy(version = m.version + 1, depths = newDepths))
       } else {
         // resolve the split buckets' rows by the table's own
         // discipline (chains fold here, exactly like their compaction)
@@ -2363,21 +2220,9 @@ object Maintenance {
     val clean = cleanDir(dir)
     val m = readManifest(spark, dir, version)
     require(m.nBuckets > 0,
-      s"$clean has no keyed metadata (pre-r8 table or versioned dataset)")
+      s"$clean has no keyed metadata (a versioned or segmented dataset)")
     val keyCols = m.keyCols
-    // the key columns' types, from the recorded schema (every r9+
-    // commit) or a live dir's parquet footer (pre-r9 tables)
-    val schema: org.apache.spark.sql.types.StructType =
-      if (m.schemaDdl.nonEmpty)
-        parseDdl(m.schemaDdl)
-      else {
-        val anyDir = m.buckets.values.headOption
-          .orElse(m.deltas.values.flatten.headOption)
-        anyDir match {
-          case Some(d) => spark.read.parquet(s"$clean/$d").schema
-          case None => return readKeyed(spark, dir, version).limit(0)
-        }
-      }
+    val schema = parseDdl(m.schemaDdl)
     val keyFields = keyCols.map(c => schema.fields.find(_.name == c)
       .getOrElse(throw new IllegalArgumentException(
         s"lookupKeyed: key column '$c' missing from $clean's schema")))
@@ -2457,18 +2302,6 @@ object Maintenance {
       .filter(b => m1.buckets.get(b) != m2.buckets.get(b) ||
         m1.deltas.getOrElse(b, Nil) != m2.deltas.getOrElse(b, Nil))
       .toSeq.sorted
-    def side(m: KeyedManifest) = {
-      val live = changed.filter(b => m.buckets.contains(b) ||
-        m.deltas.get(b).exists(_.nonEmpty))
-      if (live.nonEmpty) resolveBuckets(spark, clean, m, live, None)
-      else readKeyed(spark, dir, Some(m.version)).limit(0)
-    }
-    // pre-r9 manifests record no snapshot schema, so the shared-column
-    // set can't be known without reading — keep the two-resolution +
-    // full-outer diff for them
-    if (m1.schemaDdl.isEmpty || m2.schemaDdl.isEmpty)
-      return diff(side(m1).drop("kb"), side(m2).drop("kb"), m1.keyCols)
-        .filter(F.col("status") =!= "same")
     keyedChangesOnePass(spark, clean, m1, m2, changed)
   }
 
@@ -2517,7 +2350,7 @@ object Maintenance {
     if (sides.isEmpty)
       // nothing live on either side: the empty changelog, in the
       // changelog's schema
-      return emptySnapshot(spark, clean, m2)
+      return emptySnapshot(spark, m2)
         .select(keyCols.map(F.col) :+ F.lit("same").as("status"): _*)
         .limit(0).filter(F.col("status") =!= "same")
     val un = sides.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -2750,33 +2583,32 @@ object Maintenance {
     tableStats(spark.read.parquet(dir), partCol)
 
   /** tableStats over a keyed table's LIVE snapshot (manifest-resolved;
-    * stale generations don't pollute the report). Buckets whose row
-    * counts the manifest records (every r9+ commit) and that carry no
-    * delta chain answer from the MANIFEST + a file listing — zero data
-    * IO; only delta-carrying or legacy buckets fall back to the
+    * stale generations don't pollute the report). Buckets that carry no
+    * delta chain answer from the manifest's recorded row counts + a
+    * file listing — zero data IO; delta-carrying buckets need the
     * resolved scan (a chain's live count isn't the sum of its levels).
     * The fs listing per bucket is bounded metadata work (≤ nBuckets
-    * dirs), same class as the manifest read itself.
+    * dirs), same class as the manifest read itself. Refuses a manifest
+    * with no keyed metadata (a versioned or segmented dataset).
     */
   def keyedStats(spark: SparkSession, dir: String): DataFrame = {
     val clean = cleanDir(dir)
-    if (manifestVersions(spark, dir).isEmpty)
-      return tableStats(spark.read.parquet(clean), "kb")
     val m = readManifest(spark, dir)
+    require(m.nBuckets > 0,
+      s"$clean has no keyed metadata (a versioned or segmented dataset)")
     val (fast, slow) = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-      .partition(b => !m.deltas.get(b).exists(_.nonEmpty) &&
-        m.buckets.get(b).exists(m.rows.contains))
+      .partition(b => !m.deltas.get(b).exists(_.nonEmpty))
     val fs = hadoopFs(spark, new Path(clean))
     def filesIn(d: String): Long = fs.listStatus(new Path(clean, d))
       .count(_.getPath.getName.endsWith(".parquet")).toLong
     val fastRows = fast.map(b => (b, m.rows(m.buckets(b)),
       filesIn(m.buckets(b))))
-    // slow buckets (delta chains / legacy commits without recorded
-    // rows): live row counts need the resolved scan, but the FILE
-    // count comes from the manifest's dir list — input_file_name()
-    // above the resolve window's exchange reads empty (the file-block
-    // context doesn't cross a shuffle), which under-reported exactly
-    // the chained buckets a compaction policy watches
+    // slow buckets (delta chains): live row counts need the resolved
+    // scan, but the FILE count comes from the manifest's dir list —
+    // input_file_name() above the resolve window's exchange reads empty
+    // (the file-block context doesn't cross a shuffle), which
+    // under-reported exactly the chained buckets a compaction policy
+    // watches
     val slowCounts =
       if (slow.isEmpty) Map.empty[Int, Long]
       else resolveBuckets(spark, clean, m, slow, None)
@@ -2987,7 +2819,7 @@ object Maintenance {
   // The same commit discipline as the keyed table, for UNKEYED whole
   // datasets that are periodically rewritten (agg state, model tables):
   //   dir/g000000001/part-*.parquet     immutable generation dirs
-  //   dir/_manifests/v000000001.json    {"version":1,"buckets":{"0":"g..."}}
+  //   dir/_manifests/v000000001.json    {"format":1,"buckets":{"0":"g..."}}
   // A writer stages the new generation (invisible), then publishes one
   // manifest — readers mid-rewrite see the old or new COMPLETE dataset,
   // never a half-deleted directory. Reuses the keyed manifest format
@@ -3023,15 +2855,11 @@ object Maintenance {
     next
   }
 
-  /** The versioned dataset's snapshot at `version` (latest when None);
-    * falls back to a plain read for pre-manifest directories. */
+  /** The versioned dataset's snapshot at `version` (latest when None). */
   def readVersioned(spark: SparkSession, dir: String,
-                    version: Option[Int] = None): DataFrame = {
-    val clean = cleanDir(dir)
-    if (manifestVersions(spark, dir).isEmpty) spark.read.parquet(clean)
-    else spark.read.parquet(
-      s"$clean/${readManifest(spark, dir, version).buckets(0)}")
-  }
+                    version: Option[Int] = None): DataFrame =
+    spark.read.parquet(
+      s"${cleanDir(dir)}/${readManifest(spark, dir, version).buckets(0)}")
 
   /** GC old generations of a versioned dataset (same contract and
     * grace rule as `vacuumKeyed`). Generation dirs are `g\d{9}-…` at
@@ -3074,33 +2902,27 @@ object Maintenance {
                                    replace: Boolean): Int = {
     val clean = cleanDir(dir)
     // the staged segment's on-disk bytes, priced ONCE at commit (the
-    // writer just wrote these files — the walk is warm): for segment
-    // manifests the `rows` map records per-segment BYTES, which is the
-    // tiered-compaction policy input (compactIndex smallestK) — read
-    // from the manifest instead of re-walking every segment dir per
-    // compaction pass (guide §6: manifests beat directory listing)
+    // writer just wrote these files — the walk is warm) into the
+    // manifest's `bytes` map: the tiered-compaction policy input
+    // (compactIndex smallestK), read from the manifest instead of
+    // re-walking every segment dir per compaction pass
     val stagedBytes = dirBytes(spark, s"$clean/$segDir")
     withCommitRetry(s"commitSegment($dir)") {
-      val versions = manifestVersions(spark, dir)
-      // an append onto a pre-manifest (legacy single-dir) dataset must
-      // not publish a manifest listing ONLY the new segment — that
-      // would silently drop the legacy data from every future read
-      require(replace || versions.nonEmpty,
-        s"$clean has no segment manifest (pre-r9 layout) — appends " +
-          "need one; rebuild the dataset first")
-      val next = versions.lastOption.getOrElse(0) + 1
-      val (segs, bytes) =
-        if (replace || versions.isEmpty)
-          (Map(0 -> segDir), Map(segDir -> stagedBytes))
+      val next =
+        if (replace)
+          KeyedManifest(manifestVersions(spark, dir).lastOption
+            .getOrElse(0) + 1, Map(0 -> segDir),
+            bytes = Map(segDir -> stagedBytes))
         else {
+          // an append needs the current segment list (readManifest
+          // refuses a dir that has none)
           val m = readManifest(spark, dir)
-          (m.buckets + ((m.buckets.keySet.maxOption.getOrElse(-1) + 1)
-            -> segDir),
-            m.rows.view.filterKeys(m.buckets.values.toSet).toMap +
-              (segDir -> stagedBytes))
+          KeyedManifest(m.version + 1, m.buckets +
+            ((m.buckets.keySet.maxOption.getOrElse(-1) + 1) -> segDir),
+            bytes = m.bytes + (segDir -> stagedBytes))
         }
-      writeManifest(spark, clean, KeyedManifest(next, segs, rows = bytes))
-      next
+      writeManifest(spark, clean, next)
+      next.version
     }
   }
 
@@ -3127,23 +2949,21 @@ object Maintenance {
           "is stale; re-plan the compaction against the fresh manifest")
       val next = (cur.filterNot(folded.contains) :+ segDir)
         .zipWithIndex.map { case (s, i) => i -> s }.toMap
-      val bytes = m.rows.view.filterKeys(next.values.toSet).toMap +
+      val bytes = m.bytes.view.filterKeys(next.values.toSet).toMap +
         (segDir -> stagedBytes)
       writeManifest(spark, clean,
-        KeyedManifest(m.version + 1, next, rows = bytes))
+        KeyedManifest(m.version + 1, next, bytes = bytes))
       m.version + 1
     }
   }
 
   /** The live segment dirs (full paths, ordinal order) at `version`
-    * (latest when None). Pre-manifest layouts resolve to `dir` itself —
-    * the caller's legacy single-segment fallback.
+    * (latest when None).
     */
   def listSegments(spark: SparkSession, dir: String,
                    version: Option[Int] = None): Seq[String] = {
     val clean = cleanDir(dir)
-    if (manifestVersions(spark, dir).isEmpty) Seq(clean)
-    else readManifest(spark, dir, version).buckets.toSeq.sortBy(_._1)
+    readManifest(spark, dir, version).buckets.toSeq.sortBy(_._1)
       .map { case (_, d) => s"$clean/$d" }
   }
 
@@ -3326,11 +3146,10 @@ object Maintenance {
   }
 
   /** Fold one batch into the bucketed agg state. `p`/`sampleK` default
-    * to the BUILD's values recorded in the manifest (sentinels 0/-1;
-    * pre-r10 states fall back to 12/0); `distinctKey`/`sampleUnique`
-    * must still match the build's — a missing state column fails
-    * loudly at the align select (the sample GRAIN is part of the
-    * state's identity; see `partialAgg`). Copy-on-write mode reads +
+    * to the BUILD's values recorded in the manifest (sentinels 0/-1);
+    * `distinctKey`/`sampleUnique` must still match the build's — a
+    * missing state column fails loudly at the align select (the
+    * sample GRAIN is part of the state's identity; see `partialAgg`). Copy-on-write mode reads +
     * re-aggregates + restages ONLY the touched buckets inside the
     * optimistic-commit retry; `asDeltas` appends the partial as delta
     * dirs (bytes ∝ batch) — the batch partial has unique keys per call
@@ -3368,10 +3187,9 @@ object Maintenance {
       s"$clean is not an agg-state table (resolve='${m0.resolve}') — " +
         "row tables merge through upsertKeyed/appendDeltaKeyed")
     // p/sampleK default to the BUILD's recorded values (sentinels
-    // 0/-1 = "use the manifest"); pre-r10 states without the metadata
-    // fall back to the historical defaults
-    val pe = if (p > 0) p else if (m0.aggP > 0) m0.aggP else 12
-    val ke = if (sampleK >= 0) sampleK else math.max(m0.aggK, 0)
+    // 0/-1 = "use the manifest")
+    val pe = if (p > 0) p else m0.aggP
+    val ke = if (sampleK >= 0) sampleK else m0.aggK
     // the sample GRAIN also defaults to the build's recorded column
     // (r12 manifests): a caller passing None no longer silently flips
     // a row-uniform (__smpr) state to the distinct-value grain — and a
@@ -3455,8 +3273,8 @@ object Maintenance {
                                   m: KeyedManifest, buckets: Seq[Int],
                                   p: Int = 0, sampleK: Int = -1)
       : DataFrame = {
-    val pe = if (p > 0) p else if (m.aggP > 0) m.aggP else 12
-    val ke = if (sampleK >= 0) sampleK else math.max(m.aggK, 0)
+    val pe = if (p > 0) p else m.aggP
+    val ke = if (sampleK >= 0) sampleK else m.aggK
     def rd(dirs: Seq[String]): DataFrame =
       readGenDirs(spark, clean, m, dirs, withTomb = true)
         .drop("kb", "__tomb")
@@ -3484,7 +3302,7 @@ object Maintenance {
       case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
       case (Some(a), None) => a
       case (None, Some(b)) => b
-      case (None, None) => emptySnapshot(spark, clean, m).drop("kb", "__tomb")
+      case (None, None) => emptySnapshot(spark, m).drop("kb", "__tomb")
     }
   }
 
@@ -3505,8 +3323,8 @@ object Maintenance {
       val m = readManifest(spark, dir)
       require(m.resolve == "agg",
         s"$clean is not an agg-state table — use compactKeyed")
-      val pe = if (p > 0) p else if (m.aggP > 0) m.aggP else 12
-      val ke = if (sampleK >= 0) sampleK else math.max(m.aggK, 0)
+      val pe = if (p > 0) p else m.aggP
+      val ke = if (sampleK >= 0) sampleK else m.aggK
       val target = buckets.getOrElse(m.deltas.keys.toSeq)
         .filter(b => m.deltas.get(b).exists(_.length >= minChain)).sorted
       if (target.nonEmpty) {
@@ -3556,7 +3374,7 @@ object Maintenance {
         s"$clean is keyed on (${m.keyCol}) — no tag column '$tagCol'")
       val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
       val st =
-        (if (live.isEmpty) emptySnapshot(spark, clean, m).drop("kb", "__tomb")
+        (if (live.isEmpty) emptySnapshot(spark, m).drop("kb", "__tomb")
          else readAggStateBuckets(spark, clean, m, live))
           .withColumn("kb", kb(m.keyCols, m.nBuckets, depths = m.depths))
       val cond = F.col(tagCol).isin(tags: _*)
@@ -3755,7 +3573,7 @@ object Maintenance {
         m.deltas.get(b).exists(_.nonEmpty))
       val st =
         if (live.nonEmpty) readAggStateBuckets(spark, clean, m, live)
-        else emptySnapshot(spark, clean, m).drop("kb", "__tomb")
+        else emptySnapshot(spark, m).drop("kb", "__tomb")
       finalizeAgg(st, keys)
     }
     val o = side(m1)

@@ -147,7 +147,7 @@ object MatView {
         if (m.resolve == "agg" && m.nBuckets > 0) {
           val tag = m.keyCols.find(_ == BucketTagCol)
           val d = MvDef(mv, base, m.keyCols.filterNot(_ == BucketTagCol),
-            vals, bv, dk, if (m.aggP > 0) m.aggP else 12, fsum, tag)
+            vals, bv, dk, m.aggP, fsum, tag)
           reg.putIfAbsent(mv, d)
         }
       } catch { case _: Exception => () } // unloadable hint: no route
@@ -174,7 +174,6 @@ object MatView {
     val m = Maintenance.readManifest(spark, mv)
     require(m.resolve == "agg" && m.nBuckets > 0,
       s"$mv is not a bucketed agg state (resolve='${m.resolve}')")
-    require(m.schemaDdl.nonEmpty, s"$mv records no schema (pre-r9 state)")
     val cols = Maintenance.parseDdl(m.schemaDdl).fieldNames.toSet
     val sfx: String => String =
       c => if (valueCols.length == 1) "" else s"_$c"
@@ -192,7 +191,7 @@ object MatView {
     val tag = m.keyCols.find(_ == BucketTagCol)
     val d = MvDef(mv, base, m.keyCols.filterNot(_ == BucketTagCol),
       valueCols, baseV, distinctKey,
-      if (m.aggP > 0) m.aggP else 12, floatSums, tag)
+      m.aggP, floatSums, tag)
     reg.put(mv, d)
     persist(spark, d)
     d
@@ -267,12 +266,6 @@ object MatView {
       s"$mv is not a registered materialized view"))
     val m = Maintenance.readManifest(spark, mv)
     val su = Option(m.aggSU).filter(_.nonEmpty)
-    require(su.isDefined ||
-      !Maintenance.parseDdl(m.schemaDdl).fieldNames.contains("__smpr"),
-      s"$mv carries a row-uniform sample (__smpr) but its manifest " +
-        "records no sample column (pre-r12 build) — rebuild would " +
-        "silently change the sample grain; re-build the state once " +
-        "with buildAggStateKeyedCols(sampleUnique=...) to record it")
     val (rows, v0) = Maintenance.readKeyedPinned(spark, d.baseDir)
     val df = d.bucketTag match {
       case Some(tag) => rows.withColumn(tag, F.col("kb"))
@@ -281,8 +274,8 @@ object MatView {
     Maintenance.buildAggStateKeyedCols(
       df, mv, d.keys ++ d.bucketTag, d.valueCols,
       m.nBuckets, distinctKey = d.distinctKey,
-      p = if (m.aggP > 0) m.aggP else 12,
-      sampleK = math.max(m.aggK, 0), sampleUnique = su)
+      p = m.aggP,
+      sampleK = m.aggK, sampleUnique = su)
     refreshed(spark, mv, Some(v0))
   }
 
@@ -332,7 +325,7 @@ object MatView {
     val partial = Maintenance.partialAggCols(
       fresh.withColumn(tag, F.col("kb")),
       d.keys :+ tag, d.valueCols, d.distinctKey,
-      if (mSt.aggP > 0) mSt.aggP else 12, math.max(mSt.aggK, 0),
+      mSt.aggP, mSt.aggK,
       Option(mSt.aggSU).filter(_.nonEmpty))
     Maintenance.replaceAggStateByTag(spark, mv, partial, tag, changed)
     refreshedAndCursor(spark, mv, d, head)
@@ -366,10 +359,9 @@ object MatView {
     val folded =
       if (m.keyCols.contains(BucketTagCol))
         Maintenance.aggOfState(st.drop(BucketTagCol), logical,
-          if (m.aggP > 0) m.aggP else 12, math.max(m.aggK, 0))
+          m.aggP, m.aggK)
       else st
-    Maintenance.finalizeAgg(folded, logical,
-      if (m.aggP > 0) m.aggP else 12)
+    Maintenance.finalizeAgg(folded, logical, m.aggP)
   }
 
   /** SESSION-ONLY unregister: removes the in-memory entry but leaves
@@ -450,9 +442,9 @@ object MatView {
     spark.conf.get("spark.graft.mv.autorefresh", "false").toBoolean
 
   /** STAMPEDE CONTROL for query-time auto-refresh: a per-view
-    * `_refresh_lease` published-if-absent (hard link on the file
-    * scheme — the manifest's own atomicity discipline; rename-if-
-    * absent elsewhere), so of N concurrent readers hitting the same
+    * `_refresh_lease` published through `Fs.publishIfAbsent` (the
+    * manifest's own atomicity discipline), so of N concurrent readers
+    * hitting the same
     * stale view exactly ONE pays the changed-bucket re-aggregation;
     * the others route stale → scan this once, as if auto-refresh were
     * off. A lease older than `spark.graft.mv.leaseMs` (default 60 s)
@@ -475,19 +467,7 @@ object MatView {
       val out = fs.create(tmp, true)
       try out.write(s"${System.currentTimeMillis()}".getBytes("UTF-8"))
       finally out.close()
-      val ok =
-        if (fs.getScheme == "file")
-          try {
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(p.toUri.getPath),
-              java.nio.file.Paths.get(tmp.toUri.getPath))
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-          }
-        else fs.rename(tmp, p)
-      if (fs.exists(tmp)) fs.delete(tmp, false)
-      ok
+      Fs.publishIfAbsent(fs, tmp, p)
     }
     if (tryPublish()) return true
     // an existing lease younger than the TTL: someone owns the window
@@ -649,12 +629,11 @@ object MatView {
     // routed sum/count division is a Double — routing would silently
     // change the result's TYPE, and "routing never guesses" extends to
     // types (ADVICE r12; mirrors sumCast's decimal exclusion).
-    def meanOk(mc: String): Boolean =
-      cols.contains(s"__cnv${sfx(mc)}") && (measureType(mc) match {
-        case Some(ByteType | ShortType | IntegerType | LongType) => true
-        case Some(FloatType | DoubleType) => d.floatSums
-        case _ => false
-      })
+    def meanOk(mc: String): Boolean = measureType(mc) match {
+      case Some(ByteType | ShortType | IntegerType | LongType) => true
+      case Some(FloatType | DoubleType) => d.floatSums
+      case _ => false
+    }
     // exact grain over a group-grain state reads rows DIRECTLY (one
     // state row per group — the original r11 plan shape); a key-subset
     // grain, a bucket-grain state, or a global fold AGGREGATES the
@@ -670,8 +649,7 @@ object MatView {
         // routes can't hit this (no rows -> no groups)
         else F.coalesce(F.sum(F.col("__cnt")), F.lit(0L)).as(out))
       case (out, "countv", c) =>
-        measure(c).filter(mc => cols.contains(s"__cnv${sfx(mc)}"))
-          .map(mc => if (direct) F.col(s"__cnv${sfx(mc)}").as(out)
+        measure(c).map(mc => if (direct) F.col(s"__cnv${sfx(mc)}").as(out)
           else F.coalesce(F.sum(F.col(s"__cnv${sfx(mc)}")), F.lit(0L))
             .as(out))
       case (out, "sum", c) =>
@@ -679,8 +657,7 @@ object MatView {
           (if (direct) F.col(s"__sum${sfx(mc)}")
            else F.sum(F.col(s"__sum${sfx(mc)}"))).cast(t).as(out)))
       case (out, "mean", c) =>
-        // avg(c) divides by the NON-NULL count — __cnv (r11 states);
-        // a pre-r11 state without it cannot route mean
+        // avg(c) divides by the NON-NULL count, __cnv
         measure(c).filter(meanOk)
           .map(mc =>
             (if (direct)

@@ -1401,9 +1401,18 @@ class LangSpec extends SparkSpec {
   }
 
   test("examples/analytics_tour.pql runs verbatim over the testdata") {
-    val script = new String(java.nio.file.Files.readAllBytes(
+    val raw = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("examples/analytics_tour.pql")),
       java.nio.charset.StandardCharsets.UTF_8)
+    // redirect the example's /tmp tables into a fresh scratch root (as
+    // the table_format spec does): a table an earlier run left at the
+    // fixed path would be re-bootstrapped instead of created, and one
+    // an older engine wrote carries a manifest format that is refused
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_tour").toString
+    val script = raw
+      .replace("/tmp/graft_tour_keyed", root + "/keyed")
+      .replace("/tmp/graft_tour_aggstate", root + "/aggstate")
     val out = Interp.run(spark, script + "\ngap_summary",
       "events" -> Tables.load(spark, sf, "events"),
       "documents" -> Tables.load(spark, sf, "documents")).df.collect()

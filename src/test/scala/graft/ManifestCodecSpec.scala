@@ -1,0 +1,121 @@
+package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+
+import graft.sources.{Fs, Maintenance}
+import graft.sources.Maintenance.KeyedManifest
+
+/** The single manifest codec and the single publish-if-absent
+  * primitive: every manifest field survives an encode/decode round
+  * trip whatever its text holds, manifests of any other format are
+  * refused by path, and a second publish to a taken destination loses
+  * without touching the winner's bytes.
+  */
+class ManifestCodecSpec extends SparkSpec {
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  // JSON metacharacters, the old format's separators, control and
+  // non-ASCII text (a surrogate pair included) in every string field
+  private val text: Gen[String] = Gen.listOf(Gen.oneOf(Seq("\"", "\\",
+    ",", "|", "{", "}", "[", "]", ":", " ", "\n", "\u0001", "é", "日本",
+    "😀", "a", "b", "0"))).map(_.mkString)
+  private val anyInt = Gen.chooseNum(Int.MinValue, Int.MaxValue)
+  private val anyLong = Gen.chooseNum(Long.MinValue, Long.MaxValue)
+  private def mapOf[K, V](k: Gen[K], v: Gen[V]): Gen[Map[K, V]] =
+    Gen.chooseNum(0, 4).flatMap(n => Gen.listOfN(n, Gen.zip(k, v)))
+      .map(_.toMap)
+  private def seqOf[A](g: Gen[A]): Gen[Seq[A]] =
+    Gen.chooseNum(0, 3).flatMap(n => Gen.listOfN(n, g))
+
+  private val manifest: Gen[KeyedManifest] = for {
+    version <- Gen.chooseNum(1, Int.MaxValue)
+    buckets <- mapOf(anyInt, text)
+    keyCol <- text
+    nBuckets <- anyInt
+    schemaDdl <- text
+    deltas <- mapOf(anyInt, seqOf(text))
+    rows <- mapOf(text, anyLong)
+    statsCols <- seqOf(text)
+    colStats <- mapOf(text, mapOf(text, Gen.zip(text, text)))
+    resolve <- text
+    txn <- mapOf(text, anyLong)
+    aggP <- anyInt
+    aggK <- anyInt
+    depths <- mapOf(anyInt, anyInt)
+    aggSU <- text
+    seqCol <- text
+    bytes <- mapOf(text, anyLong)
+  } yield KeyedManifest(version, buckets, keyCol, nBuckets, schemaDdl,
+    deltas, rows, 1700000000123L, statsCols, colStats, resolve, txn,
+    aggP, aggK, depths, aggSU, seqCol, bytes)
+
+  test("manifest codec: decode(encode(m)) == m for arbitrary manifests") {
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(500),
+      Prop.forAll(manifest) { m =>
+        KeyedManifest.decode(m.version, KeyedManifest.encode(m)) == m
+      })
+    assert(res.passed, res.status.toString)
+    // the all-defaults manifest is just the stamp
+    assert(KeyedManifest.encode(KeyedManifest(1, Map.empty)) ==
+      """{"format":1}""")
+  }
+
+  test("every written manifest is compact JSON stamped format 1") {
+    val dir = tmp("graft_mfmt")
+    Maintenance.writeKeyed(spark.range(0, 8).selectExpr("id AS k",
+      "id AS v"), dir, "k", 2)
+    val body = new String(Files.readAllBytes(
+      Paths.get(dir, "_manifests", "v000000001.json")), UTF_8)
+    assert(body.startsWith("""{"format":1,"""), body)
+    assert(!body.contains(": "), body)
+  }
+
+  test("a manifest with a missing or foreign format is refused by path") {
+    def refused(body: String): String = {
+      val dir = tmp("graft_mbad")
+      Files.createDirectories(Paths.get(dir, "_manifests"))
+      Files.write(Paths.get(dir, "_manifests", "v000000001.json"),
+        body.getBytes(UTF_8))
+      val err = intercept[IllegalArgumentException] {
+        Maintenance.readKeyed(spark, dir)
+      }
+      assert(err.getMessage.contains(dir), err.getMessage)
+      err.getMessage
+    }
+    assert(refused("""{"buckets":{"0":"b00000_g000000001"}}""")
+      .contains("(missing)"))
+    assert(refused("""{"format":2,"buckets":{}}""").contains("format 2"))
+    // the pre-format shape: a regex-era manifest
+    assert(refused("""{"version": 1, "buckets": {"0": "g1"}}""")
+      .contains("(missing)"))
+    assert(refused("not json").contains("not JSON"))
+  }
+
+  test("publishIfAbsent: the first publish wins, the loser leaves no tmp") {
+    val dir = new Path(tmp("graft_pub"))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def staged(name: String, body: String): Path = {
+      val p = new Path(dir, name)
+      val out = fs.create(p, true)
+      try out.write(body.getBytes(UTF_8)) finally out.close()
+      p
+    }
+    val dst = new Path(dir, "v000000001.json")
+    val t1 = staged(".tmp_a", "first")
+    assert(Fs.publishIfAbsent(fs, t1, dst))
+    val t2 = staged(".tmp_b", "second")
+    assert(!Fs.publishIfAbsent(fs, t2, dst))
+    assert(new String(Files.readAllBytes(Paths.get(dst.toUri.getPath)),
+      UTF_8) == "first")
+    assert(!fs.exists(t1) && !fs.exists(t2))
+    assert(fs.listStatus(dir).map(_.getPath.getName)
+      .filterNot(_.endsWith(".crc")).toSeq == Seq("v000000001.json"))
+  }
+}

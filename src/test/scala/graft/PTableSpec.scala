@@ -103,17 +103,6 @@ class PTableSpec extends SparkSpec {
     assert(ok.length == 2)
   }
 
-  test("QueryCache memoizes by (name, args) signature") {
-    val qc = new QueryCache
-    var builds = 0
-    def build(n: Int) = { builds += 1; items(n).df }
-    qc.memo("q", 1)(build(1)); qc.memo("q", 1)(build(1))
-    qc.memo("q", 2)(build(2))
-    assert(builds == 2 && qc.size == 2)
-    qc.invalidate("q")
-    assert(qc.size == 0)
-  }
-
   test("update is copy-on-write with condition") {
     val t = items(1, 2, 3)
       .update(col("item") === 2)("item" -> (col("item") * 100))

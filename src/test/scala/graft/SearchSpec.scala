@@ -220,6 +220,21 @@ class SearchSpec extends SparkSpec {
     assert(err.getMessage.contains("pre-manifest"), err.getMessage)
   }
 
+  test("keyedStats refuses a search index instead of reporting bytes as rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idxstats")
+      .toString
+    val M = graft.sources.Maintenance
+    Search.buildIndex(docs.limit(20), "doc_id", "text", dir, nBuckets = 4)
+    // segment sizes live in their own `bytes` map, never in `rows`
+    val m = M.readManifest(spark, dir)
+    assert(m.rows.isEmpty && m.bytes.keySet == m.buckets.values.toSet &&
+      m.bytes.values.forall(_ > 0), m)
+    val err = intercept[IllegalArgumentException] {
+      M.keyedStats(spark, dir)
+    }
+    assert(err.getMessage.contains("no keyed metadata"), err.getMessage)
+  }
+
   test("phraseCount: consecutive matches only, overlaps count, short docs safe") {
     val df = Seq(
       (1L, "a b c a b"),   // "a b" twice
