@@ -23,18 +23,30 @@ object Bench {
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, if (v >= 100) "%.0f" else if (v >= 10) "%.1f" else "%.2f", Double.box(v))
 
+  /** Sets `SparkEntry.probeScale` from SPARK_GRAFT_PROBES and returns
+    * the raw setting (Bench reports it). The synthetic scale probes
+    * dominate a full run's wall-clock at full size, so the default is
+    * 1/5 scale (queries AND corpora) — the signal is plan shape and
+    * relative cost, which survives the cut (measured at 1/3: every
+    * probe kept its ranking). `full` = 1, `third` = 1/3, a number n =
+    * 1/n; a typo'd value falls back to the default rather than killing
+    * the run before a single query. Verify never calls this: its frozen
+    * constant oracles need SparkEntry's default scale 1.0.
+    */
+  private[graft] def probeScaleFromEnv(): String = {
+    val probes = sys.env.getOrElse("SPARK_GRAFT_PROBES", "5")
+    SparkEntry.probeScale = probes match {
+      case "full" => 1.0
+      case "third" => 1.0 / 3
+      case n => 1.0 / scala.util.Try(n.toDouble).getOrElse(5.0).max(1.0)
+    }
+    probes
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     // ERROR, not WARN: the per-query cleanup's blocking unpersist of
     // localCheckpoint blocks emits a WARN per RDD, and at 299 queries
     // that spam FOLLOWS the final JSON line in the driver's merged
@@ -44,23 +56,7 @@ object Bench {
     // are caught and reported in the JSON itself.
     spark.sparkContext.setLogLevel("ERROR")
 
-    // Probe budget: the synthetic scale probes dominate the round's
-    // wall-clock at full size (x-family was 93s of a 146s round-6
-    // total and still growing). Default to 1/5 scale (queries AND
-    // corpora) — the per-round signal is plan-shape + relative cost,
-    // which survives the scale cut (measured at 1/3: every probe kept
-    // its ranking) — and keep the full-scale headline numbers
-    // reproducible via SPARK_GRAFT_PROBES=full (or any divisor, e.g.
-    // =3). Verify is unaffected: its frozen constant oracles require
-    // scale 1.0, which is SparkEntry's default.
-    // a typo'd env var must not kill the whole bench round before a
-    // single query runs — unparseable values fall back to the default
-    val probes = sys.env.getOrElse("SPARK_GRAFT_PROBES", "5")
-    SparkEntry.probeScale = probes match {
-      case "full" => 1.0
-      case "third" => 1.0 / 3
-      case n => 1.0 / scala.util.Try(n.toDouble).getOrElse(5.0).max(1.0)
-    }
+    val probes = probeScaleFromEnv()
 
     // Force FULL evaluation: a noop-format write materializes every
     // output column (count() would let Catalyst prune unreferenced

@@ -512,17 +512,16 @@ object Search {
   }
 
   /** Memo of one SEGMENT's stats row keyed by the stats files'
-    * (session, path, mtime, length) identity — segment dirs are
-    * immutable once committed (same discipline as the manifest and
-    * Tables.load caches: metadata values, never query results; a
-    * rewritten file misses by identity). Pre-r15 every index query
-    * paid one `.head` Spark job per stats consult plus a broadcast of
-    * the stats row into the scoring plan; the folded values are three
-    * longs the driver can hold and inline as literals.
+    * (path, mtime, length) identity — segment dirs are immutable once
+    * committed (same discipline as the manifest cache: metadata values,
+    * never query results; a rewritten file misses by identity). The
+    * value is three longs that depend only on the files, so it holds no
+    * session and serves every session of the JVM. Without it every
+    * index query paid one `.head` Spark job per stats consult plus a
+    * broadcast of the stats row into the scoring plan.
     */
   private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (Long, Long, Int)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int)]()
 
   /** The corpus-stats values folded over a segment list: n_docs and
     * sdl are additive; the bucket count must agree across segments (it
@@ -537,8 +536,8 @@ object Search {
       val files = fs.listStatus(root).toSeq
         .filter(_.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.toString)
-      val key = (spark, files.map(f =>
-        s"${f.getPath}#${f.getModificationTime}#${f.getLen}").mkString("|"))
+      val key = files.map(f =>
+        s"${f.getPath}#${f.getModificationTime}#${f.getLen}").mkString("|")
       if (statsCache.size() > 1024) statsCache.clear()
       statsCache.computeIfAbsent(key, _ => {
         val row = spark.read.parquet(s + "/stats")

@@ -204,6 +204,14 @@ object Maintenance {
     *    h mod (nBuckets·2^d) = leaf id; absent = depth 0.
     *  - `seqCol`: the SEQUENCE column; once set, delta resolution is
     *    max-seq-wins instead of chain-order-wins.
+    *
+    * Derived, not stored: `chain(b)` is bucket b's delta dirs,
+    * `dirsOf(b)` its base generation then its chain, `changedFrom(prev)`
+    * the buckets whose generation or chain moved since `prev`, and
+    * `liveBuckets` the buckets holding rows — a base generation or a
+    * non-empty chain. This is the one definition of "live"; readers
+    * pass any bucket selection to the resolvers (`resolveBuckets`,
+    * `readAggStateBuckets`), which keep only the live ones.
     */
   final case class KeyedManifest(version: Int, buckets: Map[Int, String],
                                  keyCol: String = "", nBuckets: Int = 0,
@@ -226,6 +234,29 @@ object Maintenance {
       */
     def keyCols: Seq[String] =
       if (keyCol.isEmpty) Seq.empty else keyCol.split(",").toSeq
+
+    def chain(b: Int): Seq[String] = deltas.getOrElse(b, Nil)
+
+    def dirsOf(b: Int): Seq[String] = buckets.get(b).toSeq ++ chain(b)
+
+    /** The live buckets among `among` (default: every bucket this
+      * manifest names), ascending.
+      */
+    def liveBuckets(among: Iterable[Int] = buckets.keySet ++ deltas.keySet)
+        : Seq[Int] =
+      among.filter(b => buckets.contains(b) || chain(b).nonEmpty)
+        .toSeq.distinct.sorted
+
+    /** The buckets whose base generation or delta chain differs from
+      * `prev`'s, ascending — what a changelog or an incremental refresh
+      * between the two snapshots re-reads.
+      */
+    def changedFrom(prev: KeyedManifest): Seq[Int] =
+      (prev.buckets.keySet ++ buckets.keySet ++ prev.deltas.keySet ++
+        deltas.keySet)
+        .filter(b => prev.buckets.get(b) != buckets.get(b) ||
+          prev.chain(b) != chain(b))
+        .toSeq.sorted
   }
 
   /** The on-disk manifest codec: compact JSON stamped `"format": 1`.
@@ -237,7 +268,7 @@ object Maintenance {
   object KeyedManifest {
     val Format = 1
 
-    private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    private[sources] val json = new com.fasterxml.jackson.databind.ObjectMapper()
     private type Node = com.fasterxml.jackson.databind.JsonNode
     private type Obj = com.fasterxml.jackson.databind.node.ObjectNode
 
@@ -543,13 +574,8 @@ object Maintenance {
     * read straight through with NO resolution shuffle.
     */
   def readKeyed(spark: SparkSession, dir: String,
-                version: Option[Int] = None): DataFrame = {
-    val clean = cleanDir(dir)
-    val m = readManifest(spark, dir, version)
-    val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-    if (live.isEmpty) return emptySnapshot(spark, m)
-    resolveBuckets(spark, clean, m, live, None)
-  }
+                version: Option[Int] = None): DataFrame =
+    readSnapshot(spark, dir, version)._1
 
   /** The pristine latest snapshot AND the manifest version it resolved
     * at — ONE manifest read, so the returned pin can never disagree
@@ -560,14 +586,13 @@ object Maintenance {
     * manifest happens to be at query time (a post-read base commit
     * must not change which ROWS the already-read frame aggregates).
     */
-  def readKeyedPinned(spark: SparkSession, dir: String): (DataFrame, Int) = {
-    val clean = cleanDir(dir)
-    val m = readManifest(spark, dir)
-    val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-    val df =
-      if (live.isEmpty) emptySnapshot(spark, m)
-      else resolveBuckets(spark, clean, m, live, None)
-    (df, m.version)
+  def readKeyedPinned(spark: SparkSession, dir: String): (DataFrame, Int) =
+    readSnapshot(spark, dir, None)
+
+  private def readSnapshot(spark: SparkSession, dir: String,
+                           version: Option[Int]): (DataFrame, Int) = {
+    val m = readManifest(spark, dir, version)
+    (resolveBuckets(spark, dir, m, m.liveBuckets()), m.version)
   }
 
   /** Range read with ZONE-MAP pruning: the rows where
@@ -590,32 +615,16 @@ object Maintenance {
   def readKeyedRange(spark: SparkSession, dir: String, colName: String,
                      lo: Any, hi: Any,
                      version: Option[Int] = None): DataFrame = {
-    val clean = cleanDir(dir)
-    val filt = F.col(colName) >= F.lit(lo) && F.col(colName) <= F.lit(hi)
     val m = readManifest(spark, dir, version)
-    val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-    if (live.isEmpty) return emptySnapshot(spark, m).filter(filt)
-    val dt = parseDdl(m.schemaDdl).fields.find(_.name == colName)
-      .map(_.dataType)
-    val kept = live.filter { b =>
-      val dirs = m.buckets.get(b).toSeq ++ m.deltas.getOrElse(b, Nil)
-      dirs.exists { d =>
-        (dt, m.colStats.get(d).flatMap(_.get(colName))) match {
-          case (Some(t), Some((mn, mx))) => statOverlap(t, mn, mx, lo, hi)
-          case _ => true // no stats / unknown type → unprunable
-        }
-      }
-    }
-    if (kept.isEmpty) emptySnapshot(spark, m).filter(filt)
-    else resolveBuckets(spark, clean, m, kept, None).filter(filt)
+    // the caller's exact column and probes, never a re-analyzed
+    // predicate: a Double probe on a Long column analyzes to a cast on
+    // the ATTRIBUTE side, which readKeyedWhere rightly refuses to prune
+    val kept = zonePrune(m, m.liveBuckets(),
+      Seq(colName -> Seq((Some(lo), Some(hi)))))
+    resolveBuckets(spark, dir, m, kept)
+      .filter(F.col(colName) >= F.lit(lo) && F.col(colName) <= F.lit(hi))
   }
 
-  /** Can [lo, hi] intersect a dir whose recorded stats are
-    * [mnS, mxS]? Decodes the strings by the column's SPARK type
-    * (mirroring `statEncode`'s parquet-value forms); unknown types or
-    * unparseable probes answer true (unprunable — pruning must never
-    * be a guess).
-    */
   /** Predicate-planned read — the scan-planning surface Delta/Iceberg
     * run inside their DSv2 scan builders, as a function: prune buckets
     * from `cond`'s OWN STRUCTURE, then apply the full predicate after
@@ -636,10 +645,7 @@ object Maintenance {
   def readKeyedWhere(spark: SparkSession, dir: String, cond: Column,
                      version: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.catalyst.{expressions => E}
-    val clean = cleanDir(dir)
     val m = readManifest(spark, dir, version)
-    val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-    if (live.isEmpty) return emptySnapshot(spark, m).filter(cond)
     def conjuncts(e: E.Expression): Seq[E.Expression] = e match {
       case E.And(l, r) => conjuncts(l) ++ conjuncts(r)
       case x => Seq(x)
@@ -735,12 +741,11 @@ object Maintenance {
     keyTuples match {
       // the point-read path. Capped: a 100k-element IN-list would
       // explode the pushed predicate and the probe frame; past the cap
-      // the scan+filter path is the better plan anyway (readKeyBuckets
-      // exists for bulk key-frame reads). A PINNED version threads
-      // through to lookupKeyed so the point read answers from exactly
-      // the caller's snapshot — a base commit between the caller's
-      // read_keyed and this selection must not change the frame's rows
-      // (the KeyedMark contract; ADVICE r12).
+      // the scan+filter path is the better plan anyway. A PINNED
+      // version threads through to lookupKeyed so the point read
+      // answers from exactly the caller's snapshot — a base commit
+      // between the caller's read_keyed and this selection must not
+      // change the frame's rows (the KeyedMark contract; ADVICE r12).
       case Some(ks) if ks.nonEmpty && ks.length <= 1000 =>
         return lookupKeyed(spark, dir, ks, version).filter(cond)
       case _ => ()
@@ -794,18 +799,29 @@ object Maintenance {
             .map(v => (Some(v), Some(v)))))
       case _ => bounds(e).map { case (n, lo, hi) => (n, Seq((lo, hi))) }
     }
-    val types = parseDdl(m.schemaDdl).fields
-      .map(f => f.name -> f.dataType).toMap
     val zone = cs.flatMap(ranges(_)).flatMap { case (n, rs) =>
       m.statsCols.find(_.equalsIgnoreCase(n)).map(real => (real, rs))
     }
-    val kept = live.filter { b =>
-      val dirs = m.buckets.get(b).toSeq ++ m.deltas.getOrElse(b, Nil)
-      // kept iff, for EVERY recognized conjunct, SOME dir's stats can
-      // intersect SOME of its disjunct ranges (bucket granularity — the
-      // same delta-safety rule as readKeyedRange)
+    resolveBuckets(spark, dir, m, zonePrune(m, m.liveBuckets(), zone))
+      .filter(cond)
+  }
+
+  /** The zone-map pruner behind `readKeyedRange` and `readKeyedWhere`:
+    * the buckets among `buckets` that the manifest's min/max stats
+    * cannot rule out. `zone` is a list of (column, disjunct ranges)
+    * conjuncts; a bucket is kept iff, for EVERY conjunct, SOME of its
+    * dirs can intersect SOME of the ranges (bucket granularity — see
+    * `readKeyedRange`). A dir without stats for the column, or a column
+    * of unknown type, is unprunable.
+    */
+  private def zonePrune(m: KeyedManifest, buckets: Seq[Int],
+                        zone: Seq[(String, Seq[(Option[Any], Option[Any])])])
+      : Seq[Int] = {
+    val types = parseDdl(m.schemaDdl).fields
+      .map(f => f.name -> f.dataType).toMap
+    buckets.filter { b =>
       zone.forall { case (n, rs) =>
-        dirs.exists { d =>
+        m.dirsOf(b).exists { d =>
           (types.get(n), m.colStats.get(d).flatMap(_.get(n))) match {
             case (Some(t), Some((mn, mx))) =>
               rs.exists { case (lo, hi) =>
@@ -815,19 +831,14 @@ object Maintenance {
         }
       }
     }
-    if (kept.isEmpty) emptySnapshot(spark, m).filter(cond)
-    else resolveBuckets(spark, clean, m, kept, None).filter(cond)
   }
 
-  private def statOverlap(dt: org.apache.spark.sql.types.DataType,
-                          mnS: String, mxS: String,
-                          lo: Any, hi: Any): Boolean =
-    statOverlapBounds(dt, mnS, mxS, Some(lo), Some(hi))
-
-  /** Open-ended variant: None = unbounded on that side. Overlap of
-    * [lo, hi] with a dir's recorded [mn, mx] requires mn ≤ hi and
-    * mx ≥ lo — each check skipped for an open bound, and any
-    * undecodable comparison answers true (unprunable, never a guess).
+  /** Can [lo, hi] intersect a dir whose recorded stats are [mnS, mxS]?
+    * None = unbounded on that side. Overlap requires mn ≤ hi and
+    * mx ≥ lo — each check skipped for an open bound. The strings decode
+    * by the column's SPARK type (mirroring `statEncode`'s parquet-value
+    * forms); unknown types or undecodable comparisons answer true
+    * (unprunable — pruning must never be a guess).
     */
   private def statOverlapBounds(dt: org.apache.spark.sql.types.DataType,
                                 mnS: String, mxS: String,
@@ -862,6 +873,25 @@ object Maintenance {
       lo.forall(l => cmp(mxS, l).forall(_ >= 0))
   }
 
+  /** The schema every read of `m` returns: the recorded snapshot
+    * schema (plus `__tomb` for delta levels), every field nullable like
+    * parquet inference (file-source columns are always nullable on
+    * read; `asNullable` is private[spark], and fromDDL already made
+    * nested levels nullable). An emptied table therefore reads back
+    * with the same schema as a non-empty read of it, even when the
+    * DDL recorded `NOT NULL` fields.
+    */
+  private def readSchema(m: KeyedManifest, withTomb: Boolean)
+      : org.apache.spark.sql.types.StructType = {
+    val base = parseDdl(m.schemaDdl)
+    val sch =
+      if (withTomb && !base.fieldNames.contains("__tomb"))
+        base.add("__tomb", org.apache.spark.sql.types.BooleanType)
+      else base
+    org.apache.spark.sql.types.StructType(
+      sch.fields.map(_.copy(nullable = true)))
+  }
+
   /** A fully-emptied table is a legal snapshot: an EMPTY frame with
     * the schema the manifest records (self-describing, so this
     * survives vacuuming every prior generation).
@@ -870,32 +900,44 @@ object Maintenance {
                             m: KeyedManifest): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      parseDdl(m.schemaDdl))
+      readSchema(m, withTomb = false))
 
   /** Parquet read of generation/delta dirs with the manifest's OWN
     * recorded schema instead of `mergeSchema` footer inference: every
-    * commit since r9 records the additively-unioned snapshot schema, so
-    * re-deriving it from file footers launched one schema-merge Spark
-    * job per read for information the manifest already holds (guide
-    * §1/§6 — plan-time cost; measurable across the lifecycle gates,
-    * and at 100 TB a footer sweep of a wide snapshot is real IO).
+    * commit records the additively-unioned snapshot schema, so
+    * re-deriving it from file footers would launch one schema-merge
+    * Spark job per read for information the manifest already holds.
     * Dirs missing a newer column surface it as NULL exactly as the
-    * mergeSchema read did; `asNullable` mirrors parquet inference
-    * (file-source columns are always nullable on read).
+    * mergeSchema read did.
     */
   private def readGenDirs(spark: SparkSession, clean: String,
                           m: KeyedManifest, dirs: Seq[String],
-                          withTomb: Boolean): DataFrame = {
-    val base = parseDdl(m.schemaDdl)
-    val sch =
-      if (withTomb && !base.fieldNames.contains("__tomb"))
-        base.add("__tomb", org.apache.spark.sql.types.BooleanType)
-      else base
-    // fields forced nullable like parquet inference (asNullable is
-    // private[spark]); fromDDL already made nested levels nullable
-    spark.read.schema(org.apache.spark.sql.types.StructType(
-      sch.fields.map(_.copy(nullable = true))))
+                          withTomb: Boolean): DataFrame =
+    spark.read.schema(readSchema(m, withTomb))
       .parquet(dirs.sorted.map(d => s"$clean/$d"): _*)
+
+  /** The CHAIN LEVELS of `buckets` under `m`, one frame per non-empty
+    * level: level 0 is the buckets' base generations (a bucket born
+    * from a pure delta insert has none), level i every bucket's i-th
+    * delta. Each level reads through `readGenDirs` — delta levels
+    * (i >= 1) always carry `__tomb` in their files, which the recorded
+    * snapshot schema deliberately drops, so it is added back for them
+    * only — and is tagged `__prec = i`. The one place chain levels are
+    * built; `resolveBuckets` and `keyedChangesOnePass` each aggregate
+    * them their own way.
+    */
+  private def chainLevels(spark: SparkSession, clean: String,
+                          m: KeyedManifest,
+                          buckets: Seq[Int]): Seq[DataFrame] = {
+    val maxChain = (0 +: buckets.map(m.chain(_).length)).max
+    (0 to maxChain).flatMap { i =>
+      val dirs =
+        if (i == 0) buckets.flatMap(m.buckets.get)
+        else buckets.flatMap(m.chain(_).lift(i - 1))
+      if (dirs.isEmpty) None
+      else Some(readGenDirs(spark, clean, m, dirs, withTomb = i >= 1)
+        .withColumn("__prec", F.lit(i)))
+    }
   }
 
   /** The live rows of `buckets` under manifest `m`: plain buckets read
@@ -909,46 +951,38 @@ object Maintenance {
     * (point lookups) pushes into every level's parquet scan BEFORE
     * the window. Levels union by name so delta batches may carry
     * additive schema changes like any merge.
+    *
+    * With `readAggStateBuckets`, one of the only two places a manifest
+    * and a bucket selection turn into rows: callers pass any selection
+    * straight through — buckets that are not live are skipped, and a
+    * selection with no live bucket reads as the empty snapshot.
     */
-  private def resolveBuckets(spark: SparkSession, clean: String,
-                             m: KeyedManifest, buckets: Seq[Int],
-                             keyFilter: Option[Column]): DataFrame = {
+  private[graft] def resolveBuckets(spark: SparkSession, dir: String,
+                                    m: KeyedManifest, buckets: Seq[Int],
+                                    keyFilter: Option[Column] = None)
+      : DataFrame = {
+    val clean = cleanDir(dir)
+    val (deltaB, plainB) =
+      m.liveBuckets(buckets).partition(m.chain(_).nonEmpty)
     // an agg-state table's delta chains hold AGGREGATE PARTIALS —
     // last-wins resolution would silently keep only the newest partial
     // per key; fail loudly instead (plain chain-free buckets are fine:
     // a compacted/CoW agg state has unique keys and no resolution)
-    require(m.resolve != "agg" ||
-      buckets.forall(b => !m.deltas.get(b).exists(_.nonEmpty)),
+    require(m.resolve != "agg" || deltaB.isEmpty,
       s"$clean stores aggregate partials in its delta chains " +
         "(resolve=agg) — read through readAggStateKeyed and compact " +
         "with compactAggStateKeyed, never the last-wins readers")
-    def rd(dirs: Seq[String], withTomb: Boolean = false): DataFrame = {
-      val df = readGenDirs(spark, clean, m, dirs, withTomb)
-      keyFilter.fold(df)(df.filter)
-    }
-    val (deltaB, plainB) = buckets.partition(b =>
-      m.deltas.get(b).exists(_.nonEmpty))
+    def filtered(df: DataFrame): DataFrame = keyFilter.fold(df)(df.filter)
     val plain = plainB.flatMap(m.buckets.get) match {
       case Nil => None
-      case dirs => Some(rd(dirs))
+      case dirs => Some(filtered(
+        readGenDirs(spark, clean, m, dirs, withTomb = false)))
     }
     val resolved =
       if (deltaB.isEmpty) None
       else {
-        val maxChain = deltaB.map(b => m.deltas(b).length).max
-        // level 0 = the base generations (a bucket born from a pure
-        // delta insert has none), level i = every bucket's i-th delta
-        val levels = (0 -> deltaB.flatMap(m.buckets.get)) +:
-          (1 to maxChain).map(i =>
-            i -> deltaB.flatMap(b => m.deltas(b).lift(i - 1)))
-        val parts = levels.filter(_._2.nonEmpty).map { case (i, dirs) =>
-          // delta levels (i >= 1) always carry __tomb in their files;
-          // the recorded snapshot schema deliberately drops it, so the
-          // explicit-schema read adds it back for those levels only
-          rd(dirs, withTomb = i >= 1).withColumn("__prec", F.lit(i))
-        }
-        val un = parts.reduce(
-          _.unionByName(_, allowMissingColumns = true))
+        val un = chainLevels(spark, clean, m, deltaB).map(filtered)
+          .reduce(_.unionByName(_, allowMissingColumns = true))
         // chain-order-wins by default; a table with a registered
         // SEQUENCE column resolves max-seq-wins (ties break by chain
         // order) — the out-of-order CDC contract: a late-arriving old
@@ -976,12 +1010,9 @@ object Maintenance {
           else top
         Some(alive.drop("__prec", "__tomb"))
       }
-    (plain, resolved) match {
-      case (Some(p), Some(r)) => p.unionByName(r, allowMissingColumns = true)
-      case (Some(p), None) => p
-      case (None, Some(r)) => r
-      case (None, None) => emptySnapshot(spark, m)
-    }
+    (plain ++ resolved).reduceOption(
+      _.unionByName(_, allowMissingColumns = true))
+      .getOrElse(emptySnapshot(spark, m))
   }
 
   /** Write `df` as a KEYED table: hash-bucketed into `nBuckets` dirs on
@@ -1384,7 +1415,6 @@ object Maintenance {
       .flatMap(_.select("kb").distinct().collect().map(_.getInt(0)))
       .distinct.sorted
     if (touched.isEmpty) return
-    val batchForSchema = up.orElse(dk).get
     withCommitRetry(s"mergeKeyed($dir)") {
       // ONE manifest read per attempt, threaded through base read AND
       // commit: the publish targets exactly the version the merge was
@@ -1395,8 +1425,7 @@ object Maintenance {
       require(m.depths == depths0,
         s"keyed table $dir re-bucketed mid-merge (splitKeyed) — " +
           "re-run the merge")
-      val base = readTouched(spark, dir, m, touched, batchForSchema,
-        keyCols, nBuckets)
+      val base = readTouched(spark, dir, m, touched, keyCols, nBuckets)
       val gone = (up.map(_.select(keyCols.map(F.col): _*)).toSeq ++
         dk.map(_.select(keyCols.map(F.col): _*)).toSeq)
         .reduce(_.unionByName(_)).distinct()
@@ -1599,7 +1628,7 @@ object Maintenance {
       val matched = probe.getLong(0)
       val touched = probe.getSeq[Int](1).sorted
       if (matched > 0L) {
-        val resolved = resolveBuckets(spark, clean, m, touched, None)
+        val resolved = resolveBuckets(spark, clean, m, touched)
         // cond is NULL-safe SQL semantics: NULL matches nothing, so a
         // delete KEEPS NULL-cond rows and an update leaves them alone
         val matches = F.coalesce(cond, F.lit(false))
@@ -1686,8 +1715,7 @@ object Maintenance {
       require(m.depths == depths0,
         s"keyed table $dir re-bucketed mid-merge (splitKeyed) — " +
           "re-run the merge")
-      val base = readTouched(spark, dir, m, touched, reduced,
-        keyCols, nBuckets)
+      val base = readTouched(spark, dir, m, touched, keyCols, nBuckets)
       // cross-batch last-wins: a late batch carrying an older sequence
       // for a stored key (out-of-order source, or a replay interleaved
       // with newer batches) must not regress the row — compare against
@@ -1716,13 +1744,12 @@ object Maintenance {
     * with any delta chains RESOLVED (so a full merge of a bucket folds
     * its merge-on-read deltas into the staged generation — stageMerge
     * then drops them from the manifest). When none of the touched
-    * buckets exists yet (pure-insert batch into new buckets), an empty
-    * frame in the STORED column order (from any live bucket, or the
-    * batch itself on an emptied table) keeps the merge's union aligned.
+    * buckets exists yet (pure-insert batch into new buckets) this is
+    * the empty snapshot; the merge unions by name, so its manifest
+    * schema keeps the union aligned.
     */
   private def readTouched(spark: SparkSession, dir: String,
                           m: KeyedManifest, touched: Seq[Int],
-                          batch: DataFrame,
                           keyCols: Seq[String], nBuckets: Int): DataFrame = {
     val clean = cleanDir(dir)
     val keyCol = keyCols.mkString(",")
@@ -1739,13 +1766,7 @@ object Maintenance {
       s"$clean resolves by sequence column '${m.seqCol}' — upsert/" +
         "delete/CoW-merge are batch-wins and would break it; append " +
         "stamped deltas instead (appendDeltaKeyed) and compact")
-    val live = touched.filter(b =>
-      m.buckets.contains(b) || m.deltas.get(b).exists(_.nonEmpty))
-    if (live.nonEmpty)
-      resolveBuckets(spark, clean, m, live, None)
-    else if (m.buckets.nonEmpty)
-      spark.read.parquet(s"$clean/${m.buckets.head._2}").limit(0)
-    else emptySnapshot(spark, m) // emptied table keeps its schema
+    resolveBuckets(spark, clean, m, touched)
   }
 
   /** MERGE-ON-READ upsert: append the batch as per-bucket DELTA dirs
@@ -1869,7 +1890,7 @@ object Maintenance {
           s"(${m.keyCol}, ${m.nBuckets}) buckets mid-append; caller " +
           s"staged for ($keyCol, $nBuckets) — re-run the append")
       val nextDeltas = m.deltas ++ staged.map { case (b, d) =>
-        b -> (m.deltas.getOrElse(b, Seq.empty) :+ d)
+        b -> (m.chain(b) :+ d)
       }
       val schema = unionSchema(parseDdl(m.schemaDdl),
         withKb.drop("__tomb").schema).toDDL
@@ -1901,10 +1922,10 @@ object Maintenance {
       // from the MANIFEST (zero data IO), so a scheduler can call this
       // every few batches and it no-ops until chains build up
       val target = buckets.getOrElse(m.deltas.keys.toSeq)
-        .filter(b => m.deltas.get(b).exists(_.length >= minChain)).sorted
+        .filter(m.chain(_).length >= minChain).sorted
       if (target.nonEmpty)
         commitKeyed(spark, stageMerge(spark, clean,
-          resolveBuckets(spark, clean, m, target, None), target, m))
+          resolveBuckets(spark, clean, m, target), target, m))
     }
   }
 
@@ -1924,9 +1945,8 @@ object Maintenance {
     val m = readManifest(spark, dir)
     require(m.nBuckets > 0, s"$clean has no keyed metadata")
     val fs = hadoopFs(spark, new Path(clean))
-    (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted.map { b =>
-      val dirs = m.buckets.get(b).toSeq ++ m.deltas.getOrElse(b, Nil)
-      b -> dirs.map(d =>
+    m.liveBuckets().map { b =>
+      b -> m.dirsOf(b).map(d =>
         fs.getContentSummary(new Path(clean, d)).getLength).sum
     }.filter(_._2 > targetBytes).sortBy(-_._2)
   }
@@ -1952,7 +1972,7 @@ object Maintenance {
     val n = m.nBuckets
     val fs = hadoopFs(spark, new Path(clean))
     def bytes(b: Int): Long =
-      (m.buckets.get(b).toSeq ++ m.deltas.getOrElse(b, Nil))
+      m.dirsOf(b)
         .map(d => fs.getContentSummary(new Path(clean, d)).getLength).sum
     m.depths.toSeq
       // the LOW sibling names the pair (parent id = its own id); the
@@ -2007,8 +2027,7 @@ object Maintenance {
         if (d - 1 == 0) cleared else cleared + (p -> (d - 1))
       }
       val children = pairs.flatMap { case (p, sib, _) => Seq(p, sib) }
-      val live = children.filter(b => m.buckets.contains(b) ||
-        m.deltas.get(b).exists(_.nonEmpty))
+      val live = m.liveBuckets(children)
       if (live.isEmpty) {
         // depth-only commit: the merged leaves held no rows
         writeManifest(spark, clean,
@@ -2020,7 +2039,7 @@ object Maintenance {
         val rows =
           if (m.resolve == "agg")
             readAggStateBuckets(spark, clean, m, live)
-          else resolveBuckets(spark, clean, m, live, None).drop("kb")
+          else resolveBuckets(spark, clean, m, live).drop("kb")
         val rehashed = rows.withColumn("kb",
           kb(m.keyCols, n, depths = newDepths))
         val pending = stageMerge(spark, dir, rehashed, children, m)
@@ -2086,31 +2105,6 @@ object Maintenance {
     chosen
   }
 
-  /** The resolved live rows of `buckets` under a PINNED manifest —
-    * the bounded-initial-load CDC source's chunk read (each chunk
-    * reads only its buckets' dirs of one consistent snapshot).
-    */
-  private[graft] def readKeyedBucketsAt(spark: SparkSession, dir: String,
-                                        m: KeyedManifest,
-                                        buckets: Seq[Int]): DataFrame = {
-    val clean = cleanDir(dir)
-    val live = buckets.filter(b => m.buckets.contains(b) ||
-      m.deltas.get(b).exists(_.nonEmpty))
-    if (live.isEmpty) emptySnapshot(spark, m)
-    else resolveBuckets(spark, clean, m, live, None)
-  }
-
-  /** Agg-state twin of readKeyedBucketsAt. */
-  private[graft] def readAggStateBucketsAt(spark: SparkSession, dir: String,
-                                           m: KeyedManifest,
-                                           buckets: Seq[Int]): DataFrame = {
-    val clean = cleanDir(dir)
-    val live = buckets.filter(b => m.buckets.contains(b) ||
-      m.deltas.get(b).exists(_.nonEmpty))
-    if (live.isEmpty) emptySnapshot(spark, m).drop("kb", "__tomb")
-    else readAggStateBuckets(spark, clean, m, live)
-  }
-
   /** ONLINE RE-BUCKETING (extendible-hashing bucket split, r11):
     * split each listed LEAF bucket into two children one hash bit
     * deeper — leaf b at depth d becomes b and b + N·2^d at depth d+1
@@ -2157,8 +2151,7 @@ object Maintenance {
       require((n.toLong << dmax) <= 100000,
         s"splitKeyed($clean): depth $dmax over $n base buckets exceeds " +
           "the 100000-leaf layout cap")
-      val live = targets.filter(b => m.buckets.contains(b) ||
-        m.deltas.get(b).exists(_.nonEmpty))
+      val live = m.liveBuckets(targets)
       if (live.isEmpty) {
         // depth-only commit: the split buckets held no rows
         writeManifest(spark, clean,
@@ -2169,7 +2162,7 @@ object Maintenance {
         val rows =
           if (m.resolve == "agg")
             readAggStateBuckets(spark, clean, m, live)
-          else resolveBuckets(spark, clean, m, live, None).drop("kb")
+          else resolveBuckets(spark, clean, m, live).drop("kb")
         val rehashed = rows.withColumn("kb",
           kb(m.keyCols, n, depths = newDepths))
         val pending = stageMerge(spark, dir, rehashed, targets, m)
@@ -2177,23 +2170,6 @@ object Maintenance {
           pending.copy(manifest = pending.manifest.copy(depths = newDepths)))
       }
     }
-  }
-
-  /** The live rows of the buckets a key frame hashes into — the
-    * pruned read CDC consumers use to compare incoming sequence
-    * numbers against stored ones (same bucket set the merge itself
-    * will read).
-    */
-  def readKeyBuckets(spark: SparkSession, dir: String, keys: DataFrame,
-                     keyCol: String, nBuckets: Int): DataFrame = {
-    val keyCols = keyCol.split(",").toSeq
-    val m = readManifest(spark, dir)
-    val ks = keys.select(keyCols.map(F.col): _*)
-      .withColumn("kb", kb(keyCols, nBuckets, depths = m.depths))
-      .localCheckpoint()
-    val touched = ks.select("kb").distinct().collect()
-      .map(_.getInt(0)).sorted.toSeq
-    readTouched(spark, dir, m, touched, ks, keyCols, nBuckets)
   }
 
   /** Point lookup on the keyed table: the rows whose key is in `keys`,
@@ -2255,27 +2231,21 @@ object Maintenance {
     val touched = probe
       .select(kb(keyCols, m.nBuckets, depths = m.depths).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
-      .filter(b => m.buckets.contains(b) ||
-        m.deltas.get(b).exists(_.nonEmpty)).sorted
-    if (touched.isEmpty)
-      readKeyed(spark, dir, version).limit(0)
-    else {
-      // native-typed IN-list (not a string cast) so the predicate
-      // PUSHES into the parquet scan of EVERY chain level and the
-      // within-bucket key sort lets row-group min/max stats skip most
-      // of each bucket file; delta chains resolve AFTER the pushed
-      // filter, over the probe keys' rows only (the key never changes
-      // across chain levels, so a key filter is resolution-invariant)
-      val filt =
-        if (keyCols.length == 1)
-          F.col(keyCols.head).isin(
-            tuples.map(t => coerce(t.head, keyFields.head.dataType)): _*)
-        else tuples.map(t =>
-          t.zip(keyFields).map { case (v, f) =>
-            F.col(f.name) === F.lit(coerce(v, f.dataType))
-          }.reduce(_ && _)).reduce(_ || _)
-      resolveBuckets(spark, clean, m, touched, Some(filt))
-    }
+    // native-typed IN-list (not a string cast) so the predicate
+    // PUSHES into the parquet scan of EVERY chain level and the
+    // within-bucket key sort lets row-group min/max stats skip most
+    // of each bucket file; delta chains resolve AFTER the pushed
+    // filter, over the probe keys' rows only (the key never changes
+    // across chain levels, so a key filter is resolution-invariant)
+    val filt =
+      if (keyCols.length == 1)
+        F.col(keyCols.head).isin(
+          tuples.map(t => coerce(t.head, keyFields.head.dataType)): _*)
+      else tuples.map(t =>
+        t.zip(keyFields).map { case (v, f) =>
+          F.col(f.name) === F.lit(coerce(v, f.dataType))
+        }.reduce(_ && _)).reduce(_ || _)
+    resolveBuckets(spark, clean, m, touched, Some(filt))
   }
 
   /** Changelog between two snapshots of the keyed table: one row per
@@ -2296,13 +2266,7 @@ object Maintenance {
     // retractions (aggStateChanges) — never last-wins row comparison
     if (m2.resolve == "agg") return aggStateChanges(spark, dir, fromV, toV)
     require(m1.keyCol.nonEmpty, s"$clean has no keyed metadata")
-    // a bucket changed if its base generation OR its delta chain moved
-    val changed = (m1.buckets.keySet ++ m2.buckets.keySet ++
-      m1.deltas.keySet ++ m2.deltas.keySet)
-      .filter(b => m1.buckets.get(b) != m2.buckets.get(b) ||
-        m1.deltas.getOrElse(b, Nil) != m2.deltas.getOrElse(b, Nil))
-      .toSeq.sorted
-    keyedChangesOnePass(spark, clean, m1, m2, changed)
+    keyedChangesOnePass(spark, clean, m1, m2, m2.changedFrom(m1))
   }
 
   /** The r15 changelog plan: ONE shuffle. Both versions' generation
@@ -2330,23 +2294,10 @@ object Maintenance {
     val sch2 = parseDdl(m2.schemaDdl).fieldNames.toSeq
     val shared = sch1.intersect(sch2)
       .filterNot(c => keyCols.contains(c) || c == "kb")
-    def sideLevels(m: KeyedManifest, side: Int): Option[DataFrame] = {
-      val live = changed.filter(b => m.buckets.contains(b) ||
-        m.deltas.get(b).exists(_.nonEmpty))
-      if (live.isEmpty) return None
-      val maxChain = live.map(b => m.deltas.getOrElse(b, Nil).length).max
-      val levels = (0 -> live.flatMap(m.buckets.get)) +:
-        (1 to maxChain).map(i =>
-          i -> live.flatMap(b => m.deltas.getOrElse(b, Nil).lift(i - 1)))
-      val parts = levels.filter(_._2.nonEmpty).map { case (i, dirs) =>
-        readGenDirs(spark, clean, m, dirs, withTomb = i >= 1)
-          .withColumn("__prec", F.lit(i))
-      }
-      if (parts.isEmpty) None
-      else Some(parts.reduce(_.unionByName(_, allowMissingColumns = true))
-        .withColumn("__side", F.lit(side)))
+    val sides = Seq(m1, m2).zipWithIndex.flatMap { case (m, side) =>
+      chainLevels(spark, clean, m, changed)
+        .map(_.withColumn("__side", F.lit(side)))
     }
-    val sides = Seq(sideLevels(m1, 0), sideLevels(m2, 1)).flatten
     if (sides.isEmpty)
       // nothing live on either side: the empty changelog, in the
       // changelog's schema
@@ -2596,8 +2547,7 @@ object Maintenance {
     val m = readManifest(spark, dir)
     require(m.nBuckets > 0,
       s"$clean has no keyed metadata (a versioned or segmented dataset)")
-    val (fast, slow) = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-      .partition(b => !m.deltas.get(b).exists(_.nonEmpty))
+    val (fast, slow) = m.liveBuckets().partition(m.chain(_).isEmpty)
     val fs = hadoopFs(spark, new Path(clean))
     def filesIn(d: String): Long = fs.listStatus(new Path(clean, d))
       .count(_.getPath.getName.endsWith(".parquet")).toLong
@@ -2611,13 +2561,11 @@ object Maintenance {
     // watches
     val slowCounts =
       if (slow.isEmpty) Map.empty[Int, Long]
-      else resolveBuckets(spark, clean, m, slow, None)
+      else resolveBuckets(spark, clean, m, slow)
         .groupBy("kb").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val slowRows = slow.map { b =>
-      val dirs = m.buckets.get(b).toSeq ++ m.deltas.getOrElse(b, Nil)
-      (b, slowCounts.getOrElse(b, 0L), dirs.map(filesIn).sum)
-    }
+    val slowRows = slow.map(b =>
+      (b, slowCounts.getOrElse(b, 0L), m.dirsOf(b).map(filesIn).sum))
     val all = (fastRows ++ slowRows).sortBy(_._1)
     if (all.isEmpty) tableStats(readKeyed(spark, dir).limit(0), "kb")
     else spark.createDataFrame(all).toDF("kb", "n_rows", "n_files")
@@ -3225,8 +3173,7 @@ object Maintenance {
       // touched buckets' CURRENT state: base generations ∪ any agg
       // delta chains, read RAW (resolution is the re-aggregate below —
       // never last-wins) — so a CoW merge also folds existing chains
-      val dirs = touched.flatMap(b =>
-        m.buckets.get(b).toSeq ++ m.deltas.getOrElse(b, Nil))
+      val dirs = touched.flatMap(m.dirsOf)
       val base =
         if (dirs.nonEmpty)
           readGenDirs(spark, clean, m, dirs, withTomb = true)
@@ -3261,18 +3208,21 @@ object Maintenance {
     val m = readManifest(spark, dir, version)
     require(m.nBuckets > 0 && m.resolve == "agg",
       s"$clean is not a bucketed agg state (resolve='${m.resolve}')")
-    readAggStateBuckets(spark, clean, m,
-      (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted, p, sampleK)
+    readAggStateBuckets(spark, clean, m, m.liveBuckets(), p, sampleK)
   }
 
-  /** The resolved agg-state rows of `buckets` only — the bucket-pruned
-    * read `aggStateChanges` uses (the changelog's cost must be
-    * O(changed buckets), never state size).
+  /** The resolved agg-state rows of `buckets` only — the agg twin of
+    * `resolveBuckets` and the other of the only two places a manifest
+    * and a bucket selection turn into rows. Buckets that are not live
+    * are skipped; a selection with no live bucket reads as the empty
+    * state. Bucket-pruned callers (`aggStateChanges`, the MV refresh,
+    * the bounded CDC source) pay O(selected buckets), never state size.
     */
-  private def readAggStateBuckets(spark: SparkSession, clean: String,
-                                  m: KeyedManifest, buckets: Seq[Int],
-                                  p: Int = 0, sampleK: Int = -1)
+  private[graft] def readAggStateBuckets(spark: SparkSession, dir: String,
+                                         m: KeyedManifest, buckets: Seq[Int],
+                                         p: Int = 0, sampleK: Int = -1)
       : DataFrame = {
+    val clean = cleanDir(dir)
     val pe = if (p > 0) p else m.aggP
     val ke = if (sampleK >= 0) sampleK else m.aggK
     def rd(dirs: Seq[String]): DataFrame =
@@ -3282,28 +3232,25 @@ object Maintenance {
     // (a key lives in exactly one bucket, so the per-key fold is
     // complete bucket-by-bucket — same principle as resolveBuckets);
     // chain-free buckets read straight through with no shuffle
-    val (deltaB, plainB) = buckets
-      .partition(b => m.deltas.get(b).exists(_.nonEmpty))
-    val plainDirs = plainB.flatMap(m.buckets.get)
-    val deltaDirs = deltaB.flatMap(b =>
-      m.buckets.get(b).toSeq ++ m.deltas(b))
-    val plain = if (plainDirs.isEmpty) None else Some(rd(plainDirs))
+    val (deltaB, plainB) =
+      m.liveBuckets(buckets).partition(m.chain(_).nonEmpty)
+    val plain = plainB.flatMap(m.buckets.get) match {
+      case Nil => None
+      case dirs => Some(rd(dirs))
+    }
     val resolved =
-      if (deltaDirs.isEmpty) None
+      if (deltaB.isEmpty) None
       else {
-        val raw = rd(deltaDirs)
+        val raw = rd(deltaB.flatMap(m.dirsOf))
         require(ke > 0 ||
           !raw.columns.exists(c => c == "__smp" || c == "__smpr"),
           s"$clean tracks a bounded sample — pass the build's sampleK " +
-            "to resolve its delta chains (r10+ builds record it)")
+            "to resolve its delta chains")
         Some(aggOfState(raw, m.keyCols, pe, ke))
       }
-    (plain, resolved) match {
-      case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case (None, None) => emptySnapshot(spark, m).drop("kb", "__tomb")
-    }
+    (plain ++ resolved).reduceOption(
+      _.unionByName(_, allowMissingColumns = true))
+      .getOrElse(emptySnapshot(spark, m).drop("kb", "__tomb"))
   }
 
   /** Fold the agg state's delta chains back into base generations —
@@ -3323,21 +3270,12 @@ object Maintenance {
       val m = readManifest(spark, dir)
       require(m.resolve == "agg",
         s"$clean is not an agg-state table — use compactKeyed")
-      val pe = if (p > 0) p else m.aggP
-      val ke = if (sampleK >= 0) sampleK else m.aggK
       val target = buckets.getOrElse(m.deltas.keys.toSeq)
-        .filter(b => m.deltas.get(b).exists(_.length >= minChain)).sorted
+        .filter(m.chain(_).length >= minChain).sorted
       if (target.nonEmpty) {
-        val dirs = target.flatMap(b =>
-          m.buckets.get(b).toSeq ++ m.deltas.getOrElse(b, Nil))
-        val raw = readGenDirs(spark, clean, m, dirs, withTomb = true)
-        require(ke > 0 ||
-          !raw.columns.exists(c => c == "__smp" || c == "__smpr"),
-          s"$clean tracks a bounded sample — pass the build's sampleK")
-        val cols = raw.columns.filterNot(c => c == "kb" || c == "__tomb")
-          .toIndexedSeq
-        val folded = aggOfState(raw.select(cols.map(F.col): _*),
-          m.keyCols, pe, ke)
+        // every target carries a chain, so the resolver re-aggregates
+        // each one whole (base ⊕ chain) — exactly the fold to restage
+        val folded = readAggStateBuckets(spark, clean, m, target, p, sampleK)
           .withColumn("kb", kb(m.keyCols, m.nBuckets, depths = m.depths))
         commitKeyed(spark, stageMerge(spark, clean, folded, target, m))
       }
@@ -3372,11 +3310,8 @@ object Maintenance {
         s"$clean is not a bucketed agg state (resolve='${m.resolve}')")
       require(m.keyCols.contains(tagCol),
         s"$clean is keyed on (${m.keyCol}) — no tag column '$tagCol'")
-      val live = (m.buckets.keySet ++ m.deltas.keySet).toSeq.sorted
-      val st =
-        (if (live.isEmpty) emptySnapshot(spark, m).drop("kb", "__tomb")
-         else readAggStateBuckets(spark, clean, m, live))
-          .withColumn("kb", kb(m.keyCols, m.nBuckets, depths = m.depths))
+      val st = readAggStateBuckets(spark, clean, m, m.liveBuckets())
+        .withColumn("kb", kb(m.keyCols, m.nBuckets, depths = m.depths))
       val cond = F.col(tagCol).isin(tags: _*)
       val partKb = part0.withColumn("kb",
         kb(m.keyCols, m.nBuckets, depths = m.depths))
@@ -3561,21 +3496,11 @@ object Maintenance {
     val sameLayout = m1.nBuckets == m2.nBuckets && m1.keyCol == m2.keyCol &&
       m1.depths == m2.depths
     val changed =
-      (m1.buckets.keySet ++ m2.buckets.keySet ++
-        m1.deltas.keySet ++ m2.deltas.keySet)
-        .filter(b => !sameLayout ||
-          m1.buckets.get(b) != m2.buckets.get(b) ||
-          m1.deltas.getOrElse(b, Nil) != m2.deltas.getOrElse(b, Nil))
-        .toSeq.sorted
+      if (sameLayout) m2.changedFrom(m1)
+      else (m1.liveBuckets() ++ m2.liveBuckets()).distinct
     val keys = m2.keyCols
-    def side(m: KeyedManifest): DataFrame = {
-      val live = changed.filter(b => m.buckets.contains(b) ||
-        m.deltas.get(b).exists(_.nonEmpty))
-      val st =
-        if (live.nonEmpty) readAggStateBuckets(spark, clean, m, live)
-        else emptySnapshot(spark, m).drop("kb", "__tomb")
-      finalizeAgg(st, keys)
-    }
+    def side(m: KeyedManifest): DataFrame =
+      finalizeAgg(readAggStateBuckets(spark, clean, m, changed), keys)
     val o = side(m1)
     val n = side(m2)
     val valCols = n.columns.filterNot(keys.contains).toSeq

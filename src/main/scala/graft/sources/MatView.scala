@@ -87,37 +87,38 @@ object MatView {
   private def b64url(s: String): String =
     java.util.Base64.getUrlEncoder.withoutPadding
       .encodeToString(s.getBytes("UTF-8"))
-  private def b64urlDec(s: String): String =
-    new String(java.util.Base64.getUrlDecoder.decode(s), "UTF-8")
   private def mvFile(d: MvDef): Path =
     new Path(s"${d.baseDir}/_mvs/${b64url(d.mvDir)}")
 
-  /** Persist a registration under `<base>/_mvs/<urlb64(mvDir)>`.
-    * Grain/p/sample metadata live in the STATE's manifest (one source
-    * of truth); the file carries only what the state can't know: the
-    * measures the caller declared, the distinct column, the float-sum
-    * opt-in, and the WATERMARK. Plain overwrite — this is a routing
-    * hint with a fail-safe reader (a torn/stale file just means no
-    * route), not a commit point.
+  /** The registration file's format stamp; a file without exactly this
+    * stamp is not loaded (no route).
+    */
+  private val RegFormat = 1
+
+  /** Persist a registration under `<base>/_mvs/<urlb64(mvDir)>` as
+    * JSON (the manifest codec's mapper), stamped `"format": 1`:
+    * `mvDir`, `valueCols` (an array), `distinctKey` (omitted when
+    * absent), `floatSums`, `baseVersion`. Grain/p/sample metadata live
+    * in the STATE's manifest (one source of truth); the file carries
+    * only what the state can't know: the measures the caller declared,
+    * the distinct column, the float-sum opt-in, and the WATERMARK.
+    * Plain overwrite — this is a routing hint with a fail-safe reader
+    * (a torn/stale file just means no route), not a commit point.
     */
   private def persist(spark: SparkSession, d: MvDef): Unit = {
     val p = mvFile(d)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(p.getParent)
-    val body =
-      s"""{"mvDir": "${b64url(d.mvDir)}", "valueCols": "${b64url(
-        d.valueCols.mkString(","))}", "distinctKey": "${d.distinctKey
-        .map(b64url).getOrElse("")}", "floatSums": ${d.floatSums}, """ +
-        s""""baseVersion": ${d.baseVersion}}"""
+    val json = Maintenance.KeyedManifest.json
+    val o = json.createObjectNode()
+    o.put("format", RegFormat).put("mvDir", d.mvDir)
+    val vals = o.putArray("valueCols")
+    d.valueCols.foreach(v => vals.add(v))
+    d.distinctKey.foreach(k => o.put("distinctKey", k))
+    o.put("floatSums", d.floatSums).put("baseVersion", d.baseVersion)
     val out = fs.create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    try out.write(json.writeValueAsBytes(o)) finally out.close()
   }
-
-  private val PMvDir = """"mvDir"\s*:\s*"([^"]*)"""".r
-  private val PVals = """"valueCols"\s*:\s*"([^"]*)"""".r
-  private val PDk = """"distinctKey"\s*:\s*"([^"]*)"""".r
-  private val PFs = """"floatSums"\s*:\s*(true|false)""".r
-  private val PBv = """"baseVersion"\s*:\s*(\d+)""".r
 
   /** Load the durable registrations of `baseDir` into the session
     * cache (once per base per session; in-memory entries win). A dead
@@ -125,6 +126,7 @@ object MatView {
     * scan plan.
     */
   private def ensureLoaded(spark: SparkSession, baseDir: String): Unit = {
+    import scala.jdk.CollectionConverters._
     val base = clean(baseDir)
     if (!loadedBases.add(base)) return
     val md = new Path(base, "_mvs")
@@ -133,16 +135,14 @@ object MatView {
     fs.listStatus(md).foreach { st =>
       try {
         val in = fs.open(st.getPath)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val mv = b64urlDec(PMvDir.findFirstMatchIn(txt).get.group(1))
-        val vals = b64urlDec(PVals.findFirstMatchIn(txt).get.group(1))
-          .split(",").toSeq
-        val dk = Option(PDk.findFirstMatchIn(txt).get.group(1))
-          .filter(_.nonEmpty).map(b64urlDec)
-        val fsum = PFs.findFirstMatchIn(txt).get.group(1).toBoolean
-        val bv = PBv.findFirstMatchIn(txt).get.group(1).toInt
+        val o =
+          try Maintenance.KeyedManifest.json.readTree(in) finally in.close()
+        require(o.path("format").asInt(0) == RegFormat)
+        val mv = o.get("mvDir").asText
+        val vals = o.get("valueCols").elements().asScala.map(_.asText).toSeq
+        val dk = Option(o.get("distinctKey")).map(_.asText)
+        val fsum = o.get("floatSums").asBoolean
+        val bv = o.get("baseVersion").asInt
         val m = Maintenance.readManifest(spark, mv)
         if (m.resolve == "agg" && m.nBuckets > 0) {
           val tag = m.keyCols.find(_ == BucketTagCol)
@@ -310,17 +310,10 @@ object MatView {
     // the per-bucket partials are all stale; rebuild
     if (mFrom.nBuckets != mTo.nBuckets || mFrom.keyCol != mTo.keyCol)
       return rebuildMv(spark, mv)
-    val changed = (mFrom.buckets.keySet ++ mTo.buckets.keySet ++
-      mFrom.deltas.keySet ++ mTo.deltas.keySet)
-      .filter(b => mFrom.buckets.get(b) != mTo.buckets.get(b) ||
-        mFrom.deltas.getOrElse(b, Nil) != mTo.deltas.getOrElse(b, Nil))
-      .toSeq.sorted
+    val changed = mTo.changedFrom(mFrom)
     if (changed.isEmpty) return refreshedAndCursor(spark, mv, d, head)
     val mSt = Maintenance.readManifest(spark, mv)
-    val liveNew = changed.filter(b => mTo.buckets.contains(b) ||
-      mTo.deltas.get(b).exists(_.nonEmpty))
-    val fresh = Maintenance.readKeyedBucketsAt(spark, d.baseDir, mTo,
-      liveNew)
+    val fresh = Maintenance.resolveBuckets(spark, d.baseDir, mTo, changed)
     lastRefreshScan = Some((changed, fresh.inputFiles.toSeq))
     val partial = Maintenance.partialAggCols(
       fresh.withColumn(tag, F.col("kb")),

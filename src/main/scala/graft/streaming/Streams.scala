@@ -349,7 +349,7 @@ object Streams {
       val df =
         if (m0.resolve == "agg") {
           val fin = Maintenance.finalizeAgg(
-            Maintenance.readAggStateBucketsAt(spark, dir, m0, chunk),
+            Maintenance.readAggStateBuckets(spark, dir, m0, chunk),
             m0.keyCols)
           val valCols = fin.columns.filterNot(m0.keyCols.contains).toSeq
           fin.select(m0.keyCols.map(col) ++
@@ -357,7 +357,7 @@ object Streams {
               valCols.map(c => F.lit(null).cast(fin.schema(c).dataType)
                 .as(s"old_$c")))): _*)
         } else
-          Maintenance.readKeyedBucketsAt(spark, dir, m0, chunk)
+          Maintenance.resolveBuckets(spark, dir, m0, chunk)
             .select(m0.keyCols.map(col) :+
               F.lit("added").as("status"): _*)
       Some((df, next))

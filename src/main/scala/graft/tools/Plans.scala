@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for representative queries so plan
   * quality (pushdown, pruning, broadcast, top-k, partial agg) can be
   * inspected and tracked in docs/PLANS.md.
@@ -17,13 +15,7 @@ object Plans {
       "q51_asof", "x12_cosine_pairs", "q20_enum", "x17_ann_ivf",
       // round-6 shapes: corpus preparation (split/chunk/pack)
       "x27_train_split", "x28_chunk_docs", "x29_pack_sequences")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB profiler for a single SparkEntry query (guide §1: measure
   * first). Runs the named queries (after the standard warmup) with a
@@ -24,28 +23,9 @@ object ProfileQuery {
     require(names.nonEmpty, "usage: ProfileQuery <queryName>[,name...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // experiment knob: SPARK_GRAFT_CONF="k=v;k=v" extra session confs
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
+    val spark = graft.GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val probes = sys.env.getOrElse("SPARK_GRAFT_PROBES", "5")
-    graft.SparkEntry.probeScale = probes match {
-      case "full" => 1.0
-      case n => 1.0 / scala.util.Try(n.toDouble).getOrElse(5.0).max(1.0)
-    }
+    graft.Bench.probeScaleFromEnv()
 
     val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()

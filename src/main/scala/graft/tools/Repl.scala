@@ -1,7 +1,6 @@
 package graft.tools
 
 import scala.io.StdIn
-import org.apache.spark.sql.SparkSession
 import graft.dsl.PTable
 import graft.lang.{Ast, Interp, Parser}
 import graft.sources.Tables
@@ -345,14 +344,7 @@ object Repl {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-repl")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val env: Map[String, PTable] = Tables.metas.keys.map { n =>

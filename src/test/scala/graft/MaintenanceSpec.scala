@@ -1479,4 +1479,64 @@ class MaintenanceSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(gdir, liveName)),
       "a live group's pointer must survive the sweep")
   }
+
+  test("one read path: a selection reaching no live bucket reads empty with the reader's non-empty schema") {
+    val M = Maintenance
+    val MV = graft.sources.MatView
+    val dir = tmp("graft_readpath")
+    val mvDir = tmp("graft_readpath_mv") + "/mv"
+    // spark.range keys are NOT NULL, so the recorded DDL is too
+    val df = spark.range(0, 96).select(col("id").as("k"),
+      (col("id") * 1000L).as("v"), (col("id") % 4).as("g"))
+    M.writeKeyed(df, dir, Seq("k"), 16, statsCols = Seq("v"))
+    assert(!M.parseDdl(M.readManifest(spark, dir).schemaDdl)("k").nullable)
+    // a delta chain (an update and a tombstone) on top of the zone-mapped
+    // base generations
+    M.appendDeltaKeyed(spark, dir, Seq((5L, 5500L, 1L)).toDF("k", "v", "g"),
+      "k", 16, tombstoneKeys = Some(Seq(9L).toDF("k")))
+    val live = M.manifestVersions(spark, dir).last
+    assert(M.readManifest(spark, dir).deltas.nonEmpty)
+    MV.buildMv(spark, dir, mvDir, Seq("g"), Seq("v"), 4)
+    val stateFull = M.readAggStateKeyed(spark, mvDir)
+    val mvFull = MV.readMv(spark, mvDir)
+    // every key deleted: every bucket is dead at `gone`, and the view's
+    // incremental refresh replaces every changed bucket's partials with
+    // nothing
+    M.deleteKeyed(spark, dir, spark.range(0, 96).select(col("id").as("k")),
+      "k", 16)
+    val gone = M.manifestVersions(spark, dir).last
+    MV.refreshMvIncremental(spark, mvDir)
+    val cases = Seq(
+      ("readKeyed at an all-deleted version",
+        M.readKeyed(spark, dir, Some(gone)), M.readKeyed(spark, dir, Some(live))),
+      ("readKeyedPinned", M.readKeyedPinned(spark, dir)._1,
+        M.readKeyed(spark, dir, Some(live))),
+      ("readKeyedRange over a disjoint range",
+        M.readKeyedRange(spark, dir, "v", 10000000L, 20000000L, Some(live)),
+        M.readKeyedRange(spark, dir, "v", 5000L, 6000L, Some(live))),
+      ("readKeyedWhere over a disjoint range",
+        M.readKeyedWhere(spark, dir, col("v") >= 10000000L, Some(live)),
+        M.readKeyedWhere(spark, dir, col("v") <= 6000L, Some(live))),
+      ("lookupKeyed of keys in dead buckets",
+        M.lookupKeyed(spark, dir, Seq(5L, 6L), Some(gone)),
+        M.lookupKeyed(spark, dir, Seq(5L, 6L), Some(live))),
+      ("readAggStateKeyed of an emptied state",
+        M.readAggStateKeyed(spark, mvDir), stateFull),
+      ("readMv after a refresh that emptied every changed bucket",
+        MV.readMv(spark, mvDir), mvFull))
+    cases.foreach { case (what, empty, full) =>
+      assert(empty.isEmpty, what)
+      assert(!full.isEmpty, what)
+      assert(empty.schema == full.schema,
+        s"$what: ${empty.schema.toDDL} vs ${full.schema.toDDL}")
+    }
+    // the graftbench keyed_serve shape: Double probes on a Long column
+    // still prune by zone map (readKeyedRange never re-analyzes them
+    // into an attribute-side cast)
+    val dbl = M.readKeyedRange(spark, dir, "v", 5000.0, 6000.0, Some(live))
+    assert(dbl.select("k").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(5L, 6L))
+    assert(dbl.inputFiles.length <
+      M.readKeyed(spark, dir, Some(live)).inputFiles.length)
+  }
 }

@@ -838,4 +838,30 @@ class MatViewSpec extends SparkSpec {
       MV.register(spark, mdir, bdir, Seq("v", "w"), floatSums = true) // w not tracked
     }
   }
+
+  test("registration files round-trip quotes, backslashes, commas and non-ASCII in names") {
+    val bdir = tmp("mv_regb")
+    // non-ASCII only in the measure names: how a JVM encodes non-ASCII
+    // FILE names depends on the host locale, not on this codec
+    val mdir = tmp("mv_regs") + "/mv \"q\\,x"
+    val vals = Seq("a,b", "é\"\\ü")
+    M.writeKeyed(spark.range(0, 40).select(col("id").as("k"),
+      (col("id") % 3).as("g")), bdir, "k", 4)
+    val base = spark.range(0, 40).select((col("id") % 3).as("g"),
+      col("id").as(vals(0)), (col("id") * 2).as(vals(1)))
+    M.buildAggStateKeyedCols(base, mdir, Seq("g"), vals, 2)
+    val d = MV.register(spark, mdir, bdir, vals, floatSums = true)
+    assert(d.valueCols == vals && d.distinctKey.isEmpty)
+    // a fresh session loads the durable file (refreshMvs loads, then
+    // finds the view fresh and only re-arms it)
+    MV.clear()
+    assert(MV.refreshMvs(spark, bdir) == Seq(d))
+    assert(MV.list() == Seq(d))
+    val file = new java.io.File(s"$bdir/_mvs").listFiles()
+      .filterNot(_.getName.startsWith(".")).head // skip checksum files
+    val body = new String(java.nio.file.Files.readAllBytes(file.toPath),
+      "UTF-8")
+    assert(body.startsWith("{\"format\":1,") &&
+      !body.contains("distinctKey"), body)
+  }
 }

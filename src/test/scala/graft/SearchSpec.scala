@@ -491,4 +491,42 @@ class SearchSpec extends SparkSpec {
       .select(size(col("sk"))).collect().head.getInt(0)
     assert(empty == 0)
   }
+
+  test("corpus-stats memo serves a new session without a Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_statsmemo")
+      .toString
+    try {
+      Search.buildIndex(docs, "doc_id", "text", dir, nBuckets = 8)
+      val terms = Seq("customer", "window")
+      Search.searchIndex(spark, dir, terms, 5) // consults the stats once
+      val other = spark.newSession()
+      // count this thread's jobs from here on (the listener bus is
+      // asynchronous: earlier jobs' events may still be in flight) that
+      // the stats consult launched (the postings reads' footer jobs are
+      // per-session and not what the memo covers)
+      val group = "graft-statsmemo"
+      @volatile var jobs = 0
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(js.properties).exists(
+                _.getProperty("spark.jobGroup.id") == group) &&
+              js.stageInfos.exists(_.details.contains("Search$.statsOf")))
+            jobs += 1
+      }
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setJobGroup(group, "second-session plan build")
+      try {
+        Search.searchIndex(other, dir, terms, 5) // plan build only
+        Thread.sleep(300) // let listener events drain
+        assert(jobs == 0, s"second session's stats consult ran $jobs jobs")
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(dir))
+    }
+  }
 }
