@@ -1134,13 +1134,15 @@ object SparkEntry {
     "x104_incr_agg" -> ((s, d) => {
       val dir = runScratch("mvs", d)
       val orders = t(s, d, "orders").df
-      graft.sources.Maintenance.buildAggState(
-        orders.filter(col("o_orderkey") % 10 =!= 0),
-        Seq("o_orderpriority"), "o_totalprice", dir)
-      val st = graft.sources.Maintenance.mergeAggState(s, dir,
+      graft.sources.Maintenance.buildAggStateKeyed(
+        orders.filter(col("o_orderkey") % 10 =!= 0), dir,
+        Seq("o_orderpriority"), "o_totalprice", nBuckets = 1)
+      graft.sources.Maintenance.mergeAggStateKeyed(s, dir,
         orders.filter(col("o_orderkey") % 10 === 0),
         Seq("o_orderpriority"), "o_totalprice")
-      graft.sources.Maintenance.finalizeAgg(st, Seq("o_orderpriority"))
+      graft.sources.Maintenance.finalizeAgg(
+          graft.sources.Maintenance.readAggStateKeyed(s, dir),
+          Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"),
           F.round(col("total"), 6).as("total"),
           F.round(col("mean"), 6).as("mean"))
@@ -1184,15 +1186,17 @@ object SparkEntry {
     "x116_incr_profile" -> ((s, d) => {
       val dir = runScratch("mvp", d)
       val orders = t(s, d, "orders").df
-      graft.sources.Maintenance.buildAggState(
-        orders.filter(col("o_orderkey") % 10 =!= 0),
-        Seq("o_orderpriority"), "o_totalprice", dir,
+      graft.sources.Maintenance.buildAggStateKeyed(
+        orders.filter(col("o_orderkey") % 10 =!= 0), dir,
+        Seq("o_orderpriority"), "o_totalprice", nBuckets = 1,
         distinctKey = Some("o_custkey"))
-      val st = graft.sources.Maintenance.mergeAggState(s, dir,
+      graft.sources.Maintenance.mergeAggStateKeyed(s, dir,
         orders.filter(col("o_orderkey") % 10 === 0),
         Seq("o_orderpriority"), "o_totalprice",
         distinctKey = Some("o_custkey"))
-      graft.sources.Maintenance.finalizeAgg(st, Seq("o_orderpriority"))
+      graft.sources.Maintenance.finalizeAgg(
+          graft.sources.Maintenance.readAggStateKeyed(s, dir),
+          Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"),
           F.round(col("total"), 6).as("total"),
           F.round(col("mean"), 6).as("mean"),
@@ -1207,13 +1211,15 @@ object SparkEntry {
     "x125_incr_quantile" -> ((s, d) => {
       val dir = runScratch("mvq", d)
       val orders = t(s, d, "orders").df
-      graft.sources.Maintenance.buildAggState(
-        orders.filter(col("o_orderkey") % 10 =!= 0),
-        Seq("o_orderpriority"), "o_totalprice", dir, sampleK = 512)
-      val st = graft.sources.Maintenance.mergeAggState(s, dir,
+      graft.sources.Maintenance.buildAggStateKeyed(
+        orders.filter(col("o_orderkey") % 10 =!= 0), dir,
+        Seq("o_orderpriority"), "o_totalprice", nBuckets = 1, sampleK = 512)
+      graft.sources.Maintenance.mergeAggStateKeyed(s, dir,
         orders.filter(col("o_orderkey") % 10 === 0),
         Seq("o_orderpriority"), "o_totalprice", sampleK = 512)
-      graft.sources.Maintenance.finalizeAgg(st, Seq("o_orderpriority"))
+      graft.sources.Maintenance.finalizeAgg(
+          graft.sources.Maintenance.readAggStateKeyed(s, dir),
+          Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"), col("approx_p25"),
           col("approx_median"), col("approx_p90"))
     }),
@@ -1222,19 +1228,21 @@ object SparkEntry {
     // the row-unique o_orderkey, so duplicate values are sampled in
     // proportion to their multiplicity — the right grain for multiset
     // quantiles on skewed data (x125's default grain is uniform over
-    // DISTINCT values; see Maintenance.partialAgg's sample-grain note)
+    // DISTINCT values; see Maintenance.partialAggCols' sample-grain note)
     "x130_incr_quantile_rows" -> ((s, d) => {
       val dir = runScratch("mvqr", d)
       val orders = t(s, d, "orders").df
-      graft.sources.Maintenance.buildAggState(
-        orders.filter(col("o_orderkey") % 10 =!= 0),
-        Seq("o_orderpriority"), "o_totalprice", dir, sampleK = 512,
+      graft.sources.Maintenance.buildAggStateKeyed(
+        orders.filter(col("o_orderkey") % 10 =!= 0), dir,
+        Seq("o_orderpriority"), "o_totalprice", nBuckets = 1, sampleK = 512,
         sampleUnique = Some("o_orderkey"))
-      val st = graft.sources.Maintenance.mergeAggState(s, dir,
+      graft.sources.Maintenance.mergeAggStateKeyed(s, dir,
         orders.filter(col("o_orderkey") % 10 === 0),
         Seq("o_orderpriority"), "o_totalprice", sampleK = 512,
         sampleUnique = Some("o_orderkey"))
-      graft.sources.Maintenance.finalizeAgg(st, Seq("o_orderpriority"))
+      graft.sources.Maintenance.finalizeAgg(
+          graft.sources.Maintenance.readAggStateKeyed(s, dir),
+          Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"), col("approx_p25"),
           col("approx_median"), col("approx_p90"))
     }),

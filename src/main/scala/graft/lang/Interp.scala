@@ -2736,132 +2736,87 @@ object Interp {
               spark.range(0).select(col("id").cast("int").as("parent"),
                 col("id").as("bytes"))
             else spark.createDataFrame(mcand).toDF("parent", "bytes"))
-        case "build_agg_state" =>
+        case "build_agg_state" | "build_agg_state_keyed" =>
+          // build_agg_state_keyed(t, "keys", "value", dir, n_buckets,
+          // "distinct_key"?, sample_k?, "sample_unique"?) — the one full
+          // pass of an incrementally maintained group-by view into the
+          // agg-state table: refreshes touch only the batch's buckets
+          // (or append delta partials); returns the finalized view.
           // build_agg_state(t, "keys", "value", dir, "distinct_key"?,
-          // sample_k?, "sample_unique"?) — the one full pass of an
-          // incrementally maintained group-by view; returns the
-          // finalized view. sample_unique (a row-unique column) makes
-          // the quantile sample ROW-uniform; default is uniform over
-          // distinct values — merges must reuse the build's grain
-          if (args.length < 4 || args.length > 7)
+          // sample_k?, "sample_unique"?) is the same build into ONE
+          // bucket. sample_unique (a row-unique column) makes the
+          // quantile sample ROW-uniform; default is uniform over
+          // distinct values — merges inherit the build's grain
+          val bo = if (fn == "build_agg_state") 0 else 1 // n_buckets slot
+          if (args.length < 4 + bo || args.length > 7 + bo)
             throw new TypeError(
-              "build_agg_state(t, \"keys\", \"value\", \"dir\", " +
-                "\"distinct_key\"?, sample_k?, \"sample_unique\"?)")
-          val bkeys = litString(args(1).value).trim.split("\\s+").toSeq
-          val bdk = if (args.length >= 5) {
-            val v = litString(args(4).value).trim
-            if (v.isEmpty) None else Some(v)
-          } else None
-          val bsk =
-            if (args.length >= 6) constLong(args(5).value).toInt else 0
-          val bsu = if (args.length == 7) {
-            val v = litString(args(6).value).trim
-            if (v.isEmpty) None else Some(v)
-          } else None
-          graft.sources.Maintenance.buildAggState(t(args(0).value).df,
-            bkeys, litString(args(2).value), litString(args(3).value),
-            distinctKey = bdk, sampleK = bsk, sampleUnique = bsu)
+              if (bo == 0)
+                "build_agg_state(t, \"keys\", \"value\", \"dir\", " +
+                  "\"distinct_key\"?, sample_k?, \"sample_unique\"?)"
+              else
+                "build_agg_state_keyed(t, \"keys\", \"value\", \"dir\", " +
+                  "n_buckets, \"distinct_key\"?, sample_k?, " +
+                  "\"sample_unique\"?)")
+          val kkeys = litString(args(1).value).trim.split("\\s+").toSeq
+          val ksk = if (args.length > 5 + bo)
+            constLong(args(5 + bo).value).toInt else 0
+          // "value" may be a space-separated LIST: one state tracking
+          // several measures (per-measure __sum/__cnv/__min/__max)
+          graft.sources.Maintenance.buildAggStateKeyedCols(
+            t(args(0).value).df, litString(args(3).value), kkeys,
+            litString(args(2).value).trim.split("\\s+").toSeq,
+            if (bo == 0) 1 else constLong(args(4).value).toInt,
+            distinctKey = optName(args, 4 + bo), sampleK = ksk,
+            sampleUnique = optName(args, 6 + bo))
           PTable(graft.sources.Maintenance.finalizeAgg(
-            graft.sources.Maintenance.readVersioned(spark,
-              litString(args(3).value)), bkeys))
-        case "merge_agg_state" =>
-          // merge_agg_state(dir, batch, "keys", "value",
-          // "distinct_key"?, sample_k?, "sample_unique"?) — fold one
-          // batch into the persisted state, O(batch + state); returns
-          // the finalized refreshed view. The sample grain must match
-          // the build's (a mismatch fails loudly at the state align)
-          if (args.length < 4 || args.length > 7)
+            graft.sources.Maintenance.readAggStateKeyed(spark,
+              litString(args(3).value), sampleK = ksk), kkeys))
+        case "merge_agg_state" | "merge_agg_state_keyed" =>
+          // merge_agg_state_keyed(dir, batch, "keys", "value",
+          // as_deltas?, "distinct_key"?, sample_k?, "sample_unique"?)
+          // — fold one batch: copy-on-write of the touched buckets, or
+          // as_deltas=true appends the partial (bytes ∝ batch; compact
+          // with compact_agg_state_keyed). merge_agg_state(dir, batch,
+          // "keys", "value", "distinct_key"?, sample_k?,
+          // "sample_unique"?) is the copy-on-write merge, then a vacuum
+          // keeping two versions. An omitted sample_k/sample_unique is
+          // the build's; a contradicting grain fails loudly. Returns
+          // the finalized view.
+          val mo = if (fn == "merge_agg_state") 0 else 1 // as_deltas slot
+          if (args.length < 4 || args.length > 7 + mo)
             throw new TypeError(
-              "merge_agg_state(\"dir\", batch, \"keys\", \"value\", " +
-                "\"distinct_key\"?, sample_k?, \"sample_unique\"?)")
-          val mkeys = litString(args(2).value).trim.split("\\s+").toSeq
-          val mdk = if (args.length >= 5) {
-            val v = litString(args(4).value).trim
-            if (v.isEmpty) None else Some(v)
-          } else None
-          val msk =
-            if (args.length >= 6) constLong(args(5).value).toInt else 0
-          val msu = if (args.length == 7) {
-            val v = litString(args(6).value).trim
-            if (v.isEmpty) None else Some(v)
-          } else None
-          val mst = graft.sources.Maintenance.mergeAggState(spark,
-            litString(args(0).value), t(args(1).value).df, mkeys,
-            litString(args(3).value), distinctKey = mdk, sampleK = msk,
-            sampleUnique = msu)
-          PTable(graft.sources.Maintenance.finalizeAgg(mst, mkeys))
+              if (mo == 0)
+                "merge_agg_state(\"dir\", batch, \"keys\", \"value\", " +
+                  "\"distinct_key\"?, sample_k?, \"sample_unique\"?)"
+              else
+                "merge_agg_state_keyed(\"dir\", batch, \"keys\", " +
+                  "\"value\", as_deltas?, \"distinct_key\"?, sample_k?, " +
+                  "\"sample_unique\"?)")
+          val mdir = litString(args(0).value)
+          val gkeys = litString(args(2).value).trim.split("\\s+").toSeq
+          val gsk = // -1 = the build's recorded sampleK
+            if (args.length > 5 + mo) constLong(args(5 + mo).value).toInt
+            else -1
+          graft.sources.Maintenance.mergeAggStateKeyedCols(spark, mdir,
+            t(args(1).value).df, gkeys,
+            litString(args(3).value).trim.split("\\s+").toSeq,
+            distinctKey = optName(args, 4 + mo), sampleK = gsk,
+            sampleUnique = optName(args, 6 + mo),
+            asDeltas = mo == 1 && args.length >= 5 && constBool(args(4).value))
+          if (mo == 0)
+            graft.sources.Maintenance.vacuumKeyed(spark, mdir, keepVersions = 2)
+          PTable(graft.sources.Maintenance.finalizeAgg(
+            graft.sources.Maintenance.readAggStateKeyed(spark, mdir,
+              sampleK = gsk), gkeys))
         case "finalize_agg" =>
           // finalize_agg(dir, "keys") — the user-facing view of a
           // persisted agg state without touching it (read-only)
           if (args.length != 2)
             throw new TypeError("finalize_agg(\"dir\", \"keys\")")
           PTable(graft.sources.Maintenance.finalizeAgg(
-            graft.sources.Maintenance.readVersioned(spark,
+            graft.sources.Maintenance.readAggStateKeyed(spark,
               litString(args(0).value)),
             litString(args(1).value).trim.split("\\s+").toSeq))
-        case "build_agg_state_keyed" =>
-          // build_agg_state_keyed(t, "keys", "value", dir, n_buckets,
-          // "distinct_key"?, sample_k?, "sample_unique"?) — the
-          // BUCKETED agg state: refreshes touch only the batch's
-          // buckets (or append delta partials); returns the finalized
-          // view
-          if (args.length < 5 || args.length > 8)
-            throw new TypeError(
-              "build_agg_state_keyed(t, \"keys\", \"value\", \"dir\", " +
-                "n_buckets, \"distinct_key\"?, sample_k?, " +
-                "\"sample_unique\"?)")
-          val kkeys = litString(args(1).value).trim.split("\\s+").toSeq
-          val kdk = if (args.length >= 6) {
-            val v = litString(args(5).value).trim
-            if (v.isEmpty) None else Some(v)
-          } else None
-          val ksk =
-            if (args.length >= 7) constLong(args(6).value).toInt else 0
-          val ksu = if (args.length == 8) {
-            val v = litString(args(7).value).trim
-            if (v.isEmpty) None else Some(v)
-          } else None
-          // "value" may be a space-separated LIST: one state tracking
-          // several measures (per-measure __sum/__cnv/__min/__max)
-          graft.sources.Maintenance.buildAggStateKeyedCols(
-            t(args(0).value).df, litString(args(3).value), kkeys,
-            litString(args(2).value).trim.split("\\s+").toSeq,
-            constLong(args(4).value).toInt,
-            distinctKey = kdk, sampleK = ksk, sampleUnique = ksu)
-          PTable(graft.sources.Maintenance.finalizeAgg(
-            graft.sources.Maintenance.readAggStateKeyed(spark,
-              litString(args(3).value), sampleK = ksk), kkeys))
-        case "merge_agg_state_keyed" =>
-          // merge_agg_state_keyed(dir, batch, "keys", "value",
-          // as_deltas?, "distinct_key"?, sample_k?, "sample_unique"?)
-          // — fold one batch: copy-on-write of the touched buckets, or
-          // as_deltas=true appends the partial (bytes ∝ batch; compact
-          // with compact_agg_state_keyed). Returns the finalized view.
-          if (args.length < 4 || args.length > 8)
-            throw new TypeError(
-              "merge_agg_state_keyed(\"dir\", batch, \"keys\", " +
-                "\"value\", as_deltas?, \"distinct_key\"?, sample_k?, " +
-                "\"sample_unique\"?)")
-          val gkeys = litString(args(2).value).trim.split("\\s+").toSeq
-          val gdel = args.length >= 5 && constBool(args(4).value)
-          val gdk = if (args.length >= 6) {
-            val v = litString(args(5).value).trim
-            if (v.isEmpty) None else Some(v)
-          } else None
-          val gsk = // -1 = the build's recorded sampleK (r10 manifests)
-            if (args.length >= 7) constLong(args(6).value).toInt else -1
-          val gsu = if (args.length == 8) {
-            val v = litString(args(7).value).trim
-            if (v.isEmpty) None else Some(v)
-          } else None
-          graft.sources.Maintenance.mergeAggStateKeyedCols(spark,
-            litString(args(0).value), t(args(1).value).df, gkeys,
-            litString(args(3).value).trim.split("\\s+").toSeq,
-            distinctKey = gdk, sampleK = gsk,
-            sampleUnique = gsu, asDeltas = gdel)
-          PTable(graft.sources.Maintenance.finalizeAgg(
-            graft.sources.Maintenance.readAggStateKeyed(spark,
-              litString(args(0).value), sampleK = gsk), gkeys))
         case "compact_agg_state_keyed" =>
           // compact_agg_state_keyed(dir, "keys", sample_k?) — fold the
           // delta-partial chains back into base generations (the
@@ -4340,6 +4295,11 @@ object Interp {
       case o => throw new TypeError(s"unknown operator '$o'")
     }
   }
+
+  /** Optional column-name argument `i`: absent or blank = None. */
+  private def optName(args: Seq[Arg], i: Int): Option[String] =
+    if (args.length > i) Some(litString(args(i).value).trim).filter(_.nonEmpty)
+    else None
 
   private def litString(e: Expr): String = e match {
     case StrLit(s) => s

@@ -83,44 +83,37 @@ object Maintenance {
 
   /** The key-bucket column: md5-derived (portable, never tied to
     * Spark's internal hash), pure per-row — the same layout contract
-    * as the persisted IVF/LSH indexes. A NULL key component fails the
-    * job with a clear message (without the guard it would hash to a
-    * NULL bucket, land in Hive's default-partition dir and crash the
-    * stage listing AFTER the write job ran) — unless `nullSafe`, where
-    * a NULL component hashes as a reserved sentinel (the bucketed
-    * agg-state path: a NULL GROUP key is a legal group, not a broken
-    * primary key).
+    * as the persisted IVF/LSH indexes.
     *
-    * COMPOSITE keys hash the components' string casts joined on
-    * `\u0001` (single-column tables keep the exact pre-r10 bytes —
-    * `md5(cast(key))` — so every existing layout stays valid). A key
-    * component whose string form CONTAINS `\u0001` is out of contract
-    * (it could alias another composite); real keys never carry \u0001.
+    * The hash input is the key components' string casts, a NULL
+    * component written as the reserved sentinel `\u0000` and
+    * components joined on `\u0001`. On a non-NULL key these are exactly
+    * the bytes of `md5(cast(key))` (one column) or of
+    * `concat_ws('\u0001', ...)` (composite), so every existing layout
+    * stays valid; the sentinel keeps ("a", NULL) distinct from ("a").
+    * A component whose string form CONTAINS `\u0000` or `\u0001` is out
+    * of contract (it could alias another key); real keys never carry
+    * them.
+    *
+    * NULL keys are legal only where the table's `resolve` says the key
+    * is a GROUP: an agg state ("agg") keeps NULL as one group, as SQL's
+    * group-by does. A row table's key is a primary key, so a NULL
+    * component fails the job with a clear message (without the guard
+    * no upsert, delete or lookup could ever match the row: their key
+    * matches are equality joins and IN-lists).
     */
-  private def kb(keyCols: Seq[String], nBuckets: Int,
-                 nullSafe: Boolean = false,
+  private def kb(keyCols: Seq[String], nBuckets: Int, resolve: String,
                  depths: Map[Int, Int] = Map.empty): Column = {
-    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.sql.types.{IntegerType, StringType}
     require(keyCols.nonEmpty, "keyed table: no key columns")
-    val joined =
-      if (keyCols.length == 1) F.col(keyCols.head).cast(StringType)
-      else F.concat_ws("\u0001",
-        keyCols.map(c => F.col(c).cast(StringType)): _*)
     val h = graft.ext.TextAnalysis.h60(
-      if (nullSafe)
-        // the sentinel marks WHICH components were null (concat_ws
-        // silently skips nulls, which would alias ("a", null) with
-        // ("a")); \u0000 never appears in a real value's string form
-        keyCols.map(c => F.coalesce(F.col(c).cast(StringType),
-          F.lit("\u0000"))).reduceLeft((a, b) =>
-          F.concat(a, F.lit("\u0001"), b))
-      else joined)
-    val anyNull = keyCols.map(c => F.col(c).isNull).reduce(_ || _)
+      keyCols.map(c => F.coalesce(F.col(c).cast(StringType),
+        F.lit("\u0000"))).reduceLeft((a, b) =>
+        F.concat(a, F.lit("\u0001"), b)))
     val bucket =
       if (depths.isEmpty || depths.values.forall(_ == 0))
         // the flat layout: the exact pre-r11 expression, byte-for-byte
-        F.pmod(h, F.lit(nBuckets.toLong))
-          .cast(org.apache.spark.sql.types.IntegerType)
+        F.pmod(h, F.lit(nBuckets.toLong)).cast(IntegerType)
       else {
         // extendible-hashing layout (splitKeyed): the leaf for hash h
         // is the unique id in the depth tree with h mod (N·2^d) = id.
@@ -132,15 +125,15 @@ object Maintenance {
         val fineN = nBuckets << dmax
         val leafArr = Array.tabulate(fineN)(leafOf(_, nBuckets, depths, dmax))
         F.get(F.lit(leafArr),
-          F.pmod(h, F.lit(fineN.toLong))
-            .cast(org.apache.spark.sql.types.IntegerType))
+          F.pmod(h, F.lit(fineN.toLong)).cast(IntegerType))
       }
-    if (nullSafe) bucket
-    else F.when(anyNull, F.raise_error(F.lit(
-        s"keyed table: key column(s) ${keyCols.mkString(",")} must not " +
-          "be NULL")))
+    if (resolve == "agg") bucket
+    else F.when(keyCols.map(c => F.col(c).isNull).reduce(_ || _),
+        F.raise_error(F.lit(
+          s"keyed table: key column(s) ${keyCols.mkString(",")} must not " +
+            "be NULL")))
       .otherwise(bucket)
-      .cast(org.apache.spark.sql.types.IntegerType)
+      .cast(IntegerType)
   }
 
   /** The leaf bucket a fine id (h mod N·2^dmax) belongs to: the unique
@@ -160,12 +153,11 @@ object Maintenance {
   }
 
   /** One committed snapshot: the decoded `_manifests/v<N>.json`. Keyed
-    * tables use every field; versioned datasets, segmented datasets
-    * and commit groups reuse the format with a subset (noted below).
+    * tables use every field; segmented datasets and commit groups
+    * reuse the format with a subset (noted below).
     *  - `version`: the manifest version (from the file name).
     *  - `buckets`: live dir per bucket — the base generation of each
-    *    keyed bucket, the single generation (key 0) of a versioned
-    *    dataset, or ordinal → segment dir of a segmented dataset.
+    *    keyed bucket, or ordinal → segment dir of a segmented dataset.
     *  - `keyCol`: the key column list, comma-joined (composite keys).
     *  - `nBuckets`: the base bucket count; 0 = not a keyed table.
     *    Like `keyCol` and `depths` it is LAYOUT TRUTH: a querier
@@ -1039,13 +1031,11 @@ object Maintenance {
     */
   def writeKeyed(df: DataFrame, dir: String, keyCols: Seq[String],
                  nBuckets: Int, statsCols: Seq[String] = Seq.empty): Unit =
-    writeKeyedInternal(df, dir, keyCols, nBuckets, statsCols,
-      nullSafe = false)
+    writeKeyedInternal(df, dir, keyCols, nBuckets, statsCols)
 
   private[sources] def writeKeyedInternal(df: DataFrame, dir: String,
                                           keyCols: Seq[String], nBuckets: Int,
                                           statsCols: Seq[String],
-                                          nullSafe: Boolean,
                                           resolve: String = "",
                                           txn: Map[String, Long] = Map.empty,
                                           aggP: Int = 0, aggK: Int = -1,
@@ -1057,7 +1047,7 @@ object Maintenance {
     val spark = df.sparkSession
     val clean = cleanDir(dir)
     val keyCol = keyCols.mkString(",")
-    val withKb = df.withColumn("kb", kb(keyCols, nBuckets, nullSafe))
+    val withKb = df.withColumn("kb", kb(keyCols, nBuckets, resolve))
     if (manifestVersions(spark, dir).isEmpty) {
       val fs = hadoopFs(spark, new Path(clean))
       // reclaim LEGACY (pre-format plain-parquet) files only — never
@@ -1406,10 +1396,10 @@ object Maintenance {
         "append stamped deltas instead (appendDeltaKeyed) and compact")
     val depths0 = m0.depths
     val up = updates.map(_.withColumn("kb",
-        kb(keyCols, nBuckets, depths = depths0))
+        kb(keyCols, nBuckets, m0.resolve, depths0))
       .localCheckpoint())
     val dk = deleteKeys.map(_.select(keyCols.map(F.col): _*)
-      .withColumn("kb", kb(keyCols, nBuckets, depths = depths0))
+      .withColumn("kb", kb(keyCols, nBuckets, m0.resolve, depths0))
       .localCheckpoint())
     val touched = (up.toSeq ++ dk.toSeq)
       .flatMap(_.select("kb").distinct().collect().map(_.getInt(0)))
@@ -1435,12 +1425,6 @@ object Maintenance {
       commitKeyed(spark, stageMerge(spark, dir, merged, touched, m))
     }
   }
-
-  /** Single-column-key merge (the pre-r10 signature). */
-  def mergeKeyed(spark: SparkSession, dir: String,
-                 updates: Option[DataFrame], deleteKeys: Option[DataFrame],
-                 keyCol: String, nBuckets: Int): Unit =
-    mergeKeyed(spark, dir, updates, deleteKeys, Seq(keyCol), nBuckets)
 
   /** PREDICATE DELETE — `DELETE FROM t WHERE cond` for keyed tables:
     * the predicate's own structure prunes the read (key-equality
@@ -1686,11 +1670,12 @@ object Maintenance {
           .select(F.col("__win.*"))
       case None => batch
     }
-    val depths0 =
-      if (manifestVersions(spark, dir).isEmpty) Map.empty[Int, Int]
-      else readManifest(spark, dir).depths
+    val m0 =
+      if (manifestVersions(spark, dir).isEmpty) None
+      else Some(readManifest(spark, dir))
+    val depths0 = m0.fold(Map.empty[Int, Int])(_.depths)
     val reduced = reduced0.withColumn("kb",
-        kb(keyCols, nBuckets, depths = depths0))
+        kb(keyCols, nBuckets, m0.fold("")(_.resolve), depths0))
       .localCheckpoint()
     val touched = reduced.select("kb").distinct().collect()
       .map(_.getInt(0)).sorted.toSeq
@@ -1847,7 +1832,7 @@ object Maintenance {
       s"keyed table $clean is (${m0.keyCol}, ${m0.nBuckets}) buckets; " +
         s"caller passed ($keyCol, $nBuckets)")
     val withKb = all.withColumn("kb",
-      kb(keyCols, nBuckets, depths = m0.depths))
+      kb(keyCols, nBuckets, m0.resolve, m0.depths))
     // Stage FIRST — the batch evaluates exactly ONCE, into the staged
     // files (pre-r14 this was localCheckpoint + a probe aggregate +
     // the staging job: two extra passes over every delta batch). The
@@ -1867,8 +1852,10 @@ object Maintenance {
     val guard = spark.read
       .parquet(staged.values.toSeq.sorted.map(d => s"$clean/$d"): _*)
       .agg(F.count(F.lit(1)).as("n"),
-        F.count_distinct(F.col(keyCols.head),
-          keyCols.tail.map(F.col): _*).as("nk")).head
+        // the key as ONE struct: a multi-column count_distinct skips
+        // rows with a NULL component, which would refuse an agg
+        // state's NULL group as a duplicate
+        F.count_distinct(F.struct(keyCols.map(F.col): _*)).as("nk")).head
     if (guard.getLong(0) != guard.getLong(1)) {
       val fs = hadoopFs(spark, new Path(clean))
       staged.values.foreach(d => fs.delete(new Path(clean, d), true))
@@ -2041,7 +2028,7 @@ object Maintenance {
             readAggStateBuckets(spark, clean, m, live)
           else resolveBuckets(spark, clean, m, live).drop("kb")
         val rehashed = rows.withColumn("kb",
-          kb(m.keyCols, n, depths = newDepths))
+          kb(m.keyCols, n, m.resolve, newDepths))
         val pending = stageMerge(spark, dir, rehashed, children, m)
         commitKeyed(spark,
           pending.copy(manifest = pending.manifest.copy(depths = newDepths)))
@@ -2164,7 +2151,7 @@ object Maintenance {
             readAggStateBuckets(spark, clean, m, live)
           else resolveBuckets(spark, clean, m, live).drop("kb")
         val rehashed = rows.withColumn("kb",
-          kb(m.keyCols, n, depths = newDepths))
+          kb(m.keyCols, n, m.resolve, newDepths))
         val pending = stageMerge(spark, dir, rehashed, targets, m)
         commitKeyed(spark,
           pending.copy(manifest = pending.manifest.copy(depths = newDepths)))
@@ -2196,7 +2183,7 @@ object Maintenance {
     val clean = cleanDir(dir)
     val m = readManifest(spark, dir, version)
     require(m.nBuckets > 0,
-      s"$clean has no keyed metadata (a versioned or segmented dataset)")
+      s"$clean has no keyed metadata (a segmented dataset or commit group)")
     val keyCols = m.keyCols
     val schema = parseDdl(m.schemaDdl)
     val keyFields = keyCols.map(c => schema.fields.find(_.name == c)
@@ -2229,7 +2216,7 @@ object Maintenance {
     val probe = spark.createDataFrame(rows.asJava,
       StructType(keyFields.map(f => StructField(f.name, f.dataType))))
     val touched = probe
-      .select(kb(keyCols, m.nBuckets, depths = m.depths).as("b"))
+      .select(kb(keyCols, m.nBuckets, m.resolve, m.depths).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     // native-typed IN-list (not a string cast) so the predicate
     // PUSHES into the parquet scan of EVERY chain level and the
@@ -2540,13 +2527,13 @@ object Maintenance {
     * resolved scan (a chain's live count isn't the sum of its levels).
     * The fs listing per bucket is bounded metadata work (≤ nBuckets
     * dirs), same class as the manifest read itself. Refuses a manifest
-    * with no keyed metadata (a versioned or segmented dataset).
+    * with no keyed metadata (a segmented dataset or commit group).
     */
   def keyedStats(spark: SparkSession, dir: String): DataFrame = {
     val clean = cleanDir(dir)
     val m = readManifest(spark, dir)
     require(m.nBuckets > 0,
-      s"$clean has no keyed metadata (a versioned or segmented dataset)")
+      s"$clean has no keyed metadata (a segmented dataset or commit group)")
     val (fast, slow) = m.liveBuckets().partition(m.chain(_).isEmpty)
     val fs = hadoopFs(spark, new Path(clean))
     def filesIn(d: String): Long = fs.listStatus(new Path(clean, d))
@@ -2576,9 +2563,10 @@ object Maintenance {
   /** Row-level diff of two keyed frames: one row per key present on
     * either side, with status `added` (b only), `removed` (a only),
     * `changed` (both, any shared non-key column differs null-safely) or
-    * `same`. Columns are compared DIRECTLY (null-safe `<=>` conjunction
-    * over the shared non-key columns) — no hashing, so there is nothing
-    * to mirror and no collision caveat. One shuffle per side (the
+    * `same`. Keys match and columns compare DIRECTLY and null-safely
+    * (`<=>`: a NULL group key of an agg state is one key on both
+    * sides) — no hashing, so there is nothing to mirror and no
+    * collision caveat. One shuffle per side (the
     * full-outer equi-join); at 100 TB both sides stream through a
     * sort-merge join with no row amplification. Keys are assumed
     * UNIQUE per side (the keyed-table contract); duplicate keys
@@ -2591,7 +2579,7 @@ object Maintenance {
       .withColumn("__pa", F.lit(1)).alias("a")
     val bb = b.select((keyCols ++ shared).map(F.col): _*)
       .withColumn("__pb", F.lit(1)).alias("b")
-    val cond = keyCols.map(k => F.col(s"a.$k") === F.col(s"b.$k"))
+    val cond = keyCols.map(k => F.col(s"a.$k") <=> F.col(s"b.$k"))
       .reduce(_ && _)
     val sameCols =
       if (shared.isEmpty) F.lit(true)
@@ -2607,30 +2595,19 @@ object Maintenance {
 
   // ---- incremental aggregation (materialized-view maintenance) ------------
 
-  /** Build the persisted partial-aggregate state for an incrementally
-    * maintained `group by keys → count / sum / mean / min / max
-    * [/ approx distinct]` view: one row per group with
-    *   __cnt, __sum (EXACT DECIMAL(28,2) — merge order can never
-    *   change results), __min/__max (mergeable under min/max), and,
-    *   when `distinctKey` is set, __regs — the 2^p md5-HLL max-rank
-    *   registers of `PF.hllMd5` as an int array, mergeable under
-    *   element-wise max (so the estimate after any merge sequence is
-    *   BIT-IDENTICAL to the full recompute, and DuckDB can mirror it).
-    * The state is the one full pass over history; every refresh after
-    * that is `mergeAggState`, whose cost is O(batch + state) — at
-    * 100 TB the difference between a daily full recompute and a
-    * minutes-long merge.
-    */
-  def buildAggState(df: DataFrame, keys: Seq[String], valueCol: String,
-                    dir: String, distinctKey: Option[String] = None,
-                    p: Int = 12, sampleK: Int = 0,
-                    sampleUnique: Option[String] = None): Unit = {
-    val spark = df.sparkSession
-    val clean = cleanDir(dir)
-    hadoopFs(spark, new Path(clean)).delete(new Path(clean), true)
-    writeVersioned(partialAgg(df, keys, valueCol, distinctKey, p, sampleK,
-      sampleUnique), dir)
-  }
+  // An incrementally maintained `group by keys → count / sum / mean /
+  // min / max [/ approx distinct] [/ approx quantiles]` view persists
+  // ONE partial-aggregate row per group:
+  //   __cnt, __sum (EXACT DECIMAL(28,2) — merge order can never change
+  //   results), __cnv (non-NULL count), __min/__max (mergeable under
+  //   min/max), and, when `distinctKey` is set, __regs — the 2^p
+  //   md5-HLL max-rank registers of `PF.hllMd5`, mergeable under
+  //   element-wise max (so the estimate after any merge sequence is
+  //   BIT-IDENTICAL to the full recompute, and DuckDB can mirror it).
+  // The state lives in the bucketed agg-state table below
+  // (`buildAggStateKeyed`): the build is the one full pass over
+  // history, and every refresh after that is `mergeAggStateKeyed`.
+  // NULL group keys are one group, as in SQL's group-by.
 
   /** Per-measure state-column suffix: ONE measure keeps the exact
     * pre-r11 names (__sum/__cnv/__min/__max — every existing state
@@ -2655,13 +2632,6 @@ object Maintenance {
         F.min(F.col(c)).as(s"__min$s"),
         F.max(F.col(c)).as(s"__max$s"))
     }
-
-  private def partialAgg(df: DataFrame, keys: Seq[String], valueCol: String,
-                         distinctKey: Option[String], p: Int,
-                         sampleK: Int = 0,
-                         sampleUnique: Option[String] = None): DataFrame =
-    partialAggCols(df, keys, Seq(valueCol), distinctKey, p, sampleK,
-      sampleUnique)
 
   /** Multi-measure partial aggregate: one state row per group tracking
     * (__sum/__cnv/__min/__max) PER MEASURE — a dashboard tracking
@@ -2713,8 +2683,8 @@ object Maintenance {
         // the GRAIN is part of the state's identity: the row-uniform
         // sample persists as __smpr, the distinct-value one as __smp,
         // so a refresh built with the WRONG grain fails loudly at the
-        // merge's legacy-align select (missing column) instead of
-        // silently mixing two hash functions into one heap
+        // merge's identity check (the select of the stored columns)
+        // instead of silently mixing two hash functions into one heap
         (if (sampleK > 0) {
           val hashIn = sampleUnique match {
             case Some(u) => F.concat(F.lit("smp:"),
@@ -2738,7 +2708,7 @@ object Maintenance {
     * the fold is a per-column aggregate — counts and sums add, min/max
     * fold, HLL registers union, bounded samples keep the k smallest.
     * Column handling is NAME-DRIVEN (prefix match), so single- and
-    * multi-measure states, with or without the r11 __cnv columns,
+    * multi-measure states, with or without registers or a sample,
     * merge through the same body.
     */
   private[sources] def aggOfState(state: DataFrame, keys: Seq[String],
@@ -2762,65 +2732,9 @@ object Maintenance {
     state.groupBy(keys.map(F.col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  // ---- generic versioned dataset (snapshot-swapped whole tables) ----------
-  //
-  // The same commit discipline as the keyed table, for UNKEYED whole
-  // datasets that are periodically rewritten (agg state, model tables):
-  //   dir/g000000001/part-*.parquet     immutable generation dirs
-  //   dir/_manifests/v000000001.json    {"format":1,"buckets":{"0":"g..."}}
-  // A writer stages the new generation (invisible), then publishes one
-  // manifest — readers mid-rewrite see the old or new COMPLETE dataset,
-  // never a half-deleted directory. Reuses the keyed manifest format
-  // with a single pseudo-bucket.
-
-  /** Commit `df` as the next generation of the versioned dataset at
-    * `dir`; returns the committed version. Concurrent writers race on
-    * the manifest publish only (writer-unique generation names); the
-    * loser recomputes against the fresh version chain and retries.
-    */
-  def writeVersioned(df: DataFrame, dir: String): Int =
-    // the internal retry is safe here because `df` does not depend on
-    // the version chain; a caller whose frame DERIVES from the current
-    // version (mergeAggState) must use writeVersionedOnce inside its
-    // own retry so a conflict re-reads the fresh state
-    withCommitRetry(s"writeVersioned($dir)")(writeVersionedOnce(df, dir))
-
-  private def writeVersionedOnce(df: DataFrame, dir: String): Int = {
-    val spark = df.sparkSession
-    val clean = cleanDir(dir)
-    val fs = hadoopFs(spark, new Path(clean))
-    val next = manifestVersions(spark, dir).lastOption.getOrElse(0) + 1
-    val gen = f"g$next%09d" +
-      s"-${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}"
-    val staging = new Path(clean +
-      s".staging_${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}")
-    fs.delete(staging, true)
-    df.write.mode("overwrite").parquet(staging.toString)
-    fs.mkdirs(new Path(clean))
-    require(fs.rename(staging, new Path(clean, gen)),
-      s"generation stage failed: $staging -> $clean/$gen")
-    writeManifest(spark, clean, KeyedManifest(next, Map(0 -> gen)))
-    next
-  }
-
-  /** The versioned dataset's snapshot at `version` (latest when None). */
-  def readVersioned(spark: SparkSession, dir: String,
-                    version: Option[Int] = None): DataFrame =
-    spark.read.parquet(
-      s"${cleanDir(dir)}/${readManifest(spark, dir, version).buckets(0)}")
-
-  /** GC old generations of a versioned dataset (same contract and
-    * grace rule as `vacuumKeyed`). Generation dirs are `g\d{9}-…` at
-    * the top level. */
-  def vacuumVersioned(spark: SparkSession, dir: String,
-                      keepVersions: Int = 1,
-                      graceMs: Long = 15 * 60 * 1000L): Unit =
-    vacuumGenerations(spark, dir, keepVersions, graceMs,
-      """g\d{9}(-.*)?""")
-
   // ---- segmented datasets (additive segment lists: search indexes) --------
   //
-  // A third commit discipline for ADDITIVE datasets (the inverted
+  // A second commit discipline for ADDITIVE datasets (the inverted
   // index): the manifest lists SEGMENT dirs, a rebuild replaces the
   // list, an append extends it — readers always resolve a complete
   // segment set, appends never rewrite existing segments, and old
@@ -2923,44 +2837,6 @@ object Maintenance {
     vacuumGenerations(spark, dir, keepVersions, graceMs,
       """s\d{9}(-.*)?""")
 
-  /** Fold a new batch into the persisted state at `dir` and commit the
-    * merged state as the next snapshot (see writeVersioned — a reader
-    * racing the refresh always resolves a complete state, and the
-    * previous state stays readable until vacuumed). Never a
-    * localCheckpoint: non-replicated executor blocks are the wrong
-    * place for a state table that can reach many GB at 100 TB grain.
-    * Every state column is associative (counts, decimal sums, min/max,
-    * register-wise max), so state ∪ batch-partial re-aggregated IS the
-    * state of history ∪ batch — bit-for-bit, in any merge order.
-    * Returns the merged state (reading the committed snapshot).
-    */
-  def mergeAggState(spark: SparkSession, dir: String, batch: DataFrame,
-                    keys: Seq[String], valueCol: String,
-                    distinctKey: Option[String] = None,
-                    p: Int = 12, sampleK: Int = 0,
-                    sampleUnique: Option[String] = None): DataFrame = {
-    // the WHOLE read-merge-commit sits in the retry: the merged frame
-    // derives from the previous state, so after a losing race it must
-    // be rebuilt from the winner's snapshot (committing the stale
-    // frame under a new version would silently drop the winner's
-    // batch)
-    withCommitRetry(s"mergeAggState($dir)") {
-      val prev = readVersioned(spark, dir)
-      val merged = aggOfState(
-        prev.unionByName(
-          partialAgg(batch, keys, valueCol, distinctKey, p, sampleK,
-            sampleUnique)
-          // legacy (cnt, sum)-only states merge with a richer batch
-          // partial by dropping what the state never tracked
-          .select(prev.columns.map(F.col).toIndexedSeq: _*)), keys, p, sampleK)
-      writeVersionedOnce(merged, dir)
-    }
-    // old generations GC here by default: agg state is refresh-heavy
-    // and callers wanting time travel can vacuum on their own cadence
-    vacuumVersioned(spark, dir, keepVersions = 2)
-    readVersioned(spark, dir)
-  }
-
   /** Finalize a state frame into the user-facing view:
     * (keys, n, total, mean[, vmin, vmax][, approx_distinct]) — the
     * extra columns appear when the state tracks them. `p` must match
@@ -3006,7 +2882,7 @@ object Maintenance {
       Seq("__smp", "__smpr").find(state.columns.contains).toSeq.flatMap { sc =>
         // the sample's order statistics estimate the population's at
         // the sample's GRAIN — distinct values (__smp, the default) or
-        // rows (__smpr, built with sampleUnique; see partialAgg's
+        // rows (__smpr, built with sampleUnique; see partialAggCols'
         // sample-grain note); the median uses explicit middle/average
         // arithmetic, other quantiles nearest-rank v[ceil(q·n)] —
         // both exactly replayable in any SQL engine
@@ -3027,15 +2903,13 @@ object Maintenance {
     state.select(keys.map(F.col) ++ base ++ minmax ++ distinct ++ quantiles: _*)
   }
 
-  // ---- BUCKETED incremental agg state (merge cost ∝ batch) ---------------
+  // ---- the agg-state table (merge cost ∝ batch) ----------------------------
   //
-  // `mergeAggState` rewrites the WHOLE state every refresh (the
-  // versioned dataset is a single pseudo-bucket) — fine for small
-  // states, O(state) write amplification at 100 TB grain with
-  // high-cardinality keys and frequent small batches. The bucketed
-  // variant stores the state AS A KEYED TABLE hash-bucketed by the
-  // group keys (state rows are unique per key by construction, so the
-  // keyed layout fits exactly):
+  // The ONE store of the incremental agg state: a KEYED TABLE
+  // hash-bucketed by the group keys (state rows are unique per key by
+  // construction, so the keyed layout fits exactly; a one-bucket state
+  // is the whole-state rewrite of a small view, and high-cardinality
+  // states size `nBuckets` so a refresh stays ∝ the batch):
   //  - the default refresh is copy-on-write at BUCKET granularity —
   //    only the buckets the batch's keys hash into are read,
   //    re-aggregated, and restaged (manifest path pruning, the same
@@ -3049,13 +2923,14 @@ object Maintenance {
   //    back into base generations on the `minChain` policy.
   // The manifest records resolve="agg" for these tables, so the
   // generic last-wins readers (readKeyed/lookupKeyed/compactKeyed)
-  // fail loudly instead of silently keeping the newest partial per key.
+  // fail loudly instead of silently keeping the newest partial per key,
+  // and `kb` accepts a NULL group key (one group, one bucket).
 
   /** (Re)build the BUCKETED agg state at `dir` from scratch: the
     * partial-aggregate of `df` written as a keyed table keyed on the
-    * group keys. Same state columns and sample-grain contract as
-    * `buildAggState`; size `nBuckets` so one bucket ≈ one comfortable
-    * rewrite at the full state's scale.
+    * group keys (state columns and sample grain: `partialAggCols`);
+    * size `nBuckets` so one bucket ≈ one comfortable rewrite at the
+    * full state's scale.
     */
   def buildAggStateKeyed(df: DataFrame, dir: String, keys: Seq[String],
                          valueCol: String, nBuckets: Int,
@@ -3084,7 +2959,7 @@ object Maintenance {
     writeKeyedInternal(
       partialAggCols(df, keys, valueCols, distinctKey, p, sampleK,
         sampleUnique),
-      dir, keys, nBuckets, Seq.empty, nullSafe = false, resolve = "agg",
+      dir, keys, nBuckets, Seq.empty, resolve = "agg",
       txn = txn,
       // the build's p/sampleK/sampleUnique are TABLE METADATA from
       // here on: reads, merges, compactions, and MV rebuilds default
@@ -3095,9 +2970,10 @@ object Maintenance {
 
   /** Fold one batch into the bucketed agg state. `p`/`sampleK` default
     * to the BUILD's values recorded in the manifest (sentinels 0/-1);
-    * `distinctKey`/`sampleUnique` must still match the build's — a
-    * missing state column fails loudly at the align select (the
-    * sample GRAIN is part of the state's identity; see `partialAgg`). Copy-on-write mode reads +
+    * an omitted `sampleUnique` inherits the build's recorded grain
+    * and a contradicting one fails loudly; `distinctKey` must match
+    * the build's — a missing state column fails loudly at the align
+    * select (see `partialAggCols`). Copy-on-write mode reads +
     * re-aggregates + restages ONLY the touched buckets inside the
     * optimistic-commit retry; `asDeltas` appends the partial as delta
     * dirs (bytes ∝ batch) — the batch partial has unique keys per call
@@ -3157,7 +3033,7 @@ object Maintenance {
       return
     }
     val withKb = partial
-      .withColumn("kb", kb(keys, m0.nBuckets, depths = m0.depths))
+      .withColumn("kb", kb(keys, m0.nBuckets, m0.resolve, m0.depths))
       .localCheckpoint()
     val touched = withKb.select("kb").distinct().collect()
       .map(_.getInt(0)).sorted.toSeq
@@ -3178,17 +3054,18 @@ object Maintenance {
         if (dirs.nonEmpty)
           readGenDirs(spark, clean, m, dirs, withTomb = true)
         else withKb.limit(0)
-      // align the batch partial to the STORED column set: a legacy
-      // (cnt,sum)-only state merges with a richer partial by dropping
-      // what the state never tracked; a state column the partial lacks
-      // (wrong sample grain / missing distinctKey) fails loudly here
+      // align the batch partial to the STORED column set — the
+      // state's identity check: partial columns the state never
+      // tracked (__regs of a merge naming a distinctKey the build did
+      // not) drop; a state column the partial lacks (wrong sample
+      // grain / missing distinctKey) fails loudly here
       val cols = base.columns.filterNot(c => c == "kb" || c == "__tomb")
         .toIndexedSeq
       val merged = aggOfState(
         base.select(cols.map(F.col): _*)
           .unionByName(withKb.select(cols.map(F.col): _*)),
         keys, pe, ke)
-        .withColumn("kb", kb(keys, m.nBuckets, depths = m.depths))
+        .withColumn("kb", kb(keys, m.nBuckets, m.resolve, m.depths))
       commitKeyed(spark, stageMerge(spark, dir, merged, touched, m,
         txn = txn))
     }
@@ -3276,7 +3153,8 @@ object Maintenance {
         // every target carries a chain, so the resolver re-aggregates
         // each one whole (base ⊕ chain) — exactly the fold to restage
         val folded = readAggStateBuckets(spark, clean, m, target, p, sampleK)
-          .withColumn("kb", kb(m.keyCols, m.nBuckets, depths = m.depths))
+          .withColumn("kb",
+            kb(m.keyCols, m.nBuckets, m.resolve, m.depths))
         commitKeyed(spark, stageMerge(spark, clean, folded, target, m))
       }
     }
@@ -3311,10 +3189,10 @@ object Maintenance {
       require(m.keyCols.contains(tagCol),
         s"$clean is keyed on (${m.keyCol}) — no tag column '$tagCol'")
       val st = readAggStateBuckets(spark, clean, m, m.liveBuckets())
-        .withColumn("kb", kb(m.keyCols, m.nBuckets, depths = m.depths))
+        .withColumn("kb", kb(m.keyCols, m.nBuckets, m.resolve, m.depths))
       val cond = F.col(tagCol).isin(tags: _*)
       val partKb = part0.withColumn("kb",
-        kb(m.keyCols, m.nBuckets, depths = m.depths))
+        kb(m.keyCols, m.nBuckets, m.resolve, m.depths))
       // ONE probe job (r15; was three — an isEmpty guard plus one
       // distinct-collect per side, each a job + a driver gap on a path
       // the profiler showed is job-count bound): a tagged union folds
@@ -3505,9 +3383,15 @@ object Maintenance {
     val n = side(m2)
     val valCols = n.columns.filterNot(keys.contains).toSeq
     val d = diff(o, n, keys).filter(F.col("status") =!= "same")
-    val oldP = o.select(keys.map(F.col) ++
-      valCols.map(c => F.col(c).as(s"old_$c")): _*)
-    d.join(n, keys, "left").join(oldP, keys, "left")
+    // attach each side's values by a NULL-SAFE key match (a USING join
+    // would drop the NULL group's values)
+    def prefixed(df: DataFrame, p: String, names: String => String) =
+      df.select(keys.map(k => F.col(k).as(s"$p$k")) ++
+        valCols.map(c => F.col(c).as(names(c))): _*)
+    def on(p: String) = keys.map(k => F.col(k) <=> F.col(s"$p$k"))
+      .reduce(_ && _)
+    d.join(prefixed(n, "__n_", identity), on("__n_"), "left")
+      .join(prefixed(o, "__o_", c => s"old_$c"), on("__o_"), "left")
       .select(keys.map(F.col) ++ (F.col("status") +:
         (valCols.map(F.col) ++ valCols.map(c => F.col(s"old_$c")))): _*)
   }

@@ -678,12 +678,13 @@ class MaintenanceSpec extends SparkSpec {
     val dir = tmp("graft_mv")
     val full = spark.range(0, 300).select(
       (col("id") % 3).cast("string").as("g"), (col("id") % 17 + 0.25).as("v"))
-    Maintenance.buildAggState(full.filter(col("id") % 5 === 0),
-      Seq("g"), "v", dir)
-    Maintenance.mergeAggState(spark, dir,
+    Maintenance.buildAggStateKeyed(full.filter(col("id") % 5 === 0),
+      dir, Seq("g"), "v", nBuckets = 1)
+    Maintenance.mergeAggStateKeyed(spark, dir,
       full.filter(col("id") % 5 === 1), Seq("g"), "v")
-    val st = Maintenance.mergeAggState(spark, dir,
+    Maintenance.mergeAggStateKeyed(spark, dir,
       full.filter(col("id") % 5 >= 2), Seq("g"), "v")
+    val st = Maintenance.readAggStateKeyed(spark, dir)
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3))).toSet
@@ -693,7 +694,7 @@ class MaintenanceSpec extends SparkSpec {
         sum(col("v").cast("decimal(28,2)")).as("__sum")), Seq("g")))
     assert(inc == direct)
     // and the state on disk IS the returned state
-    val disk = Maintenance.readVersioned(spark, dir)
+    val disk = Maintenance.readAggStateKeyed(spark, dir)
     assert(snap(Maintenance.finalizeAgg(disk, Seq("g"))) == inc)
   }
 
@@ -704,11 +705,12 @@ class MaintenanceSpec extends SparkSpec {
       (col("id") % 2).cast("string").as("g"),
       (col("id") % 701 + 0.5).as("v"))
     def medians(d: String, parts: Seq[org.apache.spark.sql.DataFrame]) = {
-      Maintenance.buildAggState(parts.head, Seq("g"), "v", d, sampleK = 64)
-      val st = parts.tail.foldLeft(
-        Maintenance.readVersioned(spark, d)) { (_, b) =>
-        Maintenance.mergeAggState(spark, d, b, Seq("g"), "v", sampleK = 64)
-      }
+      Maintenance.buildAggStateKeyed(parts.head, d, Seq("g"), "v",
+        nBuckets = 1, sampleK = 64)
+      parts.tail.foreach(b =>
+        Maintenance.mergeAggStateKeyed(spark, d, b, Seq("g"), "v",
+          sampleK = 64))
+      val st = Maintenance.readAggStateKeyed(spark, d)
       Maintenance.finalizeAgg(st, Seq("g"))
         .select("g", "approx_median").collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -978,27 +980,30 @@ class MaintenanceSpec extends SparkSpec {
     val dV = tmp("graft_grain_v"); val dR = tmp("graft_grain_r")
     // distinct-value grain: the dominant value is ONE sample point, so
     // the median estimates the distinct-value distribution (~50)
-    Maintenance.buildAggState(skewed, Seq("g"), "v", dV, sampleK = 64)
+    Maintenance.buildAggStateKeyed(skewed, dV, Seq("g"), "v",
+      nBuckets = 1, sampleK = 64)
     val mV = Maintenance.finalizeAgg(
-        Maintenance.readVersioned(spark, dV), Seq("g"))
+        Maintenance.readAggStateKeyed(spark, dV), Seq("g"))
       .select("approx_median").head().getDouble(0)
     assert(mV < 500, s"distinct-grain median should ignore multiplicity: $mV")
     // row grain: 99% of sampled rows carry the dominant value, so the
     // median is the true multiset median
-    Maintenance.buildAggState(skewed, Seq("g"), "v", dR, sampleK = 64,
-      sampleUnique = Some("rk"))
+    Maintenance.buildAggStateKeyed(skewed, dR, Seq("g"), "v",
+      nBuckets = 1, sampleK = 64, sampleUnique = Some("rk"))
     val mR = Maintenance.finalizeAgg(
-        Maintenance.readVersioned(spark, dR), Seq("g"))
+        Maintenance.readAggStateKeyed(spark, dR), Seq("g"))
       .select("approx_median").head().getDouble(0)
     assert(mR == 1000.0, s"row-grain median should track the multiset: $mR")
     // row-grain merges stay order-free too (the hash is a pure
     // function of (value, row key))
     val dR2 = tmp("graft_grain_r2")
-    Maintenance.buildAggState(skewed.filter(col("rk") % 2 === 0),
-      Seq("g"), "v", dR2, sampleK = 64, sampleUnique = Some("rk"))
-    val st2 = Maintenance.mergeAggState(spark, dR2,
+    Maintenance.buildAggStateKeyed(skewed.filter(col("rk") % 2 === 0),
+      dR2, Seq("g"), "v", nBuckets = 1, sampleK = 64,
+      sampleUnique = Some("rk"))
+    Maintenance.mergeAggStateKeyed(spark, dR2,
       skewed.filter(col("rk") % 2 === 1), Seq("g"), "v",
       sampleK = 64, sampleUnique = Some("rk"))
+    val st2 = Maintenance.readAggStateKeyed(spark, dR2)
     assert(Maintenance.finalizeAgg(st2, Seq("g"))
       .select("approx_median").head().getDouble(0) == mR)
   }
@@ -1049,35 +1054,30 @@ class MaintenanceSpec extends SparkSpec {
   test("sample-grain mismatch between build and merge fails loudly") {
     val dir = tmp("graft_grainmix")
     val df = spark.range(0, 500).select(lit("g").as("g"),
-      (col("id") % 31).cast("double").as("v"), col("id").as("rk"))
-    Maintenance.buildAggState(df, Seq("g"), "v", dir, sampleK = 32,
-      sampleUnique = Some("rk"))
-    // a refresh with the DEFAULT grain would mix two different hash
-    // functions into one heap — it must fail at the state align, not
-    // silently corrupt the sample
-    intercept[org.apache.spark.sql.AnalysisException] {
-      Maintenance.mergeAggState(spark, dir, df, Seq("g"), "v",
-        sampleK = 32)
+      (col("id") % 31).cast("double").as("v"), col("id").as("rk"),
+      (col("id") + 1).as("rk2"))
+    def build(d: String) =
+      Maintenance.buildAggStateKeyed(df, d, Seq("g"), "v", nBuckets = 1,
+        sampleK = 32, sampleUnique = Some("rk"))
+    build(dir)
+    // a refresh salting the sample with ANOTHER column would mix two
+    // hash functions into one heap — it must fail loudly, not silently
+    // corrupt the sample
+    val err = intercept[IllegalArgumentException] {
+      Maintenance.mergeAggStateKeyed(spark, dir, df, Seq("g"), "v",
+        sampleK = 32, sampleUnique = Some("rk2"))
     }
-    // the matching grain refreshes fine
-    Maintenance.mergeAggState(spark, dir, df, Seq("g"), "v",
+    assert(err.getMessage.contains("sample grain"), err.getMessage)
+    // omitting the grain (and sampleK) inherits the build's: the same
+    // state as naming it
+    Maintenance.mergeAggStateKeyed(spark, dir, df, Seq("g"), "v")
+    val named = tmp("graft_grainmix_named")
+    build(named)
+    Maintenance.mergeAggStateKeyed(spark, named, df, Seq("g"), "v",
       sampleK = 32, sampleUnique = Some("rk"))
-  }
-
-  test("versioned dataset: commit is atomic, old snapshot readable until vacuum") {
-    val dir = tmp("graft_ver")
-    val v1 = Maintenance.writeVersioned(
-      spark.range(0, 10).toDF("x"), dir)
-    val v2 = Maintenance.writeVersioned(
-      spark.range(0, 20).toDF("x"), dir)
-    assert(v1 == 1 && v2 == 2)
-    assert(Maintenance.readVersioned(spark, dir).count() == 20)
-    assert(Maintenance.readVersioned(spark, dir, Some(1)).count() == 10)
-    Maintenance.vacuumVersioned(spark, dir, keepVersions = 1, graceMs = 0L)
-    intercept[IllegalArgumentException] {
-      Maintenance.readVersioned(spark, dir, Some(1))
-    }
-    assert(Maintenance.readVersioned(spark, dir).count() == 20)
+    def state(d: String) = Maintenance.readAggStateKeyed(spark, d)
+      .collect().toSeq
+    assert(state(dir) == state(named))
   }
 
   test("generalized agg state: min/max and HLL registers merge == full recompute bit-for-bit") {
@@ -1087,24 +1087,25 @@ class MaintenanceSpec extends SparkSpec {
       (col("id") % 3).cast("string").as("g"),
       (col("id") % 17 + 0.25).as("v"),
       (col("id") % 537).as("u"))
-    Maintenance.buildAggState(full.filter(col("id") % 5 === 0),
-      Seq("g"), "v", dir, distinctKey = Some("u"))
-    Maintenance.mergeAggState(spark, dir,
+    Maintenance.buildAggStateKeyed(full.filter(col("id") % 5 === 0),
+      dir, Seq("g"), "v", nBuckets = 1, distinctKey = Some("u"))
+    Maintenance.mergeAggStateKeyed(spark, dir,
       full.filter(col("id") % 5 === 1), Seq("g"), "v",
       distinctKey = Some("u"))
-    val st = Maintenance.mergeAggState(spark, dir,
+    Maintenance.mergeAggStateKeyed(spark, dir,
       full.filter(col("id") % 5 >= 2), Seq("g"), "v",
       distinctKey = Some("u"))
+    val st = Maintenance.readAggStateKeyed(spark, dir)
     // the full single-pass state over everything, same builder
-    Maintenance.buildAggState(full, Seq("g"), "v", dir2,
-      distinctKey = Some("u"))
+    Maintenance.buildAggStateKeyed(full, dir2, Seq("g"), "v",
+      nBuckets = 1, distinctKey = Some("u"))
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5),
         r.getDouble(6))).toSet
     val inc = snap(Maintenance.finalizeAgg(st, Seq("g")))
     val direct = snap(Maintenance.finalizeAgg(
-      Maintenance.readVersioned(spark, dir2), Seq("g")))
+      Maintenance.readAggStateKeyed(spark, dir2), Seq("g")))
     assert(inc == direct)
     // sanity on the estimate: each group has ~min(537, distinct u per g)
     val est = Maintenance.finalizeAgg(st, Seq("g"))
@@ -1116,14 +1117,15 @@ class MaintenanceSpec extends SparkSpec {
       s"estimate off: $est"))
     // a merge ORDER cannot change bits: merge the two halves reversed
     val dir3 = tmp("graft_mvp_rev")
-    Maintenance.buildAggState(full.filter(col("id") % 5 >= 2),
-      Seq("g"), "v", dir3, distinctKey = Some("u"))
-    Maintenance.mergeAggState(spark, dir3,
+    Maintenance.buildAggStateKeyed(full.filter(col("id") % 5 >= 2),
+      dir3, Seq("g"), "v", nBuckets = 1, distinctKey = Some("u"))
+    Maintenance.mergeAggStateKeyed(spark, dir3,
       full.filter(col("id") % 5 === 1), Seq("g"), "v",
       distinctKey = Some("u"))
-    val st3 = Maintenance.mergeAggState(spark, dir3,
+    Maintenance.mergeAggStateKeyed(spark, dir3,
       full.filter(col("id") % 5 === 0), Seq("g"), "v",
       distinctKey = Some("u"))
+    val st3 = Maintenance.readAggStateKeyed(spark, dir3)
     assert(snap(Maintenance.finalizeAgg(st3, Seq("g"))) == inc)
   }
 
@@ -1538,5 +1540,129 @@ class MaintenanceSpec extends SparkSpec {
       Seq(5L, 6L))
     assert(dbl.inputFiles.length <
       M.readKeyed(spark, dir, Some(live)).inputFiles.length)
+  }
+
+  // ---- NULL group keys in the agg state ------------------------------------
+
+  test("agg state: NULL is one group through build, merges, compaction and split") {
+    val M = Maintenance
+    val MV = graft.sources.MatView
+    // every 7th row carries a NULL group key
+    val rows = spark.range(0, 2000).select(
+      when(col("id") % 7 =!= 0, (col("id") % 5).cast("string")).as("g"),
+      (col("id") % 13 + 0.5).as("v"), col("id"))
+    val part = (0 until 3).map(i => rows.filter(col("id") % 3 === i))
+    type Row6 = (Option[String], Long, Double, Double, Double, Double)
+    def view(fin: org.apache.spark.sql.DataFrame): Set[Row6] =
+      fin.select("g", "n", "total", "mean", "vmin", "vmax").collect()
+        .map(r => (Option(r.getString(0)), r.getLong(1), r.getDouble(2),
+          r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
+    // the plain SQL group-by over every row fed so far
+    def scan(fed: org.apache.spark.sql.DataFrame): Set[Row6] =
+      view(M.finalizeAgg(fed.groupBy("g").agg(count(lit(1)).as("__cnt"),
+        sum(col("v").cast("decimal(28,2)")).as("__sum"),
+        min("v").as("__min"), max("v").as("__max")), Seq("g")))
+    def nullRow(s: Set[Row6]): Row6 = s.find(_._1.isEmpty).get
+
+    val dir = tmp("graft_nullgrp")
+    val steps: Seq[(String, () => Unit, Int)] = Seq(
+      ("build", () => M.buildAggStateKeyed(part(0), dir, Seq("g"), "v",
+        nBuckets = 4), 1),
+      ("CoW merge", () => M.mergeAggStateKeyed(spark, dir, part(1),
+        Seq("g"), "v"), 2),
+      ("asDeltas merge", () => M.mergeAggStateKeyed(spark, dir, part(2),
+        Seq("g"), "v", asDeltas = true), 3),
+      ("compactAggStateKeyed", () => M.compactAggStateKeyed(spark, dir), 3),
+      ("splitKeyed", () => M.splitKeyed(spark, dir, 0 until 4), 3))
+    val versions = steps.map { case (what, run, fed) =>
+      run()
+      val got = view(M.finalizeAgg(M.readAggStateKeyed(spark, dir), Seq("g")))
+      val want = scan(part.take(fed).reduce(_.union(_)))
+      assert(want.exists(_._1.isEmpty), what)
+      assert(got == want, what)
+      M.manifestVersions(spark, dir).last
+    }
+
+    // the changelog across the CoW merge: the NULL group is ONE changed
+    // row carrying its new and old values
+    val ch = M.aggStateChanges(spark, dir, versions(0), versions(1))
+      .filter(col("g").isNull)
+      .select("status", "n", "total", "old_n", "old_total").collect()
+    assert(ch.length == 1, ch.toSeq)
+    val (now, before) = (nullRow(scan(part(0).union(part(1)))),
+      nullRow(scan(part(0))))
+    assert(ch(0).getString(0) == "changed")
+    assert((ch(0).getLong(1), ch(0).getDouble(2)) == ((now._2, now._3)))
+    assert((ch(0).getLong(3), ch(0).getDouble(4)) == ((before._2, before._3)))
+
+    // a bucket-grain MV over a keyed base whose group column holds NULLs
+    val bdir = tmp("graft_nullgrp_base")
+    val mdir = tmp("graft_nullgrp_mv")
+    M.writeKeyed(rows, bdir, "id", 4)
+    MV.buildMv(spark, bdir, mdir, Seq("g"), Seq("v"), 4)
+    assert(view(MV.readMv(spark, mdir)) == scan(rows))
+    // move rows into and out of the NULL group, and delete some
+    M.upsertKeyed(spark, bdir, rows.filter(col("id") % 11 === 0)
+      .select(when(col("g").isNull, lit("9")).as("g"),
+        (col("v") + 1).as("v"), col("id")), "id", 4)
+    M.deleteKeyed(spark, bdir,
+      rows.filter(col("id") % 17 === 0).select("id"), "id", 4)
+    MV.refreshMvIncremental(spark, mdir)
+    assert(view(MV.readMv(spark, mdir)) == scan(M.readKeyed(spark, bdir)))
+    MV.unregister(spark, mdir)
+  }
+
+  // ---- bucket layout pin ----------------------------------------------------
+
+  /** Key (rendered as a string, components joined on `|`) → the bucket
+    * its row landed in, read from the stored `kb` column.
+    */
+  private def layoutOf(dir: String, keyCols: Seq[String]): Map[String, Int] =
+    Maintenance.readKeyed(spark, dir)
+      .select(concat_ws("|", keyCols.map(c => col(c).cast("string")): _*),
+        col("kb"))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+
+  test("bucket layout is pinned: fixed keys land in fixed buckets") {
+    // every existing table's rows stay where they are: these buckets
+    // are constants of the on-disk format, not of the current code
+    val M = Maintenance
+    // Long keys, 8 buckets
+    val dl = tmp("graft_pin_long")
+    M.writeKeyed(spark.range(0, 12).select(col("id").as("k")), dl, "k", 8)
+    val long = layoutOf(dl, Seq("k"))
+    assert(long == Map(
+      "0" -> 6, "1" -> 0, "2" -> 6, "3" -> 7, "4" -> 1, "5" -> 4,
+      "6" -> 2, "7" -> 7, "8" -> 1, "9" -> 3, "10" -> 5, "11" -> 6),
+      s"Long keys: $long")
+    // String keys, 8 buckets
+    val ds = tmp("graft_pin_str")
+    M.writeKeyed(Seq("a", "b", "tenant-7", "", "zürich", "x y")
+      .toDF("s"), ds, "s", 8)
+    val str = layoutOf(ds, Seq("s"))
+    assert(str == Map(
+      "" -> 0, "a" -> 2, "b" -> 6, "tenant-7" -> 1, "x y" -> 1,
+      "zürich" -> 3), s"String keys: $str")
+    // two-column composite key, 8 buckets
+    val dc = tmp("graft_pin_comp")
+    M.writeKeyed(Seq(("t1", 1L), ("t1", 2L), ("t2", 1L), ("acme", 42L),
+      ("", 0L)).toDF("tenant", "id"), dc, Seq("tenant", "id"), 8)
+    val comp = layoutOf(dc, Seq("tenant", "id"))
+    assert(comp == Map(
+      "t1|1" -> 5, "t1|2" -> 2, "t2|1" -> 5, "acme|42" -> 5,
+      "|0" -> 6), s"composite keys: $comp")
+    // extendible-hashing layout: 4 base buckets, leaf 1 split twice
+    val dx = tmp("graft_pin_split")
+    M.writeKeyed(spark.range(0, 24).select(col("id").as("k")), dx, "k", 4)
+    M.splitKeyed(spark, dx, Seq(1))
+    M.splitKeyed(spark, dx, Seq(1))
+    assert(M.readManifest(spark, dx).depths == Map(1 -> 2, 5 -> 1, 9 -> 2))
+    val split = layoutOf(dx, Seq("k"))
+    assert(split == Map(
+      "0" -> 2, "1" -> 0, "2" -> 2, "3" -> 3, "4" -> 1, "5" -> 0,
+      "6" -> 2, "7" -> 3, "8" -> 9, "9" -> 3, "10" -> 5, "11" -> 2,
+      "12" -> 5, "13" -> 0, "14" -> 5, "15" -> 2, "16" -> 3, "17" -> 0,
+      "18" -> 1, "19" -> 0, "20" -> 0, "21" -> 2, "22" -> 2, "23" -> 2),
+      s"split layout: $split")
   }
 }
