@@ -20,7 +20,6 @@ object GraftConf {
   val NativeArgmaxThresholdKey = "spark.graft.ivf.nativeArgmaxThreshold"
   val InlistLimitKey = "spark.graft.inlist.limit"
   val MinParallelismKey = "spark.graft.minParallelism"
-  val RealDecodeKey = "spark.graft.multimodal.realDecode"
   val CatalogLocalLimitKey = "spark.graft.catalog.localLimit"
 
   private def long(spark: SparkSession, key: String, default: Long): Long =
@@ -78,12 +77,6 @@ object GraftConf {
   def minParallelism(spark: SparkSession): Int =
     long(spark, MinParallelismKey,
       spark.sparkContext.defaultParallelism.toLong).toInt
-
-  /** Whether Multimodal.decodeImage / extractImageFeatures attempt a
-    * real javax.imageio decode before falling back to the stub.
-    */
-  def realDecode(spark: SparkSession): Boolean =
-    spark.conf.getOption(RealDecodeKey).forall(_.trim.toBoolean)
 
   /** Row count up to which a catalog table created empty and grown
     * row-by-row stays a single driver-side LocalRelation (so probes

@@ -1148,7 +1148,7 @@ object SparkEntry {
           F.round(col("mean"), 6).as("mean"))
     }),
 
-    // CDC MERGE semantics (the batch inside Streams.upsertKeyedStream):
+    // CDC MERGE semantics (Streams.upsertKeyedBatch, a stream sink's body):
     // last-wins per key by sequence, tombstones delete — every 7th key
     // sees two updates (the +1000 one wins), every 13th a tombstone
     // (13*7ths get BOTH: the tombstone's higher seq wins). Closed-form
@@ -4979,8 +4979,8 @@ object SparkEntry {
     }),
 
     // deterministic shard assignment for training export: md5 mod n,
-    // per-shard stats incl. the md5-order head doc (what writeShards
-    // physically lays out first)
+    // per-shard stats incl. the md5-order head doc (what the sharded
+    // export, writeJsonlShards, physically lays out first)
     "x41_shuffle_shards" -> ((s, d) => {
       val sharded = graft.ext.Corpus.shardAssign(
         t(s, d, "documents").df, col("doc_id"), 8)

@@ -10,8 +10,8 @@ import graft.types.TableMeta
 /** Mutable named-table registry with copy-on-write semantics — the
   * engine's answer to the reference's INSERT/UPDATE/DELETE surface
   * (reference: preql/core/evaluate.py:712-947) on top of immutable
-  * DataFrames. "Mutation" rebinds the name to a new plan; transactions
-  * snapshot/restore the binding map (single-writer driver model).
+  * DataFrames. "Mutation" rebinds the name to a new plan
+  * (single-writer driver model).
   *
   * Scale notes:
   *  - insert of literal rows unions a tiny local relation onto the
@@ -24,7 +24,6 @@ import graft.types.TableMeta
 final class Catalog(val spark: SparkSession) {
 
   private val tables = mutable.LinkedHashMap[String, PTable]()
-  private var snapshots = List.empty[Map[String, PTable]]
 
   /** Cached max-id per table: a `new` insert bumps it locally instead
     * of re-scanning an ever-longer union chain (one probe on first
@@ -366,32 +365,4 @@ final class Catalog(val spark: SparkSession) {
   def persist(): Unit = backingDir.foreach(saveTo)
 
   def attachedTo: Option[String] = backingDir
-
-  // ---- transactions (reference evaluate.py:359-369) ----------------------
-  /** `transaction { ... }` — snapshot bindings; rollback restores them.
-    * Nested via a snapshot stack.
-    */
-  def begin(): Unit = synchronized { snapshots = tables.toMap :: snapshots }
-
-  def commit(): Unit = synchronized {
-    snapshots = snapshots match {
-      case _ :: rest => rest
-      case Nil       => Nil
-    }
-  }
-
-  def rollback(): Unit = synchronized {
-    snapshots match {
-      case snap :: rest =>
-        tables.clear(); tables ++= snap; snapshots = rest
-        localRows.clear() // restored bindings: buffers no longer match
-      case Nil => ()
-    }
-  }
-
-  def transaction[T](body: => T): T = {
-    begin()
-    try { val r = body; commit(); r }
-    catch { case e: Throwable => rollback(); throw e }
-  }
 }

@@ -55,11 +55,6 @@ final case class KeyedMark(dir: String, version: Int,
 final class PTable(val df: DataFrame, val meta: TableMeta,
                    val keyedMark: Option[KeyedMark] = None) {
 
-  /** The pristine-snapshot dir (no selections applied) — the
-    * predicate-planned-read trigger.
-    */
-  def keyedSource: Option[String] =
-    keyedMark.filter(_.conds.isEmpty).map(_.dir)
 
   private def sameMeta(d: DataFrame): PTable = new PTable(d, meta)
   private def anon(d: DataFrame): PTable = new PTable(d, TableMeta.empty)
@@ -182,14 +177,6 @@ final class PTable(val df: DataFrame, val meta: TableMeta,
     if (rows.length != 1)
       throw new graft.types.ValueError(s"'one' expected 1 row, got ${rows.length}")
     rows(0)
-  }
-
-  /** `one?`: zero rows → None. */
-  def oneOpt(): Option[Row] = {
-    val rows = df.take(2)
-    if (rows.length > 1)
-      throw new graft.types.ValueError("'one?' expected <=1 row, got >=2")
-    rows.headOption
   }
 
   /** LIMIT-1 existence probe (reference __builtins__.pql:192-197). */

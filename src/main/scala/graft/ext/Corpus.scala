@@ -165,8 +165,9 @@ object Corpus {
       s => hasher(s))
 
   /** The eval set reduced to its DISTINCT n-gram hashes — one `gh`
-    * column. Computed once and reused (the streaming twin materializes
-    * it so per-trigger batches don't re-hash the eval suite).
+    * column. Computed once and reused (a caller decontaminating many
+    * batches materializes it once, so no batch re-hashes the eval
+    * suite).
     */
   def benchGramSet(bench: DataFrame, benchTextCol: String, n: Int = 8,
                    hasher: Column => Column = Dedup.portableHasher): DataFrame =
@@ -379,8 +380,8 @@ object Corpus {
   /** The clean-document predicate as a standalone Column: builds the
     * bloom (one batch job over the bench side, at plan-build time)
     * and returns a pure filter expression. Because it carries NO
-    * joins or state it applies unchanged to a STREAMING DataFrame —
-    * `Streams.decontaminateBloomStream` is literally this predicate.
+    * joins or state it applies unchanged to a STREAMING DataFrame:
+    * filtering a stream by it is streaming decontamination.
     */
   def bloomKeepPredicate(text: Column, bench: DataFrame,
                          benchTextCol: String, n: Int = 8,
@@ -601,30 +602,15 @@ object Corpus {
         % nShards.toLong)
   }
 
-  /** Sharded training export: one directory per shard
-    * (`shard=N/part-*.parquet`), rows within each shard in
-    * deterministic md5 order. One Exchange on `shard` (nShards
-    * partitions), sortWithinPartitions for the order — no global sort,
-    * no driver funnel. Byte-stable across re-runs given stable input:
-    * the standard contract for resumable 100 TB exports.
-    */
-  def writeShards(df: DataFrame, key: Column, dir: String,
-                  nShards: Int): Unit =
-    shardAssign(df, key, nShards)
-      .withColumn("_ord",
-        TextAnalysis.h60(F.concat(F.lit("ord:"), key.cast("string"))))
-      .repartition(nShards, F.col("shard"))
-      .sortWithinPartitions("shard", "_ord")
-      .drop("_ord")
-      .write.mode("overwrite").partitionBy("shard").parquet(dir)
-
   /** Sharded JSONL export — the standard interchange format training
-    * loaders read. Same deterministic layout contract as
-    * `writeShards` (md5-mod shard = the global permutation without a
-    * global sort; in-shard md5 order; exactly ONE Exchange), written
-    * as `shard=K/part-*.json` with one JSON object per line. Spark's
-    * json sink IS JSONL per part file, so this is the parquet writer
-    * swapped for the line-oriented one — nothing bespoke to maintain.
+    * loaders read: one directory per shard (`shard=K/part-*.json`, one
+    * JSON object per line), rows within each shard in deterministic
+    * md5 order. md5-mod shard is the global permutation without a
+    * global sort; one Exchange on `shard` (nShards partitions) plus
+    * sortWithinPartitions, no driver funnel. Byte-stable across
+    * re-runs given stable input: the standard contract for resumable
+    * 100 TB exports. Spark's json sink IS JSONL per part file, so
+    * nothing bespoke is maintained.
     */
   def writeJsonlShards(df: DataFrame, key: Column, dir: String,
                        nShards: Int): Unit =

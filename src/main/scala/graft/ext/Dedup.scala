@@ -2,9 +2,9 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.functions.{col, lit, when, concat}
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types._
-import TextAnalysis.{h60, h28, tokens, fingerprint}
+import TextAnalysis.{h60, tokens, fingerprint}
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard. Designed for the 100 TB
@@ -126,35 +126,29 @@ object Dedup {
     * With `updateIndex` the survivors' bucket rows append, so
     * consecutive batches accumulate. NOTE: plain append is for
     * DRIVEN batch loops; under an at-least-once trigger (foreachBatch)
-    * key the append by batchId with overwrite instead, as
-    * `Streams.dedupBatchAgainstIndex` does for the exact index —
-    * a replayed trigger would otherwise double-append.
+    * key the append by batchId with overwrite instead — a replayed
+    * trigger would otherwise double-append.
     */
-  /** Empty-index frame with the `buildLshIndex` schema — the cold-
-    * start bootstrap for both the batch and streaming probes.
-    */
-  def emptyLshIndex(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("band", IntegerType),
-        StructField("bucket", StringType),
-        StructField("id", LongType),
-        StructField("sig", ArrayType(LongType)))))
-
-  /** Shared probe core for the batch and streaming incremental
-    * near-dup paths: returns the batch's materialized bucket table
-    * (bid, bsig, band, bucket) and the surviving-id frame (bid).
-    */
-  private[graft] def neardupProbe(incoming: DataFrame, idCol: String,
-                                  textCol: String, idx: DataFrame,
-                                  threshold: Double, k: Int, bands: Int,
-                                  hasher: Column => Column)
-      : (DataFrame, DataFrame) = {
+  def neardupAgainstIndex(incoming: DataFrame, idCol: String,
+                          textCol: String, dir: String,
+                          threshold: Double, k: Int = 12, bands: Int = 4,
+                          hasher: Column => Column = portableHasher,
+                          updateIndex: Boolean = false): DataFrame = {
+    val spark = incoming.sparkSession
+    // cold start: an empty index in the `buildLshIndex` schema
+    val idx =
+      if (graft.sources.Fs.hasParquet(spark, dir)) spark.read.parquet(dir)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row],
+        StructType(Seq(StructField("band", IntegerType),
+          StructField("bucket", StringType),
+          StructField("id", LongType),
+          StructField("sig", ArrayType(LongType)))))
     val r = k / bands
     // materialize the batch bucket table once: it fans out to the
     // index probe, BOTH sides of the intra-batch self-join (severed
     // lineage also keeps the self-join's exprIds distinct), and the
-    // caller's index write
+    // index write
     val bbuck = ensureParallelism(incoming)
       .select(col(idCol).as("bid"),
         shingleHashes(col(textCol), hasher = hasher).as("hs"))
@@ -178,20 +172,6 @@ object Dedup {
     val survivors0 = incoming.select(col(idCol).as("bid"))
       .join(vsIndex, Seq("bid"), "left_anti")
       .join(vsBatch, Seq("bid"), "left_anti")
-    (bbuck, survivors0)
-  }
-
-  def neardupAgainstIndex(incoming: DataFrame, idCol: String,
-                          textCol: String, dir: String,
-                          threshold: Double, k: Int = 12, bands: Int = 4,
-                          hasher: Column => Column = portableHasher,
-                          updateIndex: Boolean = false): DataFrame = {
-    val spark = incoming.sparkSession
-    val idx =
-      if (graft.sources.Fs.hasParquet(spark, dir)) spark.read.parquet(dir)
-      else emptyLshIndex(spark)
-    val (bbuck, survivors0) = neardupProbe(incoming, idCol, textCol, idx,
-      threshold, k, bands, hasher)
     // when also appending, materialize so the append and the result
     // semi-join don't each recompute the anti-joins
     val survivors =
@@ -280,17 +260,6 @@ object Dedup {
     // hottest scan of the dedup pipeline
     graft.plans.AffineMinHash(hs, P, (0 until k).map(fam))
 
-  /** k-wide MinHash signature straight from text.
-    *
-    * NOTE: AffineMinHash takes the base-hash array as its single
-    * child, so the md5/xxhash pipeline runs once per row here — but
-    * the signature still recomputes per USE SITE (join fan-out).
-    * Prefer `signatures()` (hash once, materialize, then expand)
-    * anywhere the frame feeds a self-join.
-    */
-  def minhashSignature(text: Column, k: Int = 12, shingleN: Int = 3): Column =
-    signatureFromHashes(shingleHashes(text, shingleN), k)
-
   /** Spread a hash-heavy expression pipeline across the cluster when
     * the source arrives UNDER-partitioned. File splitting sizes
     * partitions by scan bytes; shingle/minhash pipelines cost ~100×
@@ -331,9 +300,9 @@ object Dedup {
   }
 
   /** (id, sig) signature table: base hashes computed ONCE per row and
-    * materialized before the k-way expansion — the scalable form of
-    * `minhashSignature` (k× less hash work; at 100 TB the base hash is
-    * the dominant CPU term).
+    * materialized before the k-way expansion (k× less hash work than
+    * hashing per signature slot; at 100 TB the base hash is the
+    * dominant CPU term).
     */
   def signatures(df: DataFrame, idCol: String, textCol: String,
                  k: Int = 12, shingleN: Int = 3,
@@ -351,24 +320,6 @@ object Dedup {
     F.transform(F.sequence(lit(0), lit(bands - 1)),
       b => F.md5(F.concat_ws(",",
         F.transform(F.slice(sig, b * lit(r) + 1, lit(r)), x => x.cast(StringType)))))
-
-  /** Per-document (id, band, bucket) rows — the shuffle key for
-    * candidate generation. The base-hash array is materialized
-    * (localCheckpoint) before signature expansion: Catalyst's project
-    * collapsing would otherwise re-inline — and recompute — the md5
-    * pipeline once per hash function and once per join side.
-    */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-                 k: Int = 12, bands: Int = 4,
-                 hasher: Column => Column = portableHasher): DataFrame = {
-    val r = k / bands
-    val hashed = ensureParallelism(df).select(col(idCol).as("id"),
-      shingleHashes(col(textCol), hasher = hasher).as("hs"))
-      .localCheckpoint(true)
-    hashed.select(col("id"),
-        F.posexplode(bandBuckets(signatureFromHashes(col("hs"), k), bands, r))
-          .as(Seq("band", "bucket")))
-  }
 
   /** Candidate near-dup pairs: ids sharing any (band, bucket).
     * One shuffle on (band, bucket); output deduplicated (a < b).
@@ -439,24 +390,7 @@ object Dedup {
   def tokenHashes(text: Column): Column =
     F.transform(F.array_distinct(tokens(text)), t => h60(t))
 
-  /** Convenience single-expression simhash (small inputs only — see
-    * `simhashFromHashes` for why).
-    */
-  def simhash(text: Column, bits: Int = 32): Column =
-    simhashFromHashes(tokenHashes(text), bits)
-
-  /** Hamming distance between two simhashes (for near-dup banding). */
-  def hamming(a: Column, b: Column): Column =
-    F.bit_count(a.bitwiseXOR(b))
-
   // ---- n-gram Jaccard ------------------------------------------------------
-  /** Exact Jaccard over two token arrays (distinct semantics). */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = F.size(F.array_intersect(a, b)).cast(DoubleType)
-    val uni = F.size(F.array_union(a, b)).cast(DoubleType)
-    when(uni === 0, lit(0.0)).otherwise(inter / uni)
-  }
-
   /** EXACT similarity join via prefix filtering (PPJoin-style; see
     * Xiao et al., "Efficient Similarity Joins for Near Duplicate
     * Detection", WWW'08 — public algorithm): two documents with

@@ -185,8 +185,8 @@ object Events {
   /** Batch sessionization: split each user's events into sessions
     * separated by ≥ `gapUs` of inactivity; one row per session with
     * its start and event count. Declarative `session_window` — the
-    * same operator the streaming twin runs with a watermark, so batch
-    * and stream agree by construction (x16's oracle pins the window
+    * same operator a stream runs under a watermark, so batch and
+    * stream agree by construction (x16's oracle pins the window
     * semantics against an independent lag/cumsum formulation).
     */
   def sessionize(events: DataFrame, userCol: String, tsCol: String,

@@ -1,28 +1,17 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
-/** Multimodal column handling: image/audio/video as opaque `binary`
-  * columns plus typed metadata. Images decode for REAL via
-  * javax.imageio (`decodeImage` / `extractImageFeatures`), audio via
-  * javax.sound.sampled (`decodeAudio`, WAV/AU/AIFF), and video frames
-  * via hand-parsed containers + ImageIO (`decodeVideo`, MJPEG-in-AVI
-  * and animated GIF) — all conf-gated. `decodeImageStub` /
-  * `extractFeaturesStub` keep a deterministic fake path for formats
-  * with no JVM codec (e.g. H.264), with the same Spark-side plumbing
-  * — schema, batch shape, partition sizing.
+/** Multimodal column handling: image/audio/video stay opaque `binary`
+  * columns, and `blobMeta` derives typed metadata from them (byte
+  * length, sniffed format, header dimensions) with codegen'd
+  * expressions only.
   *
-  * Scale design:
-  *  - blobs stay in `binary` columns; Parquet stores them page-
-  *    compressed and column pruning means metadata-only queries never
-  *    read the bytes;
-  *  - decode runs per-partition (`mapPartitions`) so a real codec
-  *    (JNI/FFI) amortizes init per partition, not per row;
-  *  - `maxPartitionBytes` should be lowered for blob tables so a
-  *    partition of decoded frames fits in executor memory.
+  * Scale design: blobs stay in `binary` columns; Parquet stores them
+  * page-compressed, and column pruning means queries that never touch
+  * the metadata never read the bytes.
   */
 object Multimodal {
 
@@ -39,9 +28,9 @@ object Multimodal {
     * offset 16, GIF logical-screen little-endian u16 pair at offset 6,
     * BMP BITMAPINFOHEADER little-endian i32 pair at offset 18). JPEG
     * dimensions live in a variable-position SOF marker, so jpeg
-    * reports format with 0×0 — use `decodeImage` for true JPEG pixel
-    * dimensions. Pure codegen'd expressions: runs at scan speed and
-    * column pruning still skips the blob for metadata-free queries.
+    * reports format with 0×0 (nothing here decodes pixels). Pure
+    * codegen'd expressions: runs at scan speed and column pruning
+    * still skips the blob for metadata-free queries.
     */
   def blobMeta(blob: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     // hex() on binary yields uppercase; conv() parses it back to long
@@ -88,409 +77,5 @@ object Multimodal {
       F.coalesce(format, lit("unknown")).as("format"),
       F.coalesce(width, lit(0L)).cast(IntegerType).as("width"),
       F.coalesce(height, lit(0L)).cast(IntegerType).as("height"))
-  }
-
-  /** Null-safe image decode used by `decodeImage` /
-    * `extractImageFeatures`: malformed blobs can throw beyond
-    * IOException (CMMException on bad ICC profiles,
-    * IllegalArgumentException) and a null blob would NPE — all of
-    * those route to the stub branch so mixed corpora never fail the
-    * job.
-    */
-  private def tryImage(blob: Array[Byte],
-                       real: Boolean): Option[java.awt.image.BufferedImage] =
-    if (!real || blob == null) None
-    else
-      try Option(javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(blob)))
-      catch { case scala.util.control.NonFatal(_) => None }
-
-  private def safeBytes(blob: Array[Byte]): Array[Byte] =
-    if (blob == null) Array.emptyByteArray else blob
-
-  /** STUB decode: a real implementation would call an image codec here
-    * (per-partition init, e.g. via JNI) and emit pixel tensors. The
-    * fake emits a deterministic 4-byte "thumbnail" derived from the
-    * blob so downstream plumbing (schema, batching, joins) is
-    * exercised for real.
-    */
-  def decodeImageStub(df: DataFrame, blobCol: String, idCol: String): DataFrame = {
-    val out = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("n_bytes", LongType, nullable = false),
-      StructField("thumb", BinaryType, nullable = false)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      // real codec init would happen once per partition here
-      rows.map { r =>
-        val blob = safeBytes(r.getAs[Array[Byte]](blobIdx))
-        val thumb = if (blob.length >= 4) blob.take(4)
-          else blob.padTo(4, 0.toByte)
-        Row(r.getAs[Number](idIdx).longValue(), blob.length.toLong, thumb)
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, out)
-  }
-
-  /** REAL image decode via javax.imageio (pure JVM — PNG/JPEG/GIF/BMP
-    * readers ship with the JDK), gated by
-    * `spark.graft.multimodal.realDecode` (default true). Blobs that
-    * decode emit their true width/height plus an RGB thumbnail
-    * (nearest-neighbor sample down to `thumbSize`²); undecodable blobs
-    * fall back to the deterministic stub shape so mixed corpora never
-    * fail the job. Decode runs per-partition so a heavier codec would
-    * amortize its init; at 100 TB the binary column never leaves the
-    * scan task — only the fixed-size thumbnail/meta survive.
-    */
-  def decodeImage(df: DataFrame, blobCol: String, idCol: String,
-                  thumbSize: Int = 2): DataFrame = {
-    val out = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("n_bytes", LongType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("decoded", BooleanType, nullable = false),
-      StructField("thumb", BinaryType, nullable = false)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val real = graft.GraftConf.realDecode(df.sparkSession)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val blob = safeBytes(r.getAs[Array[Byte]](blobIdx))
-        val id = r.getAs[Number](idIdx).longValue()
-        tryImage(blob, real) match {
-          case Some(im) =>
-            Row(id, blob.length.toLong, im.getWidth, im.getHeight, true,
-              rgbThumb(im, thumbSize))
-          case None => // stub fallback (same shape, deterministic)
-            val thumb = if (blob.length >= 4) blob.take(4)
-              else blob.padTo(4, 0.toByte)
-            Row(id, blob.length.toLong, 0, 0, false, thumb)
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, out)
-  }
-
-  /** Image features from REAL pixels where the blob decodes (RGB
-    * channel histogram over all pixels, L2-normalized — `dim` must be
-    * divisible by 3), stub byte-histogram otherwise. Same output
-    * schema as `extractFeaturesStub`, so the result feeds the
-    * `Similarity` ANN operators directly.
-    */
-  def extractImageFeatures(df: DataFrame, blobCol: String, idCol: String,
-                           dim: Int = 48, batchSize: Int = 64): DataFrame = {
-    require(dim % 3 == 0, s"dim must be divisible by 3, got $dim")
-    val out = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType, containsNull = false),
-        nullable = false)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val real = graft.GraftConf.realDecode(df.sparkSession)
-    val bins = dim / 3
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // a real model would run ONE inference on this batch
-        batch.map { r =>
-          val blob = safeBytes(r.getAs[Array[Byte]](blobIdx))
-          val hist = new Array[Float](dim)
-          tryImage(blob, real) match {
-            case Some(im) =>
-              var y = 0
-              while (y < im.getHeight) {
-                var x = 0
-                while (x < im.getWidth) {
-                  val px = im.getRGB(x, y)
-                  hist(((px >> 16) & 0xff) * bins / 256) += 1f
-                  hist(bins + (((px >> 8) & 0xff) * bins / 256)) += 1f
-                  hist(2 * bins + ((px & 0xff) * bins / 256)) += 1f
-                  x += 1
-                }
-                y += 1
-              }
-            case None =>
-              blob.foreach(b => hist((b & 0xff) % dim) += 1f)
-          }
-          val norm = math.sqrt(hist.map(x => x.toDouble * x).sum)
-          val unit =
-            if (norm == 0) hist else hist.map(x => (x / norm).toFloat)
-          Row(r.getAs[Number](idIdx).longValue(), unit.toSeq)
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, out)
-  }
-
-  /** Batched feature extraction: blobs → `Array[Float]` embeddings,
-    * processed in batches of `batchSize` rows per partition — the
-    * mapInPandas/Arrow batch shape, where a real extractor would run
-    * one model invocation per BATCH (GPU-friendly) with per-partition
-    * init. The features themselves are STUBBED deterministically (an
-    * L2-normalized byte histogram) so the downstream plumbing —
-    * schema, batching, and feeding `Similarity` ANN operators — is
-    * exercised for real.
-    */
-  def extractFeaturesStub(df: DataFrame, blobCol: String, idCol: String,
-                          dim: Int = 16, batchSize: Int = 64): DataFrame = {
-    val out = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType, containsNull = false),
-        nullable = false)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      // real extractor: model/session init once per partition here
-      rows.grouped(batchSize).flatMap { batch =>
-        // real extractor: ONE inference call on the whole batch here
-        batch.map { r =>
-          val blob = safeBytes(r.getAs[Array[Byte]](blobIdx))
-          val hist = new Array[Float](dim)
-          blob.foreach(b => hist((b & 0xff) % dim) += 1f)
-          val norm = math.sqrt(hist.map(x => x.toDouble * x).sum)
-          val unit =
-            if (norm == 0) hist else hist.map(x => (x / norm).toFloat)
-          Row(r.getAs[Number](idIdx).longValue(), unit.toSeq)
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, out)
-  }
-
-  /** REAL audio decode via javax.sound.sampled (WAV/AU/AIFF readers
-    * ship with the JDK), gated by the same
-    * `spark.graft.multimodal.realDecode` conf as images. Decodable
-    * blobs report true sample rate / channel count / frame count and
-    * sample statistics (RMS and peak over PCM samples normalized to
-    * [-1, 1]); undecodable blobs (video, junk) fall back to a
-    * deterministic stub over the raw bytes so mixed corpora never
-    * fail the job. Per-partition decode — a native codec would
-    * amortize init here; only fixed-size stats survive the scan task.
-    */
-  def decodeAudio(df: DataFrame, blobCol: String, idCol: String): DataFrame = {
-    val out = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("n_bytes", LongType, nullable = false),
-      StructField("sample_rate", IntegerType, nullable = false),
-      StructField("channels", IntegerType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("decoded", BooleanType, nullable = false),
-      StructField("rms", DoubleType, nullable = false),
-      StructField("peak", DoubleType, nullable = false)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val real = graft.GraftConf.realDecode(df.sparkSession)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val blob = safeBytes(r.getAs[Array[Byte]](blobIdx))
-        val id = r.getAs[Number](idIdx).longValue()
-        val decoded: Option[Row] =
-          if (!real || blob.isEmpty) None
-          else
-            try {
-              val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(blob))
-              try {
-                val fmt = in.getFormat
-                val bytes = in.readAllBytes()
-                val bps = fmt.getSampleSizeInBits
-                // interpret PCM samples normalized to [-1, 1];
-                // 16-bit little-endian signed is the WAV default
-                var sumSq = 0.0
-                var peak = 0.0
-                var n = 0L
-                if (bps == 16) {
-                  var i = 0
-                  val le = !fmt.isBigEndian
-                  while (i + 1 < bytes.length) {
-                    val s =
-                      if (le) ((bytes(i + 1) << 8) | (bytes(i) & 0xff)).toShort
-                      else ((bytes(i) << 8) | (bytes(i + 1) & 0xff)).toShort
-                    val v = s / 32768.0
-                    sumSq += v * v
-                    if (math.abs(v) > peak) peak = math.abs(v)
-                    n += 1
-                    i += 2
-                  }
-                } else { // 8-bit PCM is unsigned per the WAV spec
-                  bytes.foreach { b =>
-                    val v = ((b & 0xff) - 128) / 128.0
-                    sumSq += v * v
-                    if (math.abs(v) > peak) peak = math.abs(v)
-                    n += 1
-                  }
-                }
-                val rms = if (n == 0) 0.0 else math.sqrt(sumSq / n)
-                Some(Row(id, blob.length.toLong,
-                  fmt.getSampleRate.toInt, fmt.getChannels,
-                  in.getFrameLength, true, rms, peak))
-              } finally in.close()
-            } catch { case scala.util.control.NonFatal(_) => None }
-        decoded.getOrElse {
-          // stub fallback: deterministic byte-level stats, same shape
-          var sumSq = 0.0
-          var peak = 0.0
-          blob.foreach { b =>
-            val v = ((b & 0xff) - 128) / 128.0
-            sumSq += v * v
-            if (math.abs(v) > peak) peak = math.abs(v)
-          }
-          val rms =
-            if (blob.isEmpty) 0.0 else math.sqrt(sumSq / blob.length)
-          Row(id, blob.length.toLong, 0, 0, 0L, false, rms, peak)
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, out)
-  }
-
-  /** Nearest-neighbor RGB downsample to `size`² — the fixed-size
-    * surviving payload of the image/video decode paths.
-    */
-  private def rgbThumb(im: java.awt.image.BufferedImage,
-                       size: Int): Array[Byte] = {
-    val (w, h) = (im.getWidth, im.getHeight)
-    val thumb = new Array[Byte](size * size * 3)
-    var ty = 0
-    while (ty < size) {
-      var tx = 0
-      while (tx < size) {
-        val px = im.getRGB(tx * w / size, ty * h / size)
-        val o = (ty * size + tx) * 3
-        thumb(o) = ((px >> 16) & 0xff).toByte
-        thumb(o + 1) = ((px >> 8) & 0xff).toByte
-        thumb(o + 2) = (px & 0xff).toByte
-        tx += 1
-      }
-      ty += 1
-    }
-    thumb
-  }
-
-  /** Video frame payloads of an AVI container: walks the RIFF chunk
-    * tree (recursing into LIST chunks) and collects the data of
-    * `##dc`/`##db` stream chunks — for MJPEG AVIs each is a complete
-    * JPEG image. Returns the payloads WITHOUT decoding them, so
-    * callers pay ImageIO cost only for the frames they sample.
-    */
-  private def aviVideoChunks(blob: Array[Byte]): Vector[(Int, Int)] = {
-    val out = Vector.newBuilder[(Int, Int)]
-    def leU32(p: Int): Long =
-      (blob(p) & 0xffL) | (blob(p + 1) & 0xffL) << 8 |
-        (blob(p + 2) & 0xffL) << 16 | (blob(p + 3) & 0xffL) << 24
-    def fourcc(p: Int): String =
-      new String(blob, p, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    def walk(pos: Int, end: Int): Unit = {
-      var p = pos
-      while (p + 8 <= end) {
-        val id = fourcc(p)
-        val size = leU32(p + 4)
-        if (size < 0 || p + 8 + size > end) return // corrupt: stop
-        val sz = size.toInt
-        if (id == "LIST" && sz >= 4) walk(p + 12, p + 8 + sz)
-        else if (id.length == 4 && id(0).isDigit && id(1).isDigit &&
-                 id(2) == 'd' && (id(3) == 'c' || id(3) == 'b') && sz > 0)
-          out += ((p + 8, sz))
-        p += 8 + sz + (sz & 1) // chunks are padded to even offsets
-      }
-    }
-    if (blob.length >= 12) walk(12, blob.length)
-    out.result()
-  }
-
-  /** REAL video frame decode, gated by the same
-    * `spark.graft.multimodal.realDecode` conf as images/audio. Two
-    * pure-JVM container paths: MJPEG-in-AVI (RIFF chunks parsed by
-    * hand, each `##dc` payload is a JPEG decoded via ImageIO) and
-    * animated GIF (the JDK GIF reader exposes every frame). Emits one
-    * row per SAMPLED frame (every `frameStep`th) with true
-    * dimensions and an RGB thumbnail; only sampled frames are ever
-    * decoded, so cost scales with frames-kept, not frames-stored —
-    * the property that matters when a 100 TB corpus stores hour-long
-    * clips but training wants 1 fps. Undecodable blobs (unsupported
-    * codecs, junk) emit a single deterministic stub row, so mixed
-    * corpora never fail the job.
-    */
-  def decodeVideo(df: DataFrame, blobCol: String, idCol: String,
-                  frameStep: Int = 1, thumbSize: Int = 2): DataFrame = {
-    require(frameStep > 0, s"frameStep must be positive, got $frameStep")
-    val out = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("n_bytes", LongType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("decoded", BooleanType, nullable = false),
-      StructField("thumb", BinaryType, nullable = false)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val blobIdx = df.schema.fieldIndex(blobCol)
-    val real = graft.GraftConf.realDecode(df.sparkSession)
-    val step = frameStep
-    val ts = thumbSize
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val blob = safeBytes(r.getAs[Array[Byte]](blobIdx))
-        val id = r.getAs[Number](idIdx).longValue()
-        val nb = blob.length.toLong
-        def stubRow = {
-          val thumb = if (blob.length >= 4) blob.take(4)
-            else blob.padTo(4, 0.toByte)
-          Seq(Row(id, nb, 0L, 0, 0, 0, false, thumb))
-        }
-        if (!real || blob.length < 12) stubRow
-        else {
-          val isAvi = blob(0) == 'R' && blob(1) == 'I' && blob(2) == 'F' &&
-            blob(3) == 'F' && blob(8) == 'A' && blob(9) == 'V' &&
-            blob(10) == 'I'
-          val isGif = blob(0) == 'G' && blob(1) == 'I' && blob(2) == 'F'
-          val frames: Seq[Row] =
-            try {
-              if (isAvi) {
-                val chunks = aviVideoChunks(blob)
-                chunks.indices.by(step).flatMap { i =>
-                  val (off, len) = chunks(i)
-                  Option(javax.imageio.ImageIO.read(
-                    new java.io.ByteArrayInputStream(blob, off, len)))
-                    .map(im => Row(id, nb, chunks.length.toLong, i,
-                      im.getWidth, im.getHeight, true, rgbThumb(im, ts)))
-                }
-              } else if (isGif) {
-                val it = javax.imageio.ImageIO.getImageReadersByFormatName("gif")
-                if (!it.hasNext) Seq.empty
-                else {
-                  val reader = it.next()
-                  val in = javax.imageio.ImageIO.createImageInputStream(
-                    new java.io.ByteArrayInputStream(blob))
-                  try {
-                    reader.setInput(in, false, true)
-                    val n = reader.getNumImages(true)
-                    (0 until n by step).map { i =>
-                      val im = reader.read(i)
-                      Row(id, nb, n.toLong, i, im.getWidth, im.getHeight,
-                        true, rgbThumb(im, ts))
-                    }
-                  } finally { reader.dispose(); in.close() }
-                }
-              } else Seq.empty
-            } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-          if (frames.nonEmpty) frames else stubRow
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, out)
-  }
-
-  /** Frame sampling for video-like blob sequences: keep every nth
-    * frame per group — expression-only, no decode needed.
-    */
-  def sampleFrames(df: DataFrame, groupCol: String, orderCol: String,
-                   n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(groupCol).orderBy(orderCol)
-    df.withColumn("_frame_idx", F.row_number().over(w) - 1)
-      .filter(F.pmod(col("_frame_idx"), lit(n)) === 0)
-      .drop("_frame_idx")
   }
 }

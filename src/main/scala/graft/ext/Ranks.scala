@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types._
@@ -24,13 +24,9 @@ import org.apache.spark.sql.types._
   */
 object Ranks {
 
-  /** Appends `_grank` (1-based global rank by `sortCols`). */
-  def withGlobalRank(df: DataFrame, sortCols: Seq[Column],
-                     partitions: Int = 0): DataFrame =
-    withGlobalRankAndCount(df, sortCols, partitions)._1
-
-  /** As `withGlobalRank`, also returning the total row count (known
-    * from the offsets pass — no extra job).
+  /** Appends `_grank` (1-based global rank by `sortCols`) and returns
+    * the total row count too (known from the offsets pass — no extra
+    * job).
     */
   private[ext] def withGlobalRankAndCount(df: DataFrame, sortCols: Seq[Column],
                                           partitions: Int = 0)

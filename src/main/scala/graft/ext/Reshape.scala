@@ -37,25 +37,6 @@ object Reshape {
       .agg(cells.head, cells.tail: _*)
   }
 
-  /** Pivot with the value list discovered by a bounded distinct scan:
-    * ONE extra job at index-build grain (≤ `maxValues` short strings
-    * on the driver), then the exact single-aggregate plan of
-    * [[pivot]]. Values come back sorted, so the output schema is
-    * deterministic. Refuses above `maxValues` — a pivot to 10^6
-    * columns is a modelling error, not a workload.
-    */
-  def pivotAuto(df: DataFrame, groupCols: Seq[String], pivotCol: String,
-                agg: Column => Column, valueCol: Column,
-                maxValues: Int = 1000): DataFrame = {
-    val vals = df.select(F.col(pivotCol).cast("string").as("v"))
-      .filter(F.col(pivotCol).isNotNull)
-      .distinct().limit(maxValues + 1)
-      .collect().map(_.getString(0))
-    require(vals.length <= maxValues,
-      s"pivotAuto: more than $maxValues distinct values in '$pivotCol'")
-    pivot(df, groupCols, pivotCol, vals.sorted.toSeq, agg, valueCol)
-  }
-
   /** Unpivot / melt: keep `idCols`, turn each of `valueCols` into a
     * (`varName`, `valueName`) row — wide → long. Pure Expand node:
     * zero shuffle, zero join; the only cost is the row multiplication

@@ -33,10 +33,6 @@ object Similarity {
       F.zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
       lit(0.0), (acc, v) => acc + v)
 
-  def norm(a: Column): Column = F.sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Cosine with an undefined-guard: zero-norm operands make the
     * divisor 0, which under ANSI mode would fail the whole JOB with
     * DIVIDE_BY_ZERO — "similarity undefined" becomes null, which the
@@ -70,7 +66,7 @@ object Similarity {
         fnorm(col(vecCol)).as("cn"))
 
   /** `bruteForceTopK` against an already-prepped corpus projection.
-    * sim = dot/(qn*cn) matches cosine() bit-for-bit.
+    * sim = dot/(qn*cn), with the norms computed once per row.
     */
   def bruteForceTopKPrepped(queries: DataFrame, prepped: DataFrame,
                             k: Int, idCol: String = "vec_id",

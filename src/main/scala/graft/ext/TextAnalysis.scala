@@ -23,12 +23,6 @@ object TextAnalysis {
   def h60(c: Column): Column =
     F.conv(F.substring(F.md5(c.cast(StringType)), 1, 15), 16, 10).cast(LongType)
 
-  /** 28-bit md5-derived hash — small enough for overflow-safe affine
-    * hash families (a*h+b over 62-bit longs).
-    */
-  def h28(c: Column): Column =
-    F.conv(F.substring(F.md5(c.cast(StringType)), 1, 7), 16, 10).cast(LongType)
-
   /** Whitespace tokenization. */
   def tokens(text: Column): Column = F.split(F.trim(text), "\\s+")
 
@@ -290,8 +284,7 @@ object TextAnalysis {
     * vector supplied by the caller (trained offline). Keeping the
     * margin (not the sigmoid) makes thresholding decisions exactly
     * portable: +,*,/ are IEEE-deterministic across engines while
-    * libm's exp differs in final ulps. `sigmoidOf` is available when a
-    * probability is wanted for humans.
+    * libm's exp differs in final ulps.
     *
     * The weight vector embeds into the plan as one array literal —
     * computed ONCE at plan-build time (never per row/element), shipped
@@ -307,13 +300,6 @@ object TextAnalysis {
       F.aggregate(hashedFeatures(text, weights.length), lit(bias),
         (acc, fid) => acc + F.element_at(warr, fid.cast("int") + 1)))
   }
-
-  /** Logistic squash of a margin (for display/probabilities — exp's
-    * final ulp varies by libm, so don't hash-compare this across
-    * engines; threshold the margin instead).
-    */
-  def sigmoidOf(margin: Column): Column =
-    lit(1.0) / (lit(1.0) + F.exp(-margin))
 
   /** `linearMargin` for models too large to inline: weights as a
     * (fid, w) table. Explode features → broadcast hash join on fid →

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 
 /** Batch time-series preparation: fixed-width resampling, gap filling
   * (densify to every bucket between a series' first and last
-  * observation), and forward fill. The streaming layer has tumbling
-  * windows (streaming/Streams.scala); these are their batch analogs
+  * observation), and forward fill. A stream gets tumbling windows
+  * from Spark's `window` directly; these are their batch analogs
   * for historical reprocessing, where a dense, fill-completed grid is
   * what a downstream model or report consumes. No reference
   * counterpart (the reference has no time-bucketing surface at all).

@@ -99,11 +99,8 @@ object PF {
       .otherwise(casted)
   }
 
-  /** number → bool: `!= 0`; string → bool: `!= ""`
-    * (reference casts.py:52-66).
-    */
+  /** number → bool: `!= 0` (reference casts.py:52-66). */
   def numToBool(c: Column): Column = c =!= lit(0)
-  def strToBool(c: Column): Column = c =!= lit("")
 
   // ---- datetime accessors (reference: __builtins__.pql:347-353) ----------
   def year(c: Column): Column = F.year(c)
@@ -132,15 +129,12 @@ object PF {
     F.approx_count_distinct(c, rsd)
 
   /** Mergeable Apache DataSketches HLL state (binary). Persist it per
-    * partition/day, then `hllUnion` + `hllEstimate` roll partial
-    * sketches up without re-reading raw data — incremental distinct
-    * counts over an ever-growing corpus.
+    * partition/day, then Spark's `hll_union_agg` + `hllEstimate` roll
+    * partial sketches up without re-reading raw data — incremental
+    * distinct counts over an ever-growing corpus.
     */
   def hllSketch(c: Column, lgK: Int = 12): Column =
     F.hll_sketch_agg(c, lit(lgK))
-
-  def hllUnion(sketches: Column, allowDifferentLgK: Boolean = false): Column =
-    F.hll_union_agg(sketches, lit(allowDifferentLgK))
 
   def hllEstimate(sketch: Column): Column = F.hll_sketch_estimate(sketch)
 
@@ -315,15 +309,6 @@ object PF {
     } yield F.shiftleft(
       F.shiftright(dim.cast(LongType), i).bitwiseAND(lit(1L)), i * k + d))
       .reduce(_ + _)
-  }
-
-  /** SQL mirror of `zvalueN`. */
-  def zvalueNSql(dims: Seq[String], bits: Int = 10): String = {
-    val k = dims.length
-    (for {
-      i <- 0 until bits; (dim, d) <- dims.zipWithIndex
-    } yield s"(((($dim) >> $i) & 1) << ${i * k + d})")
-      .mkString("(", " + ", ")")
   }
 
   // ---- sampling ----------------------------------------------------------

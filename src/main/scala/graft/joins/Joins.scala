@@ -1,10 +1,9 @@
 package graft.joins
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.DoubleType
 import graft.dsl.PTable
-import graft.types.TableMeta
 
 /** The reference's n-ary named join family
   * (reference: preql/core/pql_functions.py:458-613): every join returns
@@ -101,23 +100,15 @@ object Joins {
   def join(sides: (String, PTable)*): PTable =
     joinN(Inner, sides.map(Side(_)))
 
-  /** join with explicit theta predicate — `join(..., $on: pred)`. */
-  def joinOn(on: Column, sides: (String, PTable)*): PTable =
-    joinN(Inner, sides.map(Side(_)), Some(on))
-
   /** left outer join — right structs become null on no-match
     * (reference pql_functions.py:582-587).
     */
   def leftjoin(sides: (String, PTable)*): PTable =
     joinN(LeftOuter, sides.map(Side(_)))
 
-  def leftjoinOn(on: Column, sides: (String, PTable)*): PTable =
-    joinN(LeftOuter, sides.map(Side(_)), Some(on))
-
-  /** full outer join (reference pql_functions.py:589-594). */
-  def outerjoin(sides: (String, PTable)*): PTable =
-    joinN(FullOuter, sides.map(Side(_)))
-
+  /** full outer join on an explicit predicate (reference
+    * pql_functions.py:589-594).
+    */
   def outerjoinOn(on: Column, sides: (String, PTable)*): PTable =
     joinN(FullOuter, sides.map(Side(_)), Some(on))
 

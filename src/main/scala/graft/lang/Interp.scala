@@ -1,6 +1,6 @@
 package graft.lang
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
@@ -251,9 +251,6 @@ object Interp {
     private final class ReturnValue(val v: V) extends RuntimeException
     private var procDepth = 0
     private val procResultCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
-    private def tableEnv: Map[String, PTable] =
-      env.collect { case (n, VT(t)) => n -> t }
 
     /** Replace scalar variables with literal AST nodes (vars shadow
       * columns) and inline user function calls.

@@ -26,7 +26,6 @@ case class HllRegs(hash: Expression, p: Int,
 
   require(p >= 7 && p <= 16, s"graft_hll_regs: p in [7,16], got $p")
   private val m = 1 << p
-  private val maxRho = 61 - p
 
   override def children: Seq[Expression] = Seq(hash)
   override def checkInputDataTypes(): TypeCheckResult =

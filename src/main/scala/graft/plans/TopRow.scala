@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
@@ -106,13 +106,21 @@ case class TopRow(ordExpr: Expression, valExpr: Expression,
 }
 
 object TopRow {
-  /** `topRow(ord, value)` as a Column aggregate; requires the session
-    * to be built with
-    * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  private val fn = FunctionIdentifier("graft_top_row")
+
+  /** `topRow(ord, value)` as a Column aggregate. Sessions built with
+    * `spark.sql.extensions=graft.plans.GraftExtensions` already have
+    * `graft_top_row`; on any other session the function is registered
+    * in that session's registry on first use.
     */
-  def topRow(ord: Column, value: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_top_row",
-      ord, value)
+  def topRow(spark: SparkSession, ord: Column, value: Column): Column = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(fn))
+      registry.registerFunction(fn,
+        new ExpressionInfo(classOf[TopRow].getName, fn.funcName),
+        (exprs: Seq[Expression]) => fromArgs(exprs))
+    org.apache.spark.sql.functions.call_function(fn.funcName, ord, value)
+  }
 
   def fromArgs(exprs: Seq[Expression]): TopRow = {
     require(exprs.length == 2, "graft_top_row(ord, value)")

@@ -28,19 +28,6 @@ object Fs {
       s.isFile && s.getPath.getName.endsWith(".parquet"))
   }
 
-  /** Fully-qualified immediate subdirectories of `dir` whose NAME
-    * matches `pattern` (a full-name regex — e.g. `"b\\d+"` for the
-    * streaming index's per-batch layout, so an unrelated `backup/`
-    * cannot be read as fingerprints). Empty when `dir` doesn't exist.
-    */
-  def subdirs(spark: SparkSession, dir: String, pattern: String): Seq[String] = {
-    val (fs, p) = resolve(spark, dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches(pattern))
-      .map(_.getPath.toString)
-  }
-
   /** Atomically publish the fully-written file `tmp` as `dst` UNLESS
     * `dst` already exists; true when this call created `dst`. This is
     * the commit point of every manifest publish and lease acquisition,

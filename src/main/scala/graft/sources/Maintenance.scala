@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.types.LongType
 
 /** Table-maintenance operators for parquet datasets at scale —
   * extension surface with no reference counterpart (the reference
@@ -33,25 +32,14 @@ object Maintenance {
     fs.getContentSummary(p).getLength
   }
 
-  /** Compact the parquet dataset at `inDir` into approximately
-    * `targetBytes`-sized files at `outDir`; returns the file count
-    * chosen. `coalesce` (not repartition) keeps it shuffle-free: the
-    * read tasks are merged, never re-keyed — compaction moves bytes
-    * once, through no exchange. Parallelism during the rewrite is
-    * capped at the output file count, which is what bounds memory per
-    * writer too; at 100 TB you compact per partition-subdirectory
-    * (each call is one subdirectory), not the whole table in one job.
-    */
-  def compactParquet(spark: SparkSession, inDir: String, outDir: String,
-                     targetBytes: Long = 128L << 20): Int = {
-    require(targetBytes > 0, s"targetBytes must be > 0, got $targetBytes")
-    val n = math.max(1L,
-      (dirBytes(spark, inDir) + targetBytes - 1) / targetBytes).toInt
-    compactTo(spark, inDir, outDir, n)
-  }
-
-  /** Compact to an exact output file count (the deterministic variant
-    * the tests and oracle queries use).
+  /** Compact the parquet dataset at `inDir` into exactly `nFiles`
+    * files at `outDir`; returns `nFiles`. `coalesce` (not
+    * repartition) keeps it shuffle-free: the read tasks are merged,
+    * never re-keyed — compaction moves bytes once, through no
+    * exchange. Parallelism during the rewrite is capped at the output
+    * file count, which is what bounds memory per writer too; at
+    * 100 TB you compact per partition-subdirectory (each call is one
+    * subdirectory), not the whole table in one job.
     */
   def compactTo(spark: SparkSession, inDir: String, outDir: String,
                 nFiles: Int): Int = {
@@ -993,7 +981,7 @@ object Maintenance {
             F.struct(F.col(m.seqCol), F.col("__prec"))
           else F.col("__prec")
         val top = un.groupBy(m.keyCols.map(F.col): _*)
-          .agg(graft.plans.TopRow.topRow(
+          .agg(graft.plans.TopRow.topRow(spark,
             ord, F.struct(un.columns.map(F.col): _*)).as("__win"))
           .select(F.col("__win.*"))
         val alive =
@@ -1638,8 +1626,8 @@ object Maintenance {
     * retry — a losing race recomputes the guard against the winner's
     * snapshot, so concurrent writers can't resurrect a stale sequence
     * (the pre-r9 shape read the guard once outside the retry).
-    * Semantics (same contract as streaming/Streams.upsertKeyedBatch,
-    * which delegates here):
+    * Semantics (a streaming CDC sink's `foreachBatch` body,
+    * streaming/Streams.upsertKeyedBatch, delegates here):
     *  - `seqCol`: last-wins per key within the batch AND against the
     *    stored row (`>=` keeps exact replays idempotent);
     *  - `deleteCol`: boolean tombstone — the key's winning row being a
@@ -1665,7 +1653,7 @@ object Maintenance {
         // seq still keeps one arbitrary row, exactly like the
         // window's desc (nulls-last) ranking did.
         batch.groupBy(keyCols.map(F.col): _*)
-          .agg(graft.plans.TopRow.topRow(F.struct(F.col(sc)),
+          .agg(graft.plans.TopRow.topRow(spark, F.struct(F.col(sc)),
             F.struct(batch.columns.map(F.col): _*)).as("__win"))
           .select(F.col("__win.*"))
       case None => batch
@@ -2300,7 +2288,7 @@ object Maintenance {
     val valCols = (if (hasTomb) Seq("__tomb") else Nil) ++ shared
     val vstruct = F.struct(
       (F.lit(true).as("__won") +: valCols.map(F.col)): _*)
-    def win(side: Int) = graft.plans.TopRow.topRow(
+    def win(side: Int) = graft.plans.TopRow.topRow(spark,
       F.when(F.col("__side") === side, ordBase), vstruct)
     val agged = un.groupBy(keyCols.map(F.col): _*)
       .agg(win(0).as("__a"), win(1).as("__b"))

@@ -16,10 +16,7 @@ final case class TableMeta(
     name: String,
     pk: Seq[String] = Nil,
     fks: Seq[FK] = Nil
-) {
-  def fkTo(other: TableMeta): Option[FK] =
-    fks.find(_.refTable == other.name)
-}
+)
 
 object TableMeta {
   val empty: TableMeta = TableMeta("")

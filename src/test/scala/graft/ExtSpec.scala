@@ -56,14 +56,6 @@ class ExtSpec extends SparkSpec {
     assert(out3 == Seq("a b c", "b c d"))
   }
 
-  test("jaccard: identical=1, disjoint=0") {
-    val df = Seq(("a b c", "a b c"), ("a b", "c d")).toDF("x", "y")
-      .select(Dedup.jaccard(
-        array_distinct(split(col("x"), " ")),
-        array_distinct(split(col("y"), " "))))
-    assert(df.collect().map(_.getDouble(0)).toSeq == Seq(1.0, 0.0))
-  }
-
   test("minhashPairs finds planted exact duplicates") {
     val aug = docs.select(col("doc_id"), col("text")).limit(50)
       .unionAll(docs.select((col("doc_id") + 1000).as("doc_id"), col("text"))
@@ -162,7 +154,8 @@ class ExtSpec extends SparkSpec {
       ("t1", "the quick brown fox jumps over the lazy dog again and again"),
       ("t2", "the quick brown fox jumps over the lazy cat again and again"),
       ("t3", "completely different words entirely unrelated content here"))
-      .toDF("id", "t").select(col("id"), Dedup.simhash(col("t")).as("sh"))
+      .toDF("id", "t").select(col("id"),
+        Dedup.simhashFromHashes(Dedup.tokenHashes(col("t"))).as("sh"))
     val m = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(m("t1"), m("t2")) < ham(m("t1"), m("t3")))
@@ -307,12 +300,6 @@ class ExtSpec extends SparkSpec {
     }
   }
 
-  test("cosine of a vector with itself is ~1") {
-    val v = emb.limit(3).select(Similarity.cosine(col("embedding"),
-      col("embedding"))).collect().map(_.getDouble(0))
-    v.foreach(x => assert(math.abs(x - 1.0) < 1e-9))
-  }
-
   test("bruteForceTopK returns k ranked neighbors per query") {
     val out = Similarity.bruteForceTopK(emb.filter(col("vec_id") < 2), emb, 5)
     val rows = out.collect()
@@ -407,205 +394,9 @@ class ExtSpec extends SparkSpec {
     // incremental rollup shape
     val merged = ev.groupBy("event_type")
       .agg(PF.hllSketch(col("user_id")).as("sk"))
-      .select(PF.hllEstimate(PF.hllUnion(col("sk"))).as("est"))
+      .select(PF.hllEstimate(hll_union_agg(col("sk"))).as("est"))
       .head().getLong(0)
     assert(math.abs(merged - exact).toDouble / exact < 0.05)
-  }
-
-  test("multimodal: decode stub preserves ids and byte counts") {
-    val blobs = docs.limit(10).select(col("doc_id"),
-      col("text").cast("binary").as("blob"))
-    val out = Multimodal.decodeImageStub(blobs, "blob", "doc_id").collect()
-    assert(out.length == 10)
-    out.foreach { r =>
-      assert(r.getLong(1) > 0)
-      assert(r.getAs[Array[Byte]](2).length == 4)
-    }
-  }
-
-  test("multimodal: batched feature extraction feeds the ANN operators") {
-    val blobs = docs.limit(50).select(col("doc_id"),
-      col("text").cast("binary").as("blob"))
-    val feats = Multimodal.extractFeaturesStub(blobs, "blob", "doc_id",
-      dim = 8, batchSize = 16)
-    assert(feats.count() == 50)
-    assert(feats.schema("embedding").dataType ==
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, containsNull = false))
-    // deterministic: same input -> bit-identical features
-    val a = feats.orderBy("vec_id").collect().map(_.getSeq[Float](1))
-    val b = Multimodal.extractFeaturesStub(blobs, "blob", "doc_id",
-      dim = 8, batchSize = 16).orderBy("vec_id").collect()
-      .map(_.getSeq[Float](1))
-    assert(a.zip(b).forall { case (x, y) => x == y })
-    // unit-normalized -> cosine over them is well-defined; they feed
-    // the existing ANN operators directly
-    val knn = Similarity.bruteForceTopK(
-      feats.filter(col("vec_id") < 2), feats, 3)
-    assert(knn.count() > 0)
-  }
-
-  test("multimodal: REAL PNG blobs decode end-to-end into features + ANN") {
-    // write genuine PNGs in-memory (javax.imageio ships with the JDK)
-    def png(rgb: Int): Array[Byte] = {
-      val im = new java.awt.image.BufferedImage(2, 2,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until 2; y <- 0 until 2) im.setRGB(x, y, rgb)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(im, "png", bos)
-      bos.toByteArray
-    }
-    import spark.implicits._
-    val blobs = Seq(
-      (0L, png(0xff0000)), (1L, png(0xfe0000)), // two reds (near-dup)
-      (2L, png(0x0000ff)), (3L, png(0x00ff00))) // blue, green
-      .toDF("doc_id", "blob")
-    val dec = Multimodal.decodeImage(blobs, "blob", "doc_id")
-      .orderBy("id").collect()
-    assert(dec.length == 4)
-    dec.foreach { r =>
-      assert(r.getBoolean(4), "real PNG must take the decode path")
-      assert(r.getInt(2) == 2 && r.getInt(3) == 2) // true width/height
-    }
-    // the red image's thumbnail really holds red pixels
-    val thumb0 = dec(0).getAs[Array[Byte]](5)
-    assert((thumb0(0) & 0xff) == 0xff && thumb0(1) == 0 && thumb0(2) == 0)
-    // pixel-histogram features: the two reds must be mutual nearest
-    // neighbors through the stock ANN operator
-    val feats = Multimodal.extractImageFeatures(blobs, "blob", "doc_id")
-    val knn = Similarity.bruteForceTopK(
-      feats.filter(col("vec_id") < 2), feats, 1)
-    val top = knn.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(top(0L) == 1L && top(1L) == 0L)
-    // conf gate: realDecode=false forces the stub path
-    spark.conf.set("spark.graft.multimodal.realDecode", "false")
-    try {
-      val stubbed = Multimodal.decodeImage(blobs, "blob", "doc_id").collect()
-      assert(stubbed.forall(!_.getBoolean(4)))
-    } finally spark.conf.unset("spark.graft.multimodal.realDecode")
-  }
-
-  test("multimodal: REAL WAV blobs decode into sample stats") {
-    // write a genuine WAV in-memory (javax.sound.sampled ships with
-    // the JDK): 16-bit mono PCM sine at 8 kHz, amplitude 0.5
-    def wav(hz: Double, n: Int): Array[Byte] = {
-      val pcm = new Array[Byte](n * 2)
-      for (i <- 0 until n) {
-        val s = (math.sin(2 * math.Pi * hz * i / 8000.0) * 0.5 * 32767).toInt
-        pcm(2 * i) = (s & 0xff).toByte
-        pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-      }
-      val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
-    }
-    import spark.implicits._
-    val blobs = Seq(
-      (0L, wav(440.0, 8000)), (1L, wav(880.0, 4000)),
-      (2L, "definitely not audio".getBytes("UTF-8")),
-      (3L, null.asInstanceOf[Array[Byte]])) // null must not NPE
-      .toDF("doc_id", "blob")
-    val out = Multimodal.decodeAudio(blobs, "blob", "doc_id")
-      .orderBy("id").collect()
-    assert(out.length == 4)
-    val r0 = out(0)
-    assert(r0.getBoolean(5), "real WAV must take the decode path")
-    assert(r0.getInt(2) == 8000 && r0.getInt(3) == 1)
-    assert(r0.getLong(4) == 8000L)
-    // sine RMS = amplitude / sqrt(2) ~= 0.3536, peak ~= 0.5
-    assert(math.abs(r0.getDouble(6) - 0.5 / math.sqrt(2)) < 0.01)
-    assert(math.abs(r0.getDouble(7) - 0.5) < 0.01)
-    assert(out(1).getBoolean(5) && out(1).getLong(4) == 4000L)
-    assert(!out(2).getBoolean(5) && !out(3).getBoolean(5))
-    assert(out(3).getLong(1) == 0L) // null blob -> 0 bytes, stub stats
-    // conf gate: realDecode=false forces the stub path
-    spark.conf.set("spark.graft.multimodal.realDecode", "false")
-    try assert(Multimodal.decodeAudio(blobs, "blob", "doc_id")
-      .collect().forall(!_.getBoolean(5)))
-    finally spark.conf.unset("spark.graft.multimodal.realDecode")
-  }
-
-  test("multimodal: REAL video frames decode from MJPEG-AVI and animated GIF") {
-    def jpeg(rgb: Int, w: Int, h: Int): Array[Byte] = {
-      val im = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until w; y <- 0 until h) im.setRGB(x, y, rgb)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(im, "jpg", bos)
-      bos.toByteArray
-    }
-    // hand-built RIFF/AVI container: LIST('movi') of 00dc JPEG chunks
-    def mjpegAvi(frames: Seq[Array[Byte]]): Array[Byte] = {
-      def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-      val movi = new java.io.ByteArrayOutputStream()
-      movi.write("movi".getBytes)
-      frames.foreach { f =>
-        movi.write("00dc".getBytes); movi.write(le32(f.length)); movi.write(f)
-        if (f.length % 2 == 1) movi.write(0) // even-offset padding
-      }
-      val inner = new java.io.ByteArrayOutputStream()
-      inner.write("AVI ".getBytes)
-      inner.write("LIST".getBytes); inner.write(le32(movi.size)); movi.writeTo(inner)
-      val out = new java.io.ByteArrayOutputStream()
-      out.write("RIFF".getBytes); out.write(le32(inner.size)); inner.writeTo(out)
-      out.toByteArray
-    }
-    def animGif(colors: Seq[Int], w: Int, h: Int): Array[Byte] = {
-      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-      val bos = new java.io.ByteArrayOutputStream()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-      writer.setOutput(ios)
-      writer.prepareWriteSequence(null)
-      colors.foreach { c =>
-        val im = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (x <- 0 until w; y <- 0 until h) im.setRGB(x, y, c)
-        writer.writeToSequence(new javax.imageio.IIOImage(im, null, null), null)
-      }
-      writer.endWriteSequence(); ios.close(); writer.dispose()
-      bos.toByteArray
-    }
-    import spark.implicits._
-    val avi = mjpegAvi(Seq.fill(5)(jpeg(0x808080, 4, 2)))
-    val gif = animGif(Seq(0xff0000, 0x00ff00, 0x0000ff), 3, 2)
-    val blobs = Seq(
-      (0L, avi), (1L, gif),
-      (2L, "not a video at all......".getBytes("UTF-8")),
-      (3L, null.asInstanceOf[Array[Byte]]))
-      .toDF("doc_id", "blob")
-    val out = Multimodal.decodeVideo(blobs, "blob", "doc_id")
-      .orderBy("id", "frame_idx").collect()
-    val aviRows = out.filter(_.getLong(0) == 0L)
-    assert(aviRows.length == 5 && aviRows.forall(_.getBoolean(6)))
-    assert(aviRows.forall(r => r.getLong(2) == 5L)) // n_frames
-    assert(aviRows.map(_.getInt(3)).toSeq == Seq(0, 1, 2, 3, 4))
-    assert(aviRows.forall(r => r.getInt(4) == 4 && r.getInt(5) == 2))
-    val gifRows = out.filter(_.getLong(0) == 1L)
-    assert(gifRows.length == 3 && gifRows.forall(_.getBoolean(6)))
-    assert(gifRows.forall(r => r.getInt(4) == 3 && r.getInt(5) == 2))
-    // the first GIF frame is solid red: its thumbnail must be red-dominant
-    val t0 = gifRows(0).getAs[Array[Byte]](7)
-    assert((t0(0) & 0xff) > 200 && (t0(1) & 0xff) < 60 && (t0(2) & 0xff) < 60)
-    // junk and null blobs: one stub row each, never a job failure
-    Seq(2L, 3L).foreach { id =>
-      val s = out.filter(_.getLong(0) == id)
-      assert(s.length == 1 && !s(0).getBoolean(6) && s(0).getLong(2) == 0L)
-    }
-    // frame sampling: only every 2nd frame is DECODED (cost ∝ kept)
-    val sampled = Multimodal.decodeVideo(blobs, "blob", "doc_id", frameStep = 2)
-      .filter(col("id") === 0L).orderBy("frame_idx").collect()
-    assert(sampled.map(_.getInt(3)).toSeq == Seq(0, 2, 4))
-    assert(sampled.forall(r => r.getLong(2) == 5L))
-    // conf gate: realDecode=false forces the stub path
-    spark.conf.set("spark.graft.multimodal.realDecode", "false")
-    try assert(Multimodal.decodeVideo(blobs, "blob", "doc_id")
-      .collect().forall(!_.getBoolean(6)))
-    finally spark.conf.unset("spark.graft.multimodal.realDecode")
   }
 
   test("multimodal: blobMeta sniffs real format headers") {
@@ -647,28 +438,6 @@ class ExtSpec extends SparkSpec {
     assert(out(4).getString(1) == "unknown" && out(4).getLong(4) == 0L)
     assert(out(5).getString(1) == "mp4")
     assert(out(6).getString(1) == "avi")
-  }
-
-  test("multimodal: malformed and null blobs never fail the decode job") {
-    def png2x2: Array[Byte] = {
-      val im = new java.awt.image.BufferedImage(2, 2,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(im, "png", bos)
-      bos.toByteArray
-    }
-    import spark.implicits._
-    val blobs = Seq(
-      (0L, png2x2),
-      (1L, png2x2.take(20)), // truncated header: decode throws inside
-      (2L, null.asInstanceOf[Array[Byte]]))
-      .toDF("doc_id", "blob")
-    val dec = Multimodal.decodeImage(blobs, "blob", "doc_id")
-      .orderBy("id").collect()
-    assert(dec(0).getBoolean(4))
-    assert(!dec(1).getBoolean(4) && !dec(2).getBoolean(4))
-    val feats = Multimodal.extractImageFeatures(blobs, "blob", "doc_id")
-    assert(feats.count() == 3)
   }
 
   test("native topk aggregate == rank window, across partial merges") {
@@ -743,15 +512,6 @@ class ExtSpec extends SparkSpec {
     assert(Similarity.lshTopK(emb.limit(2), empty, 5).count() == 0)
     assert(Similarity.bruteForceTopK(emb.limit(2), empty, 5).count() == 0)
   }
-
-  test("multimodal: frame sampling keeps every nth frame per group") {
-    val frames = spark.range(100).select(
-      (col("id") % 5).as("video"), col("id").as("frame"))
-    val out = Multimodal.sampleFrames(frames, "video", "frame", 4)
-    assert(out.count() == 25) // 20 frames per video / 4
-  }
-
-  // ---- corpus preparation: split / chunk / pack ---------------------------
 
   test("corpus: trainSplit is deterministic, covering, and ~80/10/10") {
     val docs = graft.sources.Tables.load(spark, sf, "documents").df
@@ -1393,12 +1153,12 @@ class ExtSpec extends SparkSpec {
     assert(cold == Set(4L))
   }
 
-  test("writeShards: round-trip complete, shard = shardAssign, md5-ordered") {
+  test("writeJsonlShards: round-trip complete, shard = shardAssign, md5-ordered") {
     val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
     val base = docs.select(col("doc_id"), col("lang")).limit(100)
       .localCheckpoint(true)
-    Corpus.writeShards(base, col("doc_id"), dir, nShards = 4)
-    val back = spark.read.parquet(dir)
+    Corpus.writeJsonlShards(base, col("doc_id"), dir, nShards = 4)
+    val back = spark.read.json(dir)
     // complete and shard-correct
     val expected = Corpus.shardAssign(base, col("doc_id"), 4)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -1406,7 +1166,7 @@ class ExtSpec extends SparkSpec {
       r.getLong(r.fieldIndex("doc_id")) ->
         r.getAs[Number]("shard").longValue()).toMap
     assert(got == expected)
-    // within each shard, file order is the md5 order writeShards promises
+    // within each shard, file order is the md5 order the export promises
     val ordH = TextAnalysis.h60(concat(lit("ord:"), col("doc_id").cast("string")))
     (0L until 4L).foreach { sh =>
       val gotOrder = back.filter(col("shard") === sh)
@@ -1435,11 +1195,6 @@ class ExtSpec extends SparkSpec {
     // order (inlined fold vs distributed partial sums) agrees to the bit
     assert(inl == joined)
     assert(inl(9999L) == 0.5 && inl(9998L) == 0.5)
-    // sigmoid maps margins monotonically into (0,1)
-    val sig = df.select(TextAnalysis.sigmoidOf(
-        TextAnalysis.linearMargin(col("text"), w, 0.5)))
-      .collect().map(_.getDouble(0))
-    assert(sig.forall(p => p > 0.0 && p < 1.0))
   }
 
   test("semanticDedup: duplicate embeddings collapse to min id within a block") {
@@ -1675,18 +1430,6 @@ class ExtSpec extends SparkSpec {
                         else Some(r.getDouble(i + 1)))).toMap
     assert(m(1L) == Seq(Some(15.0), Some(2.0), None))
     assert(m(2L) == Seq(None, Some(7.0), None)) // "zz" not a column
-  }
-
-  test("pivotAuto discovers sorted values and caps the fan-out") {
-    val df = Seq((1L, "b", 1.0), (1L, "a", 2.0), (2L, "a", 3.0))
-      .toDF("k", "cat", "v")
-    val out = graft.ext.Reshape.pivotAuto(df, Seq("k"), "cat",
-      sum, col("v"))
-    assert(out.columns.toSeq == Seq("k", "a", "b"))
-    intercept[IllegalArgumentException] {
-      graft.ext.Reshape.pivotAuto(df, Seq("k"), "cat", sum, col("v"),
-        maxValues = 1)
-    }
   }
 
   test("unpivot keeps NULL cells and casts to one type") {

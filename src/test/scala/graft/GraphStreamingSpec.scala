@@ -2,12 +2,29 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import graft.rec.Graph
 import graft.streaming.Streams
 
 class GraphStreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** A `foreachBatch` sink over `df`: `f` gets every non-empty
+    * micro-batch with its batch id.
+    */
+  private def eachBatch(df: DataFrame)(f: (DataFrame, Long) => Unit)
+      : StreamingQuery =
+    df.writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        if (!batch.isEmpty) f(batch, id)
+      }
+      .start()
+
+  /** `_simhash` of the text column, from the batch dedup expressions. */
+  private def withSimhash(df: DataFrame): DataFrame =
+    df.withColumn("_simhash", graft.ext.Dedup.simhashFromHashes(
+      graft.ext.Dedup.tokenHashes(col("text"))))
 
   test("bfs on a cyclic graph terminates with minimal ranks") {
     // cycle 1->2->3->1 plus branch 3->4
@@ -179,24 +196,6 @@ class GraphStreamingSpec extends SparkSpec {
     assert(out.count() == 5)
   }
 
-  test("streaming tumbling window aggregation over a memory stream") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val df = mem.toDF().toDF("ts", "user_id", "value")
-    val agg = Streams.tumblingAgg(df, "ts", "1 hour", "2 hours",
-      Seq("user_id"), Seq(count(lit(1)).as("n"), sum("value").as("s")))
-    val q = agg.writeStream.format("memory").queryName("tumbling_test")
-      .outputMode(OutputMode.Update()).start()
-    def ts(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    mem.addData((ts(0, 10), 1L, 2.0), (ts(0, 40), 1L, 3.0), (ts(1, 5), 1L, 4.0))
-    q.processAllAvailable()
-    val rows = spark.table("tumbling_test")
-      .select(col("user_id"), col("n"), col("s")).collect()
-    assert(rows.map(r => (r.getLong(1), r.getDouble(2))).toSet
-      == Set((2L, 5.0), (1L, 4.0)))
-    q.stop()
-  }
-
   test("pivot cells run unchanged on a windowed stream (batch == stream)") {
     // conditional aggregation is stateless per group, so the same
     // pivot plan shape works under a streaming window — the wide
@@ -240,8 +239,12 @@ class GraphStreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, String)]
     val df = mem.toDF().toDF("ts", "text")
-    val out = Streams.topTermsStream(df, "ts", "text",
-        "10 minutes", "5 minutes", cap = 8)
+    // the batch Misra-Gries aggregate, unchanged, per streaming window
+    val out = df.withWatermark("ts", "5 minutes")
+      .select(col("ts"),
+        explode(graft.ext.TextAnalysis.tokens(col("text"))).as("term"))
+      .groupBy(window(col("ts"), "10 minutes"))
+      .agg(graft.plans.FreqSketch.freqSketch(col("term"), 8).as("heavy"))
       .select(col("window.start").as("ws"), explode(col("heavy")).as("e"))
       .select(col("ws"), col("e.term").as("term"), col("e.est").as("est"))
     val q = out.writeStream.format("memory").queryName("hh_stream")
@@ -258,23 +261,6 @@ class GraphStreamingSpec extends SparkSpec {
     assert(w1 == Map("a" -> 4L, "b" -> 1L, "c" -> 1L))
     val w2 = rows.filter(_._1 == ts(10)).map(r => r._2 -> r._3).toMap
     assert(w2 == Map("b" -> 2L))
-    q.stop()
-  }
-
-  test("dedupStreamWithinWatermark drops retried ids with DIFFERENT timestamps") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long)]
-    val df = mem.toDF().toDF("ts", "event_id")
-    val q = Streams.dedupStreamWithinWatermark(df, "ts", "1 hour", Seq("event_id"))
-      .writeStream.format("memory").queryName("dedup_wm_test")
-      .outputMode(OutputMode.Append()).start()
-    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
-    // id 7 retried 10 minutes later with a new timestamp — still a dup
-    mem.addData((ts(1), 7L), (ts(11), 7L), (ts(12), 8L))
-    q.processAllAvailable()
-    val ids = spark.table("dedup_wm_test").select("event_id")
-      .collect().map(_.getLong(0)).toSeq
-    assert(ids.sorted == Seq(7L, 8L))
     q.stop()
   }
 
@@ -336,9 +322,13 @@ class GraphStreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Seq[Float])]
     val queries = mem.toDF().toDF("vec_id", "embedding")
     val got = scala.collection.mutable.Map[Long, Seq[Long]]()
-    val q = graft.streaming.Streams.annStream(queries, corpus, 3) {
-      (ranked, _) =>
-        ranked.collect().groupBy(_.getLong(0)).foreach { case (qid, rows) =>
+    // the corpus side is prepped once; each micro-batch is the query
+    // side of the batch operator
+    val prepped = graft.ext.Similarity.prepCorpus(corpus)
+      .localCheckpoint(true)
+    val q = eachBatch(queries) { (batch, _) =>
+      graft.ext.Similarity.bruteForceTopKPrepped(batch, prepped, 3)
+        .collect().groupBy(_.getLong(0)).foreach { case (qid, rows) =>
           got.synchronized {
             got(qid) = rows.sortBy(_.getInt(2)).map(_.getLong(1)).toSeq
           }
@@ -363,7 +353,9 @@ class GraphStreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
     val df = mem.toDF().toDF("ts", "doc_id", "text")
-    val q = Streams.nearDupStreamSimhash(df, "ts", "1 hour", "text")
+    val q = withSimhash(df)
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("_simhash")
       .writeStream.format("memory").queryName("neardup_sh_test")
       .outputMode(OutputMode.Append()).start()
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
@@ -383,8 +375,16 @@ class GraphStreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
     val df = mem.toDF().toDF("ts", "doc_id", "text")
-    val q = Streams.preprocessStream(df, "ts", "1 hour", "text",
-        minQuality = 0.05, minTokens = 5)
+    val TA = graft.ext.TextAnalysis
+    val gated = df
+      .withColumn("n_tokens", TA.tokenCount(col("text")))
+      .withColumn("lang", TA.langId(col("text")))
+      .withColumn("q", TA.qualityScore(col("text")))
+      .filter(col("q") >= 0.05 && col("lang") === "en" &&
+        col("n_tokens") >= 5)
+    val q = withSimhash(gated)
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("_simhash")
       .writeStream.format("memory").queryName("preprocess_stream_test")
       .outputMode(OutputMode.Append()).start()
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
@@ -408,8 +408,14 @@ class GraphStreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
     val df = mem.toDF().toDF("ts", "doc_id", "text")
-    val q = Streams.nearDupStreamMinhashBands(df, "ts", "1 hour",
-        "doc_id", "text", k = 12, bands = 4)
+    val D = graft.ext.Dedup
+    val sig = D.signatureFromHashes(
+      D.shingleHashes(col("text"), hasher = D.fastHasher), 12)
+    val q = df
+      .select(col("doc_id"), col("ts"),
+        posexplode(D.bandBuckets(sig, 4, 3)).as(Seq("band", "bucket")))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("band", "bucket")
       .writeStream.format("memory").queryName("neardup_mh_test")
       .outputMode(OutputMode.Append()).start()
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
@@ -428,145 +434,6 @@ class GraphStreamingSpec extends SparkSpec {
     q.stop()
   }
 
-  test("stream-stream interval join matches within the delay window only") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(java.sql.Timestamp, Long)]
-    val errors = MemoryStream[(java.sql.Timestamp, Long)]
-    val joined = Streams.streamIntervalJoin(
-      clicks.toDF().toDF("cts", "user_id"),
-      errors.toDF().toDF("ets", "user_id"),
-      "user_id", "cts", "ets", "2 hours", "10 minutes")
-      .select(col("l.user_id"), col("cts"), col("ets"))
-    val q = joined.writeStream.format("memory").queryName("sj_test")
-      .outputMode(OutputMode.Append()).start()
-    def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
-    clicks.addData((ts(0), 1L), (ts(30), 2L))
-    errors.addData((ts(5), 1L), (ts(25), 1L), (ts(35), 2L))
-    q.processAllAvailable()
-    val rows = spark.table("sj_test").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(2).toString.substring(14, 16)))
-    // user 1: error at :05 within [00,10]; :25 outside. user 2: :35 within [30,40]
-    assert(rows.toSet == Set((1L, "05"), (2L, "35")))
-    q.stop()
-  }
-
-  test("stream dedup drops duplicate ids within the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long)]
-    val df = mem.toDF().toDF("ts", "event_id")
-    val q = Streams.dedupStream(df, "ts", "1 hour", Seq("event_id"))
-      .writeStream.format("memory").queryName("dedup_test")
-      .outputMode(OutputMode.Append()).start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    mem.addData((t0, 1L), (t0, 1L), (t0, 2L))
-    q.processAllAvailable()
-    assert(spark.table("dedup_test").count() == 2)
-    q.stop()
-  }
-
-  test("file-source stream: events parquet -> windowed agg -> memory sink") {
-    val src = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val events = graft.sources.Tables.load(spark, sf, "events").df
-    events.limit(500).write.mode("overwrite").parquet(src)
-    val stream = spark.readStream.schema(events.schema).parquet(src)
-    val agg = Streams.tumblingAgg(stream, "ts", "1 hour", "2 hours",
-      Seq("event_type"), Seq(count(lit(1)).as("n")))
-    val q = agg.writeStream.format("memory").queryName("file_stream_test")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete()).start()
-    q.processAllAvailable()
-    val total = spark.table("file_stream_test")
-      .agg(sum("n")).head().getLong(0)
-    assert(total == 500L)
-    q.stop()
-  }
-
-  test("streaming funnel == batch funnel on an in-order feed; state crosses batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val DAY = 86400000000L
-    // (user, tsUs, stepIdx) with steps view=0, click=1, purchase=2
-    val batch1 = Seq((1L, 1000L, 0), (1L, 2000L, 1), (2L, 1000L, 0),
-      (3L, 500L, 1))
-    val batch2 = Seq((1L, 3000L, 2), (2L, 2000L + 2 * DAY, 1))
-    val mem = MemoryStream[(Long, Long, Int)]
-    val out = Streams.funnelStream(mem.toDS(), k = 3, windowUs = DAY)
-    val q = out.writeStream.format("memory").queryName("funnel_stream_test")
-      .outputMode(OutputMode.Update()).start()
-    mem.addData(batch1: _*)
-    q.processAllAvailable()
-    mem.addData(batch2: _*)
-    q.processAllAvailable()
-    q.stop()
-    // latest state per user (depth only ever grows)
-    val got = spark.table("funnel_stream_test")
-      .groupBy(col("user")).agg(max(col("depth")).as("d"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    // the batch operator over the union of both batches
-    def ts(us: Long) = {
-      val t = new java.sql.Timestamp(us / 1000000 * 1000)
-      t.setNanos(((us % 1000000) * 1000).toInt); t
-    }
-    val names = Seq("view", "click", "purchase")
-    val all = (batch1 ++ batch2).map { case (u, t, i) => (u, ts(t), names(i)) }
-      .toDF("user_id", "ts", "etype")
-    val batch = graft.ext.Events.funnel(all, "user_id", "ts", "etype",
-      names, DAY)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    // u1 completes ACROSS batches (state persisted); u2's click is
-    // outside the window; u3 never saw step 0
-    assert(got == Map(1L -> 3, 2L -> 1, 3L -> 0) && got == batch)
-  }
-
-  test("expiring streaming funnel: final depth emitted once when the window closes") {
-    implicit val sqlCtx = spark.sqlContext
-    def ts(us: Long) = {
-      val t = new java.sql.Timestamp(us / 1000000 * 1000)
-      t.setNanos(((us % 1000000) * 1000).toInt); t
-    }
-    val W = 1000000L // 1s funnel window, zero-delay watermark
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val out = Streams.funnelStreamExpiring(
-      mem.toDF().toDF("user_id", "ts", "etype"),
-      "user_id", "ts", "etype", Seq("view", "click"), W, "0 seconds")
-    val q = out.writeStream.format("memory").queryName("funnel_exp_test")
-      .outputMode(OutputMode.Append()).start()
-    // u1 completes inside the window; u2 anchors only
-    mem.addData((1L, ts(1000L), "view"), (1L, ts(2000L), "click"),
-      (2L, ts(1500L), "view"))
-    q.processAllAvailable()
-    // nothing final yet — the watermark hasn't passed anchor+W
-    assert(spark.table("funnel_exp_test").count() == 0)
-    // a far-future event pushes the watermark past both windows
-    mem.addData((9L, ts(10L * W), "view"))
-    q.processAllAvailable()
-    // one more batch so the timeout fires after the watermark advances
-    mem.addData((9L, ts(11L * W), "view"))
-    q.processAllAvailable()
-    val fin = spark.table("funnel_exp_test")
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(fin.get(1L).contains(2) && fin.get(2L).contains(1),
-      s"expected closed funnels for u1/u2, got $fin")
-    // exactly once per closed user
-    assert(spark.table("funnel_exp_test").count() ==
-      spark.table("funnel_exp_test").select("user").distinct().count())
-    q.stop()
-  }
-
-  test("mapGroupsWithState keeps running per-key aggregates") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Double)]
-    val out = Streams.runningPerKey(mem.toDS())
-    val q = out.writeStream.format("memory").queryName("running_test")
-      .outputMode(OutputMode.Update()).start()
-    mem.addData((1L, 2.0), (1L, 3.0), (2L, 10.0))
-    q.processAllAvailable()
-    mem.addData((1L, 5.0))
-    q.processAllAvailable()
-    val last = spark.table("running_test")
-      .filter(col("key") === 1L).orderBy(col("count").desc).head()
-    assert(last.getLong(1) == 3L && last.getDouble(2) == 10.0)
-    q.stop()
-  }
-
   test("streaming decontamination == batch operator, per micro-batch") {
     implicit val sqlCtx = spark.sqlContext
     val benchDoc = (1 to 12).map(i => s"e$i").mkString(" ")
@@ -574,10 +441,14 @@ class GraphStreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().toDF("doc_id", "text")
     val got = scala.collection.mutable.ArrayBuffer[Long]()
-    val q = graft.streaming.Streams.decontaminateStream(
-      docs, "doc_id", "text", bench, "btext") { (kept, _) =>
-        got.synchronized { got ++= kept.collect().map(_.getLong(0)) }
-      }
+    // the eval grams reduce once; each micro-batch runs the batch
+    // operator against them
+    val C = graft.ext.Corpus
+    val grams = C.benchGramSet(bench, "btext").localCheckpoint(true)
+    val q = eachBatch(docs) { (batch, _) =>
+      val kept = C.decontaminateWithGrams(batch, "doc_id", "text", grams)
+      got.synchronized { got ++= kept.collect().map(_.getLong(0)) }
+    }
     val batchRows = Seq(
       1L -> ("clean words " + (1 to 12).map(i => s"w$i").mkString(" ")),
       2L -> ("leaky prefix " + (1 to 12).map(i => s"e$i").mkString(" ")))
@@ -614,55 +485,6 @@ class GraphStreamingSpec extends SparkSpec {
     q.stop()
   }
 
-  test("streaming incremental dedup: the index accumulates across micro-batches from a cold start") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_fpidx_stream").toString + "/idx"
-    val mem = MemoryStream[(Long, String)]
-    val df = mem.toDF().toDF("doc_id", "text")
-    val out = scala.collection.mutable.ArrayBuffer[Long]()
-    val q = Streams.dedupAgainstIndexStream(df, "doc_id", "text", dir) {
-      (kept, _) => out ++= kept.collect().map(_.getLong(0))
-    }
-    // batch 1 bootstraps the empty index: both docs are novel
-    mem.addData(1L -> "aaa", 2L -> "bbb")
-    q.processAllAvailable()
-    assert(out.toSet == Set(1L, 2L))
-    // batch 2: 3 duplicates batch 1's "aaa" (historical), 4+5 collide
-    // within the batch, 6 is novel
-    mem.addData(3L -> "aaa", 4L -> "ccc", 5L -> "ccc", 6L -> "ddd")
-    q.processAllAvailable()
-    assert(out.toSet == Set(1L, 2L, 4L, 6L))
-    // batch 3: everything seen before drops
-    mem.addData(7L -> "ccc", 8L -> "ddd", 9L -> "bbb")
-    q.processAllAvailable()
-    q.stop()
-    assert(out.toSet == Set(1L, 2L, 4L, 6L))
-    // REPLAY SAFETY: foreachBatch is at-least-once — re-running batch 1
-    // (same batchId, same rows, e.g. after a sink failure) must return
-    // the SAME kept set, not anti-join the batch against its own
-    // just-written fingerprints and drop everything
-    val replay = Streams.dedupBatchAgainstIndex(
-      Seq(3L -> "aaa", 4L -> "ccc", 5L -> "ccc", 6L -> "ddd")
-        .toDF("doc_id", "text"),
-      "doc_id", "text", dir, batchId = 1L)
-      .collect().map(_.getLong(0)).toSet
-    assert(replay == Set(4L, 6L), s"replay must be idempotent, got $replay")
-    // an unrelated subdirectory under the index root (e.g. "backup/")
-    // must be IGNORED by sibling-batch discovery — only b<digits> dirs
-    // are fingerprint batches; anything else would poison or crash the
-    // seen-set read
-    val junk = new java.io.File(dir, "backup")
-    junk.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(junk.getPath, "notes.txt"),
-      "not parquet".getBytes)
-    val afterJunk = Streams.dedupBatchAgainstIndex(
-      Seq(7L -> "ccc", 10L -> "new doc").toDF("doc_id", "text"),
-      "doc_id", "text", dir, batchId = 9L)
-      .collect().map(_.getLong(0)).toSet
-    assert(afterJunk == Set(10L), s"junk subdir must not affect dedup, got $afterJunk")
-  }
-
   test("streaming LM gate: per-batch scores match the batch operator") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -672,8 +494,12 @@ class GraphStreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val df = mem.toDF().toDF("doc_id", "text")
     val out = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-    val q = Streams.lmGateStream(df, "doc_id", "text", model,
-      minScore = -2.2) { (kept, _) =>
+    // the model's count tables materialize once, not per trigger
+    val m = model.copy(bigrams = model.bigrams.localCheckpoint(true),
+      contexts = model.contexts.localCheckpoint(true))
+    val q = eachBatch(df) { (batch, _) =>
+      val kept = graft.ext.Corpus.lmScore(batch, "doc_id", "text", m)
+        .filter(col("lm_score") >= -2.2)
       out ++= kept.collect().map(r => (r.getLong(0), r.getDouble(3)))
     }
     val texts = Seq(
@@ -690,53 +516,14 @@ class GraphStreamingSpec extends SparkSpec {
     assert(out.map(_._1).toSet == Set(10L)) // gibberish gated out
   }
 
-  test("streaming incremental NEAR-dup: fuzzy seen-set accumulates across batches, replay idempotent") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_slsh")
-      .toString + "/idx"
-    val mem = MemoryStream[(Long, String)]
-    val df = mem.toDF().toDF("doc_id", "text")
-    val out = scala.collection.mutable.ArrayBuffer[Long]()
-    val q = Streams.neardupAgainstIndexStream(df, "doc_id", "text", dir,
-      threshold = 0.5) { (kept, _) =>
-      out ++= kept.collect().map(_.getLong(0))
-    }
-    // batch 1 bootstraps the empty index
-    mem.addData(
-      1L -> "the quick brown fox jumps over the lazy dog today",
-      2L -> "spark shuffles merge batch windows over sorted rows")
-    q.processAllAvailable()
-    assert(out.toSet == Set(1L, 2L))
-    // batch 2: 3 is a one-token variant of 1 (historical NEAR-dup),
-    // 4+5 are intra-batch twins, 6 is novel
-    mem.addData(
-      3L -> "the quick brown fox jumps over the lazy cat today",
-      4L -> "completely different words entirely unrelated here now",
-      5L -> "completely different words entirely unrelated here now",
-      6L -> "yet another brand new document with fresh words inside")
-    q.processAllAvailable()
-    q.stop()
-    assert(out.toSet == Set(1L, 2L, 4L, 6L))
-    // replay of batch 1 (same batchId) returns the same kept set —
-    // its own subdir is excluded from the seen-set
-    val replay = Streams.neardupBatchAgainstIndex(
-      Seq(3L -> "the quick brown fox jumps over the lazy cat today",
-        4L -> "completely different words entirely unrelated here now",
-        5L -> "completely different words entirely unrelated here now",
-        6L -> "yet another brand new document with fresh words inside")
-        .toDF("doc_id", "text"),
-      "doc_id", "text", dir, batchId = 1L, threshold = 0.5)
-      .collect().map(_.getLong(0)).toSet
-    assert(replay == Set(4L, 6L), s"replay must be idempotent, got $replay")
-  }
-
   test("streaming classifier gate: stateless margin filter matches the batch decision") {
     implicit val sqlCtx = spark.sqlContext
     val w = graft.ext.TextAnalysis.md5Weights(256)
     val mem = MemoryStream[(Long, String)]
     val df = mem.toDF().toDF("doc_id", "text")
-    val gated = Streams.classifierGateStream(df, "text", w, bias = 0.25)
+    val gated = df.withColumn("margin",
+        graft.ext.TextAnalysis.linearMargin(col("text"), w, 0.25))
+      .filter(col("margin") >= 0.0)
     val q = gated.writeStream.format("memory").queryName("clf_gate_test")
       .outputMode(OutputMode.Append()).start()
     val texts = Seq(
@@ -765,7 +552,8 @@ class GraphStreamingSpec extends SparkSpec {
       .toDF("bid", "btext")
     val mem = MemoryStream[(Long, String)]
     val df = mem.toDF().toDF("doc_id", "text")
-    val kept = Streams.decontaminateBloomStream(df, "text", bench, "btext")
+    val kept = df.filter(graft.ext.Corpus.bloomKeepPredicate(col("text"),
+      bench, "btext"))
     val q = kept.writeStream.format("memory").queryName("bloom_gate_test")
       .outputMode(OutputMode.Append()).start()
     val texts = Seq(
@@ -794,8 +582,10 @@ class GraphStreamingSpec extends SparkSpec {
       .createTempDirectory("graft_cdc").toString + "/tbl"
     val mem = MemoryStream[(Long, Long, Double, Boolean)]
     val df = mem.toDF().toDF("k", "seq", "v", "del")
-    val q = Streams.upsertKeyedStream(df, dir, "k", 4,
-      seqCol = Some("seq"), deleteCol = Some("del"))
+    val q = eachBatch(df) { (b, _) =>
+      Streams.upsertKeyedBatch(b, dir, "k", 4,
+        seqCol = Some("seq"), deleteCol = Some("del"))
+    }
     // batch 1 bootstraps; k=2 gets two updates — seq 11 wins
     mem.addData((1L, 10L, 1.0, false), (2L, 10L, 2.0, false),
       (2L, 11L, 2.5, false), (3L, 10L, 3.0, false))
@@ -843,8 +633,10 @@ class GraphStreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_aggstream").toString + "/state"
     val mem = MemoryStream[(String, Double)]
-    val q = Streams.aggStateStream(mem.toDF().toDF("g", "v"), dir,
-      Seq("g"), "v", nBuckets = 4, appId = "view1", compactEvery = 2)
+    val q = eachBatch(mem.toDF().toDF("g", "v")) { (b, id) =>
+      Streams.aggStateBatch(b, id, dir, Seq("g"), "v", nBuckets = 4,
+        appId = "view1", compactEvery = 2)
+    }
     mem.addData(("a", 1.0), ("a", 2.0), ("b", 10.0))
     q.processAllAvailable()
     def view() = Maintenance.finalizeAgg(
@@ -895,9 +687,10 @@ class GraphStreamingSpec extends SparkSpec {
     val dir = root + "/tbl"
     val cursor = root + "/consumer1.cursor"
     val mem = MemoryStream[(Long, Long, Double, Boolean)]
-    val q = Streams.upsertKeyedStream(
-      mem.toDF().toDF("k", "seq", "v", "del"), dir, "k", 4,
-      seqCol = Some("seq"), deleteCol = Some("del"))
+    val q = eachBatch(mem.toDF().toDF("k", "seq", "v", "del")) { (b, _) =>
+      Streams.upsertKeyedBatch(b, dir, "k", 4,
+        seqCol = Some("seq"), deleteCol = Some("del"))
+    }
     mem.addData((1L, 10L, 1.0, false), (2L, 10L, 2.0, false),
       (3L, 10L, 3.0, false))
     q.processAllAvailable()
@@ -921,13 +714,13 @@ class GraphStreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     var seen = Set.empty[(Long, String)]
-    assert(Streams.tailKeyedChanges(spark, dir, cursor) { (ch, f, t) =>
+    assert(tailChanges(dir, cursor) { (ch, f, t) =>
       assert(f == t1 && t > f)
       seen = batch(ch)
     })
     assert(seen == Set(1L -> "changed", 3L -> "removed", 4L -> "added"))
     // the tail advanced the cursor; nothing new -> the loop idles
-    assert(!Streams.tailKeyedChanges(spark, dir, cursor) { (_, _, _) =>
+    assert(!tailChanges(dir, cursor) { (_, _, _) =>
       fail("no batch expected") })
     // a SECOND consumer with its own cursor replays from scratch and
     // lands at the same final keys (independent cursors, one table)
@@ -940,8 +733,7 @@ class GraphStreamingSpec extends SparkSpec {
     // maxVersions per poll and converges on the same final keys
     val cursor3 = root + "/consumer3.cursor"
     var hops = 0
-    while (Streams.tailKeyedChanges(spark, dir, cursor3,
-      maxVersions = 1) { (ch, f, t) =>
+    while (tailChanges(dir, cursor3, maxVersions = 1) { (ch, f, t) =>
       assert(t - f <= 1); ch.count(); hops += 1
     } && hops < 10) ()
     assert(hops >= 2, s"bounded poll folded the lag into $hops hop(s)")
@@ -956,8 +748,10 @@ class GraphStreamingSpec extends SparkSpec {
       .createTempDirectory("graft_cdcd").toString + "/tbl"
     val mem = MemoryStream[(Long, Long, Double, Boolean)]
     val df = mem.toDF().toDF("k", "seq", "v", "del")
-    val q = Streams.upsertKeyedStream(df, dir, "k", 4,
-      seqCol = Some("seq"), deleteCol = Some("del"), asDeltas = true)
+    val q = eachBatch(df) { (b, _) =>
+      Streams.upsertKeyedBatch(b, dir, "k", 4,
+        seqCol = Some("seq"), deleteCol = Some("del"), asDeltas = true)
+    }
     // batch 1 bootstraps the base generations
     mem.addData((1L, 10L, 1.0, false), (2L, 10L, 2.0, false),
       (3L, 10L, 3.0, false))

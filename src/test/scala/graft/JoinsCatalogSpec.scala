@@ -30,9 +30,9 @@ class JoinsCatalogSpec extends SparkSpec {
   test("leftjoin keeps unmatched left rows with null right struct") {
     val few = graft.dsl.PTable(
       region.df.filter(col("r_regionkey") < 2), region.meta)
-    val j = Joins.leftjoinOn(
-      col("n.n_regionkey") === col("r.r_regionkey"),
-      "n" -> nation, "r" -> few)
+    val j = Joins.joinN(Joins.LeftOuter,
+      Seq(Joins.Side("n" -> nation), Joins.Side("r" -> few)),
+      Some(col("n.n_regionkey") === col("r.r_regionkey")))
     assert(j.df.count() == nation.df.count())
     assert(j.df.filter(col("r").isNull ||
       col("r.r_regionkey").isNull).count() > 0)
@@ -73,19 +73,6 @@ class JoinsCatalogSpec extends SparkSpec {
     cat.insertAll("t2", Seq("b", "c").toDF("name"))
     val ids = cat.get("t2").df.select("id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == Seq(1L, 2L, 3L))
-  }
-
-  test("catalog: transaction rollback restores bindings") {
-    val cat = new Catalog(spark)
-    cat.register("r", region)
-    intercept[RuntimeException] {
-      cat.transaction {
-        cat.delete("r", lit(true))
-        assert(cat.get("r").df.count() == 0)
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(cat.get("r").df.count() == region.df.count())
   }
 
   test("asofJoin attaches most recent right row, >= semantics") {

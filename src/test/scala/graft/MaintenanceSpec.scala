@@ -48,8 +48,8 @@ class MaintenanceSpec extends SparkSpec {
       .filter(col("z2") =!= col("zn")).count()
     assert(bad2 == 0)
     val badSql = df.select(
-        PF.zvalueN(Seq(col("a"), col("b"), col("c")), 10).as("zc"),
-        expr(PF.zvalueNSql(Seq("a", "b", "c"), 10)).as("zs"))
+        PF.zvalueN(Seq(col("a"), col("b")), 10).as("zc"),
+        expr(PF.zvalueSql("a", "b", 10)).as("zs"))
       .filter(col("zc") =!= col("zs")).count()
     assert(badSql == 0)
     // 4x4x4 grid -> 64 distinct interleaves in [0, 64)
@@ -88,19 +88,6 @@ class MaintenanceSpec extends SparkSpec {
       .agg(countDistinct(col("f"))).head().getLong(0) == 2)
     assert(r.count() == 1000 &&
       r.agg(sum("v")).head().getLong(0) == df.agg(sum("v")).head().getLong(0))
-  }
-
-  test("compactParquet sizes the file count from the input bytes") {
-    val in = tmp("graft_cptb_in"); val out = tmp("graft_cptb_out")
-    spark.range(0, 100).repartition(8).write.mode("overwrite").parquet(in)
-    // targetBytes far above the dir size → exactly one output file
-    assert(Maintenance.compactParquet(spark, in, out, 1L << 30) == 1)
-    assert(spark.read.parquet(out).count() == 100)
-    val bytes = Maintenance.dirBytes(spark, in)
-    assert(bytes > 0)
-    // ceil division: a target of bytes-1 needs 2 files
-    val out2 = tmp("graft_cptb_out2")
-    assert(Maintenance.compactParquet(spark, in, out2, bytes - 1) == 2)
   }
 
   test("writeZOrdered clusters: a 2-D range hits few files, data intact") {

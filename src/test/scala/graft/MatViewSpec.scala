@@ -177,7 +177,6 @@ class MatViewSpec extends SparkSpec {
 
   test("agg-state CDC: tailed view deltas fold to the head's finalized view") {
     val dir = tmp("mv_cdc"); val cur = dir + "/.cursor"
-    val S = graft.streaming.Streams
     val base = mkBase(3000)
     M.buildAggStateKeyed(base.filter(col("k") % 3 =!= 0), dir,
       Seq("g"), "v", 4)
@@ -192,16 +191,16 @@ class MatViewSpec extends SparkSpec {
       }
     // initial load (whole view as 'added'), a CoW refresh, a DELTA
     // refresh — each polled and folded
-    assert(S.tailKeyedChanges(spark, dir, cur)((df, _, _) => fold(df)))
+    assert(tailChanges(dir, cur)((df, _, _) => fold(df)))
     M.mergeAggStateKeyed(spark, dir,
       base.filter(col("k") % 3 === 0), Seq("g"), "v")
-    assert(S.tailKeyedChanges(spark, dir, cur)((df, _, _) => fold(df)))
+    assert(tailChanges(dir, cur)((df, _, _) => fold(df)))
     M.mergeAggStateKeyed(spark, dir,
       base.filter(col("k") % 11 === 0)
         .select(col("k"), col("g"), lit(7.0).as("v"), col("w")),
       Seq("g"), "v", asDeltas = true)
-    assert(S.tailKeyedChanges(spark, dir, cur)((df, _, _) => fold(df)))
-    assert(!S.tailKeyedChanges(spark, dir, cur)((_, _, _) => ()),
+    assert(tailChanges(dir, cur)((df, _, _) => fold(df)))
+    assert(!tailChanges(dir, cur)((_, _, _) => ()),
       "up-to-date consumer must not see a batch")
     val head = M.finalizeAgg(M.readAggStateKeyed(spark, dir), Seq("g"))
       .select("g", "n", "total").collect()

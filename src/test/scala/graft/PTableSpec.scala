@@ -59,11 +59,6 @@ class PTableSpec extends SparkSpec {
     }
   }
 
-  test("oneOpt distinguishes empty from singleton") {
-    assert(items(1).where(lit(false)).oneOpt().isEmpty)
-    assert(items(5).oneOpt().map(_.getLong(0)).contains(5L))
-  }
-
   test("isEmpty is a limit-1 probe") {
     assert(items(1).where(lit(false)).isEmpty)
     assert(!items(1).isEmpty)

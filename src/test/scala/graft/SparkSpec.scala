@@ -30,6 +30,25 @@ abstract class SparkSpec extends AnyFunSuite {
     finally pairs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
+  /** One round of a CDC consumer loop over the keyed table at `dir`:
+    * poll, then process (`f` gets changes, fromV, toV), then commit the
+    * cursor. True when a batch was processed; a crash inside `f`
+    * leaves the cursor where it was, so the next round re-emits it.
+    */
+  def tailChanges(dir: String, cursor: String,
+                  maxVersions: Int = Int.MaxValue)
+                 (f: (org.apache.spark.sql.DataFrame, Int, Int) => Unit)
+      : Boolean = {
+    import graft.streaming.Streams
+    Streams.pollKeyedChanges(spark, dir, cursor, maxVersions) match {
+      case Some((changes, fromV, toV)) =>
+        f(changes, fromV, toV)
+        Streams.commitChangeCursor(spark, cursor, toV)
+        true
+      case None => false
+    }
+  }
+
   /** (path → (length, mtime)) of every parquet data file under `dir` —
     * the immutability fingerprint the "bases/segments never rewritten"
     * assertions compare before and after an append.
