@@ -907,10 +907,7 @@ class LangSpec extends SparkSpec {
   // test_simple1: table-valued func params, func composition, chained
   // order/projection over an inlined func call)
   test("reference tests/simple1.pql runs verbatim") {
-    val f = new java.io.File("/root/reference/tests/simple1.pql")
-    assume(f.isFile)
-    val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val src = referenceScript("tests/simple1.pql")
     def get(name: String) = Interp.run(spark, src + "\n" + name)
     assert(get("english").df.collect().map(_.getString(1)).toSet ==
       Set("Eric Blaire", "H.G. Wells"))

@@ -1302,9 +1302,7 @@ class RefConformanceSpec extends SparkSpec {
   // ---- tests/simple2.pql (implicit joins through FK attrs/backrefs) -------
 
   test("simple2.pql runs verbatim: dotted FK attrs and backrefs") {
-    val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/tests/simple2.pql")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val script = referenceScript("tests/simple2.pql")
     def q(result: String): Seq[Seq[(String, Any)]] =
       rows(script + "\n" + result)
     assert(q("english_speakers {name} order {name}").map(_.head._2) ==
@@ -1379,9 +1377,7 @@ class RefConformanceSpec extends SparkSpec {
   // ---- tests/simple1.pql (funcs over tables, test_basic.py:1110-1127) -----
 
   test("simple1.pql runs verbatim: table funcs, order, demography") {
-    val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/tests/simple1.pql")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val script = referenceScript("tests/simple1.pql")
     def q(result: String): Seq[Seq[(String, Any)]] =
       rows(script + "\n" + result)
     assert(q("english {name}").map(_.head._2).toSet ==
@@ -1402,9 +1398,7 @@ class RefConformanceSpec extends SparkSpec {
   // ---- tests/box_circle.pql (struct columns, const tables) ----------------
 
   test("box_circle.pql runs verbatim: struct geometry queries") {
-    val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/tests/box_circle.pql")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val script = referenceScript("tests/box_circle.pql")
     def q(result: String): Seq[Seq[(String, Any)]] =
       rows(script + "\n" + result)
     // circle1 (3,3 r2) fits only box1 (1,1)-(10,10)
@@ -1419,9 +1413,7 @@ class RefConformanceSpec extends SparkSpec {
   // ---- examples/fizzbuzz.pql ----------------------------------------------
 
   test("fizzbuzz.pql runs verbatim") {
-    val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/examples/fizzbuzz.pql")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    val script = referenceScript("examples/fizzbuzz.pql")
     val out = col0(script + "\nlist([1..16]{fizzbuzz(item)})")
     assert(out == Seq("1", "2", "Fizz", "4", "Buzz", "Fizz", "7", "8",
       "Fizz", "Buzz", "11", "Fizz", "13", "14", "FizzBuzz"))

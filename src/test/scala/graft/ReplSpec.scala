@@ -221,17 +221,18 @@ class ReplSpec extends SparkSpec {
   }
 
   test(":load runs a reference example script and grows the prelude") {
-    // fizzbuzz.pql ends in `print [1..100]{fizzbuzz(item)}`; :load
-    // must print its output and keep the script's funcs available
+    // scripts/fizzbuzz.pql, shaped like the reference's
+    // examples/fizzbuzz.pql, ends in `print [1..100]{fizzbuzz(item)}`;
+    // :load must print its output and keep the script's funcs available
     val out = new java.io.ByteArrayOutputStream()
     val sess = new graft.lang.Interp.Session(spark)
     val prelude = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      Repl.loadScript("/root/reference/examples/fizzbuzz.pql", sess, Nil)
+      Repl.loadScript("src/test/resources/scripts/fizzbuzz.pql", sess, Nil)
     }
     val printed = out.toString("UTF-8")
     assert(printed.contains("FizzBuzz") && printed.contains("Fizz") &&
       printed.contains("Buzz"), s"fizzbuzz output missing:\n$printed")
-    assert(printed.contains("loaded /root/reference/examples/fizzbuzz.pql"))
+    assert(printed.contains("loaded src/test/resources/scripts/fizzbuzz.pql"))
     // the loaded definitions persist in the session for later units
     assert(prelude.nonEmpty)
     val r = sess.run("[15] {fizzbuzz(item)}").df.collect()

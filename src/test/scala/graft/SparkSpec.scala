@@ -16,6 +16,17 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   lazy val sf: String = "/root/testdata/sf0.001"
 
+  /** UTF-8 text of `rel` in a checkout of the reference Preql sources.
+    * The checkout is not part of this repository, so a test that runs
+    * one of its scripts verbatim is canceled where it is absent.
+    */
+  def referenceScript(rel: String): String = {
+    val p = java.nio.file.Paths.get("/root/reference", rel)
+    assume(java.nio.file.Files.isRegularFile(p), s"no reference checkout at $p")
+    new String(java.nio.file.Files.readAllBytes(p),
+      java.nio.charset.StandardCharsets.UTF_8)
+  }
+
   /** Run `body` with the given session confs set, UNSETTING them
     * after. Unset (not save/re-set) is the correct restore for keys
     * absent from the session builder: conf.get returns a default for
