@@ -511,17 +511,13 @@ object Search {
       lit(nBuckets).as("n_buckets"))
   }
 
-  /** Memo of one SEGMENT's stats row keyed by the stats files'
-    * (path, mtime, length) identity — segment dirs are immutable once
-    * committed (same discipline as the manifest cache: metadata values,
-    * never query results; a rewritten file misses by identity). The
-    * value is three longs that depend only on the files, so it holds no
-    * session and serves every session of the JVM. Without it every
-    * index query paid one `.head` Spark job per stats consult plus a
-    * broadcast of the stats row into the scoring plan.
+  /** Memo of one SEGMENT's stats row keyed by its stats files'
+    * identities — segment dirs are immutable once committed (metadata
+    * values, never query results; a rewritten file misses by identity).
+    * Without it every index query paid one `.head` Spark job per stats
+    * consult plus a broadcast of the stats row into the scoring plan.
     */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int)]()
+  private val statsCache = new graft.sources.MetaCache[(Long, Long, Int)]()
 
   /** The corpus-stats values folded over a segment list: n_docs and
     * sdl are additive; the bucket count must agree across segments (it
@@ -536,10 +532,8 @@ object Search {
       val files = fs.listStatus(root).toSeq
         .filter(_.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.toString)
-      val key = files.map(f =>
-        s"${f.getPath}#${f.getModificationTime}#${f.getLen}").mkString("|")
-      if (statsCache.size() > 1024) statsCache.clear()
-      statsCache.computeIfAbsent(key, _ => {
+      val key = files.map(graft.sources.Fs.fileId).mkString("|")
+      statsCache.getOrLoad(key) {
         val row = spark.read.parquet(s + "/stats")
           .select(col("n_docs").cast("long"), col("sdl").cast("long"),
             col("n_buckets").cast("int"))
@@ -548,7 +542,7 @@ object Search {
         require(row.getInt(2) == row.getInt(3),
           "index segments disagree on n_buckets — rebuild the index")
         (row.getLong(0), row.getLong(1), row.getInt(2))
-      })
+      }
     }
     val nb = per.map(_._3).distinct
     require(nb.length == 1,

@@ -134,32 +134,11 @@ object Similarity {
   /** The vector dimension, probed from the first row — plane matrices
     * and IVF buffers size off it at plan-build time.
     */
-  /** Memo of probed dims, keyed weakly on the analyzed plan — repeat
-    * ANN calls over the same frame (per-microbatch wrappers, looped
-    * queries) skip the extra driver round-trip.
-    */
-  private val dimCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        Map[String, Int]]())
-
-  def probeDim(df: DataFrame, vecCol: String = "embedding"): Int = {
-    // keyed on (analyzed plan, vecCol): the same frame can carry
-    // vector columns of different dimensionality
-    val key = df.queryExecution.analyzed
-    val cached = Option(dimCache.get(key)).getOrElse(Map.empty)
-    cached.get(vecCol) match {
-      case Some(d) => d
-      case None =>
-        val dim = df.select(F.size(col(vecCol))).head(1) match {
-          case Array(r) => r.getInt(0)
-          case _ => 1 // empty corpus: any dim yields an empty result
-        }
-        dimCache.put(key, cached + (vecCol -> dim))
-        dim
+  def probeDim(df: DataFrame, vecCol: String = "embedding"): Int =
+    df.select(F.size(col(vecCol))).head(1) match {
+      case Array(r) => r.getInt(0)
+      case _ => 1 // empty corpus: any dim yields an empty result
     }
-  }
 
   /** Bucketed ANN: exact cosine only within matching LSH buckets.
     * Trades recall for a single equi-join on the bucket id.

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem probes that resolve through the Hadoop `FileSystem` API,
@@ -24,9 +24,25 @@ object Fs {
     */
   def hasParquet(spark: SparkSession, dir: String): Boolean = {
     val (fs, p) = resolve(spark, dir)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
+    listOrEmpty(fs, p).exists(s =>
       s.isFile && s.getPath.getName.endsWith(".parquet"))
   }
+
+  /** `listStatus`, empty when `p` does not exist: one filesystem call
+    * where `exists` + `listStatus` made two, and a dir that vanishes
+    * between them reads as empty instead of throwing.
+    */
+  def listOrEmpty(fs: FileSystem, p: Path): Seq[FileStatus] =
+    try fs.listStatus(p).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** A file's identity: path, mtime and length. A rewritten or
+    * recreated file (a vacuumed-then-recreated table reuses manifest
+    * version NUMBERS) gets a new identity, so a `MetaCache` keyed by it
+    * never serves the dead file's value.
+    */
+  def fileId(st: FileStatus): String =
+    s"${st.getPath}#${st.getModificationTime}#${st.getLen}"
 
   /** Atomically publish the fully-written file `tmp` as `dst` UNLESS
     * `dst` already exists; true when this call created `dst`. This is
@@ -53,4 +69,34 @@ object Fs {
         }
       else fs.rename(tmp, dst)
     } finally fs.delete(tmp, false)
+}
+
+/** The one memo of metadata derived from immutable files (parsed
+  * manifests, parquet schemas, index corpus stats): a synchronized
+  * access-order LRU keyed by `Fs.fileId` identities. Values depend only
+  * on the files, never on a session, so they serve every session of
+  * the JVM; no key or value may hold a `SparkSession`, `DataFrame` or
+  * `LogicalPlan`. The loader runs outside the lock, so a slow load (a
+  * Spark job) never blocks other keys; two threads missing the same key
+  * both load it and the later put wins with an equal value.
+  */
+private[graft] final class MetaCache[V](capacity: Int = MetaCache.Capacity) {
+  private val lru = new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
+      size() > capacity
+  }
+
+  def getOrLoad(key: String)(load: => V): V =
+    lru.synchronized(Option(lru.get(key))).getOrElse {
+      val v = load
+      lru.synchronized(lru.put(key, v))
+      v
+    }
+}
+
+private[graft] object MetaCache {
+  /** Entries per memo; a value is one parsed manifest (a few KB) or
+    * smaller.
+    */
+  val Capacity = 512
 }

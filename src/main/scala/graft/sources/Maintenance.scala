@@ -215,6 +215,12 @@ object Maintenance {
     def keyCols: Seq[String] =
       if (keyCol.isEmpty) Seq.empty else keyCol.split(",").toSeq
 
+    /** `schemaDdl` parsed (`fromDDL` runs the full SQL parser): once per
+      * instance, and a memoized manifest is one instance per version.
+      */
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
+
     def chain(b: Int): Seq[String] = deltas.getOrElse(b, Nil)
 
     def dirsOf(b: Int): Seq[String] = buckets.get(b).toSeq ++ chain(b)
@@ -342,21 +348,6 @@ object Maintenance {
     }
   }
 
-  /** Memoized `StructType.fromDDL`: the recorded snapshot schema is
-    * re-parsed on every read/merge/lookup (fromDDL goes through the
-    * full SQL parser), and one lifecycle query parses the same DDL
-    * string dozens of times. Keyed by the DDL text itself; bounded.
-    */
-  private val ddlCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-  private[graft] def parseDdl(ddl: String)
-      : org.apache.spark.sql.types.StructType = {
-    if (ddlCache.size() > 1024) ddlCache.clear()
-    ddlCache.computeIfAbsent(ddl,
-      d => org.apache.spark.sql.types.StructType.fromDDL(d))
-  }
-
   private def cleanDir(dir: String): String = dir.replaceAll("/+$", "")
 
   private def hadoopFs(spark: SparkSession, p: Path) =
@@ -406,9 +397,7 @@ object Maintenance {
   /** All committed manifest versions at `dir`, ascending. */
   def manifestVersions(spark: SparkSession, dir: String): Seq[Int] = {
     val md = manifestDir(cleanDir(dir))
-    val fs = hadoopFs(spark, md)
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq.map(_.getPath.getName).collect {
+    Fs.listOrEmpty(hadoopFs(spark, md), md).map(_.getPath.getName).collect {
       case ManifestName(v) => v.toInt
     }.sorted
   }
@@ -426,23 +415,17 @@ object Maintenance {
       s"manifest version $v of $clean disappeared mid-read (vacuumed?)"))
   }
 
-  /** Parsed-manifest cache. Manifest FILES are write-once (the publish
+  /** Parsed-manifest memo. Manifest FILES are write-once (the publish
     * is rename/hard-link-if-absent), but a vacuumed-then-recreated
-    * table reuses version NUMBERS — so the cache key carries the
-    * file's (mtime, length) identity, never just its path: a recreated
-    * v1 parses fresh instead of serving the dead table's entry. The
-    * payoff is every repeated read/merge/poll of the same snapshot:
-    * manifests carry rows/colstats/txn on every commit, and the
-    * re-open + re-decode per readManifest call was measurable on
-    * delta-heavy paths (ql51/x98). Bounded LRU.
+    * table reuses version NUMBERS — so the key is the file's identity
+    * (`Fs.fileId`: path, mtime, length), never just its path: a
+    * recreated v1 parses fresh instead of serving the dead table's
+    * entry. The payoff is every repeated read/merge/poll of the same
+    * snapshot: manifests carry rows/colstats/txn on every commit, and
+    * the re-open + re-decode per readManifest call was measurable on
+    * delta-heavy paths (ql51/x98).
     */
-  private val manifestCache =
-    new java.util.LinkedHashMap[(String, Long, Long), KeyedManifest](
-      64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long), KeyedManifest])
-          : Boolean = size() > 512
-    }
+  private val manifestCache = new MetaCache[KeyedManifest]()
 
   /** Open + parse one manifest by version WITHOUT a directory listing;
     * None when the file is gone (a racing vacuum between a version
@@ -452,28 +435,20 @@ object Maintenance {
                               v: Int): Option[KeyedManifest] = {
     val p = new Path(manifestDir(clean), f"v$v%09d.json")
     val fs = hadoopFs(spark, p)
-    val st =
-      try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val cacheKey = (p.toString, st.getModificationTime, st.getLen)
-    manifestCache.synchronized(Option(manifestCache.get(cacheKey))) match {
-      case some @ Some(_) => return some
-      case None => ()
-    }
-    val txt =
-      try {
+    try {
+      val st = fs.getFileStatus(p)
+      Some(manifestCache.getOrLoad(Fs.fileId(st)) {
         val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => return None }
-    val parsed =
-      try KeyedManifest.decode(v, txt)
-      catch {
-        case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"$p: ${e.getMessage}", e)
-      }
-    manifestCache.synchronized(manifestCache.put(cacheKey, parsed))
-    Some(parsed)
+        val txt =
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        try KeyedManifest.decode(v, txt)
+        catch {
+          case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(s"$p: ${e.getMessage}", e)
+        }
+      })
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Publish a manifest: write to a dot-temp in `_manifests`, then
@@ -797,7 +772,7 @@ object Maintenance {
   private def zonePrune(m: KeyedManifest, buckets: Seq[Int],
                         zone: Seq[(String, Seq[(Option[Any], Option[Any])])])
       : Seq[Int] = {
-    val types = parseDdl(m.schemaDdl).fields
+    val types = m.schema.fields
       .map(f => f.name -> f.dataType).toMap
     buckets.filter { b =>
       zone.forall { case (n, rs) =>
@@ -863,7 +838,7 @@ object Maintenance {
     */
   private def readSchema(m: KeyedManifest, withTomb: Boolean)
       : org.apache.spark.sql.types.StructType = {
-    val base = parseDdl(m.schemaDdl)
+    val base = m.schema
     val sch =
       if (withTomb && !base.fieldNames.contains("__tomb"))
         base.add("__tomb", org.apache.spark.sql.types.BooleanType)
@@ -1306,7 +1281,7 @@ object Maintenance {
       stagedStats
     // snapshot schema grows additively across merges: prior schema
     // ∪ the merged frame's (which carries any new batch columns)
-    val schema = unionSchema(parseDdl(base.schemaDdl), merged.schema).toDDL
+    val schema = unionSchema(base.schema, merged.schema).toDDL
     PendingCommit(clean, base.copy(version = base.version + 1,
       buckets = next, schemaDdl = schema, deltas = nextDeltas,
       rows = nextRows, colStats = nextStats, txn = base.txn ++ txn))
@@ -1524,7 +1499,7 @@ object Maintenance {
         s"updateKeyedWhereDelta cannot reassign key column '$c'")
       // a typo'd assignment would otherwise report matches while
       // changing nothing (r13 ADVICE)
-      require(c != "kb" && parseDdl(m.schemaDdl).fieldNames.contains(c),
+      require(c != "kb" && m.schema.fieldNames.contains(c),
         s"updateKeyedWhereDelta: '$c' is not a column of $clean")
     }
     // every row of the pruned read MATCHES cond, so assignments apply
@@ -1565,7 +1540,7 @@ object Maintenance {
             "would change buckets) — delete + re-insert instead")
         // a typo'd assignment name would otherwise report a nonzero
         // matched count while changing nothing (r13 ADVICE)
-        val have = parseDdl(m.schemaDdl).fieldNames
+        val have = m.schema.fieldNames
         require(c != "kb" && have.contains(c),
           s"updateKeyedWhere: '$c' is not a column of $clean " +
             s"(have ${have.mkString(",")})")
@@ -1867,7 +1842,7 @@ object Maintenance {
       val nextDeltas = m.deltas ++ staged.map { case (b, d) =>
         b -> (m.chain(b) :+ d)
       }
-      val schema = unionSchema(parseDdl(m.schemaDdl),
+      val schema = unionSchema(m.schema,
         withKb.drop("__tomb").schema).toDDL
       writeManifest(spark, clean, m.copy(version = m.version + 1,
         schemaDdl = schema, deltas = nextDeltas, rows = m.rows ++ stagedRows,
@@ -2173,7 +2148,7 @@ object Maintenance {
     require(m.nBuckets > 0,
       s"$clean has no keyed metadata (a segmented dataset or commit group)")
     val keyCols = m.keyCols
-    val schema = parseDdl(m.schemaDdl)
+    val schema = m.schema
     val keyFields = keyCols.map(c => schema.fields.find(_.name == c)
       .getOrElse(throw new IllegalArgumentException(
         s"lookupKeyed: key column '$c' missing from $clean's schema")))
@@ -2265,8 +2240,8 @@ object Maintenance {
     // new in m2 surfaces as NULL for m1-side rows exactly like the
     // old full-outer diff's missing-column semantics... which never
     // compared it at all (shared-column rule). kb is layout, not data.
-    val sch1 = parseDdl(m1.schemaDdl).fieldNames.toSeq
-    val sch2 = parseDdl(m2.schemaDdl).fieldNames.toSeq
+    val sch1 = m1.schema.fieldNames.toSeq
+    val sch2 = m2.schema.fieldNames.toSeq
     val shared = sch1.intersect(sch2)
       .filterNot(c => keyCols.contains(c) || c == "kb")
     val sides = Seq(m1, m2).zipWithIndex.flatMap { case (m, side) =>
@@ -2356,8 +2331,7 @@ object Maintenance {
   private def registeredCursorMin(spark: SparkSession, dir: String): Int = {
     val cd = new Path(cleanDir(dir), "_cursors")
     val fs = hadoopFs(spark, cd)
-    if (!fs.exists(cd)) return 0
-    fs.listStatus(cd).toSeq.filterNot(_.getPath.getName.contains(".tmp_"))
+    Fs.listOrEmpty(fs, cd).filterNot(_.getPath.getName.contains(".tmp_"))
       .flatMap { st =>
         try {
           val in = fs.open(st.getPath)
@@ -2393,10 +2367,9 @@ object Maintenance {
     */
   private def registeredGroupMin(spark: SparkSession, dir: String): Int = {
     val gd = new Path(cleanDir(dir), "_groups")
-    val fs = hadoopFs(spark, gd)
-    if (!fs.exists(gd)) return 0
     val member = cleanDir(dir)
-    fs.listStatus(gd).toSeq.filterNot(_.getPath.getName.contains(".tmp_"))
+    Fs.listOrEmpty(hadoopFs(spark, gd), gd)
+      .filterNot(_.getPath.getName.contains(".tmp_"))
       .flatMap { st =>
         try {
           val groupDir = new String(java.util.Base64.getUrlDecoder

@@ -131,8 +131,7 @@ object MatView {
     if (!loadedBases.add(base)) return
     val md = new Path(base, "_mvs")
     val fs = md.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(md)) return
-    fs.listStatus(md).foreach { st =>
+    Fs.listOrEmpty(fs, md).foreach { st =>
       try {
         val in = fs.open(st.getPath)
         val o =
@@ -174,7 +173,7 @@ object MatView {
     val m = Maintenance.readManifest(spark, mv)
     require(m.resolve == "agg" && m.nBuckets > 0,
       s"$mv is not a bucketed agg state (resolve='${m.resolve}')")
-    val cols = Maintenance.parseDdl(m.schemaDdl).fieldNames.toSet
+    val cols = m.schema.fieldNames.toSet
     val sfx: String => String =
       c => if (valueCols.length == 1) "" else s"_$c"
     valueCols.foreach(c => require(cols.contains(s"__sum${sfx(c)}"),

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import graft.dsl.PTable
 import graft.types.{FK, TableMeta}
 
@@ -36,57 +37,35 @@ object Tables {
     "embeddings" -> TableMeta("embeddings", pk = Seq("vec_id"))
   )
 
-  /** Read one testdata table with its metadata attached.
-    *
-    * Nanosecond parquet timestamps (Spark can't represent them) are
+  /** Read one testdata table with its metadata attached. */
+  def load(spark: SparkSession, dir: String, name: String): PTable =
+    PTable(loadRaw(spark, s"$dir/$name.parquet"),
+      metas.getOrElse(name, TableMeta(name)))
+
+  // Raw parquet schema per (file identity, nanosAsLong): a load skips the
+  // schema-inference Spark job but still builds a fresh plan of its own.
+  private val schemaCache = new MetaCache[StructType]()
+
+  /** Nanosecond parquet timestamps (Spark can't represent them) are
     * read as long nanos via `spark.sql.legacy.parquet.nanosAsLong`
     * and truncated here to microsecond timestamps with exact integer
     * division (`div`) — double division would lose precision on
     * ~1.7e18 nano epochs.
     */
-  /** (session, path, mtime, len)-keyed cache of the LOADED frame's
-    * logical plan: every query re-loads its tables, and each load pays
-    * a driver-side file listing + parquet schema inference for an
-    * immutable testdata file. Caching the DataFrame (a plan, never
-    * rows — each action still scans parquet) removes that per-query
-    * planning tax; the (mtime, len) identity drops the entry when the
-    * file is rewritten (same discipline as the manifest cache).
-    */
-  private val loadCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Long, Long), DataFrame]()
-
-  def load(spark: SparkSession, dir: String, name: String): PTable = {
-    val path = s"$dir/$name.parquet"
-    val st =
+  private def loadRaw(spark: SparkSession, path: String): DataFrame = {
+    val id =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
-        val s = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p)
-        Some((s.getModificationTime, s.getLen))
+        Some(Fs.fileId(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getFileStatus(p)))
       } catch { case _: Exception => None }
-    st match {
-      case Some((mt, len)) =>
-        if (loadCache.size() > 256) loadCache.clear()
-        // the session OBJECT, not identityHashCode: hash codes can
-        // collide (and are reused after GC), which could serve a plan
-        // bound to a dead/foreign session; SparkSession has default
-        // (identity) equals, so the tuple key is exact. NOTE dual-load
-        // self-joins: repeated loads return the SAME plan instance
-        // (shared exprIds) — Spark's DeduplicateRelations handles a
-        // self-join of an identical plan, but a join condition built
-        // as dfA("c") === dfB("c") from two loads is ambiguous; alias
-        // both sides (the repo-wide self-join rule already says so).
-        val key = (spark, path, mt, len)
-        val df = loadCache.computeIfAbsent(key, _ => loadRaw(spark, path))
-        PTable(df, metas.getOrElse(name, TableMeta(name)))
-      case None => // unstattable path: fall through, let the read error
-        PTable(loadRaw(spark, path), metas.getOrElse(name, TableMeta(name)))
+    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val reader = id match {
+      case Some(i) => spark.read.schema(
+        schemaCache.getOrLoad(s"$i#$nanos")(spark.read.parquet(path).schema))
+      case None => spark.read // unstattable path: let the read error
     }
-  }
-
-  private def loadRaw(spark: SparkSession, path: String): DataFrame = {
-    var df = spark.read.parquet(path)
+    var df = reader.parquet(path)
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema.fields.filter(f => f.name == "ts" && f.dataType == LongType)
       .foreach { f =>

@@ -1478,7 +1478,7 @@ class MaintenanceSpec extends SparkSpec {
     val df = spark.range(0, 96).select(col("id").as("k"),
       (col("id") * 1000L).as("v"), (col("id") % 4).as("g"))
     M.writeKeyed(df, dir, Seq("k"), 16, statsCols = Seq("v"))
-    assert(!M.parseDdl(M.readManifest(spark, dir).schemaDdl)("k").nullable)
+    assert(!M.readManifest(spark, dir).schema("k").nullable)
     // a delta chain (an update and a tombstone) on top of the zone-mapped
     // base generations
     M.appendDeltaKeyed(spark, dir, Seq((5L, 5500L, 1L)).toDF("k", "v", "g"),
