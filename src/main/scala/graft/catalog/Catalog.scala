@@ -335,17 +335,16 @@ final class Catalog(val spark: SparkSession) {
     * the reopened table names in their original creation order.
     */
   def attach(dir: String): Seq[String] = synchronized {
-    val manifest =
-      try spark.read.json(s"$dir/_graft_manifest")
-        .select("ord", "name", "pk", "fks")
-        .collect().sortBy(_.getLong(0))
-      catch { // no saved catalog yet: attach fresh (like connecting
-        // to a new database file — commit() will create it)
-        case _: org.apache.spark.sql.AnalysisException =>
-          backingDir = Some(dir)
-          return Seq.empty
-      }
-    val names = manifest.map { r =>
+    val md = new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest")
+    // no non-empty part file: no saved catalog (or one of no tables),
+    // attach fresh (like connecting to a new database file — commit()
+    // will create it)
+    val saved = graft.sources.Fs.listOrEmpty(
+        md.getFileSystem(spark.sparkContext.hadoopConfiguration), md)
+      .exists(s => s.getPath.getName.startsWith("part-") && s.getLen > 0)
+    val names = if (!saved) Seq.empty else spark.read.json(md.toString)
+      .select("ord", "name", "pk", "fks")
+      .collect().sortBy(_.getLong(0)).map { r =>
       val name = r.getString(1)
       val pk = r.getSeq[String](2)
       val fks = r.getSeq[scala.collection.Seq[String]](3)

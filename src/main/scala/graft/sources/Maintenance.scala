@@ -53,21 +53,21 @@ object Maintenance {
   //
   // Layout (a minimal table FORMAT, not just table ops):
   //   dir/
-  //     b00003_g000000001/part-*.parquet   immutable bucket-generation dirs
-  //     b00007_g000000002/...              (kb kept as a DATA column)
-  //     _manifests/v000000001.json         {"format":1,...,"buckets":{"3":"b00003_g000000001",...}}
+  //     b00003_g000000001-<pid>x<n>-<attempt>/part.snappy.parquet
+  //         immutable bucket-generation dirs, ONE key-sorted file each
+  //         (kb kept as a DATA column; d… = a merge-on-read delta)
+  //     _manifests/v000000001.json   {"format":1,...,"buckets":{"3":"b00003_g000000001-…",...}}
   //     _manifests/v000000002.json
   //
-  // A commit writes NEW bucket-generation dirs (never visible to any
-  // reader until committed — even S3A's copy-rename has no visibility
-  // window, because nothing references the paths yet) and then
-  // publishes ONE new manifest file. Readers resolve the latest
+  // A commit writes NEW bucket-generation dirs in place (invisible to
+  // readers: nothing references them yet) and then publishes ONE new
+  // manifest file, the only commit point. Readers resolve the latest
   // manifest and scan exactly the dirs it lists, so a reader racing a
   // writer sees either the old or the new COMPLETE snapshot — never a
   // missing bucket. Old snapshots stay readable (time travel) until
-  // `vacuumKeyed` garbage-collects their unreferenced dirs. Writers
-  // remain single-writer per table (manifest version allocation is
-  // not locked); readers need no coordination at all.
+  // `vacuumKeyed` garbage-collects their unreferenced dirs. Writers are
+  // optimistic: a losing manifest publish-if-absent recomputes against
+  // the winner's snapshot and retries. Readers need no coordination.
 
   /** The key-bucket column: md5-derived (portable, never tied to
     * Spark's internal hash), pure per-row — the same layout contract
@@ -157,8 +157,8 @@ object Maintenance {
     *  - `deltas`: per-bucket ordered MERGE-ON-READ delta dirs; readers
     *    resolve base ⊕ deltas (last-wins, max-seq-wins or
     *    re-aggregation) and compaction folds chains back into bases.
-    *  - `rows`: ROW count per referenced dir, from the staged parquet
-    *    footers — `keyedStats` and merge planning read the manifest
+    *  - `rows`: ROW count per referenced dir, from its parquet file's
+    *    footer — `keyedStats` and merge planning read the manifest
     *    instead of scanning the table.
     *  - `bytes`: on-disk BYTES per segment dir (segmented datasets) —
     *    the tiered-compaction input of `Search.compactIndex`.
@@ -364,14 +364,12 @@ object Maintenance {
 
   private val stageCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Generation dir names carry a WRITER-UNIQUE suffix so two
-    * concurrent writers staging the same version never collide on a
-    * rename — the manifest publish is then the ONLY contention point,
-    * and it is atomic (rename-if-absent).
+  /** The WRITER-UNIQUE suffix of generation dirs, segment dirs and
+    * manifest temps: two writers of the same version never share a
+    * path, so the atomic manifest publish is the ONLY contention point.
     */
-  private def bucketDirName(bucket: Int, version: Int): String =
-    f"b$bucket%05d_g$version%09d" +
-      s"-${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}"
+  private def uniqueSuffix(): String =
+    s"${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}"
 
   private val ManifestName = """v(\d{9})\.json""".r
   /** Union two snapshot schemas field-by-name (additive evolution:
@@ -468,7 +466,7 @@ object Maintenance {
     val body = KeyedManifest.encode(
       m.copy(tsMillis = System.currentTimeMillis()))
     val tmp = new Path(md,
-      s".tmp_v${m.version}_${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}")
+      s".tmp_v${m.version}_${uniqueSuffix()}")
     val out = fs.create(tmp, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     if (!Fs.publishIfAbsent(fs, tmp, new Path(md, f"v${m.version}%09d.json")))
@@ -1071,26 +1069,22 @@ object Maintenance {
     if (manifestVersions(spark, dir).isEmpty) None
     else readManifest(spark, dir).txn.get(appId)
 
-  /** Row count + per-column MIN/MAX zone maps of the parquet files
-    * directly under `dir`, from the file FOOTERS alone — no Spark job,
-    * no data pages read. This is how staged dirs report into the
-    * manifest `rows`/`colstats` maps: O(files) metadata reads at
-    * commit time buy every later `keyedStats`/`readKeyedRange`/
+  /** Row count + per-column MIN/MAX zone maps of the parquet `file`,
+    * from its FOOTER alone. The task that wrote a generation file reads
+    * it this way into the manifest `rows`/`colstats` maps: one metadata
+    * read at commit time buys every later `keyedStats`/`readKeyedRange`/
     * planning call an O(manifest) answer.
     *
-    * A column's stats land only when EVERY file+row-group in the dir
+    * A column's stats land only when EVERY row group in the file
     * carries usable parquet statistics of the expected physical type
     * (a missing/unsupported chunk makes the whole dir unprunable for
     * that column — pruning must never be a guess). Supported Spark
     * types: integral, float/double, string, date, timestamp
     * (INT64-micros layout).
     */
-  private def footerInfo(spark: SparkSession, dir: Path,
-                         statsCols: Seq[String])
+  private def footerInfo(conf: org.apache.hadoop.conf.Configuration,
+                         file: Path, statsCols: Seq[String])
       : (Long, Map[String, (String, String)]) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = hadoopFs(spark, dir)
-    var rows = 0L
     // per-column fold: cur = running (min, max) over usable chunks;
     // failed = some chunk carried rows but no usable stats (the dir is
     // then unprunable for that column). A file MISSING the column
@@ -1099,41 +1093,36 @@ object Maintenance {
     val cur = scala.collection.mutable.Map
       .empty[String, (Comparable[Any], Comparable[Any])]
     val failed = scala.collection.mutable.Set.empty[String]
-    fs.listStatus(dir).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet")).foreach { st =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf))
-        try {
-          rows += rd.getRecordCount
-          rd.getFooter.getBlocks.forEach { blk =>
-            blk.getColumns.forEach { cc =>
-              val c = cc.getPath.toDotString
-              if (statsCols.contains(c) && !failed(c)) {
-                val s = cc.getStatistics
-                if (s != null && !s.isEmpty && !s.hasNonNullValue &&
-                    s.getNumNulls == blk.getRowCount) {
-                  // all-null chunk: contributes nothing, fails nothing
-                } else if (s == null || s.isEmpty || !s.hasNonNullValue ||
-                    !supportedStat(cc)) {
-                  failed += c; cur -= c
-                } else {
-                  val mn = s.genericGetMin.asInstanceOf[Comparable[Any]]
-                  val mx = s.genericGetMax.asInstanceOf[Comparable[Any]]
-                  cur(c) = cur.get(c) match {
-                    case None => (mn, mx)
-                    case Some((a, b)) => (
-                      if (mn.compareTo(a) < 0) mn else a,
-                      if (mx.compareTo(b) > 0) mx else b)
-                  }
-                }
+    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try {
+      rd.getFooter.getBlocks.forEach { blk =>
+        blk.getColumns.forEach { cc =>
+          val c = cc.getPath.toDotString
+          if (statsCols.contains(c) && !failed(c)) {
+            val s = cc.getStatistics
+            if (s != null && !s.isEmpty && !s.hasNonNullValue &&
+                s.getNumNulls == blk.getRowCount) {
+              // all-null chunk: contributes nothing, fails nothing
+            } else if (s == null || s.isEmpty || !s.hasNonNullValue ||
+                !supportedStat(cc)) {
+              failed += c; cur -= c
+            } else {
+              val mn = s.genericGetMin.asInstanceOf[Comparable[Any]]
+              val mx = s.genericGetMax.asInstanceOf[Comparable[Any]]
+              cur(c) = cur.get(c) match {
+                case None => (mn, mx)
+                case Some((a, b)) => (
+                  if (mn.compareTo(a) < 0) mn else a,
+                  if (mx.compareTo(b) > 0) mx else b)
               }
             }
           }
-        } finally rd.close()
+        }
       }
-    (rows, cur.toMap.map { case (c, (mn, mx)) =>
-      c -> (statEncode(mn), statEncode(mx)) })
+      (rd.getRecordCount, cur.toMap.map { case (c, (mn, mx)) =>
+        c -> (statEncode(mn), statEncode(mx)) })
+    } finally rd.close()
   }
 
   /** Usable physical layouts for zone-map stats: plain primitives and
@@ -1171,33 +1160,19 @@ object Maintenance {
     case x => x.toString
   }
 
-  /** Footer info for many staged dirs, opened in PARALLEL — a
-    * 32-bucket commit pays one footer round-trip, not 32 serial ones
-    * (measured: the serial loop added ~1s per commit on local disk;
-    * on an object store each open is a network round-trip).
-    */
-  private def footerInfoAll(spark: SparkSession, clean: String,
-                            dirs: Iterable[String], statsCols: Seq[String])
-      : (Map[String, Long], Map[String, Map[String, (String, String)]]) = {
-    import scala.collection.parallel.CollectionConverters._
-    val per = dirs.toSeq.par
-      .map(d => d -> footerInfo(spark, new Path(clean, d), statsCols))
-      .seq.toMap
-    (per.map { case (d, (n, _)) => d -> n },
-      per.collect { case (d, (_, cs)) if cs.nonEmpty => d -> cs })
-  }
-
   /** Write `withKb` (any frame carrying the int `kb` column) as one
-    * generation's bucket dirs: a staging job partitioned by a DUPLICATE
-    * of kb (so kb survives as a data column), then per-bucket renames
-    * into `b<bucket>_g<version>` names. The renames move dirs no reader
-    * can reference yet, so they need no atomicity; one file per bucket
-    * because the hash repartition puts each kb in exactly one task.
-    * Rows sort by key WITHIN each bucket, so the parquet row-group
-    * min/max stats on the key column are narrow and a point lookup's
-    * pushed IN-list skips most row groups inside the bucket too.
-    * Returns bucket → dir-name for the buckets that got any rows,
-    * plus dir-name → row count (from the staged footers).
+    * generation's bucket dirs in ONE Spark job, each task writing its
+    * buckets straight to their final names: one key-sorted parquet file
+    * per bucket, `<prefix><bucket>_g<version>-<writer suffix>-<task
+    * attempt>/part<ext>`, whose footer rows and zone stats the task
+    * returns. No staging dir, committer or rename: nothing references
+    * the dirs until the caller's manifest publish, the only commit. A
+    * retried or speculative attempt writes its own dir; only the
+    * accepted attempt's result returns and vacuum reclaims the rest.
+    * The in-bucket key sort keeps the key column's row-group min/max
+    * narrow, so a point lookup's pushed IN-list skips most row groups.
+    * Returns bucket → dir for the buckets that got rows, dir → rows and
+    * dir → zone stats.
     */
   private def stageBuckets(spark: SparkSession, clean: String,
                            withKb: DataFrame, version: Int,
@@ -1207,16 +1182,13 @@ object Maintenance {
                            nBuckets: Int = 0)
       : (Map[Int, String], Map[String, Long],
          Map[String, Map[String, (String, String)]]) = {
-    val fs = hadoopFs(spark, new Path(clean))
-    // pid + counter: two concurrent writers IN THE SAME JVM (a CDC
-    // stream sink plus an ad-hoc merge) must never share a staging
-    // dir — the first's delete would wipe the second's in-flight job
-    val staging = new Path(clean +
-      s".staging_${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}")
-    fs.delete(staging, true)
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     // EXPLICIT partition count (r14): `repartition(col("kb"))` uses the
     // session shuffle-partition count, which AQE then coalesces — on a
-    // small commit the whole staging collapses to ONE task that writes
+    // small commit the whole write collapses to ONE task that writes
     // every bucket file serially (measured: a 548 ms single-task write
     // after each 32-task map in x144). An explicit count is exempt
     // from AQE coalescing, so each bucket's file writes in its own
@@ -1227,22 +1199,41 @@ object Maintenance {
     val parts = math.max(1,
       if (nBuckets > 0) nBuckets
       else spark.sparkContext.defaultParallelism)
-    withKb.withColumn("__kbp", F.col("kb"))
-      .repartition(parts, F.col("kb"))
+    val qe = withKb.repartition(parts, F.col("kb"))
       .sortWithinPartitions(F.col("kb") +: keyCols.map(F.col): _*)
-      .write.mode("overwrite").partitionBy("__kbp").parquet(staging.toString)
-    fs.mkdirs(new Path(clean))
-    val out = fs.listStatus(staging).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("__kbp=")).map { src =>
-        val b = src.getName.stripPrefix("__kbp=").toInt
-        val name = prefix + bucketDirName(b, version).drop(1)
-        require(fs.rename(src, new Path(clean, name)),
-          s"bucket stage failed: $src -> $clean/$name")
-        b -> name
-      }.toMap
-    fs.delete(staging, true)
-    val (rows, cstats) = footerInfoAll(spark, clean, out.values, statsCols)
-    (out, rows, cstats)
+      .queryExecution
+    val suffix = uniqueSuffix()
+    val written = SQLExecution.withNewExecutionId(qe, Some("stageBuckets")) {
+      // the PHYSICAL output schema, as Spark's own file writer uses: its
+      // nullability is the optimized plan's (a folded cast is required)
+      val schema = qe.executedPlan.schema
+      val kbAt = schema.fieldIndex("kb")
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val writers = new ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, schema)
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        job.getConfiguration)
+      qe.toRdd.mapPartitions { rows =>
+        val ctx = new TaskAttemptContextImpl(conf.value, new TaskAttemptID())
+        val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
+        val it = rows.buffered
+        // one file per run of equal kb; each row is written before the
+        // next is read (the sort reuses its row object)
+        Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+          val b = it.head.getInt(kbAt)
+          val w = writers.newInstance(
+            f"$clean/$prefix$b%05d_g$version%09d-$suffix-$attempt/part" +
+              writers.getFileExtension(ctx), schema, ctx)
+          try while (it.hasNext && it.head.getInt(kbAt) == b) w.write(it.next())
+          finally w.close()
+          val (n, cs) = footerInfo(conf.value, new Path(w.path), statsCols)
+          (b, new Path(w.path).getParent.getName, n, cs)
+        }
+      }.collect()
+    }
+    (written.map(x => x._1 -> x._2).toMap,
+      written.map(x => x._2 -> x._3).toMap,
+      written.collect { case (_, d, _, cs) if cs.nonEmpty => d -> cs }.toMap)
   }
 
   /** A staged-but-uncommitted merge: every new bucket-generation dir is
@@ -1268,7 +1259,7 @@ object Maintenance {
     val (staged, stagedRows, stagedStats) = stageBuckets(spark, clean,
       merged, base.version + 1, base.keyCols, base.statsCols,
       nBuckets = base.nBuckets)
-    // a touched bucket absent from staging lost ALL its rows (delete
+    // a touched bucket that wrote no file lost ALL its rows (delete
     // path): it simply leaves the manifest
     val next = base.buckets -- touched ++ staged
     // a full merge of a bucket FOLDS its delta chain into the new
@@ -1306,8 +1297,8 @@ object Maintenance {
     * Later duplicate keys WITHIN the batch are the caller's contract
     * to avoid (both copies land, same as inserting twice).
     * CONCURRENT WRITERS are safe on any FS with atomic
-    * rename-if-absent (HDFS/local; object stores need a conditional
-    * PUT): staged dirs are writer-unique, the manifest publish is the
+    * publish-if-absent (HDFS/local; object stores need a conditional
+    * PUT): generation dirs are writer-unique, the manifest publish is the
     * only contention point, and a losing writer transparently
     * recomputes its merge against the winner's snapshot and retries.
     */
@@ -1813,6 +1804,8 @@ object Maintenance {
     val touched = staged.keys.toSeq.sorted
     if (touched.isEmpty) return
     val guard = spark.read
+      .schema(org.apache.spark.sql.types.StructType(
+        keyCols.map(c => withKb.schema(c))))
       .parquet(staged.values.toSeq.sorted.map(d => s"$clean/$d"): _*)
       .agg(F.count(F.lit(1)).as("n"),
         // the key as ONE struct: a multi-column count_distinct skips
@@ -1895,11 +1888,15 @@ object Maintenance {
     val m = readManifest(spark, dir)
     require(m.nBuckets > 0, s"$clean has no keyed metadata")
     val fs = hadoopFs(spark, new Path(clean))
-    m.liveBuckets().map { b =>
-      b -> m.dirsOf(b).map(d =>
-        fs.getContentSummary(new Path(clean, d)).getLength).sum
-    }.filter(_._2 > targetBytes).sortBy(-_._2)
+    m.liveBuckets().map(b => b -> leafBytes(fs, clean, m, b))
+      .filter(_._2 > targetBytes).sortBy(-_._2)
   }
+
+  /** A leaf's live bytes: its base generation + delta chain. */
+  private def leafBytes(fs: org.apache.hadoop.fs.FileSystem, clean: String,
+                        m: KeyedManifest, b: Int): Long =
+    m.dirsOf(b).map(d =>
+      fs.getContentSummary(new Path(clean, d)).getLength).sum
 
   /** MERGE PLANNING (the contraction twin of `splitCandidates`, zero
     * data IO): the sibling leaf PAIRS whose combined live bytes fell
@@ -1921,9 +1918,7 @@ object Maintenance {
     require(m.nBuckets > 0, s"$clean has no keyed metadata")
     val n = m.nBuckets
     val fs = hadoopFs(spark, new Path(clean))
-    def bytes(b: Int): Long =
-      m.dirsOf(b)
-        .map(d => fs.getContentSummary(new Path(clean, d)).getLength).sum
+    def bytes(b: Int): Long = leafBytes(fs, clean, m, b)
     m.depths.toSeq
       // the LOW sibling names the pair (parent id = its own id); the
       // high sibling must be a leaf at the SAME depth (one side split
@@ -2295,8 +2290,7 @@ object Maintenance {
     * dirs whose manifest publish has not landed yet (without it, a
     * vacuum racing a commit would delete dirs the imminent manifest
     * references). Crashed-writer residue — orphaned `.tmp_*` manifest
-    * files and `<table>.staging_*` sibling dirs — is reclaimed under
-    * the same age rule.
+    * files — is reclaimed under the same age rule.
     */
   def vacuumKeyed(spark: SparkSession, dir: String,
                   keepVersions: Int = 1,
@@ -2448,19 +2442,13 @@ object Maintenance {
           }
         }
         .foreach(s => fs.delete(s.getPath, false))
-    // crashed-writer residue: manifest temps + staging siblings
+    // crashed-writer residue: manifest temps
     val md = manifestDir(clean)
     if (fs.exists(md))
       fs.listStatus(md).toSeq
         .filter(s => s.getPath.getName.startsWith(".tmp_") &&
           s.getModificationTime < cutoff)
         .foreach(s => fs.delete(s.getPath, false))
-    val parent = p.getParent
-    if (parent != null && fs.exists(parent))
-      fs.listStatus(parent).toSeq
-        .filter(s => s.getPath.getName.startsWith(p.getName + ".staging_") &&
-          s.getModificationTime < cutoff)
-        .foreach(s => fs.delete(s.getPath, true))
   }
 
   /** Layout report over any frame carrying a partition/bucket column:
@@ -2709,8 +2697,7 @@ object Maintenance {
   private[graft] def nextSegmentName(spark: SparkSession,
                                      dir: String): String = {
     val v = manifestVersions(spark, dir).lastOption.getOrElse(0) + 1
-    f"s$v%09d" +
-      s"-${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}"
+    f"s$v%09d-${uniqueSuffix()}"
   }
 
   /** Publish the manifest adding `segDir` (an already-staged dir name

@@ -238,4 +238,28 @@ class JoinsCatalogSpec extends SparkSpec {
     val ids = cat.get("m").df.select("id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == (1L to 20L))
   }
+
+  test("attaching a fresh database dir runs no failing query") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val failures, successes = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        successes.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = failures.incrementAndGet()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_fresh").toString
+    spark.listenerManager.register(listener)
+    try {
+      assert(new Catalog(spark).attach(dir).isEmpty)
+      // listener events arrive in order: once this action's success is
+      // seen, any failure the attach posted has been seen too
+      spark.range(1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (successes.get == 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(successes.get > 0 && failures.get == 0)
+  }
 }

@@ -1652,4 +1652,53 @@ class MaintenanceSpec extends SparkSpec {
       "18" -> 1, "19" -> 0, "20" -> 0, "21" -> 2, "22" -> 2, "23" -> 2),
       s"split layout: $split")
   }
+
+  test("writer contract: each manifest dir is one key-sorted file whose footer is the manifest's rows and zone stats") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val M = Maintenance
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = tmp("graft_contract")
+    M.writeKeyed(spark.range(0, 300).select(col("id").as("k"),
+      (col("id") * 37 % 101).as("v")), dir, Seq("k"), 4, statsCols = Seq("v"))
+    M.upsertKeyed(spark, dir, spark.range(250, 320)
+      .select(col("id").as("k"), (col("id") % 7).as("v")), Seq("k"), 4)
+    M.appendDeltaKeyed(spark, dir, spark.range(310, 360)
+      .select(col("id").as("k"), (col("id") * 2).as("v")), "k", 4)
+    val m = M.readManifest(spark, dir)
+    val dirs = m.buckets.values.toSeq ++ m.deltas.values.flatten
+    assert(dirs.exists(_.startsWith("d")), s"a delta dir is listed: $dirs")
+    dirs.foreach { d =>
+      val p = new Path(dir, d)
+      val files = p.getFileSystem(conf).listStatus(p).toSeq
+        .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"$d holds one parquet file: $files")
+      val ks = spark.read.parquet(files.head.toString).select("k")
+        .collect().map(_.getLong(0)).toSeq
+      assert(ks.nonEmpty && ks == ks.sorted, s"$d rows sorted by key: $ks")
+      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(files.head, conf))
+      try {
+        assert(m.rows(d) == rd.getRecordCount, s"$d rows")
+        val vs = rd.getFooter.getBlocks.toArray.toSeq.flatMap { b =>
+          b.asInstanceOf[org.apache.parquet.hadoop.metadata.BlockMetaData]
+            .getColumns.toArray.toSeq.map(_.asInstanceOf[
+              org.apache.parquet.hadoop.metadata.ColumnChunkMetaData])
+            .filter(_.getPath.toDotString == "v").map(_.getStatistics)
+        }
+        val mn = vs.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min
+        val mx = vs.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max
+        assert(m.colStats(d) == Map("v" -> (mn.toString, mx.toString)),
+          s"$d zone stats")
+      } finally rd.close()
+    }
+    // a write failing in its tasks (a NULL key on a row table; a range,
+    // not a local relation, so the optimizer cannot fail it first)
+    // leaves nothing beside the table dir
+    val parent = tmp("graft_nullkey")
+    intercept[Exception](M.writeKeyed(spark.range(0, 40).select(
+      when(col("id") =!= 17, col("id")).as("k"), col("id").as("v")),
+      s"$parent/t", "k", 4))
+    assert(new java.io.File(parent).list().toSeq.filterNot(_ == "t").isEmpty)
+  }
 }
