@@ -338,11 +338,12 @@ final class Catalog(val spark: SparkSession) {
     val md = new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest")
     // no non-empty part file: no saved catalog (or one of no tables),
     // attach fresh (like connecting to a new database file — commit()
-    // will create it)
-    val saved = graft.sources.Fs.listOrEmpty(
+    // will create it). Read the part files: a `_` dir path is hidden
+    val parts = graft.sources.Fs.listOrEmpty(
         md.getFileSystem(spark.sparkContext.hadoopConfiguration), md)
-      .exists(s => s.getPath.getName.startsWith("part-") && s.getLen > 0)
-    val names = if (!saved) Seq.empty else spark.read.json(md.toString)
+      .filter(s => s.getPath.getName.startsWith("part-") && s.getLen > 0)
+      .map(_.getPath.toString)
+    val names = if (parts.isEmpty) Seq.empty else spark.read.json(parts: _*)
       .select("ord", "name", "pk", "fks")
       .collect().sortBy(_.getLong(0)).map { r =>
       val name = r.getString(1)

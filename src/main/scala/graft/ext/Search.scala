@@ -362,7 +362,8 @@ object Search {
         .map { f =>
           val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(f, conf))
+              .fromStatus(f, conf),
+            org.apache.parquet.HadoopReadOptions.builder(conf).build())
           try rd.getFooter.getFileMetaData.getSchema
             .getFields.asScala.exists(_.getName == "positions")
           finally rd.close()

@@ -292,7 +292,6 @@ object Lexer {
         out += TIdent("on", i)
         i += 3
       } else {
-        val two = if (i + 2 <= n) src.substring(i, math.min(i + 3, n)) else ""
         multiOps.find(op => src.startsWith(op, i)) match {
           case Some(op) => out += TOp(op, i); i += op.length
           case None =>

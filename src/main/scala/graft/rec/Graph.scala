@@ -411,7 +411,6 @@ object Graph {
   }
 
   def triangles(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
     // normalize: undirected, simple (a < b), deduped
     val und = materialize(
       edges.select(F.least(F.col("src"), F.col("dst")).as("a"),

@@ -1021,8 +1021,8 @@ object Maintenance {
           .filterNot(s => s.getPath.getName == "_manifests" ||
             s.getPath.getName.matches("""[bd]\d{5}_g\d{9}(-.*)?"""))
           .foreach(s => fs.delete(s.getPath, true))
-      val (staged, rows, cstats) = stageBuckets(spark, clean, withKb, 1,
-        keyCols, statsCols, nBuckets = nBuckets)
+      val (staged, rows, cstats, _) = stageBuckets(spark, clean, withKb, 1,
+        keyCols, statsCols, nBuckets)
       try writeManifest(spark, clean, KeyedManifest(1, staged, keyCol,
         nBuckets, withKb.schema.toDDL, rows = rows,
         statsCols = statsCols, colStats = cstats, resolve = resolve,
@@ -1049,8 +1049,8 @@ object Maintenance {
       // generations vacuum away later
       withCommitRetry(s"writeKeyed($dir)") {
         val m = readManifest(spark, dir)
-        val (staged, rows, cstats) = stageBuckets(spark, clean, withKb,
-          m.version + 1, keyCols, statsCols, nBuckets = nBuckets)
+        val (staged, rows, cstats, _) = stageBuckets(spark, clean, withKb,
+          m.version + 1, keyCols, statsCols, nBuckets)
         writeManifest(spark, clean, KeyedManifest(m.version + 1, staged,
           keyCol, nBuckets, withKb.schema.toDDL, rows = rows,
           statsCols = statsCols, colStats = cstats, resolve = resolve,
@@ -1070,10 +1070,11 @@ object Maintenance {
     else readManifest(spark, dir).txn.get(appId)
 
   /** Row count + per-column MIN/MAX zone maps of the parquet `file`,
-    * from its FOOTER alone. The task that wrote a generation file reads
-    * it this way into the manifest `rows`/`colstats` maps: one metadata
-    * read at commit time buys every later `keyedStats`/`readKeyedRange`/
-    * planning call an O(manifest) answer.
+    * from its FOOTER alone, with read options built from `conf`. The
+    * task that wrote a generation file reads it this way into the
+    * manifest `rows`/`colstats` maps: one metadata read at commit time
+    * buys every later `keyedStats`/`readKeyedRange`/planning call an
+    * O(manifest) answer.
     *
     * A column's stats land only when EVERY row group in the file
     * carries usable parquet statistics of the expected physical type
@@ -1093,8 +1094,10 @@ object Maintenance {
     val cur = scala.collection.mutable.Map
       .empty[String, (Comparable[Any], Comparable[Any])]
     val failed = scala.collection.mutable.Set.empty[String]
+    // the one-argument open re-parses the default XML confs per call
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     try {
       rd.getFooter.getBlocks.forEach { blk =>
         blk.getColumns.forEach { cc =>
@@ -1171,35 +1174,29 @@ object Maintenance {
     * accepted attempt's result returns and vacuum reclaims the rest.
     * The in-bucket key sort keeps the key column's row-group min/max
     * narrow, so a point lookup's pushed IN-list skips most row groups.
-    * Returns bucket → dir for the buckets that got rows, dir → rows and
-    * dir → zone stats.
+    * The same sort makes equal keys adjacent: each task counts the rows
+    * whose key repeats the previous row's under the sort's null-safe
+    * ordering (n − distinct keys). Returns bucket → dir for the buckets
+    * that got rows, dir → rows, dir → zone stats and that count.
     */
   private def stageBuckets(spark: SparkSession, clean: String,
                            withKb: DataFrame, version: Int,
                            keyCols: Seq[String],
-                           statsCols: Seq[String] = Seq.empty,
-                           prefix: Char = 'b',
-                           nBuckets: Int = 0)
+                           statsCols: Seq[String], nBuckets: Int,
+                           prefix: Char = 'b')
       : (Map[Int, String], Map[String, Long],
-         Map[String, Map[String, (String, String)]]) = {
+         Map[String, Map[String, (String, String)]], Long) = {
     import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
     import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.catalyst.{InternalRow, expressions => E}
     import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    // EXPLICIT partition count (r14): `repartition(col("kb"))` uses the
-    // session shuffle-partition count, which AQE then coalesces — on a
-    // small commit the whole write collapses to ONE task that writes
-    // every bucket file serially (measured: a 548 ms single-task write
-    // after each 32-task map in x144). An explicit count is exempt
-    // from AQE coalescing, so each bucket's file writes in its own
-    // task. `parts` = the table's bucket count when the caller knows
-    // it (one task ≈ one bucket, the rewrite-unit contract — at any
-    // scale a bucket is one sorted file written by one task); hash
-    // collisions between bucket ids just stack two buckets in a task.
-    val parts = math.max(1,
-      if (nBuckets > 0) nBuckets
-      else spark.sparkContext.defaultParallelism)
-    val qe = withKb.repartition(parts, F.col("kb"))
+    // EXPLICIT partition count (r14): AQE coalesces the session count,
+    // so a small commit wrote every bucket file serially in ONE task
+    // (548 ms after each 32-task map in x144); an explicit count is
+    // exempt. One partition per table bucket: one task ≈ one bucket
+    // (colliding bucket ids just share a task).
+    val qe = withKb.repartition(nBuckets, F.col("kb"))
       .sortWithinPartitions(F.col("kb") +: keyCols.map(F.col): _*)
       .queryExecution
     val suffix = uniqueSuffix()
@@ -1208,32 +1205,47 @@ object Maintenance {
       // nullability is the optimized plan's (a folded cast is required)
       val schema = qe.executedPlan.schema
       val kbAt = schema.fieldIndex("kb")
+      val keyOrd = new E.InterpretedOrdering(keyCols.map(c => E.SortOrder(
+        E.BoundReference(schema.fieldIndex(c), schema(c).dataType, true),
+        E.Ascending)))
       val job = Job.getInstance(spark.sessionState.newHadoopConf())
       val writers = new ParquetFileFormat()
         .prepareWrite(spark, job, Map.empty, schema)
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        job.getConfiguration)
-      qe.toRdd.mapPartitions { rows =>
-        val ctx = new TaskAttemptContextImpl(conf.value, new TaskAttemptID())
+      // one broadcast per write: in the closure every task deserializes it
+      val conf = spark.sparkContext.broadcast(
+        new org.apache.spark.util.SerializableConfiguration(
+          job.getConfiguration))
+      try qe.toRdd.mapPartitions { rows =>
+        val ctx = new TaskAttemptContextImpl(conf.value.value,
+          new TaskAttemptID())
         val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
         val it = rows.buffered
         // one file per run of equal kb; each row is written before the
-        // next is read (the sort reuses its row object)
+        // next is read (the sort reuses its row object: keep a copy)
         Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
           val b = it.head.getInt(kbAt)
           val w = writers.newInstance(
             f"$clean/$prefix$b%05d_g$version%09d-$suffix-$attempt/part" +
               writers.getFileExtension(ctx), schema, ctx)
-          try while (it.hasNext && it.head.getInt(kbAt) == b) w.write(it.next())
-          finally w.close()
-          val (n, cs) = footerInfo(conf.value, new Path(w.path), statsCols)
-          (b, new Path(w.path).getParent.getName, n, cs)
+          var prev: InternalRow = null
+          var repeats = 0L
+          try while (it.hasNext && it.head.getInt(kbAt) == b) {
+            val r = it.next()
+            if (prev != null && keyOrd.compare(r, prev) == 0) repeats += 1
+            w.write(r)
+            prev = r.copy()
+          } finally w.close()
+          val (n, cs) = footerInfo(conf.value.value, new Path(w.path),
+            statsCols)
+          (b, new Path(w.path).getParent.getName, n, cs, repeats)
         }
       }.collect()
+      finally conf.destroy()
     }
     (written.map(x => x._1 -> x._2).toMap,
       written.map(x => x._2 -> x._3).toMap,
-      written.collect { case (_, d, _, cs) if cs.nonEmpty => d -> cs }.toMap)
+      written.collect { case (_, d, _, cs, _) if cs.nonEmpty => d -> cs }.toMap,
+      written.map(_._5).sum)
   }
 
   /** A staged-but-uncommitted merge: every new bucket-generation dir is
@@ -1256,9 +1268,8 @@ object Maintenance {
     // would silently drop that writer's changes. Targeting base+1
     // makes the manifest rename fail instead (CommitConflict → the
     // caller recomputes against the fresh snapshot).
-    val (staged, stagedRows, stagedStats) = stageBuckets(spark, clean,
-      merged, base.version + 1, base.keyCols, base.statsCols,
-      nBuckets = base.nBuckets)
+    val (staged, stagedRows, stagedStats, _) = stageBuckets(spark, clean,
+      merged, base.version + 1, base.keyCols, base.statsCols, base.nBuckets)
     // a touched bucket that wrote no file lost ALL its rows (delete
     // path): it simply leaves the manifest
     val next = base.buckets -- touched ++ staged
@@ -1328,6 +1339,21 @@ object Maintenance {
     mergeKeyed(spark, dir, None, Some(keys.select(keyCols.map(F.col): _*)),
       keyCols, nBuckets)
 
+  /** `df` with its `kb` column, frozen, and the sorted buckets it
+    * touches. A LocalRelation (rows built on the driver: the language,
+    * toDF) is already frozen and its kb collect runs with no job.
+    */
+  private def hashedBatch(df: DataFrame, kbCol: Column)
+      : (DataFrame, Seq[Int]) = {
+    val h = df.withColumn("kb", kbCol)
+    val (frozen, kbs) = df.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        (h, h.select("kb"))
+      case _ => val c = h.localCheckpoint(); (c, c.select("kb").distinct())
+    }
+    (frozen, kbs.collect().map(_.getInt(0)).distinct.sorted.toSeq)
+  }
+
   /** The ONE merge body behind upsert, delete, and the CDC batch sink:
     * upserts and deletes land in a SINGLE staged commit (one manifest
     * publish), so a reader racing a tombstone-carrying batch never
@@ -1340,24 +1366,19 @@ object Maintenance {
     // the bucket function derives from the CURRENT layout (the depth
     // map is manifest metadata, r11) — read it before hashing the batch
     val m0 = readManifest(spark, dir)
-    // fail the seq-resolved refusal BEFORE the batch checkpoint/probe
-    // jobs (readTouched re-checks inside the retry as defense): a
-    // caller probing the guard paid ~3 Spark jobs for a driver-side
-    // answer the manifest already holds
+    // refuse a seq-resolved table BEFORE any batch job: the manifest
+    // holds the answer (readTouched re-checks inside the retry)
     require(m0.seqCol.isEmpty,
       s"${cleanDir(dir)} resolves by sequence column '${m0.seqCol}' — " +
         "upsert/delete/CoW-merge are batch-wins and would break it; " +
         "append stamped deltas instead (appendDeltaKeyed) and compact")
     val depths0 = m0.depths
-    val up = updates.map(_.withColumn("kb",
-        kb(keyCols, nBuckets, m0.resolve, depths0))
-      .localCheckpoint())
-    val dk = deleteKeys.map(_.select(keyCols.map(F.col): _*)
-      .withColumn("kb", kb(keyCols, nBuckets, m0.resolve, depths0))
-      .localCheckpoint())
-    val touched = (up.toSeq ++ dk.toSeq)
-      .flatMap(_.select("kb").distinct().collect().map(_.getInt(0)))
-      .distinct.sorted
+    val kbCol = kb(keyCols, nBuckets, m0.resolve, depths0)
+    val upT = updates.map(hashedBatch(_, kbCol))
+    val dkT = deleteKeys.map(k =>
+      hashedBatch(k.select(keyCols.map(F.col): _*), kbCol))
+    val (up, dk) = (upT.map(_._1), dkT.map(_._1))
+    val touched = (upT.toSeq ++ dkT.toSeq).flatMap(_._2).distinct.sorted
     if (touched.isEmpty) return
     withCommitRetry(s"mergeKeyed($dir)") {
       // ONE manifest read per attempt, threaded through base read AND
@@ -1426,36 +1447,18 @@ object Maintenance {
                             cond: Column,
                             seq: Option[Column] = None): Long = {
     val clean = cleanDir(dir)
-    val m = readManifest(spark, dir)
-    require(m.nBuckets > 0, s"$clean has no keyed metadata")
-    require(m.resolve != "agg",
-      s"$clean is an agg state — DML runs against its BASE table")
-    require(m.seqCol.isEmpty || seq.isDefined,
-      s"$clean resolves by sequence column '${m.seqCol}' — a delta " +
-        "delete must STAMP its tombstones (pass seq = the statement's " +
-        "sequence value) or unstamped rows would outlive it")
-    // the inverse confusion fails loudly too: a stamp on a NON-seq
-    // table would be silently ignored (chain-order semantics) and the
-    // caller would believe out-of-order safety they don't have
-    require(seq.isEmpty || m.seqCol.nonEmpty,
-      s"deleteKeyedWhereDelta($clean): a seq stamp was passed but the " +
-        "table is not sequence-resolved — declare the seq column at " +
-        "the first delta append, or drop the stamp")
+    val m = deltaDmlTarget(spark, clean, seq, "deleteKeyedWhereDelta")
+    // the read is pinned to m.version, so it evaluates once, inside the
+    // append's write, whose staged rows are the matches
     val hit = readKeyedWhere(spark, clean, cond,
       version = Some(m.version))
-    // small by construction (matching KEYS only) — checkpoint so the
-    // count and the append's own jobs don't re-run the pruned resolve
     val keys = seq match {
       case Some(sc) if m.seqCol.nonEmpty =>
         hit.select(m.keyCols.map(F.col) :+ sc.as(m.seqCol): _*)
       case _ => hit.select(m.keyCols.map(F.col): _*)
     }
-    val tk = keys.localCheckpoint()
-    val matched = tk.count()
-    if (matched > 0L)
-      appendDeltaKeyedCols(spark, clean, hit.drop("kb").limit(0),
-        m.keyCols, m.nBuckets, tombstoneKeys = Some(tk))
-    matched
+    appendDelta(spark, clean, hit.drop("kb").limit(0), m.keyCols,
+      m.nBuckets, tombstoneKeys = Some(keys))
   }
 
   /** MERGE-ON-READ predicate update: the matching rows (as of the
@@ -1473,18 +1476,7 @@ object Maintenance {
                             seq: Option[Column] = None): Long = {
     require(assignments.nonEmpty, "updateKeyedWhereDelta: no assignments")
     val clean = cleanDir(dir)
-    val m = readManifest(spark, dir)
-    require(m.nBuckets > 0, s"$clean has no keyed metadata")
-    require(m.resolve != "agg",
-      s"$clean is an agg state — DML runs against its BASE table")
-    require(m.seqCol.isEmpty || seq.isDefined,
-      s"$clean resolves by sequence column '${m.seqCol}' — a delta " +
-        "update must STAMP its rows (pass seq) or stored rows outrank " +
-        "them")
-    require(seq.isEmpty || m.seqCol.nonEmpty,
-      s"updateKeyedWhereDelta($clean): a seq stamp was passed but the " +
-        "table is not sequence-resolved — declare the seq column at " +
-        "the first delta append, or drop the stamp")
+    val m = deltaDmlTarget(spark, clean, seq, "updateKeyedWhereDelta")
     assignments.foreach { case (c, _) =>
       require(!m.keyCols.contains(c),
         s"updateKeyedWhereDelta cannot reassign key column '$c'")
@@ -1494,20 +1486,38 @@ object Maintenance {
         s"updateKeyedWhereDelta: '$c' is not a column of $clean")
     }
     // every row of the pruned read MATCHES cond, so assignments apply
-    // unconditionally; a seq stamp overwrites the row's seq column
+    // unconditionally; a seq stamp overwrites the row's seq column. The
+    // pinned read evaluates once, inside the append's write
     val hit = readKeyedWhere(spark, clean, cond,
       version = Some(m.version)).drop("kb")
     val stamped = (seq, Option(m.seqCol).filter(_.nonEmpty)) match {
       case (Some(sv), Some(sc)) => assignments.toMap + (sc -> sv)
       case _ => assignments.toMap
     }
-    val updated = hit.select(hit.columns.toSeq.map { c =>
+    appendDelta(spark, clean, hit.select(hit.columns.toSeq.map { c =>
       stamped.get(c).map(_.as(c)).getOrElse(F.col(c))
-    }: _*).localCheckpoint()
-    val matched = updated.count()
-    if (matched > 0L)
-      appendDeltaKeyedCols(spark, clean, updated, m.keyCols, m.nBuckets)
-    matched
+    }: _*), m.keyCols, m.nBuckets)
+  }
+
+  /** The manifest delta DML `op` appends to. Refused: agg states, no
+    * stamp on a seq-resolved table (stored rows would outrank it), and a
+    * stamp on any other (chain order would silently ignore it).
+    */
+  private def deltaDmlTarget(spark: SparkSession, clean: String,
+                             seq: Option[Column], op: String)
+      : KeyedManifest = {
+    val m = readManifest(spark, clean)
+    require(m.nBuckets > 0, s"$clean has no keyed metadata")
+    require(m.resolve != "agg",
+      s"$clean is an agg state — DML runs against its BASE table")
+    require(m.seqCol.isEmpty || seq.isDefined,
+      s"$clean resolves by sequence column '${m.seqCol}' — $op must " +
+        "STAMP its rows (pass seq = the statement's sequence value)")
+    require(seq.isEmpty || m.seqCol.nonEmpty,
+      s"$op($clean): a seq stamp was passed but the table is not " +
+        "sequence-resolved — declare the seq column at the first delta " +
+        "append, or drop the stamp")
+    m
   }
 
   private def dmlKeyedWhere(spark: SparkSession, dir: String,
@@ -1628,11 +1638,8 @@ object Maintenance {
       if (manifestVersions(spark, dir).isEmpty) None
       else Some(readManifest(spark, dir))
     val depths0 = m0.fold(Map.empty[Int, Int])(_.depths)
-    val reduced = reduced0.withColumn("kb",
-        kb(keyCols, nBuckets, m0.fold("")(_.resolve), depths0))
-      .localCheckpoint()
-    val touched = reduced.select("kb").distinct().collect()
-      .map(_.getInt(0)).sorted.toSeq
+    val (reduced, touched) = hashedBatch(reduced0,
+      kb(keyCols, nBuckets, m0.fold("")(_.resolve), depths0))
     if (touched.isEmpty) return
     def split(last: DataFrame): (DataFrame, Option[DataFrame]) =
       deleteCol match {
@@ -1742,7 +1749,17 @@ object Maintenance {
                            keyCols: Seq[String], nBuckets: Int,
                            tombstoneKeys: Option[DataFrame] = None,
                            txn: Map[String, Long] = Map.empty,
-                           seqCol: Option[String] = None): Unit = {
+                           seqCol: Option[String] = None): Unit =
+    appendDelta(spark, dir, updates, keyCols, nBuckets, tombstoneKeys, txn,
+      seqCol)
+
+  /** `appendDeltaKeyedCols`, returning the rows it staged. */
+  private[graft] def appendDelta(spark: SparkSession, dir: String,
+                                 updates: DataFrame,
+                                 keyCols: Seq[String], nBuckets: Int,
+                                 tombstoneKeys: Option[DataFrame] = None,
+                                 txn: Map[String, Long] = Map.empty,
+                                 seqCol: Option[String] = None): Long = {
     val clean = cleanDir(dir)
     val keyCol = keyCols.mkString(",")
     val m0 = readManifest(spark, dir)
@@ -1787,36 +1804,20 @@ object Maintenance {
         s"caller passed ($keyCol, $nBuckets)")
     val withKb = all.withColumn("kb",
       kb(keyCols, nBuckets, m0.resolve, m0.depths))
-    // Stage FIRST — the batch evaluates exactly ONCE, into the staged
-    // files (pre-r14 this was localCheckpoint + a probe aggregate +
-    // the staging job: two extra passes over every delta batch). The
-    // touched-bucket set falls out of the staged dir names, and the
-    // unique-keys-per-call guard runs over the staged rows themselves
-    // (frozen on disk, so even a nondeterministic batch is checked
-    // against exactly what will commit). Duplicate keys at the same
-    // precedence level would have no resolution order, so the window's
-    // winner would be NONDETERMINISTIC; fail loudly before publishing
-    // (failed stagings are unreferenced and vacuum away like any
-    // losing commit attempt — deleted eagerly below anyway).
-    val (staged, stagedRows, stagedStats) = stageBuckets(spark, clean,
-      withKb, m0.version + 1, keyCols, m0.statsCols, prefix = 'd',
-      nBuckets = nBuckets)
-    val touched = staged.keys.toSeq.sorted
-    if (touched.isEmpty) return
-    val guard = spark.read
-      .schema(org.apache.spark.sql.types.StructType(
-        keyCols.map(c => withKb.schema(c))))
-      .parquet(staged.values.toSeq.sorted.map(d => s"$clean/$d"): _*)
-      .agg(F.count(F.lit(1)).as("n"),
-        // the key as ONE struct: a multi-column count_distinct skips
-        // rows with a NULL component, which would refuse an agg
-        // state's NULL group as a duplicate
-        F.count_distinct(F.struct(keyCols.map(F.col): _*)).as("nk")).head
-    if (guard.getLong(0) != guard.getLong(1)) {
+    // Stage FIRST: the batch evaluates exactly once, into the staged
+    // files, whose dir names give the touched buckets. The unique-keys-
+    // per-call guard is the write's own repeated-key count, over exactly
+    // the rows that would commit: duplicate keys at one precedence level
+    // have no resolution order, so refuse before publishing and delete
+    // the unreferenced stagings.
+    val (staged, stagedRows, stagedStats, repeats) = stageBuckets(spark,
+      clean, withKb, m0.version + 1, keyCols, m0.statsCols, nBuckets, 'd')
+    if (staged.isEmpty) return 0L
+    if (repeats != 0L) {
       val fs = hadoopFs(spark, new Path(clean))
       staged.values.foreach(d => fs.delete(new Path(clean, d), true))
       throw new IllegalArgumentException(
-        s"appendDeltaKeyed($clean): ${guard.getLong(0) - guard.getLong(1)} " +
+        s"appendDeltaKeyed($clean): $repeats " +
           "duplicate keys within one call — a delta level has no " +
           "intra-level resolution order; reduce the batch per key first " +
           "(cdcMergeKeyed does this by sequence)")
@@ -1842,6 +1843,7 @@ object Maintenance {
         colStats = m.colStats ++ stagedStats, txn = m.txn ++ txn,
         seqCol = seqEff.getOrElse(m.seqCol)))
     }
+    stagedRows.values.sum
   }
 
   /** Fold merge-on-read delta chains back into base generations: the
@@ -2980,11 +2982,8 @@ object Maintenance {
         txn = txn)
       return
     }
-    val withKb = partial
-      .withColumn("kb", kb(keys, m0.nBuckets, m0.resolve, m0.depths))
-      .localCheckpoint()
-    val touched = withKb.select("kb").distinct().collect()
-      .map(_.getInt(0)).sorted.toSeq
+    val (withKb, touched) = hashedBatch(partial,
+      kb(keys, m0.nBuckets, m0.resolve, m0.depths))
     if (touched.isEmpty) return
     withCommitRetry(s"mergeAggStateKeyed($dir)") {
       val m = readManifest(spark, dir)

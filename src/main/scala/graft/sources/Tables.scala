@@ -141,7 +141,6 @@ object Tables {
 
   /** Catalog introspection (reference pql_functions.py:786-828). */
   def tables(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     spark.catalog.listTables().select("name", "tableType", "isTemporary").toDF()
   }
 

@@ -1701,4 +1701,148 @@ class MaintenanceSpec extends SparkSpec {
       s"$parent/t", "k", 4))
     assert(new java.io.File(parent).list().toSeq.filterNot(_ == "t").isEmpty)
   }
+
+  // ---- the write's own duplicate guard, DML counts, job pins ---------------
+
+  test("in-write duplicate guard: a non-local batch's triple key is refused with 2, nothing left staged") {
+    val M = Maintenance
+    val dir = tmp("graft_dup3")
+    M.writeKeyed(spark.range(0, 10).select(col("id").as("k"),
+      col("id").as("v")), dir, "k", 4)
+    val before = new java.io.File(dir).list().toSet
+    // 40 distinct keys plus k=5 three times, over 4 input partitions
+    val batch = spark.range(0, 43, 1, 4).select(
+      when(col("id") >= 40, lit(5L)).otherwise(col("id") + 100).as("k"),
+      col("id").as("v"))
+    assert(batch.rdd.getNumPartitions == 4)
+    assert(!batch.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val err = intercept[IllegalArgumentException] {
+      M.appendDeltaKeyed(spark, dir, batch, "k", 4)
+    }
+    assert(err.getMessage.contains("): 2 duplicate keys"), err.getMessage)
+    assert(new java.io.File(dir).list().toSet == before,
+      "a refused append must leave no generation dir behind")
+    assert(M.readManifest(spark, dir).version == 1)
+  }
+
+  test("in-write duplicate guard: a composite-key repeat is refused, distinct tuples pass") {
+    val M = Maintenance
+    val dir = tmp("graft_dupc")
+    M.writeKeyed(spark.range(0, 20).select((col("id") % 5).as("a"),
+      (col("id") / 5).cast("long").as("b"), col("id").as("v")),
+      dir, Seq("a", "b"), 4)
+    val err = intercept[IllegalArgumentException] {
+      M.appendDeltaKeyedCols(spark, dir,
+        Seq((1L, 2L, 7L), (1L, 3L, 8L), (1L, 2L, 9L)).toDF("a", "b", "v"),
+        Seq("a", "b"), 4)
+    }
+    assert(err.getMessage.contains("): 1 duplicate keys"), err.getMessage)
+    // same `a`, different `b`: distinct keys, accepted
+    M.appendDeltaKeyedCols(spark, dir,
+      Seq((1L, 2L, 7L), (1L, 3L, 8L)).toDF("a", "b", "v"), Seq("a", "b"), 4)
+    val got = M.readKeyed(spark, dir).filter(col("a") === 1L)
+      .select("b", "v").collect().map(r => r.getLong(0) -> r.getLong(1))
+      .toMap
+    assert(got(2L) == 7L && got(3L) == 8L, got)
+  }
+
+  test("in-write duplicate guard: an agg-state delta append with NULL groups and unique keys is accepted") {
+    val M = Maintenance
+    val dir = tmp("graft_dup_aggnull")
+    val rows = Seq[(Option[String], Option[String], Double)](
+      (Some("x"), Some("p"), 1.0), (None, Some("p"), 2.0),
+      (Some("x"), None, 3.0), (None, None, 4.0))
+    M.buildAggStateKeyed(rows.toDF("g", "h", "v"), dir, Seq("g", "h"), "v",
+      nBuckets = 2)
+    // every group once, NULL components included: a guard that skipped
+    // NULL components (multi-column count_distinct) would refuse this
+    M.mergeAggStateKeyed(spark, dir, rows.toDF("g", "h", "v"),
+      Seq("g", "h"), "v", asDeltas = true)
+    val got = M.finalizeAgg(M.readAggStateKeyed(spark, dir), Seq("g", "h"))
+      .select("g", "h", "n").collect()
+      .map(r => (Option(r.getString(0)), Option(r.getString(1))) ->
+        r.getLong(2)).toMap
+    assert(got == rows.map(r => (r._1, r._2) -> 2L).toMap, got)
+  }
+
+  test("delta-mode DML returns the model's matched count for 0, 1 and many matches; zero matches publish nothing") {
+    val M = Maintenance
+    val dir = tmp("dml_counts")
+    M.writeKeyed(spark.range(0, 300).select(col("id").as("k"),
+      (col("id") % 7).cast("double").as("v")), dir, "k", 4)
+    var model = (0L until 300L).map(k => k -> (k % 7).toDouble).toMap
+    def table: Map[Long, Double] = M.readKeyed(spark, dir).select("k", "v")
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def version: Int = M.readManifest(spark, dir).version
+    // zero matches: 0 and no new version
+    val v0 = version
+    assert(M.deleteKeyedWhereDelta(spark, dir, col("k") > 1000L) == 0L)
+    assert(M.updateKeyedWhereDelta(spark, dir, col("v") > 100.0,
+      Seq("v" -> lit(1.0))) == 0L)
+    assert(version == v0, "a zero-match delta DML must not publish")
+    // one match each
+    assert(M.updateKeyedWhereDelta(spark, dir, col("k") === 7L,
+      Seq("v" -> lit(99.0))) == 1L)
+    model += 7L -> 99.0
+    assert(M.deleteKeyedWhereDelta(spark, dir, col("k") === 8L) == 1L)
+    model -= 8L
+    assert(table == model)
+    // many
+    val up = model.count(_._2 == 3.0).toLong
+    assert(up > 1L)
+    assert(M.updateKeyedWhereDelta(spark, dir, col("v") === 3.0,
+      Seq("v" -> (col("v") + 10.0))) == up)
+    model = model.map { case (k, v) => k -> (if (v == 3.0) v + 10.0 else v) }
+    val del = model.count(_._2 < 2.0).toLong
+    assert(del > 1L)
+    assert(M.deleteKeyedWhereDelta(spark, dir, col("v") < 2.0) == del)
+    model = model.filter(_._2 >= 2.0)
+    assert(table == model)
+    assert(version == v0 + 4)
+  }
+
+  /** Spark jobs `body` starts on this thread. */
+  private def jobsOf(body: => Unit): Int = {
+    val group = "graft-jobpin"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(
+              _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "keyed commit job pin")
+    try {
+      body
+      Thread.sleep(300) // let listener events drain
+      jobs.get
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("a local batch's delta append and upsert run a pinned number of Spark jobs") {
+    val M = Maintenance
+    val dir = tmp("graft_jobpin")
+    M.writeKeyed(spark.range(0, 100).select(col("id").as("k"),
+      col("id").as("v")), dir, "k", 4)
+    val append = jobsOf(M.appendDeltaKeyed(spark, dir,
+      Seq((3L, 30L), (50L, 500L), (200L, 2L)).toDF("k", "v"), "k", 4))
+    val upsert = jobsOf(M.upsertKeyed(spark, dir,
+      Seq((4L, 40L), (60L, 600L), (300L, 3L)).toDF("k", "v"), "k", 4))
+    // the stage job's two (shuffle map + write); the upsert adds the
+    // touched buckets' read and merge. A re-read duplicate guard, a
+    // batch checkpoint or a kb probe job would each raise these
+    assert(append == 2 && upsert == 5,
+      s"append ran $append jobs, upsert $upsert")
+    val got = M.readKeyed(spark, dir).select("k", "v").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (0L until 100L).map(k => k -> k).toMap ++
+      Map(3L -> 30L, 50L -> 500L, 200L -> 2L, 4L -> 40L, 60L -> 600L,
+        300L -> 3L))
+  }
 }
