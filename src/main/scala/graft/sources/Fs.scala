@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path,
+  RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem probes that resolve through the Hadoop `FileSystem` API,
@@ -69,6 +72,63 @@ object Fs {
         }
       else fs.rename(tmp, dst)
     } finally fs.delete(tmp, false)
+
+  /** `file:` is left to Hadoop's default: no `fs.file.impl`, or the
+    * stock `LocalFileSystem` named. A configured implementation is kept.
+    */
+  private def defaultFile(conf: Configuration): Boolean =
+    Option(conf.get("fs.file.impl"))
+      .forall(_ == classOf[LocalFileSystem].getName)
+
+  /** `fs`, or for a default `file:` filesystem a `PosixLocalFs` over
+    * the same conf: the one to create files and dirs through.
+    */
+  def forWrite(fs: FileSystem): FileSystem =
+    if (fs.getUri.getScheme != "file" || !defaultFile(fs.getConf)) fs
+    else {
+      val p = new PosixLocalFs
+      p.initialize(fs.getUri, fs.getConf)
+      p
+    }
+
+  /** Make `conf` (a write job's own copy) resolve `file:` paths to a
+    * fresh `PosixLocalFs` when `file:` is the default. Uncached: the
+    * JVM-wide cache already holds an instance for `file:`.
+    */
+  def forWrite(conf: Configuration): Unit =
+    if (defaultFile(conf)) {
+      conf.set("fs.file.impl", classOf[PosixLocalFs].getName)
+      conf.setBoolean("fs.file.impl.disable.cache", true)
+    }
+}
+
+/** The stock `file:` filesystem (checksummed, same bytes, same modes)
+  * whose permission calls do not fork. Without Hadoop's native library,
+  * `RawLocalFileSystem.setPermission` runs `chmod` as a child process,
+  * and every `create` and every new dir calls it: one bucket file cost
+  * three forks (its dir, the file, its `.crc`), about 10 ms.
+  */
+final class PosixLocalFs extends LocalFileSystem(new PosixRawLocalFs)
+
+final class PosixRawLocalFs extends RawLocalFileSystem {
+  override def setPermission(p: Path, perm: FsPermission): Unit = {
+    import java.nio.file.attribute.PosixFilePermission._
+    val bits = perm.toShort
+    val f = pathToFile(p).toPath
+    // sticky/setuid bits and non-POSIX file systems take the stock path
+    if ((bits & ~0x1ff) != 0 || !f.getFileSystem.supportedFileAttributeViews
+        .contains("posix")) super.setPermission(p, perm)
+    else {
+      val set = java.util.EnumSet.noneOf(
+        classOf[java.nio.file.attribute.PosixFilePermission])
+      // java's enum order is OWNER_READ .. OTHERS_EXECUTE: bit 8 .. bit 0
+      Seq(OWNER_READ, OWNER_WRITE, OWNER_EXECUTE, GROUP_READ, GROUP_WRITE,
+        GROUP_EXECUTE, OTHERS_READ, OTHERS_WRITE, OTHERS_EXECUTE)
+        .zipWithIndex.foreach { case (x, i) =>
+          if ((bits & (1 << (8 - i))) != 0) set.add(x) }
+      java.nio.file.Files.setPosixFilePermissions(f, set)
+    }
+  }
 }
 
 /** The one memo of metadata derived from immutable files (parsed

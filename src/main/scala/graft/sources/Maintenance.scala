@@ -461,7 +461,7 @@ object Maintenance {
   private def writeManifest(spark: SparkSession, clean: String,
                             m: KeyedManifest): Unit = {
     val md = manifestDir(clean)
-    val fs = hadoopFs(spark, md)
+    val fs = Fs.forWrite(hadoopFs(spark, md))
     fs.mkdirs(md)
     val body = KeyedManifest.encode(
       m.copy(tsMillis = System.currentTimeMillis()))
@@ -1209,6 +1209,7 @@ object Maintenance {
         E.BoundReference(schema.fieldIndex(c), schema(c).dataType, true),
         E.Ascending)))
       val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      Fs.forWrite(job.getConfiguration)
       val writers = new ParquetFileFormat()
         .prepareWrite(spark, job, Map.empty, schema)
       // one broadcast per write: in the closure every task deserializes it
@@ -1391,9 +1392,12 @@ object Maintenance {
         s"keyed table $dir re-bucketed mid-merge (splitKeyed) — " +
           "re-run the merge")
       val base = readTouched(spark, dir, m, touched, keyCols, nBuckets)
+      // no distinct(): an anti join keeps the same rows either way, and
+      // on a driver-local batch the aggregate was a shuffle job of its
+      // own before the broadcast
       val gone = (up.map(_.select(keyCols.map(F.col): _*)).toSeq ++
         dk.map(_.select(keyCols.map(F.col): _*)).toSeq)
-        .reduce(_.unionByName(_)).distinct()
+        .reduce(_.unionByName(_))
       val kept = base.join(gone, keyCols, "left_anti")
       val merged = up.fold(kept)(u =>
         kept.unionByName(u, allowMissingColumns = true))
@@ -3206,7 +3210,7 @@ object Maintenance {
     // manifests at vacuum time, so this write races nothing)
     p.keys.foreach { member =>
       val gp = new Path(registeredGroupPath(member, clean))
-      val fs = hadoopFs(spark, gp)
+      val fs = Fs.forWrite(hadoopFs(spark, gp))
       if (!fs.exists(gp)) {
         fs.mkdirs(gp.getParent)
         val out = fs.create(gp, true)

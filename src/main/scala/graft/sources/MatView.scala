@@ -107,7 +107,8 @@ object MatView {
     */
   private def persist(spark: SparkSession, d: MvDef): Unit = {
     val p = mvFile(d)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.forWrite(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration))
     fs.mkdirs(p.getParent)
     val json = Maintenance.KeyedManifest.json
     val o = json.createObjectNode()
@@ -452,7 +453,8 @@ object MatView {
   private def tryAcquireLease(spark: SparkSession, mvDir: String,
                               ttlMs: Long): Boolean = {
     val p = leasePath(mvDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.forWrite(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration))
     def tryPublish(): Boolean = {
       val tmp = new Path(s"${clean(mvDir)}/.lease_tmp_${ProcessHandle
         .current().pid()}x${Thread.currentThread().getId}")

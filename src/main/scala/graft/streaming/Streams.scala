@@ -255,7 +255,8 @@ object Streams {
   def commitChangeCursorState(spark: org.apache.spark.sql.SparkSession,
                               cursorPath: String, state: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(cursorPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.sources.Fs.forWrite(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration))
     val tmp = new org.apache.hadoop.fs.Path(cursorPath +
       s".tmp_${ProcessHandle.current().pid()}")
     val out = fs.create(tmp, true)

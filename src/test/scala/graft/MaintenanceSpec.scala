@@ -1835,9 +1835,11 @@ class MaintenanceSpec extends SparkSpec {
     val upsert = jobsOf(M.upsertKeyed(spark, dir,
       Seq((4L, 40L), (60L, 600L), (300L, 3L)).toDF("k", "v"), "k", 4))
     // the stage job's two (shuffle map + write); the upsert adds the
-    // touched buckets' read and merge. A re-read duplicate guard, a
-    // batch checkpoint or a kb probe job would each raise these
-    assert(append == 2 && upsert == 5,
+    // touched buckets' resolve and the broadcast anti join (the batch
+    // keys broadcast straight from the driver). A re-read duplicate
+    // guard, a batch checkpoint, a kb probe job or a distinct over the
+    // batch keys would each raise these
+    assert(append == 2 && upsert == 4,
       s"append ran $append jobs, upsert $upsert")
     val got = M.readKeyed(spark, dir).select("k", "v").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -118,4 +118,43 @@ class ManifestCodecSpec extends SparkSpec {
     assert(fs.listStatus(dir).map(_.getPath.getName)
       .filterNot(_.endsWith(".crc")).toSeq == Seq("v000000001.json"))
   }
+
+  test("forWrite: file: writes get the stock modes, bytes and checksums") {
+    import org.apache.hadoop.fs.LocalFileSystem
+    import org.apache.hadoop.fs.permission.FsPermission
+    val dir = new Path(tmp("graft_posixfs"))
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.file.impl", classOf[LocalFileSystem].getName)
+    val stock = new LocalFileSystem()
+    stock.initialize(new java.net.URI("file:///"), conf)
+    val fast = Fs.forWrite(stock)
+    assert(fast.isInstanceOf[graft.sources.PosixLocalFs])
+    def write(fs: org.apache.hadoop.fs.FileSystem, sub: String): Path = {
+      val p = new Path(dir, s"$sub/new/part")
+      val out = fs.create(p, true)
+      try out.write("payload".getBytes(UTF_8)) finally out.close()
+      p
+    }
+    val (a, b) = (write(stock, "stock"), write(fast, "fast"))
+    for ((x, y) <- Seq(a -> b, a.getParent -> b.getParent))
+      assert(stock.getFileStatus(x).getPermission ==
+        stock.getFileStatus(y).getPermission)
+    // the checksum file is written, so a stock reader verifies it
+    assert(stock.exists(new Path(b.getParent, ".part.crc")))
+    assert(new String(Files.readAllBytes(Paths.get(b.toUri.getPath)),
+      UTF_8) == "payload")
+    fast.setPermission(b, new FsPermission("640"))
+    assert(stock.getFileStatus(b).getPermission == new FsPermission("640"))
+    // a write job's conf resolves file: to a fresh PosixLocalFs; any
+    // other file: implementation is kept
+    val jobConf = new org.apache.hadoop.conf.Configuration(conf)
+    Fs.forWrite(jobConf)
+    assert(b.getFileSystem(jobConf).isInstanceOf[graft.sources.PosixLocalFs])
+    val custom = new org.apache.hadoop.conf.Configuration(conf)
+    custom.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+    Fs.forWrite(custom)
+    assert(custom.get("fs.file.impl") ==
+      "org.apache.hadoop.fs.RawLocalFileSystem")
+  }
 }
