@@ -2299,13 +2299,12 @@ object SparkEntry {
         .crossJoin(i2.agg(F.count(lit(1)).as("n_indexed")))
     }),
 
-    // compactIndex folds the appended segments back to ONE (Lucene's
-    // segment merge, planned from the manifest; postings never
-    // re-tokenize — doc ids are disjoint across segments, so the fold
-    // is a union + one staged segment + one commit). The oracle is the
-    // same scale-invariant parity as x131: the compacted index answers
-    // bit-identically to the direct scan, and the in-query boolean
-    // asserts the segment list folded to a single segment.
+    // compactIndex folds the appended deltas back into base
+    // generations (compactKeyed, planned from the manifest; postings
+    // never re-tokenize). The oracle is the same scale-invariant parity
+    // as x131: the compacted index answers bit-identically to the
+    // direct scan, and the in-query boolean asserts the fold left one
+    // level (no delta chain in the manifest).
     "x137_index_compact" -> ((s, d) => {
       // 60k docs: x131 already measures segment-append at 200k; this
       // probe proves the FOLD (3 segments -> 1, bit-identical), so it
@@ -2324,8 +2323,9 @@ object SparkEntry {
       graft.ext.Search.appendIndex(docs.filter(col("doc_id") % 2 === 1),
         "doc_id", "text", dir)
       graft.ext.Search.compactIndex(s, dir)
+      // the fold left one level: no delta chain in the manifest
       val oneSeg =
-        graft.sources.Maintenance.listSegments(s, dir).length == 1
+        graft.sources.Maintenance.readManifest(s, dir).deltas.isEmpty
       val indexed = graft.ext.Search.searchIndex(s, dir, terms, 20)
         .localCheckpoint(true)
       val i2 = s.createDataFrame(indexed.rdd, indexed.schema)

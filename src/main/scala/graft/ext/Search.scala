@@ -1,13 +1,11 @@
 package graft.ext
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
-import TextAnalysis.{tokens, h60}
+import TextAnalysis.tokens
 
 /** Ranked text retrieval over a document corpus: BM25 search, TF-IDF
   * keyword extraction, corpus-frequency analytics, and a persisted
@@ -26,10 +24,10 @@ import TextAnalysis.{tokens, h60}
   *  - `topTermsPerDoc` / `topTokens` shuffle ∝ tokens once (the
   *    partial-agg groupBy), never ∝ docs² — document frequency joins
   *    back via a broadcastable per-term table.
-  *  - `buildIndex`/`searchIndex` persist term-bucketed postings so
-  *    repeated queries skip the corpus scan entirely: bucket ids are
-  *    pure functions of the query terms, so Spark prunes every
-  *    non-matching partition statically (same discipline as the
+  *  - `buildIndex`/`searchIndex` persist postings as a keyed table
+  *    bucketed on the term, so repeated queries skip the corpus scan
+  *    entirely: bucket ids are pure functions of the query terms, so a
+  *    query reads only its terms' bucket dirs (same discipline as the
   *    persisted IVF index).
   *
   * Determinism: scoring is RATIONAL arithmetic only (the classic BM25
@@ -41,8 +39,6 @@ import TextAnalysis.{tokens, h60}
   * the log form when Lucene-parity matters more than bit equality.
   */
 object Search {
-
-  private val segObsCounter = new java.util.concurrent.atomic.AtomicLong()
 
   /** Per-term raw term frequency inside a whitespace-token array —
     * a pure scan expression (no explode, no shuffle).
@@ -284,171 +280,82 @@ object Search {
 
   // ---- persisted inverted index -----------------------------------------
 
-  /** Build a term-bucketed inverted index under `dir`, committed as a
-    * SEGMENTED dataset (sources/Maintenance manifest): the manifest
-    * lists immutable segment dirs, each holding
-    *  - `postings/` (bucket, term, doc_id, tf, dl[, positions])
-    *    partitioned by bucket = md5-hash(term) mod nBuckets; the
-    *    sorted 0-based token positions make the same index serve
-    *    phrase/proximity queries (`phraseSearchIndex`) — Lucene's
-    *    positional-postings layout, one array per (doc, term),
-    *  - `stats/` the segment's corpus-stats row (n_docs, sdl) —
-    *    ADDITIVE across segments, so `appendIndex` can grow the index
-    *    without touching existing segments (Lucene's segment model),
-    *    and queries fold the per-segment rows into corpus statistics.
-    * Per-term document frequency is NOT materialized separately: it
-    * folds out of the postings at query time after partition pruning
-    * (the pruned slice is tiny), which keeps a segment build one
-    * explode + one shuffle. A rebuild REPLACES the segment list in one
-    * manifest commit (readers mid-rebuild resolve the old or new
-    * complete index); old segments GC via `vacuumIndex`.
-    *
-    * `filesPerBucket` decouples the build's write parallelism from the
-    * pruning granularity: the pre-write exchange used to be exactly
-    * nBuckets tasks, which bounds BOTH parallelism and file size by
-    * the bucket count — a sub-split key keeps one bucket = one
-    * partition DIR (pruning unchanged) while spreading its rows over
-    * several tasks/files.
+  private val M = graft.sources.Maintenance
+
+  /** The postings table's key: one row per (term, doc), bucketed on
+    * the term alone, so a query reads only its terms' buckets.
+    */
+  private val PostingsKey = Seq("term", "doc_id")
+
+  /** Build a term-bucketed inverted index under `dir`: a KEYED TABLE of
+    * postings (term, doc_id, dl, tf[, positions]) keyed (term, doc_id)
+    * and bucketed on term = md5-hash(term) mod nBuckets, committed by
+    * the keyed table's one manifest protocol (`writeKeyed`). The sorted
+    * 0-based token positions make the same index serve phrase/proximity
+    * queries (`phraseSearchIndex`) — Lucene's positional-postings
+    * layout, one array per (doc, term). The corpus stats n_docs and sdl
+    * are the manifest's `counters`, observed on the write job's own
+    * input (no second pass), and ADDITIVE, so `appendIndex` grows them
+    * in its commit. Per-term document frequency is NOT materialized
+    * separately: it folds out of the query terms' postings at query
+    * time. A rebuild REPLACES the table in one manifest commit (readers
+    * mid-rebuild resolve the old or new complete index); old
+    * generations GC via `vacuumKeyed`.
     */
   def buildIndex(df: DataFrame, idCol: String, textCol: String,
                  dir: String, nBuckets: Int = 64,
-                 positions: Boolean = true,
-                 filesPerBucket: Int = 1): Unit = {
-    val spark = df.sparkSession
-    val seg = stageSegment(df, idCol, textCol, dir, nBuckets, positions,
-      filesPerBucket)
-    graft.sources.Maintenance.commitSegment(spark, dir, seg, replace = true)
+                 positions: Boolean = true): Unit = {
+    val (post, stats) = postings(df, idCol, textCol, positions)
+    M.writeKeyed(post, dir, PostingsKey, nBuckets,
+      bucketCols = Seq("term"), counters = stats)
   }
 
-  /** Append `df`'s documents to an EXISTING index as a new segment:
-    * existing segments are never read or rewritten (bytes ∝ the new
-    * documents), one manifest commit makes the grown index visible
-    * atomically. Bucket count and positional layout come from the
-    * index's own metadata — never a caller guess. Doc ids must be
-    * disjoint from those already indexed (same contract as appending
-    * rows to any corpus; duplicate ids would double-count df/tf).
+  /** Append `df`'s documents to an EXISTING index as one merge-on-read
+    * delta per touched bucket (`appendDeltaKeyedCols`): existing
+    * generations are never read or rewritten (bytes ∝ the new
+    * documents), one manifest commit makes the grown index and its
+    * grown corpus stats visible atomically. Bucket count and positional
+    * layout come from the index's own manifest — never a caller guess.
+    * Doc ids must be disjoint from those already indexed (same contract
+    * as appending rows to any corpus; a repeated id would double-count
+    * n_docs and sdl).
     */
   def appendIndex(df: DataFrame, idCol: String, textCol: String,
-                  dir: String, filesPerBucket: Int = 1): Unit = {
+                  dir: String): Unit = {
     val spark = df.sparkSession
-    // fail BEFORE staging: a dir holding no index manifest (never
-    // built, or a pre-manifest layout) has no segment list to extend
-    require(graft.sources.Maintenance.manifestVersions(spark, dir).nonEmpty,
+    // fail BEFORE the write job: a dir holding no index manifest (never
+    // built, or a pre-manifest layout) has nothing to extend
+    require(M.manifestVersions(spark, dir).nonEmpty,
       s"$dir holds no index manifest (not built, or a pre-manifest " +
         "layout) — build it (buildIndex) before appending")
-    val segs = graft.sources.Maintenance.listSegments(spark, dir)
-    val nBuckets = statsOf(spark, segs)._3
-    // positional layout detection from ONE parquet footer, read
-    // driver-side (schema inference over the partitioned root lists
-    // every bucket dir — a distributed listing job past the discovery
-    // threshold — for a yes/no answer one footer already holds).
-    // Scans SEGMENTS until one with postings is found: an empty first
-    // segment (no bucket= dirs — an empty batch writes only _SUCCESS)
-    // must not silently flip a positional index to non-positional for
-    // every doc appended after it. Bucket dirs are walked lazily, so
-    // the listing stops at the first one holding a parquet file.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val positions = segs.iterator.flatMap { seg =>
-      val root = new org.apache.hadoop.fs.Path(seg + "/postings")
-      val fs = root.getFileSystem(conf)
-      val dirs =
-        try fs.listStatus(root).iterator
-        catch { case _: java.io.FileNotFoundException => Iterator.empty }
-      dirs.filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("bucket="))
-        .flatMap(d => fs.listStatus(d.getPath).iterator
-          .filter(_.getPath.getName.endsWith(".parquet")))
-        .nextOption()
-        .map { f =>
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(f, conf),
-            org.apache.parquet.HadoopReadOptions.builder(conf).build())
-          try rd.getFooter.getFileMetaData.getSchema
-            .getFields.asScala.exists(_.getName == "positions")
-          finally rd.close()
-        }
-    }.nextOption().getOrElse(false)
-    val seg = stageSegment(df, idCol, textCol, dir, nBuckets, positions,
-      filesPerBucket)
-    graft.sources.Maintenance.commitSegment(spark, dir, seg, replace = false)
+    val m = postingsManifest(spark, dir)
+    val (post, stats) = postings(df, idCol, textCol,
+      m.schema.fieldNames.contains("positions"))
+    M.appendDeltaKeyedCols(spark, dir, post, PostingsKey, m.nBuckets,
+      counters = stats)
   }
 
-  /** GC segments no kept manifest references (a rebuild's predecessors,
-    * losing stage attempts) — same grace contract as the keyed table.
+  /** Fold the appended deltas back into base generations
+    * (`compactKeyed`): every query resolves each bucket's chain, so
+    * read cost creeps with the append count until a compaction. The
+    * fold never re-tokenizes — the resolved postings are rewritten as
+    * they are, and the corpus stats carry forward unchanged.
     */
-  def vacuumIndex(spark: SparkSession, dir: String,
-                  keepVersions: Int = 1,
-                  graceMs: Long = 15 * 60 * 1000L): Unit =
-    graft.sources.Maintenance.vacuumSegments(spark, dir, keepVersions,
-      graceMs)
+  def compactIndex(spark: SparkSession, dir: String): Unit =
+    M.compactKeyed(spark, dir)
 
-  /** FOLD the segment list (Lucene's segment merge): `appendIndex`
-    * grows segments unboundedly and every query unions per-segment
-    * stats + postings, so read cost creeps with append count until a
-    * compaction. The fold never re-tokenizes: doc ids are disjoint
-    * across segments (the append contract), so the merged postings ARE
-    * the union of the source postings, and the stats row folds
-    * additively — one staged segment, one manifest commit. Segments a
-    * concurrent append lands mid-fold SURVIVE the commit (the manifest
-    * swaps exactly the folded ones); old segments GC via `vacuumIndex`.
-    *
-    * Policy knobs: a no-op until the segment count reaches
-    * `minSegments` (a scheduler can call this every append);
-    * `smallestK` folds only the k smallest segments by on-disk bytes —
-    * the tiered-merge shape that keeps compaction IO ∝ the small tail
-    * instead of rewriting the big base segment every time.
+  /** The postings of `df`'s documents and the counters of its write:
+    * n_docs = count(1) over the tokenized frame (documents without text
+    * count, then drop out of posexplode) and sdl = sum(size(tok)), the
+    * total token instances — both observed on the write job's own
+    * input, so a build or append is one Spark job. A write that got no
+    * postings reports no observation (AQE drops the observed stage
+    * once it sees the write is empty); its counters are then one
+    * aggregate over the tokenized frame.
     */
-  def compactIndex(spark: SparkSession, dir: String, minSegments: Int = 2,
-                   smallestK: Option[Int] = None,
-                   filesPerBucket: Int = 1): Unit = {
-    require(minSegments >= 2, s"minSegments must be >= 2, got $minSegments")
-    require(smallestK.forall(_ >= 2), "smallestK must be >= 2 to fold")
-    val M = graft.sources.Maintenance
-    if (M.manifestVersions(spark, dir).isEmpty) return
-    val all = M.listSegments(spark, dir)
-    if (all.length < minSegments) return
-    val target = smallestK match {
-      case Some(k) if k < all.length =>
-        // per-segment bytes from the MANIFEST (recorded at each
-        // commit), not a recursive dir walk per segment per pass
-        val recorded = M.readManifest(spark, dir).bytes
-        val prefix = dir.replaceAll("/+$", "") + "/"
-        all.sortBy(s => recorded(s.stripPrefix(prefix))).take(k)
-      case _ => all
-    }
-    val (nDocsAll, sdlAll, nBuckets) = statsOf(spark, target)
-    val seg = M.nextSegmentName(spark, dir)
-    val segPath = s"$dir/$seg"
-    target.map(s => spark.read.parquet(s + "/postings"))
-      .reduce(_.unionByName(_))
-      .withColumn("__sub", F.pmod(h60(col("doc_id")),
-        lit(filesPerBucket.toLong)))
-      .repartition(nBuckets * filesPerBucket, col("bucket"), col("__sub"))
-      .drop("__sub")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(segPath + "/postings")
-    spark.range(1).select(lit(nDocsAll).as("n_docs"),
-        lit(sdlAll).as("sdl"), lit(nBuckets).as("n_buckets"))
-      .coalesce(1).write.mode("overwrite").parquet(segPath + "/stats")
-    M.commitSegmentsFold(spark, dir, seg,
-      target.map(_.stripPrefix(dir.replaceAll("/+$", "") + "/")))
-  }
-
-  /** Stage one segment (postings + stats) under a writer-unique dir —
-    * invisible until the manifest commit references it.
-    */
-  private def stageSegment(df: DataFrame, idCol: String, textCol: String,
-                           dir: String, nBuckets: Int, positions: Boolean,
-                           filesPerBucket: Int): String = {
-    require(filesPerBucket >= 1,
-      s"filesPerBucket must be >= 1, got $filesPerBucket")
-    val spark = df.sparkSession
-    val M = graft.sources.Maintenance
-    val seg = M.nextSegmentName(spark, dir)
-    val segPath = s"$dir/$seg"
-    val base = df.select(col(idCol).as("doc_id"),
-      tokens(col(textCol)).as("tok"))
+  private def postings(df: DataFrame, idCol: String, textCol: String,
+                       positions: Boolean)
+      : (DataFrame, () => Map[String, Long]) = {
     val posAgg =
       // positions roughly double the posting payload; a pure-BM25
       // deployment can skip them (phrase/near queries then need a
@@ -456,137 +363,71 @@ object Search {
       if (positions)
         Seq(F.sort_array(F.collect_list(col("pos"))).as("positions"))
       else Nil
-    // corpus stats WITHOUT a second tokenization pass AND without the
-    // r14 extra count job: BOTH stats are observed on the staging
-    // write's own input, BEFORE the explode — n_docs = count(1) over
-    // the tokenized frame (zero-token docs flow through the metrics
-    // node and only then drop out of posexplode) and sdl =
-    // sum(size(tok)) = total token instances = sum of every posting's
-    // tf, bit-identical to both prior formulations. One Spark job per
-    // segment build, total (r13: write + stats re-tokenization; r14:
-    // write + a separate column-pruned count — the measured x129/ql54
-    // regression).
-    val obs = org.apache.spark.sql.Observation(
-      s"segstats_${ProcessHandle.current().pid()}x${
-        segObsCounter.incrementAndGet()}")
-    base.observe(obs,
-        F.count(lit(1)).as("n_docs"),
-        F.coalesce(F.sum(F.size(col("tok"))), lit(0L)).as("sdl"))
+    val tok = df.select(col(idCol).as("doc_id"),
+      tokens(col(textCol)).as("tok"))
+    val stats = Seq(F.count(lit(1)).as("n_docs"),
+      F.coalesce(F.sum(F.size(col("tok"))), lit(0L)).as("sdl"))
+    val obs = org.apache.spark.sql.Observation()
+    val post = tok.observe(obs, stats.head, stats.tail: _*)
       .select(col("doc_id"), F.size(col("tok")).as("dl"),
         F.posexplode(col("tok")).as(Seq("pos", "term")))
-      .groupBy("doc_id", "dl", "term")
+      .groupBy("term", "doc_id", "dl")
       .agg(F.count(lit(1)).as("tf"), posAgg: _*)
-      .withColumn("bucket", F.pmod(h60(col("term")), lit(nBuckets.toLong)))
-      // co-locate each bucket into few tasks before the partitioned
-      // write: without this every task writes a sliver of every
-      // bucket (tasks × buckets files, thousands of open handles per
-      // executor at scale); with it the layout is filesPerBucket
-      // well-sized files per bucket dir (the sub-split key widens the
-      // exchange without fragmenting the layout or the pruning)
-      .withColumn("__sub", F.pmod(h60(col("doc_id")),
-        lit(filesPerBucket.toLong)))
-      .repartition(nBuckets * filesPerBucket, col("bucket"), col("__sub"))
-      .drop("__sub")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(segPath + "/postings")
-    val sdl = obs.get("sdl").asInstanceOf[Long]
-    val nDocs = obs.get("n_docs").asInstanceOf[Long]
-    spark.range(1)
-      .select(lit(nDocs).as("n_docs"), lit(sdl).as("sdl"),
-        // the bucket count is INDEX METADATA, not a query parameter: a
-        // querier guessing a different B would compute wrong bucket ids
-        // and silently prune away real postings
-        lit(nBuckets).as("n_buckets"))
-      .coalesce(1).write.mode("overwrite").parquet(segPath + "/stats")
-    seg
+    def counters(): Map[String, Long] = {
+      val seen = obs.get
+      val row =
+        if (seen.nonEmpty) seen
+        else tok.agg(stats.head, stats.tail: _*).head
+          .getValuesMap[Any](Seq("n_docs", "sdl"))
+      row.map { case (k, v) => k -> v.asInstanceOf[Long] }
+    }
+    (post, counters _)
   }
 
-  /** Public face of the folded corpus-stats row (n_docs, sdl,
-    * n_buckets) of the index at `dir` — what the language's
+  /** The manifest of the postings table at `dir`, refusing any other
+    * table: its layout must be the postings key bucketed on term, with
+    * the corpus stats recorded.
+    */
+  private def postingsManifest(spark: SparkSession,
+                               dir: String): M.KeyedManifest = {
+    val m = M.readManifest(spark, dir)
+    require(m.keyCols == PostingsKey && m.bucketKey == Seq("term") &&
+      m.counters.contains("n_docs"),
+      s"$dir is not a search index (keyed on (${m.keyCol}) bucketed on " +
+        s"(${m.bucketKey.mkString(",")}); an index keys on " +
+        "(term,doc_id) bucketed on (term)) — build it with buildIndex")
+    m
+  }
+
+  /** Public face of the corpus-stats row (n_docs, sdl, n_buckets) of
+    * the index at `dir`, read from its manifest — what the language's
     * build/append faces return.
     */
   def indexStats(spark: SparkSession, dir: String): DataFrame = {
-    val (nDocs, sdl, nBuckets) = statsOf(spark,
-      graft.sources.Maintenance.listSegments(spark, dir))
-    spark.range(1).select(lit(nDocs).as("n_docs"), lit(sdl).as("sdl"),
-      lit(nBuckets).as("n_buckets"))
+    val m = postingsManifest(spark, dir)
+    spark.range(1).select(lit(m.counters("n_docs")).as("n_docs"),
+      lit(m.counters("sdl")).as("sdl"), lit(m.nBuckets).as("n_buckets"))
   }
 
-  /** Memo of one SEGMENT's stats row keyed by its stats files'
-    * identities — segment dirs are immutable once committed (metadata
-    * values, never query results; a rewritten file misses by identity).
-    * Without it every index query paid one `.head` Spark job per stats
-    * consult plus a broadcast of the stats row into the scoring plan.
+  /** The postings of `terms` under `m`: only the buckets the terms hash
+    * to are read (their ids come from the table's own `kb` on the
+    * driver), and the `term IN` list pushes into every level's parquet
+    * scan, before any delta-chain resolution.
     */
-  private val statsCache = new graft.sources.MetaCache[(Long, Long, Int)]()
-
-  /** The corpus-stats values folded over a segment list: n_docs and
-    * sdl are additive; the bucket count must agree across segments (it
-    * is layout metadata — `appendIndex` always reuses the base's).
-    */
-  private def statsOf(spark: SparkSession,
-                      segs: Seq[String]): (Long, Long, Int) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val per = segs.map { s =>
-      val root = new org.apache.hadoop.fs.Path(s + "/stats")
-      val fs = root.getFileSystem(conf)
-      val files = fs.listStatus(root).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.toString)
-      val key = files.map(graft.sources.Fs.fileId).mkString("|")
-      statsCache.getOrLoad(key) {
-        val row = spark.read.parquet(s + "/stats")
-          .select(col("n_docs").cast("long"), col("sdl").cast("long"),
-            col("n_buckets").cast("int"))
-          .agg(F.sum(col("n_docs")), F.sum(col("sdl")),
-            F.min(col("n_buckets")), F.max(col("n_buckets"))).head
-        require(row.getInt(2) == row.getInt(3),
-          "index segments disagree on n_buckets — rebuild the index")
-        (row.getLong(0), row.getLong(1), row.getInt(2))
-      }
-    }
-    val nb = per.map(_._3).distinct
-    require(nb.length == 1,
-      "index segments disagree on n_buckets — rebuild the index")
-    (per.map(_._1).sum, per.map(_._2).sum, nb.head)
+  private def termPostings(spark: SparkSession, dir: String,
+                           m: M.KeyedManifest,
+                           terms: Seq[String]): DataFrame = {
+    import spark.implicits._
+    M.resolveBuckets(spark, dir, m, M.bucketsOf(m, terms.toDF("term")),
+      Some(col("term").isin(terms: _*)))
   }
-
-  /** The pruned postings scan over every live segment: bucket ids are
-    * literal IN-list constants per segment, so partition pruning is
-    * static in each, and the union's cost is ∝ matching postings
-    * across segments, not corpus size.
-    */
-  private def prunedPostings(spark: SparkSession, segs: Seq[String],
-                             buckets: Seq[Long],
-                             terms: Seq[String]): DataFrame =
-    segs.map { s =>
-      // enumerate the matching bucket DIRS directly instead of scanning
-      // the partitioned root: reading `<seg>/postings` lists every
-      // bucket dir up front (a distributed listing job once the dir
-      // count passes the discovery threshold) only for partition
-      // pruning to discard most of them — the bucket ids are already
-      // plan-time constants, so hand Spark exactly those paths
-      // (basePath keeps `bucket` as a partition column). A bucket dir
-      // may not exist in a given segment (no postings hashed there) —
-      // checked driver-side, one getFileStatus per (segment, bucket).
-      val root = new org.apache.hadoop.fs.Path(s + "/postings")
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val present = buckets.map(b => s"$s/postings/bucket=$b")
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-      val df =
-        if (present.isEmpty)
-          spark.read.parquet(s + "/postings").limit(0)
-        else spark.read.option("basePath", s + "/postings")
-          .parquet(present: _*)
-      df.filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** BM25 top-k over a persisted index — bit-identical scores to
     * `bm25Search` on the source corpus (the parquet round-trip is
     * lossless and the arithmetic is identical), but the scan touches
-    * ONLY the partitions holding the query's term buckets: bucket ids
-    * are literal IN-list constants, so pruning is static and the cost
-    * is ∝ matching postings, not corpus size.
+    * ONLY the bucket dirs of the query's terms, chosen at plan-build
+    * time from the manifest, so the cost is ∝ matching postings, not
+    * corpus size.
     *
     * Per-doc aggregation pivots each term's (tf, df) into fixed
     * columns (max of a guarded case — at most one posting per
@@ -600,20 +441,15 @@ object Search {
                   requireAll: Boolean = false): DataFrame = {
     require(queryTerms.nonEmpty, "searchIndex: empty query")
     val terms = queryTerms.distinct
-    val segs = graft.sources.Maintenance.listSegments(spark, dir)
-    // corpus stats from the index's own metadata (memoized driver-side
-    // values at plan-build time — never a caller's guess, and no
-    // per-query stats job or broadcast since r15; the literals are the
-    // exact longs the old broadcast row carried, so scores are
-    // bit-identical)
-    val (nDocs, sdlV, nBuckets) = statsOf(spark, segs)
-    val buckets = terms.map(t => TextAnalysis.h60Value(t) % nBuckets).distinct
-    // `def`: each call builds a FRESH pruned-scan plan, so the df
+    // corpus stats from the index's own manifest (plan-build-time
+    // literals — never a caller's guess, no stats job or broadcast)
+    val m = postingsManifest(spark, dir)
+    // `def`: each call builds a FRESH postings plan, so the df
     // aggregate below is a sibling branch, not a subplan of the
     // posting side's own lineage (CLAUDE.md shared-exprId rule)
-    def pruned = prunedPostings(spark, segs, buckets, terms)
+    def pruned = termPostings(spark, dir, m, terms)
     val post = pruned
-    // per-term document frequency from the pruned slice (tiny), then
+    // per-term document frequency from the terms' postings (tiny), then
     // pivot tf/df into fixed per-term columns keyed by doc
     val dfreq = pruned.groupBy("term").agg(F.count(lit(1)).as("df"))
     val joined = post.join(F.broadcast(dfreq), "term")
@@ -629,7 +465,8 @@ object Search {
     val score = bm25ScoreExpr(terms.length,
       i => F.coalesce(col(s"tf_$i"), lit(0L)),
       i => F.coalesce(col(s"df_$i"), lit(0L)),
-      col("dl"), lit(nDocs), lit(sdlV), k1, b, classicIdf)
+      col("dl"), lit(m.counters("n_docs")), lit(m.counters("sdl")), k1, b,
+      classicIdf)
     // conjunctive gate mirrors bm25Search's: every term's (coalesced)
     // tf must be positive — bit-identical candidate set to the direct
     // scan path in AND mode
@@ -647,10 +484,22 @@ object Search {
       .limit(k)
   }
 
+  /** `termPostings` of a positional index; `what` names the refused
+    * query kind when the index was built with positions = false.
+    */
+  private def positionalPostings(spark: SparkSession, dir: String,
+                                 terms: Seq[String],
+                                 what: String): DataFrame = {
+    val m = postingsManifest(spark, dir)
+    require(m.schema.fieldNames.contains("positions"),
+      s"index at $dir was built with positions = false — $what " +
+        "queries need a positional rebuild")
+    termPostings(spark, dir, m, terms)
+  }
+
   /** Exact-phrase retrieval over the persisted index — row-identical
     * to `phraseSearch` on the source corpus, but the scan touches only
-    * the partitions holding the phrase terms' buckets (static IN-list
-    * pruning, like `searchIndex`). Each phrase term's sorted position
+    * the phrase terms' bucket dirs (like `searchIndex`). Each phrase term's sorted position
     * array pivots into a fixed per-slot column keyed by doc (at most
     * one posting per (doc, term)); the occurrence count is then ONE
     * array expression — starts q in slot-0's positions such that
@@ -663,13 +512,7 @@ object Search {
     require(phrase.nonEmpty, "phraseSearchIndex: empty phrase")
     val terms = phrase.distinct
     val slotOf = phrase.map(terms.indexOf) // phrase slot j -> term index
-    val segs = graft.sources.Maintenance.listSegments(spark, dir)
-    val nBuckets = statsOf(spark, segs)._3
-    val buckets = terms.map(t => TextAnalysis.h60Value(t) % nBuckets).distinct
-    val pruned = prunedPostings(spark, segs, buckets, terms)
-    require(pruned.columns.contains("positions"),
-      s"index at $dir was built with positions = false — phrase " +
-        "queries need a positional rebuild")
+    val pruned = positionalPostings(spark, dir, terms, "phrase")
     val pivoted = pruned.groupBy("doc_id")
       .agg(
         F.max(F.when(col("term") === terms.head, col("positions")))
@@ -698,13 +541,7 @@ object Search {
     require(terms.nonEmpty, "nearSearchIndex: empty query")
     require(slop >= 1, s"nearSearchIndex: slop must be >= 1, got $slop")
     val uniq = terms.distinct
-    val segs = graft.sources.Maintenance.listSegments(spark, dir)
-    val nBuckets = statsOf(spark, segs)._3
-    val buckets = uniq.map(t => TextAnalysis.h60Value(t) % nBuckets).distinct
-    val pruned = prunedPostings(spark, segs, buckets, uniq)
-    require(pruned.columns.contains("positions"),
-      s"index at $dir was built with positions = false — proximity " +
-        "queries need a positional rebuild")
+    val pruned = positionalPostings(spark, dir, uniq, "proximity")
     val pivoted = pruned.groupBy("doc_id")
       .agg(
         F.max(F.when(col("term") === uniq.head, col("positions")))

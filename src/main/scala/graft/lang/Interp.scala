@@ -3153,8 +3153,8 @@ object Interp {
             litString(args(0).value), nidx, constLong(args(2).value).toInt))
         case "build_search_index" =>
           // build_search_index(t, "id", "text", dir, n_buckets?) —
-          // persist the positional term-bucketed index; returns the
-          // corpus-stats row
+          // persist the positional postings as a keyed table bucketed
+          // on the term; returns the corpus-stats row
           if (args.length < 4 || args.length > 5)
             throw new TypeError(
               "build_search_index(t, \"id\", \"text\", \"dir\", n_buckets?)")
@@ -3167,8 +3167,8 @@ object Interp {
             litString(args(3).value)))
         case "append_search_index" =>
           // append_search_index(t, "id", "text", dir) — grow an
-          // existing index with a new segment (existing segments are
-          // never rewritten; one manifest commit); returns the folded
+          // existing index by merge-on-read deltas (existing postings
+          // are never rewritten; one manifest commit); returns the
           // corpus-stats row of the grown index
           if (args.length != 4)
             throw new TypeError(
@@ -3179,17 +3179,13 @@ object Interp {
           PTable(graft.ext.Search.indexStats(spark,
             litString(args(3).value)))
         case "compact_search_index" =>
-          // compact_search_index(dir, smallest_k?) — fold the segment
-          // list back (all segments, or only the k smallest by bytes);
-          // returns the folded corpus-stats row (unchanged counts —
-          // compaction moves postings, never documents)
-          if (args.length < 1 || args.length > 2)
-            throw new TypeError(
-              "compact_search_index(\"dir\", smallest_k?)")
-          graft.ext.Search.compactIndex(spark, litString(args(0).value),
-            smallestK =
-              if (args.length == 2) Some(constLong(args(1).value).toInt)
-              else None)
+          // compact_search_index(dir) — fold the appended deltas back
+          // into base generations; returns the corpus-stats row
+          // (unchanged counts — compaction moves postings, never
+          // documents)
+          if (args.length != 1)
+            throw new TypeError("compact_search_index(\"dir\")")
+          graft.ext.Search.compactIndex(spark, litString(args(0).value))
           PTable(graft.ext.Search.indexStats(spark,
             litString(args(0).value)))
         case "search_idx" =>

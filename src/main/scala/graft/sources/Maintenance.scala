@@ -69,11 +69,14 @@ object Maintenance {
   // optimistic: a losing manifest publish-if-absent recomputes against
   // the winner's snapshot and retries. Readers need no coordination.
 
-  /** The key-bucket column: md5-derived (portable, never tied to
-    * Spark's internal hash), pure per-row — the same layout contract
-    * as the persisted IVF/LSH indexes.
+  /** The key-bucket column of a table with `m`'s layout: md5-derived
+    * (portable, never tied to Spark's internal hash), pure per-row — the
+    * same layout contract as the persisted IVF/LSH indexes. The hash
+    * covers `m.bucketKey`, the key prefix the table buckets on (the
+    * whole key unless `bucketCols` says otherwise), so every row of one
+    * bucket-key value lives in one bucket.
     *
-    * The hash input is the key components' string casts, a NULL
+    * The hash input is the bucket-key components' string casts, a NULL
     * component written as the reserved sentinel `\u0000` and
     * components joined on `\u0001`. On a non-NULL key these are exactly
     * the bytes of `md5(cast(key))` (one column) or of
@@ -90,39 +93,49 @@ object Maintenance {
     * no upsert, delete or lookup could ever match the row: their key
     * matches are equality joins and IN-lists).
     */
-  private def kb(keyCols: Seq[String], nBuckets: Int, resolve: String,
-                 depths: Map[Int, Int] = Map.empty): Column = {
+  private def kb(m: KeyedManifest): Column =
+    if (m.resolve == "agg") bucketOf(m)
+    else F.when(m.keyCols.map(c => F.col(c).isNull).reduce(_ || _),
+        F.raise_error(F.lit(
+          s"keyed table: key column(s) ${m.keyCol} must not be NULL")))
+      .otherwise(bucketOf(m))
+      .cast(org.apache.spark.sql.types.IntegerType)
+
+  /** `kb` without the NULL-key guard: the bucket of a row's bucket-key
+    * columns alone under `m`'s base count and split depths.
+    */
+  private def bucketOf(m: KeyedManifest): Column = {
     import org.apache.spark.sql.types.{IntegerType, StringType}
-    require(keyCols.nonEmpty, "keyed table: no key columns")
+    require(m.keyCols.nonEmpty, "keyed table: no key columns")
     val h = graft.ext.TextAnalysis.h60(
-      keyCols.map(c => F.coalesce(F.col(c).cast(StringType),
+      m.bucketKey.map(c => F.coalesce(F.col(c).cast(StringType),
         F.lit("\u0000"))).reduceLeft((a, b) =>
         F.concat(a, F.lit("\u0001"), b)))
-    val bucket =
-      if (depths.isEmpty || depths.values.forall(_ == 0))
-        // the flat layout: the exact pre-r11 expression, byte-for-byte
-        F.pmod(h, F.lit(nBuckets.toLong)).cast(IntegerType)
-      else {
-        // extendible-hashing layout (splitKeyed): the leaf for hash h
-        // is the unique id in the depth tree with h mod (N·2^d) = id.
-        // The fine-to-leaf table is UNROLLED AT PLAN-BUILD TIME into a
-        // literal int array (bounded by the split-depth cap), so the
-        // per-row cost is one pmod + one array index — no per-row tree
-        // walk, and the expression stays codegen-friendly.
-        val dmax = depths.values.max
-        val fineN = nBuckets << dmax
-        val leafArr = Array.tabulate(fineN)(leafOf(_, nBuckets, depths, dmax))
-        F.get(F.lit(leafArr),
-          F.pmod(h, F.lit(fineN.toLong)).cast(IntegerType))
-      }
-    if (resolve == "agg") bucket
-    else F.when(keyCols.map(c => F.col(c).isNull).reduce(_ || _),
-        F.raise_error(F.lit(
-          s"keyed table: key column(s) ${keyCols.mkString(",")} must not " +
-            "be NULL")))
-      .otherwise(bucket)
-      .cast(IntegerType)
+    if (m.depths.isEmpty || m.depths.values.forall(_ == 0))
+      // the flat layout: the exact pre-r11 expression, byte-for-byte
+      F.pmod(h, F.lit(m.nBuckets.toLong)).cast(IntegerType)
+    else {
+      // extendible-hashing layout (splitKeyed): the leaf for hash h
+      // is the unique id in the depth tree with h mod (N·2^d) = id.
+      // The fine-to-leaf table is UNROLLED AT PLAN-BUILD TIME into a
+      // literal int array (bounded by the split-depth cap), so the
+      // per-row cost is one pmod + one array index — no per-row tree
+      // walk, and the expression stays codegen-friendly.
+      val dmax = m.depths.values.max
+      val fineN = m.nBuckets << dmax
+      val leafArr = Array.tabulate(fineN)(leafOf(_, m.nBuckets, m.depths,
+        dmax))
+      F.get(F.lit(leafArr),
+        F.pmod(h, F.lit(fineN.toLong)).cast(IntegerType))
+    }
   }
+
+  /** The sorted buckets under `m` that hold the bucket-key values in
+    * `keys`, a driver-local frame of `m.bucketKey` columns: `bucketOf`
+    * evaluated on the driver (a LocalRelation collect runs no job).
+    */
+  private[graft] def bucketsOf(m: KeyedManifest, keys: DataFrame): Seq[Int] =
+    keys.select(bucketOf(m)).collect().map(_.getInt(0)).distinct.sorted.toSeq
 
   /** The leaf bucket a fine id (h mod N·2^dmax) belongs to: the unique
     * prefix-tree leaf whose (id, depth) matches — descend from the
@@ -141,12 +154,15 @@ object Maintenance {
   }
 
   /** One committed snapshot: the decoded `_manifests/v<N>.json`. Keyed
-    * tables use every field; segmented datasets and commit groups
-    * reuse the format with a subset (noted below).
+    * tables use every field; commit groups reuse the format with `txn`
+    * alone (noted below).
     *  - `version`: the manifest version (from the file name).
     *  - `buckets`: live dir per bucket — the base generation of each
-    *    keyed bucket, or ordinal → segment dir of a segmented dataset.
+    *    keyed bucket.
     *  - `keyCol`: the key column list, comma-joined (composite keys).
+    *  - `bucketCols`: the key PREFIX the bucket hash covers; empty =
+    *    the whole key. A search index's postings key on (term, doc_id)
+    *    and bucket on term, so a query reads its terms' buckets only.
     *  - `nBuckets`: the base bucket count; 0 = not a keyed table.
     *    Like `keyCol` and `depths` it is LAYOUT TRUTH: a querier
     *    guessing a different count would compute wrong bucket ids and
@@ -160,8 +176,10 @@ object Maintenance {
     *  - `rows`: ROW count per referenced dir, from its parquet file's
     *    footer — `keyedStats` and merge planning read the manifest
     *    instead of scanning the table.
-    *  - `bytes`: on-disk BYTES per segment dir (segmented datasets) —
-    *    the tiered-compaction input of `Search.compactIndex`.
+    *  - `counters`: named table-wide totals the writer adds at each
+    *    commit (`writeKeyed` starts them, `appendDeltaKeyedCols` adds
+    *    to them, every other commit carries them forward) — a search
+    *    index's corpus stats n_docs and sdl.
     *  - `tsMillis`: the commit wall-clock millis, stamped at publish —
     *    `versionAt` reads it instead of FS mtimes (object-store
     *    "renames" copy and rewrite them).
@@ -207,13 +225,18 @@ object Maintenance {
                                  depths: Map[Int, Int] = Map.empty,
                                  aggSU: String = "",
                                  seqCol: String = "",
-                                 bytes: Map[String, Long] = Map.empty) {
+                                 bucketCols: Seq[String] = Seq.empty,
+                                 counters: Map[String, Long] = Map.empty) {
     /** The key as a COLUMN LIST: composite keys store the names
       * comma-joined in `keyCol` (column names in this engine never
       * carry commas — the DDL round-trip would reject them).
       */
     def keyCols: Seq[String] =
       if (keyCol.isEmpty) Seq.empty else keyCol.split(",").toSeq
+
+    /** The columns `kb` hashes: `bucketCols`, or the whole key. */
+    def bucketKey: Seq[String] =
+      if (bucketCols.isEmpty) keyCols else bucketCols
 
     /** `schemaDdl` parsed (`fromDDL` runs the full SQL parser): once per
       * instance, and a memoized manifest is one instance per version.
@@ -277,7 +300,8 @@ object Maintenance {
       obj("buckets", m.buckets)((n, k, d) => n.put(k, d))
       obj("deltas", m.deltas)((n, k, ds) => strs(n.putArray(k), ds))
       obj("rows", m.rows)((n, k, v) => n.put(k, v))
-      obj("bytes", m.bytes)((n, k, v) => n.put(k, v))
+      if (m.bucketCols.nonEmpty) strs(o.putArray("bucketCols"), m.bucketCols)
+      obj("counters", m.counters)((n, k, v) => n.put(k, v))
       if (m.statsCols.nonEmpty) strs(o.putArray("statsCols"), m.statsCols)
       obj("colstats", m.colStats) { (n, d, cs) =>
         val per = n.putObject(d)
@@ -344,7 +368,8 @@ object Maintenance {
         depths = obj("depths")(_.toInt, _.asInt),
         aggSU = str("aggSU"),
         seqCol = str("seqCol"),
-        bytes = obj("bytes")(identity, _.asLong))
+        bucketCols = Option(o.get("bucketCols")).fold(Seq.empty[String])(strs),
+        counters = obj("counters")(identity, _.asLong))
     }
   }
 
@@ -364,9 +389,9 @@ object Maintenance {
 
   private val stageCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The WRITER-UNIQUE suffix of generation dirs, segment dirs and
-    * manifest temps: two writers of the same version never share a
-    * path, so the atomic manifest publish is the ONLY contention point.
+  /** The WRITER-UNIQUE suffix of generation dirs and manifest temps:
+    * two writers of the same version never share a path, so the atomic
+    * manifest publish is the ONLY contention point.
     */
   private def uniqueSuffix(): String =
     s"${ProcessHandle.current().pid()}x${stageCounter.incrementAndGet()}"
@@ -611,8 +636,6 @@ object Maintenance {
       }
       e match {
         case a: E.Attribute => Some(a.name)
-        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          Some(u.name)
         // the analyzer wraps BOTH comparison sides in casts to the
         // common type (isin puts a no-op cast on the column itself);
         // identity and integral-widening casts preserve equality and
@@ -989,10 +1012,16 @@ object Maintenance {
     * `statsCols` declares the zone-map column list: each commit then
     * records per-dir MIN/MAX for them (from the same footer pass that
     * counts rows) and `readKeyedRange` prunes against range predicates.
+    * `bucketCols`, a prefix of `keyCols`, buckets on that prefix only
+    * (empty = the whole key). `counters` is read after the write job
+    * and recorded as the table's starting `counters`.
     */
   def writeKeyed(df: DataFrame, dir: String, keyCols: Seq[String],
-                 nBuckets: Int, statsCols: Seq[String] = Seq.empty): Unit =
-    writeKeyedInternal(df, dir, keyCols, nBuckets, statsCols)
+                 nBuckets: Int, statsCols: Seq[String] = Seq.empty,
+                 bucketCols: Seq[String] = Seq.empty,
+                 counters: () => Map[String, Long] = () => Map.empty): Unit =
+    writeKeyedInternal(df, dir, keyCols, nBuckets, statsCols,
+      bucketCols = bucketCols, counters = counters)
 
   private[sources] def writeKeyedInternal(df: DataFrame, dir: String,
                                           keyCols: Seq[String], nBuckets: Int,
@@ -1000,15 +1029,34 @@ object Maintenance {
                                           resolve: String = "",
                                           txn: Map[String, Long] = Map.empty,
                                           aggP: Int = 0, aggK: Int = -1,
-                                          aggSU: String = "")
+                                          aggSU: String = "",
+                                          bucketCols: Seq[String] = Seq.empty,
+                                          counters: () => Map[String, Long] =
+                                            () => Map.empty)
       : Unit = {
     require(nBuckets > 0, s"nBuckets must be > 0, got $nBuckets")
     require(statsCols.forall(df.columns.contains),
       s"statsCols ${statsCols.mkString(",")} must exist in the frame")
+    require(keyCols.startsWith(bucketCols),
+      s"bucketCols ${bucketCols.mkString(",")} must be a prefix of the key " +
+        keyCols.mkString(","))
     val spark = df.sparkSession
     val clean = cleanDir(dir)
-    val keyCol = keyCols.mkString(",")
-    val withKb = df.withColumn("kb", kb(keyCols, nBuckets, resolve))
+    // the table's layout and identity; each commit below adds its
+    // version, dirs, schema, stats and txn (a bucket key equal to the
+    // whole key is stored as the empty default)
+    val layout = KeyedManifest(0, Map.empty, keyCols.mkString(","),
+      nBuckets, statsCols = statsCols, resolve = resolve, aggP = aggP,
+      aggK = aggK, aggSU = aggSU,
+      bucketCols = if (bucketCols == keyCols) Seq.empty else bucketCols)
+    val withKb = df.withColumn("kb", kb(layout))
+    def staged(version: Int): KeyedManifest = {
+      val (dirs, rows, cstats, _) = stageBuckets(spark, clean, withKb,
+        version, keyCols, statsCols, nBuckets)
+      layout.copy(version = version, buckets = dirs,
+        schemaDdl = withKb.schema.toDDL, rows = rows, colStats = cstats,
+        txn = txn, counters = counters())
+    }
     if (manifestVersions(spark, dir).isEmpty) {
       val fs = hadoopFs(spark, new Path(clean))
       // reclaim LEGACY (pre-format plain-parquet) files only — never
@@ -1021,12 +1069,8 @@ object Maintenance {
           .filterNot(s => s.getPath.getName == "_manifests" ||
             s.getPath.getName.matches("""[bd]\d{5}_g\d{9}(-.*)?"""))
           .foreach(s => fs.delete(s.getPath, true))
-      val (staged, rows, cstats, _) = stageBuckets(spark, clean, withKb, 1,
-        keyCols, statsCols, nBuckets)
-      try writeManifest(spark, clean, KeyedManifest(1, staged, keyCol,
-        nBuckets, withKb.schema.toDDL, rows = rows,
-        statsCols = statsCols, colStats = cstats, resolve = resolve,
-        txn = txn, aggP = aggP, aggK = aggK, aggSU = aggSU))
+      val next = staged(1)
+      try writeManifest(spark, clean, next)
       catch {
         case _: CommitConflict =>
           // another bootstrap won v1 — our staged dirs (writer-unique
@@ -1034,10 +1078,8 @@ object Maintenance {
           // replacement through the ordinary optimistic path
           withCommitRetry(s"writeKeyed($dir)") {
             val m = readManifest(spark, dir)
-            writeManifest(spark, clean, KeyedManifest(m.version + 1,
-              staged, keyCol, nBuckets, withKb.schema.toDDL, rows = rows,
-              statsCols = statsCols, colStats = cstats, resolve = resolve,
-              txn = m.txn ++ txn, aggP = aggP, aggK = aggK, aggSU = aggSU))
+            writeManifest(spark, clean,
+              next.copy(version = m.version + 1, txn = m.txn ++ txn))
           }
       }
     } else {
@@ -1049,12 +1091,8 @@ object Maintenance {
       // generations vacuum away later
       withCommitRetry(s"writeKeyed($dir)") {
         val m = readManifest(spark, dir)
-        val (staged, rows, cstats, _) = stageBuckets(spark, clean, withKb,
-          m.version + 1, keyCols, statsCols, nBuckets)
-        writeManifest(spark, clean, KeyedManifest(m.version + 1, staged,
-          keyCol, nBuckets, withKb.schema.toDDL, rows = rows,
-          statsCols = statsCols, colStats = cstats, resolve = resolve,
-          txn = m.txn ++ txn, aggP = aggP, aggK = aggK, aggSU = aggSU))
+        writeManifest(spark, clean,
+          staged(m.version + 1).copy(txn = m.txn ++ txn))
       }
     }
   }
@@ -1373,8 +1411,9 @@ object Maintenance {
       s"${cleanDir(dir)} resolves by sequence column '${m0.seqCol}' — " +
         "upsert/delete/CoW-merge are batch-wins and would break it; " +
         "append stamped deltas instead (appendDeltaKeyed) and compact")
+    requireLayout(m0, dir, keyCols, nBuckets)
     val depths0 = m0.depths
-    val kbCol = kb(keyCols, nBuckets, m0.resolve, depths0)
+    val kbCol = kb(m0)
     val upT = updates.map(hashedBatch(_, kbCol))
     val dkT = deleteKeys.map(k =>
       hashedBatch(k.select(keyCols.map(F.col): _*), kbCol))
@@ -1641,9 +1680,10 @@ object Maintenance {
     val m0 =
       if (manifestVersions(spark, dir).isEmpty) None
       else Some(readManifest(spark, dir))
+    m0.foreach(requireLayout(_, dir, keyCols, nBuckets))
     val depths0 = m0.fold(Map.empty[Int, Int])(_.depths)
-    val (reduced, touched) = hashedBatch(reduced0,
-      kb(keyCols, nBuckets, m0.fold("")(_.resolve), depths0))
+    val (reduced, touched) = hashedBatch(reduced0, kb(m0.getOrElse(
+      KeyedManifest(0, Map.empty, keyCols.mkString(","), nBuckets))))
     if (touched.isEmpty) return
     def split(last: DataFrame): (DataFrame, Option[DataFrame]) =
       deleteCol match {
@@ -1690,6 +1730,15 @@ object Maintenance {
     }
   }
 
+  /** A mismatched bucket count or key would hash a batch into the WRONG
+    * buckets and silently merge against the wrong base slices.
+    */
+  private def requireLayout(m: KeyedManifest, dir: String,
+                            keyCols: Seq[String], nBuckets: Int): Unit =
+    require(m.nBuckets == nBuckets && m.keyCols == keyCols,
+      s"keyed table ${cleanDir(dir)} is (${m.keyCol}, ${m.nBuckets}) " +
+        s"buckets; caller passed (${keyCols.mkString(",")}, $nBuckets)")
+
   /** The pruned base read: exactly the touched buckets' live rows,
     * with any delta chains RESOLVED (so a full merge of a bucket folds
     * its merge-on-read deltas into the staged generation — stageMerge
@@ -1702,12 +1751,7 @@ object Maintenance {
                           m: KeyedManifest, touched: Seq[Int],
                           keyCols: Seq[String], nBuckets: Int): DataFrame = {
     val clean = cleanDir(dir)
-    val keyCol = keyCols.mkString(",")
-    // a mismatched bucket count or key would hash the batch into the
-    // WRONG buckets and silently merge against the wrong base slices
-    require(m.nBuckets == nBuckets && m.keyCol == keyCol,
-      s"keyed table $clean is (${m.keyCol}, ${m.nBuckets}) buckets; " +
-        s"caller passed ($keyCol, $nBuckets)")
+    requireLayout(m, dir, keyCols, nBuckets)
     // a SEQUENCE-resolved table's winner is max-seq, not batch-wins:
     // the copy-on-write merge/delete paths would silently overwrite
     // newer stored rows with older batch rows — those tables change
@@ -1746,16 +1790,20 @@ object Maintenance {
       tombstoneKeys)
 
   /** Composite-key merge-on-read append — same contract, keyed on the
-    * tuple (`tombstoneKeys` carries the key columns by name).
+    * tuple (`tombstoneKeys` carries the key columns by name). `counters`
+    * is read after the write job and added to the table's `counters`
+    * in the same commit.
     */
   def appendDeltaKeyedCols(spark: SparkSession, dir: String,
                            updates: DataFrame,
                            keyCols: Seq[String], nBuckets: Int,
                            tombstoneKeys: Option[DataFrame] = None,
                            txn: Map[String, Long] = Map.empty,
-                           seqCol: Option[String] = None): Unit =
+                           seqCol: Option[String] = None,
+                           counters: () => Map[String, Long] =
+                             () => Map.empty): Unit =
     appendDelta(spark, dir, updates, keyCols, nBuckets, tombstoneKeys, txn,
-      seqCol)
+      seqCol, counters)
 
   /** `appendDeltaKeyedCols`, returning the rows it staged. */
   private[graft] def appendDelta(spark: SparkSession, dir: String,
@@ -1763,7 +1811,9 @@ object Maintenance {
                                  keyCols: Seq[String], nBuckets: Int,
                                  tombstoneKeys: Option[DataFrame] = None,
                                  txn: Map[String, Long] = Map.empty,
-                                 seqCol: Option[String] = None): Long = {
+                                 seqCol: Option[String] = None,
+                                 counters: () => Map[String, Long] =
+                                   () => Map.empty): Long = {
     val clean = cleanDir(dir)
     val keyCol = keyCols.mkString(",")
     val m0 = readManifest(spark, dir)
@@ -1803,11 +1853,8 @@ object Maintenance {
       ups.unionByName(sel.withColumn("__tomb", F.lit(true)),
         allowMissingColumns = true)
     }
-    require(m0.nBuckets == nBuckets && m0.keyCol == keyCol,
-      s"keyed table $clean is (${m0.keyCol}, ${m0.nBuckets}) buckets; " +
-        s"caller passed ($keyCol, $nBuckets)")
-    val withKb = all.withColumn("kb",
-      kb(keyCols, nBuckets, m0.resolve, m0.depths))
+    requireLayout(m0, dir, keyCols, nBuckets)
+    val withKb = all.withColumn("kb", kb(m0))
     // Stage FIRST: the batch evaluates exactly once, into the staged
     // files, whose dir names give the touched buckets. The unique-keys-
     // per-call guard is the write's own repeated-key count, over exactly
@@ -1816,7 +1863,10 @@ object Maintenance {
     // the unreferenced stagings.
     val (staged, stagedRows, stagedStats, repeats) = stageBuckets(spark,
       clean, withKb, m0.version + 1, keyCols, m0.statsCols, nBuckets, 'd')
-    if (staged.isEmpty) return 0L
+    val added = counters()
+    // a batch with no rows still commits what it adds to the counters
+    // (a search index's documents without tokens count in n_docs)
+    if (staged.isEmpty && added.values.forall(_ == 0L)) return 0L
     if (repeats != 0L) {
       val fs = hadoopFs(spark, new Path(clean))
       staged.values.foreach(d => fs.delete(new Path(clean, d), true))
@@ -1833,7 +1883,7 @@ object Maintenance {
       // publishing deltas hashed under the OLD layout would park keys
       // in buckets they no longer hash to (silently unreachable rows)
       require(m.nBuckets == nBuckets && m.keyCol == keyCol &&
-        m.depths == m0.depths,
+        m.bucketCols == m0.bucketCols && m.depths == m0.depths,
         s"keyed table $clean re-bootstrapped/re-bucketed to " +
           s"(${m.keyCol}, ${m.nBuckets}) buckets mid-append; caller " +
           s"staged for ($keyCol, $nBuckets) — re-run the append")
@@ -1845,7 +1895,9 @@ object Maintenance {
       writeManifest(spark, clean, m.copy(version = m.version + 1,
         schemaDdl = schema, deltas = nextDeltas, rows = m.rows ++ stagedRows,
         colStats = m.colStats ++ stagedStats, txn = m.txn ++ txn,
-        seqCol = seqEff.getOrElse(m.seqCol)))
+        seqCol = seqEff.getOrElse(m.seqCol),
+        counters = m.counters ++ added.map { case (k, v) =>
+          k -> (m.counters.getOrElse(k, 0L) + v) }))
     }
     stagedRows.values.sum
   }
@@ -1992,7 +2044,7 @@ object Maintenance {
             readAggStateBuckets(spark, clean, m, live)
           else resolveBuckets(spark, clean, m, live).drop("kb")
         val rehashed = rows.withColumn("kb",
-          kb(m.keyCols, n, m.resolve, newDepths))
+          kb(m.copy(depths = newDepths)))
         val pending = stageMerge(spark, dir, rehashed, children, m)
         commitKeyed(spark,
           pending.copy(manifest = pending.manifest.copy(depths = newDepths)))
@@ -2115,7 +2167,7 @@ object Maintenance {
             readAggStateBuckets(spark, clean, m, live)
           else resolveBuckets(spark, clean, m, live).drop("kb")
         val rehashed = rows.withColumn("kb",
-          kb(m.keyCols, n, m.resolve, newDepths))
+          kb(m.copy(depths = newDepths)))
         val pending = stageMerge(spark, dir, rehashed, targets, m)
         commitKeyed(spark,
           pending.copy(manifest = pending.manifest.copy(depths = newDepths)))
@@ -2147,7 +2199,7 @@ object Maintenance {
     val clean = cleanDir(dir)
     val m = readManifest(spark, dir, version)
     require(m.nBuckets > 0,
-      s"$clean has no keyed metadata (a segmented dataset or commit group)")
+      s"$clean has no keyed metadata (a commit group)")
     val keyCols = m.keyCols
     val schema = m.schema
     val keyFields = keyCols.map(c => schema.fields.find(_.name == c)
@@ -2180,7 +2232,7 @@ object Maintenance {
     val probe = spark.createDataFrame(rows.asJava,
       StructType(keyFields.map(f => StructField(f.name, f.dataType))))
     val touched = probe
-      .select(kb(keyCols, m.nBuckets, m.resolve, m.depths).as("b"))
+      .select(kb(m).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
     // native-typed IN-list (not a string cast) so the predicate
     // PUSHES into the parquet scan of EVERY chain level and the
@@ -2482,13 +2534,13 @@ object Maintenance {
     * resolved scan (a chain's live count isn't the sum of its levels).
     * The fs listing per bucket is bounded metadata work (≤ nBuckets
     * dirs), same class as the manifest read itself. Refuses a manifest
-    * with no keyed metadata (a segmented dataset or commit group).
+    * with no keyed metadata (a commit group).
     */
   def keyedStats(spark: SparkSession, dir: String): DataFrame = {
     val clean = cleanDir(dir)
     val m = readManifest(spark, dir)
     require(m.nBuckets > 0,
-      s"$clean has no keyed metadata (a segmented dataset or commit group)")
+      s"$clean has no keyed metadata (a commit group)")
     val (fast, slow) = m.liveBuckets().partition(m.chain(_).isEmpty)
     val fs = hadoopFs(spark, new Path(clean))
     def filesIn(d: String): Long = fs.listStatus(new Path(clean, d))
@@ -2687,110 +2739,6 @@ object Maintenance {
     state.groupBy(keys.map(F.col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  // ---- segmented datasets (additive segment lists: search indexes) --------
-  //
-  // A second commit discipline for ADDITIVE datasets (the inverted
-  // index): the manifest lists SEGMENT dirs, a rebuild replaces the
-  // list, an append extends it — readers always resolve a complete
-  // segment set, appends never rewrite existing segments, and old
-  // snapshots time-travel/vacuum exactly like the keyed table.
-  // Reuses the keyed manifest format with buckets = ordinal → segment.
-
-  /** Stage-side helper: the writer-unique segment dir name for the
-    * next commit at `dir` (the version in the name is cosmetic — the
-    * suffix guarantees uniqueness; the manifest is the truth).
-    */
-  private[graft] def nextSegmentName(spark: SparkSession,
-                                     dir: String): String = {
-    val v = manifestVersions(spark, dir).lastOption.getOrElse(0) + 1
-    f"s$v%09d-${uniqueSuffix()}"
-  }
-
-  /** Publish the manifest adding `segDir` (an already-staged dir name
-    * under `dir`) — `replace = true` makes it the ONLY segment (a full
-    * rebuild), otherwise it appends to the current list. Optimistic
-    * retry is cheap here: a losing race just re-reads the manifest and
-    * re-publishes; the staged segment never depends on the base.
-    * Returns the committed version.
-    */
-  private[graft] def commitSegment(spark: SparkSession, dir: String,
-                                   segDir: String,
-                                   replace: Boolean): Int = {
-    val clean = cleanDir(dir)
-    // the staged segment's on-disk bytes, priced ONCE at commit (the
-    // writer just wrote these files — the walk is warm) into the
-    // manifest's `bytes` map: the tiered-compaction policy input
-    // (compactIndex smallestK), read from the manifest instead of
-    // re-walking every segment dir per compaction pass
-    val stagedBytes = dirBytes(spark, s"$clean/$segDir")
-    withCommitRetry(s"commitSegment($dir)") {
-      val next =
-        if (replace)
-          KeyedManifest(manifestVersions(spark, dir).lastOption
-            .getOrElse(0) + 1, Map(0 -> segDir),
-            bytes = Map(segDir -> stagedBytes))
-        else {
-          // an append needs the current segment list (readManifest
-          // refuses a dir that has none)
-          val m = readManifest(spark, dir)
-          KeyedManifest(m.version + 1, m.buckets +
-            ((m.buckets.keySet.maxOption.getOrElse(-1) + 1) -> segDir),
-            bytes = m.bytes + (segDir -> stagedBytes))
-        }
-      writeManifest(spark, clean, next)
-      next.version
-    }
-  }
-
-  /** Publish the manifest that FOLDS `folded` (already-listed segment
-    * dir names) into `segDir` (an already-staged dir name): the next
-    * segment list is the current one minus `folded` plus `segDir` —
-    * so segments a concurrent append added since the fold was planned
-    * SURVIVE (a replace=true commit would silently drop them). A
-    * concurrent rebuild/compact that removed one of the folded
-    * segments makes this fold stale — it fails loudly instead of
-    * double-counting the fold's rows next to a sibling copy.
-    */
-  private[graft] def commitSegmentsFold(spark: SparkSession, dir: String,
-                                        segDir: String,
-                                        folded: Seq[String]): Int = {
-    val clean = cleanDir(dir)
-    val stagedBytes = dirBytes(spark, s"$clean/$segDir")
-    withCommitRetry(s"commitSegmentsFold($dir)") {
-      val m = readManifest(spark, dir)
-      val cur = m.buckets.toSeq.sortBy(_._1).map(_._2)
-      require(folded.forall(cur.contains),
-        s"$clean: a concurrent rebuild/compact removed " +
-          s"${folded.filterNot(cur.contains).mkString(",")} — this fold " +
-          "is stale; re-plan the compaction against the fresh manifest")
-      val next = (cur.filterNot(folded.contains) :+ segDir)
-        .zipWithIndex.map { case (s, i) => i -> s }.toMap
-      val bytes = m.bytes.view.filterKeys(next.values.toSet).toMap +
-        (segDir -> stagedBytes)
-      writeManifest(spark, clean,
-        KeyedManifest(m.version + 1, next, bytes = bytes))
-      m.version + 1
-    }
-  }
-
-  /** The live segment dirs (full paths, ordinal order) at `version`
-    * (latest when None).
-    */
-  def listSegments(spark: SparkSession, dir: String,
-                   version: Option[Int] = None): Seq[String] = {
-    val clean = cleanDir(dir)
-    readManifest(spark, dir, version).buckets.toSeq.sortBy(_._1)
-      .map { case (_, d) => s"$clean/$d" }
-  }
-
-  /** GC unreferenced segments (same contract and grace rule as
-    * `vacuumKeyed`). Segment dirs are `s\d{9}-…` at the top level. */
-  def vacuumSegments(spark: SparkSession, dir: String,
-                     keepVersions: Int = 1,
-                     graceMs: Long = 15 * 60 * 1000L): Unit =
-    vacuumGenerations(spark, dir, keepVersions, graceMs,
-      """s\d{9}(-.*)?""")
-
   /** Finalize a state frame into the user-facing view:
     * (keys, n, total, mean[, vmin, vmax][, approx_distinct]) — the
     * extra columns appear when the state tracks them. `p` must match
@@ -2987,7 +2935,7 @@ object Maintenance {
       return
     }
     val (withKb, touched) = hashedBatch(partial,
-      kb(keys, m0.nBuckets, m0.resolve, m0.depths))
+      kb(m0))
     if (touched.isEmpty) return
     withCommitRetry(s"mergeAggStateKeyed($dir)") {
       val m = readManifest(spark, dir)
@@ -3016,7 +2964,7 @@ object Maintenance {
         base.select(cols.map(F.col): _*)
           .unionByName(withKb.select(cols.map(F.col): _*)),
         keys, pe, ke)
-        .withColumn("kb", kb(keys, m.nBuckets, m.resolve, m.depths))
+        .withColumn("kb", kb(m))
       commitKeyed(spark, stageMerge(spark, dir, merged, touched, m,
         txn = txn))
     }
@@ -3105,7 +3053,7 @@ object Maintenance {
         // each one whole (base ⊕ chain) — exactly the fold to restage
         val folded = readAggStateBuckets(spark, clean, m, target, p, sampleK)
           .withColumn("kb",
-            kb(m.keyCols, m.nBuckets, m.resolve, m.depths))
+            kb(m))
         commitKeyed(spark, stageMerge(spark, clean, folded, target, m))
       }
     }
@@ -3140,10 +3088,10 @@ object Maintenance {
       require(m.keyCols.contains(tagCol),
         s"$clean is keyed on (${m.keyCol}) — no tag column '$tagCol'")
       val st = readAggStateBuckets(spark, clean, m, m.liveBuckets())
-        .withColumn("kb", kb(m.keyCols, m.nBuckets, m.resolve, m.depths))
+        .withColumn("kb", kb(m))
       val cond = F.col(tagCol).isin(tags: _*)
       val partKb = part0.withColumn("kb",
-        kb(m.keyCols, m.nBuckets, m.resolve, m.depths))
+        kb(m))
       // ONE probe job (r15; was three — an isEmpty guard plus one
       // distinct-collect per side, each a job + a driver gap on a path
       // the profiler showed is job-count bound): a tagged union folds
@@ -3323,7 +3271,7 @@ object Maintenance {
     require(m2.resolve == "agg" && m1.resolve == "agg",
       s"$clean is not a bucketed agg state — use keyedChanges")
     val sameLayout = m1.nBuckets == m2.nBuckets && m1.keyCol == m2.keyCol &&
-      m1.depths == m2.depths
+      m1.bucketKey == m2.bucketKey && m1.depths == m2.depths
     val changed =
       if (sameLayout) m2.changedFrom(m1)
       else (m1.liveBuckets() ++ m2.liveBuckets()).distinct

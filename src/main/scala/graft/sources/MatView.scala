@@ -308,7 +308,8 @@ object MatView {
       catch { case _: Exception => return rebuildMv(spark, mv) }
     // a re-bootstrap (key/bucket-count change) re-hashes every row —
     // the per-bucket partials are all stale; rebuild
-    if (mFrom.nBuckets != mTo.nBuckets || mFrom.keyCol != mTo.keyCol)
+    if (mFrom.nBuckets != mTo.nBuckets || mFrom.keyCol != mTo.keyCol ||
+        mFrom.bucketKey != mTo.bucketKey)
       return rebuildMv(spark, mv)
     val changed = mTo.changedFrom(mFrom)
     if (changed.isEmpty) return refreshedAndCursor(spark, mv, d, head)

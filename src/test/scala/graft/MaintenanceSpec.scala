@@ -393,6 +393,53 @@ class MaintenanceSpec extends SparkSpec {
     assert(afterCdc((2L, 8L)) == 200L && !afterCdc.contains((0L, 9L)))
   }
 
+  test("bucketCols: keyed (a, b), bucketed on a: every write matches a Map, a in one bucket") {
+    val dir = tmp("graft_bprefix")
+    val key = Seq("a", "b")
+    var model = (0L until 120L).map(i => (i % 12, i) -> i * 10).toMap
+    def write(m: Map[(Long, Long), Long]) =
+      m.toSeq.map { case ((a, b), v) => (a, b, v) }.toDF("a", "b", "v")
+    def check(what: String): Unit = {
+      val rows = Maintenance.readKeyed(spark, dir)
+        .select("a", "b", "v", "kb").collect()
+      val got = rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+      assert(got.length == model.size && got.toMap == model, what)
+      // the bucket is a function of a alone: one bucket per a value
+      val perA = rows.groupBy(_.getLong(0)).map { case (a, rs) =>
+        a -> rs.map(_.getInt(3)).distinct.length }
+      assert(perA.values.forall(_ == 1), s"$what: a spans buckets $perA")
+    }
+    Maintenance.writeKeyed(write(model), dir, key, 4, bucketCols = Seq("a"))
+    val m1 = Maintenance.readManifest(spark, dir)
+    assert(m1.bucketCols == Seq("a") && m1.bucketKey == Seq("a"))
+    check("write")
+    // a copy-on-write upsert: replace one pair, add pairs under an old
+    // and a new a
+    val up = Map((3L, 3L) -> -1L, (3L, 1000L) -> -2L, (50L, 1L) -> -3L)
+    Maintenance.upsertKeyed(spark, dir, write(up), key, 4)
+    model ++= up
+    check("upsert")
+    // a merge-on-read delta with a tombstone
+    val delta = Map((5L, 5L) -> -4L, (60L, 2L) -> -5L)
+    Maintenance.appendDeltaKeyedCols(spark, dir, write(delta), key, 4,
+      tombstoneKeys = Some(Seq((7L, 7L)).toDF("a", "b")))
+    model = model ++ delta - ((7L, 7L))
+    check("delta append")
+    Maintenance.compactKeyed(spark, dir)
+    assert(Maintenance.readManifest(spark, dir).deltas.isEmpty)
+    check("compact")
+    // a split re-hashes the split leaves one bit deeper, still on a
+    Maintenance.splitKeyed(spark, dir, Seq(0, 1))
+    assert(Maintenance.readManifest(spark, dir).depths.nonEmpty)
+    check("split")
+    val probes = Seq((3L, 3L), (60L, 2L), (7L, 7L), (11L, 119L))
+    val lk = Maintenance.lookupKeyed(spark, dir,
+        probes.map { case (a, b) => Seq(a, b) })
+      .select("a", "b", "v").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(lk == model.filter { case (k, _) => probes.contains(k) })
+  }
+
   test("zone maps: readKeyedRange prunes to intersecting buckets, matches the unpruned filter") {
     val dir = tmp("graft_zone")
     // few keys per bucket => per-dir v ranges are narrow enough to

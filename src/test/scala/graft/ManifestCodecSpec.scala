@@ -50,10 +50,11 @@ class ManifestCodecSpec extends SparkSpec {
     depths <- mapOf(anyInt, anyInt)
     aggSU <- text
     seqCol <- text
-    bytes <- mapOf(text, anyLong)
+    bucketCols <- seqOf(text)
+    counters <- mapOf(text, anyLong)
   } yield KeyedManifest(version, buckets, keyCol, nBuckets, schemaDdl,
     deltas, rows, 1700000000123L, statsCols, colStats, resolve, txn,
-    aggP, aggK, depths, aggSU, seqCol, bytes)
+    aggP, aggK, depths, aggSU, seqCol, bucketCols, counters)
 
   test("manifest codec: decode(encode(m)) == m for arbitrary manifests") {
     val res = SCTest.check(
@@ -65,6 +66,33 @@ class ManifestCodecSpec extends SparkSpec {
     // the all-defaults manifest is just the stamp
     assert(KeyedManifest.encode(KeyedManifest(1, Map.empty)) ==
       """{"format":1}""")
+  }
+
+  test("bucketCols and counters round-trip, and are omitted at their defaults") {
+    val m = KeyedManifest(3, Map(0 -> "b00000_g000000001"), "term,doc_id",
+      4, bucketCols = Seq("term"), counters = Map("n_docs" -> 7L,
+        "sdl" -> Long.MaxValue))
+    val body = KeyedManifest.encode(m)
+    assert(body.contains(""""bucketCols":["term"]""") &&
+      body.contains(""""counters":{"n_docs":7,"sdl":9223372036854775807}"""),
+      body)
+    assert(KeyedManifest.decode(3, body) == m)
+    assert(m.bucketKey == Seq("term") && m.keyCols == Seq("term", "doc_id"))
+    val plain = m.copy(bucketCols = Seq.empty, counters = Map.empty)
+    val plainBody = KeyedManifest.encode(plain)
+    assert(!plainBody.contains("bucketCols") &&
+      !plainBody.contains("counters"), plainBody)
+    assert(KeyedManifest.decode(3, plainBody) == plain)
+    assert(plain.bucketKey == plain.keyCols)
+    // a write bucketing on the whole key records the default: the field
+    // is omitted from the manifest it publishes
+    val dir = tmp("graft_mbucket")
+    Maintenance.writeKeyed(spark.range(0, 8).selectExpr("id AS a",
+      "id AS b"), dir, Seq("a", "b"), 2, bucketCols = Seq("a", "b"))
+    val written = new String(Files.readAllBytes(
+      Paths.get(dir, "_manifests", "v000000001.json")), UTF_8)
+    assert(!written.contains("bucketCols") && !written.contains("counters"),
+      written)
   }
 
   test("every written manifest is compact JSON stamped format 1") {

@@ -1030,10 +1030,26 @@ class PlanQualitySpec extends SparkSpec {
       s"scan must prune to (doc_id, text):\n$p")
   }
 
+  /** The query `name`'s executed plan, after asserting that it reads
+    * only the keyed-table dirs (`b<5-digit bucket>_g…`, `d…` for
+    * deltas) of the buckets `terms` hash to in an index of `n` buckets
+    * (md5-hash(term) mod n).
+    */
+  private def planReadingTermBuckets(name: String, terms: Seq[String],
+                                     n: Int): String = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    val read = df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f)
+      .getParent.getName.substring(1, 6).toInt).toSet
+    val want = terms.map(t =>
+      (graft.ext.TextAnalysis.h60Value(t) % n).toInt).toSet
+    assert(read.nonEmpty && read.subsetOf(want),
+      s"$name must read only its terms' bucket dirs $want, read $read")
+    df.queryExecution.executedPlan.toString
+  }
+
   test("index search: static bucket pruning + term pushdown") {
-    val p = planOf("x61_index_search")
-    assert(p.contains("PartitionFilters: [bucket"),
-      s"query-term buckets must prune partitions statically:\n$p")
+    val p = planReadingTermBuckets("x61_index_search",
+      Seq("customer", "window"), 64)
     assert(p.contains("PushedFilters: [In(term"),
       s"term IN-list must push into the postings scan:\n$p")
     assert(p.contains("BroadcastHashJoin"),
@@ -1051,9 +1067,8 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("phrase index: static bucket pruning + term pushdown, no corpus scan") {
-    val p = planOf("x119_phrase_index")
-    assert(p.contains("PartitionFilters: [bucket"),
-      s"phrase-term buckets must prune partitions statically:\n$p")
+    val p = planReadingTermBuckets("x119_phrase_index",
+      Seq("value", "table", "part"), 64)
     assert(p.contains("PushedFilters: [In(term"),
       s"term IN-list must push into the postings scan:\n$p")
   }

@@ -13,6 +13,20 @@ class SearchSpec extends SparkSpec {
 
   private lazy val docs = Tables.load(spark, sf, "documents").df
 
+  /** The buckets `terms` hash to in an index of `n` buckets — the
+    * documented layout md5-hash(term) mod n, computed here apart from
+    * the engine's own bucket expression.
+    */
+  private def termBuckets(terms: Seq[String], n: Int): Set[Int] =
+    terms.map(t => (graft.ext.TextAnalysis.h60Value(t) % n).toInt).toSet
+
+  /** The bucket ids of the dirs `df` reads: keyed-table generation and
+    * delta dirs are named `b<5-digit bucket>_g…` / `d<5-digit bucket>_g…`.
+    */
+  private def bucketsRead(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent
+      .getName.substring(1, 6).toInt).toSet
+
   test("termFreq counts duplicate tokens; blank text has none") {
     val out = Seq("a b a a", "b", "", "   ").toDF("t")
       .select(Search.termFreq(col("t"), "a")).collect().map(_.getInt(0))
@@ -108,100 +122,73 @@ class SearchSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet ==
         Search.phraseSearch(docs, "doc_id", "text", Seq("scan", "query"))
           .collect().map(r => (r.getLong(0), r.getInt(1))).toSet)
-      // static pruning holds across segments: EVERY postings scan in
-      // the executed plan (one per segment) carries the bucket
-      // partition filter (inputFiles can't show this — it lists the
-      // relation's files before partition pruning applies)
-      val plan = Search.searchIndex(spark, dir, terms, 30)
-        .queryExecution.executedPlan.toString
-      // 2 segments × 2 branches (postings + the df fold) = 4 postings
-      // scans, EVERY one carrying the bucket partition filter (the
-      // Location: line truncates at ~100 chars, so scans are counted
-      // by their filters, not their paths)
-      val nPruned = "PartitionFilters: \\[bucket".r.findAllIn(plan).size
-      assert(nPruned == 4,
-        s"append broke pruning: $nPruned pruned postings scans\n$plan")
-      // a rebuild REPLACES the segment list; vacuum reclaims the old
-      // segments and the rebuilt index still answers identically
-      Search.buildIndex(docs, "doc_id", "text", dir, nBuckets = 8,
-        filesPerBucket = 2)
-      Search.vacuumIndex(spark, dir, keepVersions = 1, graceMs = 0L)
-      val live = graft.sources.Maintenance.listSegments(spark, dir)
-      assert(live.size == 1)
+      // the append landed as delta dirs, and the grown index still
+      // reads only the query terms' buckets (base and delta levels)
+      val M = graft.sources.Maintenance
+      assert(M.readManifest(spark, dir).deltas.nonEmpty)
+      val read = bucketsRead(Search.searchIndex(spark, dir, terms, 30))
+      assert(read.nonEmpty && read.subsetOf(termBuckets(terms, 16)),
+        s"append broke pruning: read buckets $read")
+      // a rebuild REPLACES the table; vacuum reclaims the old
+      // generations and the rebuilt index still answers identically
+      Search.buildIndex(docs, "doc_id", "text", dir, nBuckets = 8)
+      M.vacuumKeyed(spark, dir, keepVersions = 1, graceMs = 0L)
+      val m = M.readManifest(spark, dir)
+      assert(m.nBuckets == 8 && m.deltas.isEmpty)
       val onDisk = new java.io.File(dir).listFiles
-        .map(_.getName).filter(_.startsWith("s")).toSet
-      assert(onDisk == live.map(_.split('/').last).toSet,
-        s"stale segments survived vacuum: $onDisk")
+        .map(_.getName).filterNot(_.startsWith("_")).toSet
+      assert(onDisk == m.buckets.values.toSet,
+        s"stale generations survived vacuum: $onDisk")
       assert(Search.searchIndex(spark, dir, terms, 30)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
         Search.bm25Search(docs, "doc_id", "text", terms, 30)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
-      // filesPerBucket widened the write without fragmenting pruning:
-      // the segment holds more files than buckets (each bucket ≤ 2),
-      // and every file still lives under its bucket dir
-      val bdirs = new java.io.File(live.head + "/postings").listFiles
-        .filter(_.getName.startsWith("bucket="))
-      val perBucket = bdirs.map(
-        _.listFiles.count(_.getName.endsWith(".parquet")))
-      assert(perBucket.sum > bdirs.length && perBucket.forall(_ <= 2),
-        s"sub-split did not widen the layout: ${perBucket.toSeq}")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(dir))
     }
   }
 
-  test("compactIndex folds the segment list: parity bit-identical, tiered smallestK keeps the base, appends survive") {
+  test("compactIndex folds the appended deltas: bit-identical parity, vacuum reclaims") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compactidx")
       .toString
     try {
       val M = graft.sources.Maintenance
-      // a big base + two small appends = 3 segments
+      // a big base + two small appends = chains of two deltas
       Search.buildIndex(docs.filter(col("doc_id") % 4 =!= 3), "doc_id",
         "text", dir, nBuckets = 16)
-      val baseSeg = M.listSegments(spark, dir).head
       Search.appendIndex(docs.filter(col("doc_id") % 8 === 3), "doc_id",
         "text", dir)
       Search.appendIndex(docs.filter(col("doc_id") % 8 === 7), "doc_id",
         "text", dir)
-      assert(M.listSegments(spark, dir).size == 3)
+      assert(M.readManifest(spark, dir).deltas.values.map(_.length).max == 2)
       val terms = Seq("customer", "window", "spark")
       def indexed() = Search.searchIndex(spark, dir, terms, 30)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val direct = Search.bm25Search(docs, "doc_id", "text", terms, 30)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(indexed() == direct)
-      // tiered fold: the 2 smallest segments merge; the big base is
-      // NEVER read or rewritten (compaction IO ∝ the small tail)
-      val baseState = parquetFileState(baseSeg)
-      Search.compactIndex(spark, dir, smallestK = Some(2))
-      val after2 = M.listSegments(spark, dir)
-      assert(after2.size == 2 && after2.contains(baseSeg))
-      assert(parquetFileState(baseSeg) == baseState,
-        "smallestK fold rewrote the base segment")
-      assert(indexed() == direct)
-      // full fold: one segment, still bit-identical (positions
-      // included — the fold never re-tokenizes), pruning intact
+      // full fold: no chain left, still bit-identical (positions
+      // included — the fold never re-tokenizes), corpus stats carried
+      val stats = M.readManifest(spark, dir).counters
       Search.compactIndex(spark, dir)
-      assert(M.listSegments(spark, dir).size == 1)
+      val m = M.readManifest(spark, dir)
+      assert(m.deltas.isEmpty && m.counters == stats)
       assert(indexed() == direct)
       assert(Search.phraseSearchIndex(spark, dir, Seq("scan", "query"))
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet ==
         Search.phraseSearch(docs, "doc_id", "text", Seq("scan", "query"))
           .collect().map(r => (r.getLong(0), r.getInt(1))).toSet)
-      val plan = Search.searchIndex(spark, dir, terms, 30)
-        .queryExecution.executedPlan.toString
-      // 1 segment × 2 branches, both bucket-pruned
-      assert("PartitionFilters: \\[bucket".r.findAllIn(plan).size == 2)
-      // policy no-op below minSegments; vacuum reclaims folded segments
-      val v = M.manifestVersions(spark, dir).last
+      val read = bucketsRead(Search.searchIndex(spark, dir, terms, 30))
+      assert(read.nonEmpty && read.subsetOf(termBuckets(terms, 16)))
+      // a compaction with no chain left commits nothing; vacuum
+      // reclaims the folded levels
       Search.compactIndex(spark, dir)
-      assert(M.manifestVersions(spark, dir).last == v)
-      Search.vacuumIndex(spark, dir, keepVersions = 1, graceMs = 0L)
+      assert(M.manifestVersions(spark, dir).last == m.version)
+      M.vacuumKeyed(spark, dir, keepVersions = 1, graceMs = 0L)
       val onDisk = new java.io.File(dir).listFiles
-        .map(_.getName).filter(_.startsWith("s")).toSet
-      assert(onDisk ==
-        M.listSegments(spark, dir).map(_.split('/').last).toSet)
+        .map(_.getName).filterNot(_.startsWith("_")).toSet
+      assert(onDisk == m.buckets.values.toSet)
       assert(indexed() == direct)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(
@@ -218,21 +205,76 @@ class SearchSpec extends SparkSpec {
       Search.appendIndex(docs, "doc_id", "text", dir)
     }
     assert(err.getMessage.contains("pre-manifest"), err.getMessage)
+    // a keyed table that is not a (term, doc_id) postings table is
+    // refused before any write: keyed on the pair but bucketed on the
+    // whole key, and keyed on something else
+    val M = graft.sources.Maintenance
+    val post = Seq(("a", 1L, 1, 1L)).toDF("term", "doc_id", "dl", "tf")
+    for ((key, bucketCols) <- Seq((Seq("term", "doc_id"), Nil),
+        (Seq("doc_id"), Nil))) {
+      val other = java.nio.file.Files.createTempDirectory("graft_notidx")
+        .toString
+      M.writeKeyed(post, other, key, 4, bucketCols = bucketCols)
+      val v = M.manifestVersions(spark, other)
+      val e = intercept[IllegalArgumentException] {
+        Search.appendIndex(docs, "doc_id", "text", other)
+      }
+      assert(e.getMessage.contains("is not a search index"), e.getMessage)
+      assert(M.manifestVersions(spark, other) == v)
+    }
   }
 
-  test("keyedStats refuses a search index instead of reporting bytes as rows") {
+  test("n_docs and sdl equal a direct count after build and append") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idxcounts")
+      .toString
+    try {
+      val M = graft.sources.Maintenance
+      def direct(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+        val r = df.agg(count(lit(1)),
+          coalesce(sum(size(graft.ext.TextAnalysis.tokens(col("text")))),
+            lit(0L))).head
+        (r.getLong(0), r.getLong(1))
+      }
+      def recorded(): (Long, Long) = {
+        val c = M.readManifest(spark, dir).counters
+        (c("n_docs"), c("sdl"))
+      }
+      val a = docs.filter(col("doc_id") % 3 === 0)
+      Search.buildIndex(a, "doc_id", "text", dir, nBuckets = 8)
+      assert(recorded() == direct(a))
+      Search.appendIndex(docs.filter(col("doc_id") % 3 =!= 0), "doc_id",
+        "text", dir)
+      assert(recorded() == direct(docs))
+      // documents without text write no postings but still count: the
+      // append commits the counters alone
+      val blank = Seq((-1L, null: String), (-2L, null: String))
+        .toDF("doc_id", "text")
+      val m = M.readManifest(spark, dir)
+      Search.appendIndex(blank, "doc_id", "text", dir)
+      val m2 = M.readManifest(spark, dir)
+      assert(m2.version == m.version + 1 && m2.deltas == m.deltas)
+      assert(recorded() ==
+        direct(docs.select("doc_id", "text").unionByName(blank)))
+      assert(Search.indexStats(spark, dir).head.getLong(0) ==
+        direct(docs)._1 + 2L)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(dir))
+    }
+  }
+
+  test("keyedStats reports a search index's postings rows") {
     val dir = java.nio.file.Files.createTempDirectory("graft_idxstats")
       .toString
     val M = graft.sources.Maintenance
-    Search.buildIndex(docs.limit(20), "doc_id", "text", dir, nBuckets = 4)
-    // segment sizes live in their own `bytes` map, never in `rows`
-    val m = M.readManifest(spark, dir)
-    assert(m.rows.isEmpty && m.bytes.keySet == m.buckets.values.toSet &&
-      m.bytes.values.forall(_ > 0), m)
-    val err = intercept[IllegalArgumentException] {
-      M.keyedStats(spark, dir)
-    }
-    assert(err.getMessage.contains("no keyed metadata"), err.getMessage)
+    val some = docs.limit(20)
+    Search.buildIndex(some, "doc_id", "text", dir, nBuckets = 4)
+    val postings = some.select(col("doc_id"),
+        explode(graft.ext.TextAnalysis.tokens(col("text"))).as("term"))
+      .distinct().count()
+    val st = M.keyedStats(spark, dir).collect()
+    assert(st.map(_.getLong(1)).sum == postings)
+    assert(st.map(_.getInt(0)).toSet == M.readManifest(spark, dir).buckets.keySet)
   }
 
   test("phraseCount: consecutive matches only, overlaps count, short docs safe") {
@@ -492,26 +534,24 @@ class SearchSpec extends SparkSpec {
     assert(empty == 0)
   }
 
-  test("corpus-stats memo serves a new session without a Spark job") {
+  test("a new session's searchIndex plan build runs no Spark job") {
     val dir = java.nio.file.Files.createTempDirectory("graft_statsmemo")
       .toString
     try {
       Search.buildIndex(docs, "doc_id", "text", dir, nBuckets = 8)
       val terms = Seq("customer", "window")
-      Search.searchIndex(spark, dir, terms, 5) // consults the stats once
       val other = spark.newSession()
       // count this thread's jobs from here on (the listener bus is
-      // asynchronous: earlier jobs' events may still be in flight) that
-      // the stats consult launched (the postings reads' footer jobs are
-      // per-session and not what the memo covers)
-      val group = "graft-statsmemo"
+      // asynchronous: earlier jobs' events may still be in flight): the
+      // corpus stats come from the manifest and the term buckets from
+      // a driver-side hash, so building the plan runs none
+      val group = "graft-planbuild"
       @volatile var jobs = 0
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
             js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           if (Option(js.properties).exists(
-                _.getProperty("spark.jobGroup.id") == group) &&
-              js.stageInfos.exists(_.details.contains("Search$.statsOf")))
+                _.getProperty("spark.jobGroup.id") == group))
             jobs += 1
       }
       spark.sparkContext.addSparkListener(listener)
@@ -519,7 +559,7 @@ class SearchSpec extends SparkSpec {
       try {
         Search.searchIndex(other, dir, terms, 5) // plan build only
         Thread.sleep(300) // let listener events drain
-        assert(jobs == 0, s"second session's stats consult ran $jobs jobs")
+        assert(jobs == 0, s"second session's plan build ran $jobs jobs")
       } finally {
         spark.sparkContext.clearJobGroup()
         spark.sparkContext.removeSparkListener(listener)

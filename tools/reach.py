@@ -21,7 +21,6 @@ CALLERS = ["src/main", "graftbench/src", "examples", "tools"]
 KEEP = {
     "jaccardPairs": "all-pairs reference that ExtSpec checks jaccardPairsExact against",
     "linearMarginJoined": "cross-check that ExtSpec compares linearMargin against",
-    "vacuumIndex": "the only path that reclaims superseded index segments",
     "entry": "SparkEntry.entry, the smoke main",
     "bufferEncoder": "Aggregator member, called by Spark",
     "outputEncoder": "Aggregator member, called by Spark",
