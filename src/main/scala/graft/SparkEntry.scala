@@ -1460,7 +1460,7 @@ object SparkEntry {
       val cur = dir + ".cursor"
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(cur), false)
+      fs.delete(new org.apache.hadoop.fs.Path(cur), true)
       val M = graft.sources.Maintenance
       val S = graft.streaming.Streams
       val n = scaled(1000000)
@@ -4532,7 +4532,7 @@ object SparkEntry {
       val cur = dir + ".cursor"
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(cur), false)
+      fs.delete(new org.apache.hadoop.fs.Path(cur), true)
       graft.lang.Interp.run(s,
         s"""b = build_agg_state_keyed(orders[o_orderkey % 10 != 0],
            |      "o_orderpriority", "o_totalprice", "$dir", 8)
@@ -4578,7 +4578,7 @@ object SparkEntry {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      fs.delete(new org.apache.hadoop.fs.Path(cur), false)
+      fs.delete(new org.apache.hadoop.fs.Path(cur), true)
       graft.lang.Interp.run(s,
         s"""base = orders {o_orderkey, o_totalprice}
            |snap = write_keyed(base, "$dir", "o_orderkey", 8)

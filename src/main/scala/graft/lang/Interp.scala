@@ -2865,7 +2865,7 @@ object Interp {
           PTable(spark.range(1).select(lit(true).as("ok")))
         case "unregister_cursor" =>
           // unregister_cursor(dir, name) — decommission a registered
-          // CDC consumer: its cursor file stops flooring vacuum_keyed
+          // CDC consumer: its cursor stops flooring vacuum_keyed
           if (args.length != 2)
             throw new TypeError("unregister_cursor(\"dir\", \"name\")")
           graft.sources.Maintenance.unregisterCursor(spark,

@@ -474,6 +474,14 @@ object Maintenance {
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
+  /** The newest manifest at `dir` from one listing; None when `dir`
+    * has none.
+    */
+  private[graft] def newestManifest(spark: SparkSession, dir: String)
+      : Option[KeyedManifest] =
+    manifestVersions(spark, dir).lastOption
+      .flatMap(tryReadManifest(spark, cleanDir(dir), _))
+
   /** Publish a manifest: write to a dot-temp in `_manifests`, then
     * publish it as `v<N>.json` through `Fs.publishIfAbsent`. That
     * publish IS the commit point — everything else a commit did is
@@ -1104,8 +1112,7 @@ object Maintenance {
     */
   def lastTxn(spark: SparkSession, dir: String, appId: String)
       : Option[Long] =
-    if (manifestVersions(spark, dir).isEmpty) None
-    else readManifest(spark, dir).txn.get(appId)
+    newestManifest(spark, dir).flatMap(_.txn.get(appId))
 
   /** Row count + per-column MIN/MAX zone maps of the parquet `file`,
     * from its FOOTER alone, with read options built from `conf`. The
@@ -2183,11 +2190,10 @@ object Maintenance {
     * size: this is what a 100 TB key-value probe should cost.
     *
     * Works for EVERY key type the table can store: the probe buckets
-    * are computed by the ENGINE'S OWN `kb` expression over a tiny
-    * local key frame (one job over |keys| rows — never a scan), so the
-    * hash is bit-identical to the stored layout by construction —
-    * timestamp/decimal/double keys included (the pre-r10 JVM-toString
-    * shortcut had to reject those loudly). Composite-key tables take
+    * are the ENGINE'S OWN bucket hash of a tiny local key frame
+    * (`bucketsOf`: no Spark job), bit-identical to the stored layout
+    * for every key type. A key with a NULL component pins no bucket
+    * and matches no row, as `k = NULL` does. Composite-key tables take
     * each key as a Seq of the components in manifest order.
     * `version` pins the snapshot the probe answers from (time-travel
     * point reads, and the pinned-frame selection path) — latest when
@@ -2226,14 +2232,12 @@ object Maintenance {
       case (d: BigDecimal, _: DecimalType) => d.bigDecimal
       case _ => v
     }
-    val rows = tuples.map(t => org.apache.spark.sql.Row(
-      t.zip(keyFields).map { case (v, f) => coerce(v, f.dataType) }: _*))
+    val rows = tuples.filterNot(_.contains(null)).map(t =>
+      org.apache.spark.sql.Row(
+        t.zip(keyFields).map { case (v, f) => coerce(v, f.dataType) }: _*))
     import scala.jdk.CollectionConverters._
-    val probe = spark.createDataFrame(rows.asJava,
-      StructType(keyFields.map(f => StructField(f.name, f.dataType))))
-    val touched = probe
-      .select(kb(m).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val touched = bucketsOf(m, spark.createDataFrame(rows.asJava,
+      StructType(keyFields.map(f => StructField(f.name, f.dataType)))))
     // native-typed IN-list (not a string cast) so the predicate
     // PUSHES into the parquet scan of EVERY chain level and the
     // within-bucket key sort lets row-group min/max stats skip most
@@ -2348,27 +2352,34 @@ object Maintenance {
     * dirs whose manifest publish has not landed yet (without it, a
     * vacuum racing a commit would delete dirs the imminent manifest
     * references). Crashed-writer residue — orphaned `.tmp_*` manifest
-    * files — is reclaimed under the same age rule.
+    * files — is reclaimed under the same age rule, and so are the
+    * superseded versions of every registered cursor. Versions a
+    * registered consumer still needs survive unless `force`.
     */
   def vacuumKeyed(spark: SparkSession, dir: String,
                   keepVersions: Int = 1,
                   graceMs: Long = 15 * 60 * 1000L,
-                  force: Boolean = false): Unit =
+                  force: Boolean = false): Unit = {
     vacuumGenerations(spark, dir, keepVersions, graceMs,
       """[bd]\d{5}_g\d{9}(-.*)?""",
       cursorFloor =
         if (force) 0
-        else Seq(registeredCursorMin(spark, dir),
+        else Seq(registeredConsumerMin(spark, dir),
           registeredGroupMin(spark, dir)).filter(_ > 0)
           .minOption.getOrElse(0))
+    // a cursor is its newest manifest; superseded ones go under grace
+    val cd = new Path(cleanDir(dir), "_cursors")
+    Fs.listOrEmpty(hadoopFs(spark, cd), cd).foreach(st =>
+      vacuumGroup(spark, st.getPath.toString, 1, graceMs))
+  }
 
-  /** The REGISTERED CDC cursor file path for consumer `name` of the
-    * keyed table at `dir`: `<dir>/_cursors/<name>`. A cursor living
-    * here is visible to `vacuumKeyed`, which then refuses to drop the
-    * manifest versions the consumer still needs (its recorded version
-    * onward) unless forced — the retention/CDC coupling that keeps a
-    * lagging consumer from failing on a vacuumed `from` snapshot.
-    * Cursors elsewhere still work, but are unprotected.
+  /** The REGISTERED CDC cursor path for consumer `name` of the keyed
+    * table at `dir`: `<dir>/_cursors/<name>`. A cursor living here is
+    * visible to `vacuumKeyed`, which then refuses to drop the manifest
+    * versions the consumer still needs (its recorded version onward)
+    * unless forced — the retention/CDC coupling that keeps a lagging
+    * consumer from failing on a vacuumed `from` snapshot. Cursors
+    * elsewhere still work, but are unprotected.
     */
   def registeredCursorPath(dir: String, name: String): String = {
     require(name.nonEmpty && !name.contains("/"),
@@ -2376,31 +2387,62 @@ object Maintenance {
     s"${cleanDir(dir)}/_cursors/$name"
   }
 
-  /** The smallest version any registered cursor still needs (0 = no
-    * registered consumer, or none that constrains). A consumer at
-    * cursor v next diffs (v, v+1..), so versions ≥ v must survive.
+  /** A CDC cursor's `txn` keys: the last version it processed and,
+    * mid bounded initial load only, the buckets of it already emitted.
     */
-  private def registeredCursorMin(spark: SparkSession, dir: String): Int = {
-    val cd = new Path(cleanDir(dir), "_cursors")
-    val fs = hadoopFs(spark, cd)
-    Fs.listOrEmpty(fs, cd).filterNot(_.getPath.getName.contains(".tmp_"))
-      .flatMap { st =>
-        try {
-          val in = fs.open(st.getPath)
-          val s =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          // "i:<v0>:<idx>" = a consumer mid-initial-load pinned at v0
-          // (Streams.pollKeyedChangesBounded); plain int = version
-          val v = if (s.startsWith("i:")) s.split(":")(1).toInt else s.toInt
-          if (v > 0) Some(v) else None
-        } catch { case _: Exception => None } // fresh/garbled: no floor
-      }.minOption.getOrElse(0)
+  private[graft] val CursorVersion = "version"
+  private[graft] val CursorBucket = "bucket"
+
+  /** Publish the next manifest version of `dir`, carrying every field
+    * of the newest one (none: an empty manifest) but `txn`, which
+    * becomes `pins(newest txn)`: the one commit of a consumer position
+    * — a CDC cursor, a commit group's pins, a view's watermark. A lost
+    * publish race re-reads and re-publishes. Returns the version.
+    */
+  private[graft] def commitPins(spark: SparkSession, dir: String)
+                               (pins: Map[String, Long] => Map[String, Long])
+      : Int = withCommitRetry(s"commitPins($dir)") {
+    val prev = newestManifest(spark, dir)
+      .getOrElse(KeyedManifest(0, Map.empty))
+    writeManifest(spark, cleanDir(dir), prev.copy(
+      version = prev.version + 1, txn = pins(prev.txn)))
+    prev.version + 1
+  }
+
+  /** `dir`, cleaned, as one path component (url-safe base64): the
+    * name of a consumer's pointer under a table's `_groups/` or `_mvs/`.
+    */
+  private[graft] def dirName(dir: String): String =
+    java.util.Base64.getUrlEncoder.withoutPadding
+      .encodeToString(cleanDir(dir).getBytes("UTF-8"))
+
+  /** The dir a `dirName` names; None for a name it cannot have made. */
+  private def nameDir(name: String): Option[String] =
+    try Some(new String(java.util.Base64.getUrlDecoder.decode(name), "UTF-8"))
+    catch { case _: IllegalArgumentException => None }
+
+  /** The smallest version of `dir` a registered consumer still needs
+    * (0 = none constrains): the pin in the NEWEST manifest of each
+    * cursor dir under `<dir>/_cursors/` (its `CursorVersion`) and of
+    * each view state an `<dir>/_mvs/` registration names (its watermark,
+    * keyed by `dir`). A consumer at v next diffs (v, v+1..).
+    */
+  private def registeredConsumerMin(spark: SparkSession, dir: String): Int = {
+    val clean = cleanDir(dir)
+    val fs = hadoopFs(spark, new Path(clean))
+    def names(sub: String) =
+      Fs.listOrEmpty(fs, new Path(clean, sub)).map(_.getPath.getName)
+    val pins = names("_mvs").flatMap(nameDir).map(_ -> clean) ++
+      names("_cursors").map(n => (s"$clean/_cursors/$n", CursorVersion))
+    pins.flatMap { case (d, key) =>
+      try newestManifest(spark, d).flatMap(_.txn.get(key))
+      catch { case _: Exception => None } // unreadable: no floor
+    }.map(_.toInt).filter(_ > 0).minOption.getOrElse(0)
   }
 
   /** The COMMIT-GROUP pointer file registering `groupDir` as a
     * consumer of the member table at `memberDir`:
-    * `<member>/_groups/<urlb64(groupDir)>`. Written by `commitGroup`
+    * `<member>/_groups/<dirName(groupDir)>`. Written by `commitGroup`
     * for every member it pins; `vacuumKeyed` then reads the LIVE group
     * manifests (never a cached number — manifest publishes are atomic,
     * pointer files just locate them) and retains every member version
@@ -2409,9 +2451,7 @@ object Maintenance {
     * `readGroup` (which then failed loudly).
     */
   def registeredGroupPath(memberDir: String, groupDir: String): String =
-    s"${cleanDir(memberDir)}/_groups/${java.util.Base64.getUrlEncoder
-      .withoutPadding.encodeToString(
-        cleanDir(groupDir).getBytes("UTF-8"))}"
+    s"${cleanDir(memberDir)}/_groups/${dirName(groupDir)}"
 
   /** The smallest version of `dir` any registered commit group still
     * pins, across every group version (0 = none constrains). A deleted
@@ -2421,15 +2461,11 @@ object Maintenance {
     val gd = new Path(cleanDir(dir), "_groups")
     val member = cleanDir(dir)
     Fs.listOrEmpty(hadoopFs(spark, gd), gd)
-      .filterNot(_.getPath.getName.contains(".tmp_"))
-      .flatMap { st =>
-        try {
-          val groupDir = new String(java.util.Base64.getUrlDecoder
-            .decode(st.getPath.getName), "UTF-8")
-          manifestVersions(spark, groupDir).flatMap(v =>
-            readManifest(spark, groupDir, Some(v)).txn.get(member)
-              .map(_.toInt))
-        } catch { case _: Exception => Nil } // dead group: no floor
+      .flatMap(st => nameDir(st.getPath.getName)).flatMap { groupDir =>
+        try manifestVersions(spark, groupDir).flatMap(v =>
+          readManifest(spark, groupDir, Some(v)).txn.get(member)
+            .map(_.toInt))
+        catch { case _: Exception => Nil } // dead group: no floor
       }.filter(_ > 0).minOption.getOrElse(0)
   }
 
@@ -2476,37 +2512,25 @@ object Maintenance {
     // failed read per vacuum pass. Swept under the same age rule as
     // everything else (a freshly-registered group whose first commit
     // is in flight must survive).
-    val gd = new Path(clean, "_groups")
-    if (fs.exists(gd))
-      fs.listStatus(gd).toSeq
-        .filter(s => !s.getPath.getName.contains(".tmp_") &&
-          s.getModificationTime < cutoff)
-        .filter { s =>
-          // the catch is scoped to the DECODE step only (undecodable
-          // name: dead by construction). A transient IO error while
-          // LISTING a live group's manifests must NOT classify the
-          // pointer as dead — deleting it would let a later vacuum
-          // drop versions the group still pins (r13 ADVICE). Keep the
-          // pointer this pass; a later clean listing sweeps it.
-          val groupDir =
-            try Some(new String(java.util.Base64.getUrlDecoder
-              .decode(s.getPath.getName), "UTF-8"))
-            catch { case _: IllegalArgumentException => None }
-          groupDir match {
-            case None => true // undecodable: dead
-            case Some(g) =>
-              try manifestVersions(spark, g).isEmpty
-              catch { case _: Exception => false } // IO error: keep
-          }
-        }
-        .foreach(s => fs.delete(s.getPath, false))
+    Fs.listOrEmpty(fs, new Path(clean, "_groups"))
+      .filter(_.getModificationTime < cutoff)
+      .filter { s =>
+        // the catch is scoped to the LISTING only: an undecodable name
+        // is dead by construction, but a transient IO error while
+        // listing a live group's manifests must NOT classify the
+        // pointer as dead — deleting it would let a later vacuum drop
+        // versions the group still pins (r13 ADVICE). Keep the pointer
+        // this pass; a later clean listing sweeps it.
+        nameDir(s.getPath.getName).forall(g =>
+          try manifestVersions(spark, g).isEmpty
+          catch { case _: Exception => false })
+      }
+      .foreach(s => fs.delete(s.getPath, false))
     // crashed-writer residue: manifest temps
-    val md = manifestDir(clean)
-    if (fs.exists(md))
-      fs.listStatus(md).toSeq
-        .filter(s => s.getPath.getName.startsWith(".tmp_") &&
-          s.getModificationTime < cutoff)
-        .foreach(s => fs.delete(s.getPath, false))
+    Fs.listOrEmpty(fs, manifestDir(clean))
+      .filter(s => s.getPath.getName.startsWith(".tmp_") &&
+        s.getModificationTime < cutoff)
+      .foreach(s => fs.delete(s.getPath, false))
   }
 
   /** Layout report over any frame carrying a partition/bucket column:
@@ -3068,14 +3092,17 @@ object Maintenance {
     * (which FOLDS partials into existing rows — correct only for
     * insert-only feeds), replace handles updates and deletes, and is
     * IDEMPOTENT: re-running the same refresh reproduces the same state.
+    * `txn` lands in the same commit (a view's watermark), which is
+    * published even when no state row changed.
     *
     * Cost: O(state) to locate the condemned rows (the state is orders
     * smaller than its base by construction) plus a rewrite of only the
     * state buckets holding condemned or fresh rows.
     */
-  def replaceAggStateByTag(spark: SparkSession, dir: String,
-                           partial: DataFrame, tagCol: String,
-                           tags: Seq[Int]): Unit = {
+  private[graft] def replaceAggStateByTag(spark: SparkSession, dir: String,
+                                         partial: DataFrame, tagCol: String,
+                                         tags: Seq[Int],
+                                         txn: Map[String, Long]): Unit = {
     require(tags.nonEmpty, "replaceAggStateByTag: no tags")
     val clean = cleanDir(dir)
     // freeze the caller's partial BEFORE the retry loop: its lineage
@@ -3114,8 +3141,10 @@ object Maintenance {
         val merged = st.filter(touchedCol && !cond)
           .unionByName(partKb.filter(touchedCol),
             allowMissingColumns = true)
-        commitKeyed(spark, stageMerge(spark, dir, merged, touched, m))
-      }
+        commitKeyed(spark, stageMerge(spark, dir, merged, touched, m, txn))
+      } else if (txn.nonEmpty)
+        writeManifest(spark, clean,
+          m.copy(version = m.version + 1, txn = m.txn ++ txn))
     }
   }
 
@@ -3143,16 +3172,7 @@ object Maintenance {
     require(pins.nonEmpty, "commitGroup: no pins")
     val clean = cleanDir(groupDir)
     val p = pins.map { case (t, v) => cleanDir(t) -> v.toLong }
-    val committed = withCommitRetry(s"commitGroup($groupDir)") {
-      val versions = manifestVersions(spark, clean)
-      val prev =
-        if (versions.isEmpty) Map.empty[String, Long]
-        else readManifest(spark, clean).txn
-      val next = versions.lastOption.getOrElse(0) + 1
-      writeManifest(spark, clean,
-        KeyedManifest(next, Map.empty, txn = prev ++ p))
-      next
-    }
+    val committed = commitPins(spark, clean)(_ ++ p)
     // register the group with each member it pins (idempotent pointer
     // file; the retention floor itself is read from the group's LIVE
     // manifests at vacuum time, so this write races nothing)
@@ -3209,15 +3229,15 @@ object Maintenance {
     hadoopFs(spark, p).delete(p, true)
   }
 
-  /** Delete the registered CDC cursor `<dir>/_cursors/<name>`: the
-    * consumer is decommissioned and its version floor must stop
-    * constraining `vacuumKeyed`. (A consumer merely PAUSING keeps its
-    * cursor — that is the whole point of registration.)
+  /** Delete the registered CDC cursor `<dir>/_cursors/<name>` and its
+    * versions: the consumer is decommissioned and its version floor
+    * must stop constraining `vacuumKeyed`. (A consumer merely PAUSING
+    * keeps its cursor — that is the whole point of registration.)
     */
   def unregisterCursor(spark: SparkSession, dir: String,
                        name: String): Unit = {
     val p = new Path(registeredCursorPath(dir, name))
-    hadoopFs(spark, p).delete(p, false)
+    hadoopFs(spark, p).delete(p, true)
   }
 
   /** The group's pins (table dir → pinned manifest version) at

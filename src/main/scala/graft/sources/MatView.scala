@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * The registry maps a BASE table dir to its maintained agg states
   * (dir + measures + a base-version WATERMARK), and is DURABLE:
   * registrations persist under `<base>/_mvs/` and load lazily in any
-  * later session, so routing hints survive the JVM (the state itself
-  * was always durable). A language group-by over the pristine
+  * later session; the watermark is the pin `txn(<base> → version)`
+  * in the state's own manifest. A language group-by over the pristine
   * `read_keyed` snapshot whose keys and aggregates are covered routes
   * onto the state (O(state) rows read, the base's files never open).
   * Routable shapes (r12): the view's exact grain, any KEY-SUBSET grain
@@ -52,7 +52,8 @@ object MatView {
     * (resolve=agg), `baseDir` the keyed table it summarizes,
     * `keys`/`valueCols` its LOGICAL grain (the bucket tag, when
     * present, is carried separately in `bucketTag`), `baseVersion` the
-    * base-manifest watermark the state covers. The keys come from the
+    * base-manifest watermark the state covers (the state's pin, as this
+    * session last saw it). The keys come from the
     * STATE's own manifest (never a caller guess). `floatSums` is the
     * caller's declaration that float/double measures hold ≤2-decimal
     * values (money): the state's exact-decimal(28,2) sums then match
@@ -84,26 +85,23 @@ object MatView {
 
   private def clean(d: String): String = d.replaceAll("/+$", "")
 
-  private def b64url(s: String): String =
-    java.util.Base64.getUrlEncoder.withoutPadding
-      .encodeToString(s.getBytes("UTF-8"))
   private def mvFile(d: MvDef): Path =
-    new Path(s"${d.baseDir}/_mvs/${b64url(d.mvDir)}")
+    new Path(s"${d.baseDir}/_mvs/${Maintenance.dirName(d.mvDir)}")
 
   /** The registration file's format stamp; a file without exactly this
     * stamp is not loaded (no route).
     */
   private val RegFormat = 1
 
-  /** Persist a registration under `<base>/_mvs/<urlb64(mvDir)>` as
+  /** Persist a registration under `<base>/_mvs/<dirName(mvDir)>` as
     * JSON (the manifest codec's mapper), stamped `"format": 1`:
     * `mvDir`, `valueCols` (an array), `distinctKey` (omitted when
-    * absent), `floatSums`, `baseVersion`. Grain/p/sample metadata live
-    * in the STATE's manifest (one source of truth); the file carries
-    * only what the state can't know: the measures the caller declared,
-    * the distinct column, the float-sum opt-in, and the WATERMARK.
-    * Plain overwrite — this is a routing hint with a fail-safe reader
-    * (a torn/stale file just means no route), not a commit point.
+    * absent), `floatSums`. Grain/p/sample metadata and the watermark
+    * live in the STATE's manifest (one source of truth); the file
+    * carries only what the state can't know, and its name points
+    * `vacuumKeyed` at the state. Written once, at `register`: a
+    * routing hint with a fail-safe reader (a torn file just means no
+    * route), not a commit point.
     */
   private def persist(spark: SparkSession, d: MvDef): Unit = {
     val p = mvFile(d)
@@ -116,7 +114,7 @@ object MatView {
     val vals = o.putArray("valueCols")
     d.valueCols.foreach(v => vals.add(v))
     d.distinctKey.foreach(k => o.put("distinctKey", k))
-    o.put("floatSums", d.floatSums).put("baseVersion", d.baseVersion)
+    o.put("floatSums", d.floatSums)
     val out = fs.create(p, true)
     try out.write(json.writeValueAsBytes(o)) finally out.close()
   }
@@ -142,22 +140,38 @@ object MatView {
         val vals = o.get("valueCols").elements().asScala.map(_.asText).toSeq
         val dk = Option(o.get("distinctKey")).map(_.asText)
         val fsum = o.get("floatSums").asBoolean
-        val bv = o.get("baseVersion").asInt
         val m = Maintenance.readManifest(spark, mv)
         if (m.resolve == "agg" && m.nBuckets > 0) {
           val tag = m.keyCols.find(_ == BucketTagCol)
           val d = MvDef(mv, base, m.keyCols.filterNot(_ == BucketTagCol),
-            vals, bv, dk, m.aggP, fsum, tag)
+            vals, watermark(m, base), dk, m.aggP, fsum, tag)
           reg.putIfAbsent(mv, d)
         }
       } catch { case _: Exception => () } // unloadable hint: no route
     }
   }
 
+  /** The base version state manifest `m` covers; 0 = unpinned (stale). */
+  private def watermark(m: Maintenance.KeyedManifest, baseDir: String): Int =
+    m.txn.get(baseDir).fold(0)(_.toInt)
+
+  /** Publish watermark `v` alone as the state's next manifest. */
+  private def pin(spark: SparkSession, d: MvDef, v: Int): MvDef = {
+    Maintenance.commitPins(spark, d.mvDir)(_ + (d.baseDir -> v.toLong))
+    armed(d, v)
+  }
+
+  private def armed(d: MvDef, v: Int): MvDef = {
+    val nd = d.copy(baseVersion = v)
+    reg.put(nd.mvDir, nd)
+    nd
+  }
+
   /** Register the agg state at `mvDir` as a materialized view of
     * `baseDir`, watermarked at `baseVersion` (the version the state
     * was built from — read it BEFORE building; defaults to the base's
     * current version for a state built just now in the same thread).
+    * An unpinned state gets the pin as its next manifest.
     * Validates against the state's own manifest: it must be a bucketed
     * agg state, and its schema must carry every declared measure's
     * state columns (single measure = the unsuffixed classic names).
@@ -192,9 +206,8 @@ object MatView {
     val d = MvDef(mv, base, m.keyCols.filterNot(_ == BucketTagCol),
       valueCols, baseV, distinctKey,
       m.aggP, floatSums, tag)
-    reg.put(mv, d)
     persist(spark, d)
-    d
+    if (watermark(m, base) == baseV) armed(d, baseV) else pin(spark, d, baseV)
   }
 
   /** ONE-CALL build + register at BUCKET GRAIN: aggregate the base's
@@ -225,30 +238,30 @@ object MatView {
       rows.withColumn(BucketTagCol, F.col("kb")), mvDir,
       keys :+ BucketTagCol, valueCols, nBuckets,
       distinctKey = distinctKey, sampleK = sampleK,
-      sampleUnique = sampleUnique)
+      sampleUnique = sampleUnique, txn = Map(base -> v0.toLong))
     register(spark, mvDir, base, valueCols, distinctKey, floatSums,
       baseVersion = Some(v0))
   }
 
-  /** Re-arm the watermark after a refresh. `toVersion` is the base
-    * version the refresh was COMPUTED against — read it BEFORE the
-    * merge/rebuild and pass it here; a None (legacy face) re-arms at
-    * the base's current version, which is only safe when no other
-    * writer can commit to the base between the caller's merge and this
-    * call (single-maintainer tables). `refreshMvIncremental`/
-    * `rebuildMv` always pass the pinned version.
+  /** Re-arm the watermark after the caller merged the base's changes
+    * into the state: one manifest publish, no data change. `toVersion`
+    * is the base version the merge was COMPUTED against — read it
+    * BEFORE the merge and pass it here; a None re-arms at the base's
+    * current version, which is only safe when no other writer can
+    * commit to the base between the caller's merge and this call
+    * (single-maintainer tables).
     */
   def refreshed(spark: SparkSession, mvDir: String,
                 toVersion: Option[Int] = None): MvDef = {
+    val d = registered(mvDir)
+    pin(spark, d, toVersion.getOrElse(
+      Maintenance.manifestVersions(spark, d.baseDir).last))
+  }
+
+  private def registered(mvDir: String): MvDef = {
     val mv = clean(mvDir)
-    val d = Option(reg.get(mv)).getOrElse(throw new IllegalArgumentException(
+    Option(reg.get(mv)).getOrElse(throw new IllegalArgumentException(
       s"$mv is not a registered materialized view"))
-    val baseV = toVersion.getOrElse(
-      Maintenance.manifestVersions(spark, d.baseDir).last)
-    val nd = d.copy(baseVersion = baseV)
-    reg.put(mv, nd)
-    persist(spark, nd)
-    nd
   }
 
   /** Make a stale view fresh again in ONE call by REBUILDING the state
@@ -257,13 +270,13 @@ object MatView {
     * sample settings — including the r12-recorded sample GRAIN column,
     * so a row-uniform `__smpr` state rebuilds at its own grain instead
     * of silently flipping to distinct-value sampling) and re-arm the
-    * watermark at exactly that pinned version. O(base) — the
-    * incremental path is `refreshMvIncremental` (cost ∝ changes).
+    * watermark at exactly that pinned version, in the build's commit.
+    * O(base) — the incremental path is `refreshMvIncremental` (cost ∝
+    * changes).
     */
   def rebuildMv(spark: SparkSession, mvDir: String): MvDef = {
-    val mv = clean(mvDir)
-    val d = Option(reg.get(mv)).getOrElse(throw new IllegalArgumentException(
-      s"$mv is not a registered materialized view"))
+    val d = registered(mvDir)
+    val mv = d.mvDir
     val m = Maintenance.readManifest(spark, mv)
     val su = Option(m.aggSU).filter(_.nonEmpty)
     val (rows, v0) = Maintenance.readKeyedPinned(spark, d.baseDir)
@@ -275,8 +288,9 @@ object MatView {
       df, mv, d.keys ++ d.bucketTag, d.valueCols,
       m.nBuckets, distinctKey = d.distinctKey,
       p = m.aggP,
-      sampleK = m.aggK, sampleUnique = su)
-    refreshed(spark, mv, Some(v0))
+      sampleK = m.aggK, sampleUnique = su,
+      txn = Map(d.baseDir -> v0.toLong))
+    armed(d, v0)
   }
 
   /** INCREMENTAL refresh from the base's own change history — one
@@ -284,26 +298,27 @@ object MatView {
     * the two manifests say which buckets moved (zero data IO), the
     * changed buckets' CURRENT rows re-aggregate into per-(group,
     * bucket) partials, and `replaceAggStateByTag` swaps exactly those
-    * tags' state rows in one commit. Handles upserts, deletes, delta
-    * appends, and splits (a split bucket's old tag is condemned, its
-    * children's partials land under the new ids). Re-running after a
-    * crash-before-watermark replays the SAME replace — idempotent by
-    * construction. Falls back to `rebuildMv` when the view has no
-    * bucket tag, the base re-bootstrapped, or the watermark manifest
-    * was vacuumed; a CDC cursor registered for the view
-    * (`<base>/_cursors/mv_<id>`) keeps vacuum from dropping the
-    * watermark manifest in the first place.
+    * tags' state rows and moves the watermark in ONE commit (the
+    * watermark alone when no bucket changed; nothing when up to date).
+    * Handles upserts, deletes, delta appends, and splits (a split
+    * bucket's old tag is condemned, its children's partials land under
+    * the new ids). Re-running after a crash replays the SAME replace —
+    * idempotent by construction. Falls back to `rebuildMv` when the
+    * view has no bucket tag, the base re-bootstrapped, or a forced
+    * vacuum dropped the watermark manifest (the registration floors
+    * the base's vacuum at the watermark).
     */
   def refreshMvIncremental(spark: SparkSession, mvDir: String): MvDef = {
-    val mv = clean(mvDir)
-    val d = Option(reg.get(mv)).getOrElse(throw new IllegalArgumentException(
-      s"$mv is not a registered materialized view"))
+    val d = registered(mvDir)
+    val mv = d.mvDir
+    val mSt = Maintenance.readManifest(spark, mv)
+    val from = watermark(mSt, d.baseDir)
     val head = Maintenance.manifestVersions(spark, d.baseDir).last
-    if (head == d.baseVersion) { cursorTo(spark, d, head); return d }
+    if (head == from) return armed(d, head)
     if (d.bucketTag.isEmpty) return rebuildMv(spark, mv)
     val tag = d.bucketTag.get
     val (mFrom, mTo) =
-      try (Maintenance.readManifest(spark, d.baseDir, Some(d.baseVersion)),
+      try (Maintenance.readManifest(spark, d.baseDir, Some(from)),
         Maintenance.readManifest(spark, d.baseDir, Some(head)))
       catch { case _: Exception => return rebuildMv(spark, mv) }
     // a re-bootstrap (key/bucket-count change) re-hashes every row —
@@ -312,8 +327,7 @@ object MatView {
         mFrom.bucketKey != mTo.bucketKey)
       return rebuildMv(spark, mv)
     val changed = mTo.changedFrom(mFrom)
-    if (changed.isEmpty) return refreshedAndCursor(spark, mv, d, head)
-    val mSt = Maintenance.readManifest(spark, mv)
+    if (changed.isEmpty) return pin(spark, d, head)
     val fresh = Maintenance.resolveBuckets(spark, d.baseDir, mTo, changed)
     lastRefreshScan = Some((changed, fresh.inputFiles.toSeq))
     val partial = Maintenance.partialAggCols(
@@ -321,24 +335,9 @@ object MatView {
       d.keys :+ tag, d.valueCols, d.distinctKey,
       mSt.aggP, mSt.aggK,
       Option(mSt.aggSU).filter(_.nonEmpty))
-    Maintenance.replaceAggStateByTag(spark, mv, partial, tag, changed)
-    refreshedAndCursor(spark, mv, d, head)
-  }
-
-  /** The view's registered CDC cursor on its BASE: pins the watermark
-    * manifest (and everything after) against `vacuumKeyed`, so the
-    * next incremental refresh can always read its from-manifest.
-    */
-  private def cursorTo(spark: SparkSession, d: MvDef, v: Int): Unit =
-    graft.streaming.Streams.commitChangeCursor(spark,
-      Maintenance.registeredCursorPath(d.baseDir, s"mv_${b64url(d.mvDir)}"),
-      v)
-
-  private def refreshedAndCursor(spark: SparkSession, mv: String,
-                                 d: MvDef, head: Int): MvDef = {
-    val nd = refreshed(spark, mv, Some(head))
-    cursorTo(spark, nd, head)
-    nd
+    Maintenance.replaceAggStateByTag(spark, mv, partial, tag, changed,
+      txn = Map(d.baseDir -> head.toLong))
+    armed(d, head)
   }
 
   /** The view's FINALIZED rows at its LOGICAL grain (bucket-grain
@@ -367,8 +366,8 @@ object MatView {
     */
   def unregister(mvDir: String): Unit = reg.remove(clean(mvDir))
 
-  /** Unregister AND delete the durable hint file (the state itself
-    * stays on disk).
+  /** Unregister AND delete the durable hint file, which also stops the
+    * view flooring the base's vacuum (the state itself stays on disk).
     */
   def unregister(spark: SparkSession, mvDir: String): Unit = {
     val d = Option(reg.remove(clean(mvDir)))
@@ -546,7 +545,7 @@ object MatView {
     forBase(baseDir).iterator
       .filter(_.baseVersion == curBase) // fresh at the PINNED version
       .filter(d => keys.map(_._2).toSet.subsetOf(d.keys.toSet)) // grain
-      .map(d => tryBuild(spark, d, keys, aggs, filters))
+      .map(d => tryBuild(spark, d, curBase, keys, aggs, filters))
       .collectFirst { case Some(df) => df }
   }
 
@@ -575,7 +574,7 @@ object MatView {
     maybeAutoRefresh(spark, baseDir, pinnedVersion)
     forBase(baseDir).iterator
       .filter(_.baseVersion == curBase)
-      .map(d => tryBuild(spark, d, Nil, aggs, filters))
+      .map(d => tryBuild(spark, d, curBase, Nil, aggs, filters))
       .collectFirst { case Some(df) => df }
   }
 
@@ -590,12 +589,16 @@ object MatView {
       plan.expressions.forall(_.deterministic)
     } catch { case _: Exception => false })
 
-  private def tryBuild(spark: SparkSession, d: MvDef,
+  /** None unless the newest state manifest is pinned at `baseV`. */
+  private def tryBuild(spark: SparkSession, d: MvDef, baseV: Int,
                        keys: Seq[(String, String)],
                        aggs: Seq[(String, String, Option[String])],
                        filters: Seq[Column])
       : Option[DataFrame] = {
-    val st0 = Maintenance.readAggStateKeyed(spark, d.mvDir)
+    val m = Maintenance.readManifest(spark, d.mvDir)
+    if (watermark(m, d.baseDir) != baseV) return None
+    val st0 = Maintenance.readAggStateBuckets(spark, d.mvDir, m,
+      m.liveBuckets())
     if (!filtersRoutable(st0, d.keys, filters)) return None
     val st = if (filters.isEmpty) st0 else st0.filter(filters.reduce(_ && _))
     val cols = st.columns.toSet

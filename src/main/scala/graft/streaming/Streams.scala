@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions.col
   *    keyed table) and `aggStateBatch` (incremental agg-state
   *    maintenance, replay-safe through the manifest's `txn` slot);
   *  - the CDC source over a keyed table's manifest version chain:
-  *    `pollKeyedChanges`/`pollKeyedChangesBounded` and the cursor
+  *    `pollKeyedChanges`/`tailKeyedChangesBounded` and the cursor
   *    read/commit around them.
   */
 object Streams {
@@ -144,43 +144,48 @@ object Streams {
   // READ side: a version-cursor loop that emits each committed snapshot's
   // changes as a batch, so a downstream incremental consumer processes
   // `changes(v_cursor, v_now)` instead of re-scanning 100 TB. The
-  // cursor (last processed version) persists via the same atomic
-  // temp+rename discipline as the manifest; the batch content for a
-  // (from, to) pair is DETERMINISTIC (keyedChanges reads only the
-  // generation-changed buckets of two immutable snapshots), so
-  // at-least-once processing is replay-idempotent exactly like
-  // foreachBatch: key any side effects by the version pair. ONE
-  // consumer per cursor file; independent consumers use separate
-  // cursors. The table's vacuum policy must retain the consumer's
-  // horizon (`keepVersions` ≥ the max lag in versions) — a vacuumed
-  // `from` manifest fails the poll loudly rather than emitting a gap.
+  // cursor is a dir of versioned manifests whose newest `txn` is the
+  // position, published like a table's manifest (a crash leaves the old
+  // or the new position; `vacuumKeyed` reclaims a registered cursor's
+  // superseded versions). The batch content for a (from, to) pair is
+  // DETERMINISTIC (keyedChanges reads only the generation-changed
+  // buckets of two immutable snapshots), so at-least-once processing
+  // is replay-idempotent exactly like foreachBatch: key any side
+  // effects by the version pair. ONE consumer per cursor; independent
+  // consumers use separate cursors. The table's vacuum policy must
+  // retain the consumer's horizon (`keepVersions` ≥ the max lag in
+  // versions) — a vacuumed `from` manifest fails the poll loudly
+  // rather than emitting a gap.
 
-  private def cursorText(spark: org.apache.spark.sql.SparkSession,
-                         cursorPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(cursorPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) ""
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-  }
+  private def cursorPins(spark: org.apache.spark.sql.SparkSession,
+                         cursorPath: String): Map[String, Long] =
+    graft.sources.Maintenance.newestManifest(spark, cursorPath)
+      .fold(Map.empty[String, Long])(_.txn)
 
   /** The cursor's last processed version; 0 = nothing consumed yet. */
   def readChangeCursor(spark: org.apache.spark.sql.SparkSession,
-                       cursorPath: String): Int =
-    cursorText(spark, cursorPath) match {
-      case "" => 0
-      case t => t.toInt
-    }
+                       cursorPath: String): Int = {
+    import graft.sources.Maintenance.{CursorBucket, CursorVersion}
+    val pins = cursorPins(spark, cursorPath)
+    require(!pins.contains(CursorBucket), s"$cursorPath is mid bounded " +
+      "initial load: tail it with tailKeyedChangesBounded")
+    pins.get(CursorVersion).fold(0)(_.toInt)
+  }
 
-  /** Persist the cursor (temp + rename — a crash mid-write leaves the
-    * old cursor intact, and the next poll simply re-emits the batch).
+  /** Persist the cursor (its next manifest version — a crash leaves
+    * the old or the new cursor, and the next poll re-emits the batch).
     */
   def commitChangeCursor(spark: org.apache.spark.sql.SparkSession,
                          cursorPath: String, v: Int): Unit =
-    commitChangeCursorState(spark, cursorPath, v.toString)
+    commitChangeCursorState(spark, cursorPath, v, None)
+
+  private def commitChangeCursorState(spark: org.apache.spark.sql.SparkSession,
+                                      cursorPath: String, v: Int,
+                                      bucket: Option[Int]): Unit = {
+    import graft.sources.Maintenance.{CursorBucket, CursorVersion}
+    graft.sources.Maintenance.commitPins(spark, cursorPath)(_ =>
+      Map(CursorVersion -> v.toLong) ++ bucket.map(CursorBucket -> _.toLong))
+  }
 
   /** One micro-batch of the CDC source: `(changes, fromV, toV)` where
     * `changes` is one row per key added/removed/changed between the
@@ -194,9 +199,14 @@ object Streams {
                        dir: String, cursorPath: String,
                        maxVersions: Int = Int.MaxValue)
       : Option[(DataFrame, Int, Int)] = {
-    import graft.sources.Maintenance
     require(maxVersions >= 1, s"maxVersions must be >= 1")
-    val from = readChangeCursor(spark, cursorPath)
+    changesFrom(spark, dir, readChangeCursor(spark, cursorPath), maxVersions)
+  }
+
+  private def changesFrom(spark: org.apache.spark.sql.SparkSession,
+                          dir: String, from: Int, maxVersions: Int)
+      : Option[(DataFrame, Int, Int)] = {
+    import graft.sources.Maintenance
     val latest = Maintenance.manifestVersions(spark, dir).lastOption
       .getOrElse(0)
     // bounded catch-up: a consumer far behind advances at most
@@ -205,32 +215,37 @@ object Streams {
     // capped target always exists unless vacuumed — which fails loudly
     // in readManifest, same as an expired `from`)
     val to = math.min(latest, from.toLong + maxVersions).toInt
-    if (to <= from) return None
-    val m = Maintenance.readManifest(spark, dir, Some(to))
-    require(m.keyCol.nonEmpty, s"$dir has no keyed metadata")
-    // a MATERIALIZED VIEW (bucketed agg state) tails as a VIEW
-    // changelog — the finalized row per changed group with old_*
-    // retractions (aggStateChanges); the initial load emits the whole
-    // finalized view as 'added' in the SAME shape, so a consumer's
-    // fold logic is one code path
-    if (m.resolve == "agg") {
-      if (from == 0) {
-        val fin = Maintenance.finalizeAgg(
-          Maintenance.readAggStateKeyed(spark, dir, version = Some(to)),
-          m.keyCols)
-        val valCols = fin.columns.filterNot(m.keyCols.contains).toSeq
-        Some((fin.select(m.keyCols.map(col) ++
-          (F.lit("added").as("status") +: (valCols.map(col) ++
-            valCols.map(c => F.lit(null).cast(fin.schema(c).dataType)
-              .as(s"old_$c")))): _*), 0, to))
-      } else
-        Some((Maintenance.aggStateChanges(spark, dir, from, to), from, to))
-    } else if (from == 0)
-      Some((Maintenance.readKeyed(spark, dir, Some(to))
-        .select(m.keyCols.map(col) :+ F.lit("added").as("status"): _*),
-        0, to))
-    else
+    if (to <= from) None
+    else if (from == 0) {
+      val m = Maintenance.readManifest(spark, dir, Some(to))
+      Some((added(spark, dir, m, m.liveBuckets()), 0, to))
+    } else
+      // a MATERIALIZED VIEW (bucketed agg state) tails as a VIEW
+      // changelog (keyedChanges dispatches to aggStateChanges)
       Some((Maintenance.keyedChanges(spark, dir, from, to), from, to))
+  }
+
+  /** `buckets` of snapshot `m` as 'added' rows: key columns + status,
+    * and for a view (agg state) the finalized row with NULL old_*
+    * retractions — the changelog's shape, so a consumer's fold logic
+    * is one code path.
+    */
+  private def added(spark: org.apache.spark.sql.SparkSession, dir: String,
+                    m: graft.sources.Maintenance.KeyedManifest,
+                    buckets: Seq[Int]): DataFrame = {
+    import graft.sources.Maintenance
+    require(m.keyCol.nonEmpty, s"$dir has no keyed metadata")
+    if (m.resolve == "agg") {
+      val fin = Maintenance.finalizeAgg(
+        Maintenance.readAggStateBuckets(spark, dir, m, buckets), m.keyCols)
+      val valCols = fin.columns.filterNot(m.keyCols.contains).toSeq
+      fin.select(m.keyCols.map(col) ++
+        (F.lit("added").as("status") +: (valCols.map(col) ++
+          valCols.map(c => F.lit(null).cast(fin.schema(c).dataType)
+            .as(s"old_$c")))): _*)
+    } else
+      Maintenance.resolveBuckets(spark, dir, m, buckets)
+        .select(m.keyCols.map(col) :+ F.lit("added").as("status"): _*)
   }
 
   // ---- bounded initial load -------------------------------------------
@@ -243,87 +258,46 @@ object Streams {
   // (consistent even while writers commit), and once the chunks are
   // drained the cursor becomes a plain version and ordinary diff
   // polls take over — catching up from exactly v0, so nothing
-  // committed mid-initial is lost or double-emitted. The cursor file
-  // encodes the phase: "i:<v0>:<idx>" mid-initial (idx = buckets
-  // already emitted, in sorted-bucket order), a plain version after.
-  // `registeredCursorMin` understands both, so a registered
-  // mid-initial cursor pins v0 against vacuum.
+  // committed mid-initial is lost or double-emitted. Mid-initial the
+  // cursor pins v0 plus the count of live buckets already emitted.
 
-  /** Persist a raw cursor state (same atomic temp+rename discipline
-    * as `commitChangeCursor`, which delegates here).
+  /** One micro-batch of the BOUNDED CDC source: `(batch, version,
+    * bucket)`, the cursor position to commit after processing it, or
+    * None when up to date. Mid-initial, `batch` is the next ≤
+    * `initialBuckets` live buckets of snapshot v0 as 'added' rows;
+    * after the initial drains, ordinary diffs bounded by `maxVersions`.
     */
-  def commitChangeCursorState(spark: org.apache.spark.sql.SparkSession,
-                              cursorPath: String, state: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(cursorPath)
-    val fs = graft.sources.Fs.forWrite(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    val tmp = new org.apache.hadoop.fs.Path(cursorPath +
-      s".tmp_${ProcessHandle.current().pid()}")
-    val out = fs.create(tmp, true)
-    try out.write(state.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false) // single consumer per cursor: no rename race
-    require(fs.rename(tmp, p), s"cursor commit failed: $cursorPath")
-  }
-
-  /** One micro-batch of the BOUNDED CDC source: `(batch, nextCursor)`,
-    * or None when up to date. Mid-initial, `batch` is the next ≤
-    * `initialBuckets` buckets of snapshot v0 as 'added' rows (the
-    * agg-state shape carries the finalized view + NULL old_*, same as
-    * the unbounded poll); after the initial drains, ordinary
-    * `keyedChanges`/`aggStateChanges` diffs bounded by `maxVersions`.
-    * Commit `nextCursor` via `commitChangeCursorState` AFTER
-    * processing — at-least-once, like the unbounded poll.
-    */
-  def pollKeyedChangesBounded(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, cursorPath: String,
-                              maxVersions: Int = Int.MaxValue,
-                              initialBuckets: Int = Int.MaxValue)
-      : Option[(DataFrame, String)] = {
+  private def pollKeyedChangesBounded(spark: org.apache.spark.sql.SparkSession,
+                                      dir: String, cursorPath: String,
+                                      maxVersions: Int, initialBuckets: Int)
+      : Option[(DataFrame, Int, Option[Int])] = {
     import graft.sources.Maintenance
+    import Maintenance.{CursorBucket, CursorVersion}
     require(initialBuckets >= 1, "initialBuckets must be >= 1")
-    val raw = cursorText(spark, cursorPath)
-    def initialChunk(v0: Int, idx: Int): Option[(DataFrame, String)] = {
+    val pins = cursorPins(spark, cursorPath)
+    val v = pins.get(CursorVersion).fold(0)(_.toInt)
+    def initialChunk(v0: Int, idx: Int) = {
       val m0 = Maintenance.readManifest(spark, dir, Some(v0))
-      require(m0.keyCol.nonEmpty, s"$dir has no keyed metadata")
-      val live = (m0.buckets.keySet ++ m0.deltas.keySet).toSeq.sorted
+      val live = m0.liveBuckets()
       val chunk = live.slice(idx, idx + initialBuckets)
-      val nextIdx = idx + chunk.length
-      val next = if (nextIdx >= live.length) v0.toString
-                 else s"i:$v0:$nextIdx"
-      val df =
-        if (m0.resolve == "agg") {
-          val fin = Maintenance.finalizeAgg(
-            Maintenance.readAggStateBuckets(spark, dir, m0, chunk),
-            m0.keyCols)
-          val valCols = fin.columns.filterNot(m0.keyCols.contains).toSeq
-          fin.select(m0.keyCols.map(col) ++
-            (F.lit("added").as("status") +: (valCols.map(col) ++
-              valCols.map(c => F.lit(null).cast(fin.schema(c).dataType)
-                .as(s"old_$c")))): _*)
-        } else
-          Maintenance.resolveBuckets(spark, dir, m0, chunk)
-            .select(m0.keyCols.map(col) :+
-              F.lit("added").as("status"): _*)
-      Some((df, next))
+      val next = idx + chunk.length
+      Some((added(spark, dir, m0, chunk), v0,
+        Option(next).filter(_ < live.length)))
     }
-    raw match {
-      case "" | "0" =>
-        val latest = Maintenance.manifestVersions(spark, dir).lastOption
-          .getOrElse(0)
-        if (latest == 0) None else initialChunk(latest, 0)
-      case s if s.startsWith("i:") =>
-        val parts = s.split(":")
-        initialChunk(parts(1).toInt, parts(2).toInt)
-      case _ =>
-        // plain-version phase: the cursor file is a plain int — the
-        // unbounded poll reads it directly
-        pollKeyedChanges(spark, dir, cursorPath, maxVersions)
-          .map { case (df, _, toV) => (df, toV.toString) }
+    pins.get(CursorBucket) match {
+      case Some(idx) => initialChunk(v, idx.toInt)
+      case None if v == 0 =>
+        Maintenance.manifestVersions(spark, dir).lastOption
+          .flatMap(initialChunk(_, 0))
+      case None =>
+        changesFrom(spark, dir, v, maxVersions)
+          .map { case (df, _, toV) => (df, toV, None) }
     }
   }
 
   /** poll → process → advance for the bounded tail; returns whether a
-    * batch was processed.
+    * batch was processed. The cursor commits AFTER `f` — at-least-once,
+    * like the unbounded poll.
     */
   def tailKeyedChangesBounded(spark: org.apache.spark.sql.SparkSession,
                               dir: String, cursorPath: String,
@@ -332,9 +306,9 @@ object Streams {
                              (f: DataFrame => Unit): Boolean =
     pollKeyedChangesBounded(spark, dir, cursorPath, maxVersions,
       initialBuckets) match {
-      case Some((df, next)) =>
+      case Some((df, v, bucket)) =>
         f(df)
-        commitChangeCursorState(spark, cursorPath, next)
+        commitChangeCursorState(spark, cursorPath, v, bucket)
         true
       case None => false
     }

@@ -626,6 +626,20 @@ class MaintenanceSpec extends SparkSpec {
     }
   }
 
+  test("lookupKeyed: a NULL key pins no bucket and matches no row; the bucket probe runs no job") {
+    val dir = tmp("graft_lknull")
+    Maintenance.writeKeyed(spark.range(0, 100).select(col("id").as("k"),
+      (col("id") * 3).as("v")), dir, "k", 8)
+    val lk = Maintenance.lookupKeyed(spark, dir, Seq(5L, null))
+    assert(lk.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq ==
+      Seq(5L -> 15L))
+    assert(lk.inputFiles.forall(_.contains(f"b${kbOf(5L, 8)}%05d_")))
+    assert(Maintenance.lookupKeyed(spark, dir, Seq(null)).count() == 0)
+    assert(Maintenance.readKeyedWhere(spark, dir, col("k").isin(5L, null))
+      .count() == 1)
+    assert(jobsOf(Maintenance.lookupKeyed(spark, dir, Seq(5L, 9L))) == 0)
+  }
+
   test("keyed schema evolves additively: new columns land, old rows read NULL") {
     val dir = tmp("graft_evo")
     Maintenance.writeKeyed(

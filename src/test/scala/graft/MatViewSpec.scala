@@ -579,11 +579,74 @@ class MatViewSpec extends SparkSpec {
     val sv0 = M.readManifest(spark, mdir).version
     MV.refreshMvIncremental(spark, mdir)
     assert(M.readManifest(spark, mdir).version == sv0)
-    // and the refresh registered a CDC cursor on the base, so vacuum
-    // keeps the watermark manifest reachable
-    val curs = new java.io.File(bdir, "_cursors")
-    assert(curs.isDirectory && curs.list().nonEmpty,
-      "incremental refresh must register its base cursor")
+    // the registration floors the base's vacuum at the watermark: after
+    // one more base commit, the tightest vacuum keeps the watermark
+    // manifest readable for the next refresh
+    val wm = MV.list().find(_.mvDir == mdir).get.baseVersion
+    M.upsertKeyed(spark, bdir, ups, "k", 8)
+    M.vacuumKeyed(spark, bdir, keepVersions = 1, graceMs = 0L)
+    assert(M.readManifest(spark, bdir, Some(wm)).version == wm,
+      "vacuum dropped the view's watermark manifest")
+  }
+
+  /** Every file under `dirs` (checksum and dot files skipped) with its
+    * length and mtime.
+    */
+  private def files(dirs: String*): Map[String, (Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
+      else if (f.getName.startsWith(".")) Nil else Seq(f)
+    dirs.flatMap(d => walk(new java.io.File(d)))
+      .map(f => f.getPath -> ((f.length, f.lastModified))).toMap
+  }
+
+  test("a refresh that moves the watermark publishes one manifest, and writes nothing under the base") {
+    val bdir = tmp("mv_1b"); val mdir = tmp("mv_1s")
+    M.writeKeyed(mkBase(2000), bdir, "k", 8)
+    MV.buildMv(spark, bdir, mdir, Seq("g"), Seq("w"), 4)
+    def refreshAfter(commit: => Unit): Set[String] = {
+      commit
+      val before = files(bdir, mdir)
+      MV.refreshMvIncremental(spark, mdir)
+      val after = files(bdir, mdir)
+      assert(files(bdir) == before.filter(_._1.startsWith(bdir)),
+        "a refresh must write nothing under the base")
+      after.keySet.filter(f => f.contains("/_manifests/") &&
+        before.get(f) != after.get(f))
+    }
+    // a changed bucket: the replace and the watermark are one commit
+    val one = spark.range(0, 3).select(col("id").as("k"),
+      (col("id") % 7).as("g"), lit(1.0).as("v"), lit(5L).as("w"))
+    val v = M.readManifest(spark, mdir).version
+    assert(refreshAfter(M.upsertKeyed(spark, bdir, one, "k", 8)) ==
+      Set(f"$mdir/_manifests/v${v + 1}%09d.json"))
+    assert(M.readManifest(spark, mdir).txn == Map(bdir -> 2L))
+    // no changed bucket (a base commit of pins only): the watermark alone
+    assert(refreshAfter(M.commitPins(spark, bdir)(_ + ("app" -> 1L))) ==
+      Set(f"$mdir/_manifests/v${v + 2}%09d.json"))
+    assert(M.readManifest(spark, mdir).txn == Map(bdir -> 3L))
+    // up to date: nothing at all
+    val before = files(bdir, mdir)
+    MV.refreshMvIncremental(spark, mdir)
+    assert(files(bdir, mdir) == before, "an up-to-date refresh wrote")
+  }
+
+  test("a dropped view stops flooring the base's vacuum") {
+    val bdir = tmp("mv_drb"); val mdir = tmp("mv_drs")
+    M.writeKeyed(mkBase(1000), bdir, "k", 8)
+    MV.buildMv(spark, bdir, mdir, Seq("g"), Seq("w"), 4)
+    val one = spark.range(0, 1).select(col("id").as("k"), lit(1L).as("g"),
+      lit(1.0).as("v"), lit(5L).as("w"))
+    M.upsertKeyed(spark, bdir, one, "k", 8) // v2
+    MV.refreshMvIncremental(spark, mdir) // watermark 2
+    (3 to 4).foreach(_ => M.upsertKeyed(spark, bdir, one, "k", 8))
+    M.vacuumKeyed(spark, bdir, keepVersions = 1, graceMs = 0L)
+    assert(M.manifestVersions(spark, bdir) == (2 to 4),
+      "a registered view floors vacuum at its watermark")
+    MV.unregister(spark, mdir)
+    M.vacuumKeyed(spark, bdir, keepVersions = 1, graceMs = 0L)
+    assert(M.manifestVersions(spark, bdir) == Seq(4),
+      "an unregistered view must stop flooring vacuum")
   }
 
   test("a base bucket SPLIT refreshes incrementally: old tag condemned, children's partials land") {
