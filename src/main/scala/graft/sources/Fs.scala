@@ -49,8 +49,8 @@ object Fs {
 
   /** Atomically publish the fully-written file `tmp` as `dst` UNLESS
     * `dst` already exists; true when this call created `dst`. This is
-    * the commit point of every manifest publish and lease acquisition,
-    * so it must be rename-IF-ABSENT. HDFS rename fails when the
+    * the commit point of every manifest publish, so it must be
+    * rename-IF-ABSENT. HDFS rename fails when the
     * destination exists; the LOCAL filesystem's does NOT
     * (RawLocalFileSystem.rename is POSIX renameTo, which silently
     * REPLACES the destination — two writers racing one version would

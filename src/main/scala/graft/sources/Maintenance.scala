@@ -1320,8 +1320,8 @@ object Maintenance {
     // path): it simply leaves the manifest
     val next = base.buckets -- touched ++ staged
     // a full merge of a bucket FOLDS its delta chain into the new
-    // base generation (readTouched resolved it), so touched buckets'
-    // deltas leave the manifest
+    // base generation (the caller merged its resolved rows), so
+    // touched buckets' deltas leave the manifest
     val nextDeltas = base.deltas -- touched
     val liveDirs = next.values.toSet ++ nextDeltas.values.flatten
     val nextRows = base.rows.filter { case (d, _) => liveDirs(d) } ++ stagedRows
@@ -1361,12 +1361,12 @@ object Maintenance {
     */
   def upsertKeyed(spark: SparkSession, dir: String, updates: DataFrame,
                   keyCol: String, nBuckets: Int): Unit =
-    mergeKeyed(spark, dir, Some(updates), None, Seq(keyCol), nBuckets)
+    mergeKeyed(spark, dir, updates, Seq(keyCol), nBuckets)
 
   /** Composite-key upsert. */
   def upsertKeyed(spark: SparkSession, dir: String, updates: DataFrame,
                   keyCols: Seq[String], nBuckets: Int): Unit =
-    mergeKeyed(spark, dir, Some(updates), None, keyCols, nBuckets)
+    mergeKeyed(spark, dir, updates, keyCols, nBuckets)
 
   /** Delete by key from the keyed table at `dir`; `keys` is a 1-column
     * frame. Same pruned-read + staged-commit shape as upsertKeyed; a
@@ -1375,15 +1375,22 @@ object Maintenance {
     */
   def deleteKeyed(spark: SparkSession, dir: String, keys: DataFrame,
                   keyCol: String, nBuckets: Int): Unit =
-    mergeKeyed(spark, dir, None,
-      Some(keys.select(F.col(keys.columns.head).as(keyCol))),
+    deleteKeyed(spark, dir, keys.select(F.col(keys.columns.head).as(keyCol)),
       Seq(keyCol), nBuckets)
 
   /** Composite-key delete: `keys` carries the key columns by name. */
   def deleteKeyed(spark: SparkSession, dir: String, keys: DataFrame,
                   keyCols: Seq[String], nBuckets: Int): Unit =
-    mergeKeyed(spark, dir, None, Some(keys.select(keyCols.map(F.col): _*)),
-      keyCols, nBuckets)
+    mergeKeyed(spark, dir, keys.select(keyCols.map(F.col) :+
+      F.lit(true).as(Tombstone): _*), keyCols, nBuckets, Some(Tombstone))
+
+  /** `deleteKeyed`'s tombstone flag column (it never lands). */
+  private val Tombstone = "__tombstone"
+
+  /** `batch`'s non-tombstone rows, without the flag column. */
+  private def upserts(batch: DataFrame, deleteCol: Option[String]) =
+    deleteCol.fold(batch)(dc =>
+      batch.filter(!F.coalesce(F.col(dc), F.lit(false))).drop(dc))
 
   /** `df` with its `kb` column, frozen, and the sorted buckets it
     * touches. A LocalRelation (rows built on the driver: the language,
@@ -1401,52 +1408,60 @@ object Maintenance {
   }
 
   /** The ONE merge body behind upsert, delete, and the CDC batch sink:
-    * upserts and deletes land in a SINGLE staged commit (one manifest
-    * publish), so a reader racing a tombstone-carrying batch never
-    * observes the updates-applied/deletes-pending intermediate state
-    * that two sequential commits would expose.
+    * each `batch` row replaces its key's stored row or inserts it; with
+    * `deleteCol`, a row whose flag is true is a TOMBSTONE that deletes
+    * its key (the flag never lands); with `seqCol`, a row applies only
+    * when its sequence is ≥ the stored row's (`>=` keeps exact replays
+    * idempotent), so a late or replayed older change never regresses a
+    * row. The guard is one left join against the touched base rows,
+    * inside the commit retry: a losing race recomputes it against the
+    * winner's snapshot. Upserts and tombstones land in a SINGLE staged
+    * commit (one manifest publish), so a reader racing a
+    * tombstone-carrying batch never observes the
+    * updates-applied/deletes-pending state that two commits would
+    * expose.
     */
-  def mergeKeyed(spark: SparkSession, dir: String,
-                 updates: Option[DataFrame], deleteKeys: Option[DataFrame],
-                 keyCols: Seq[String], nBuckets: Int): Unit = {
+  private def mergeKeyed(spark: SparkSession, dir: String,
+                         batch: DataFrame, keyCols: Seq[String],
+                         nBuckets: Int, deleteCol: Option[String] = None,
+                         seqCol: Option[String] = None): Unit = {
     // the bucket function derives from the CURRENT layout (the depth
-    // map is manifest metadata, r11) — read it before hashing the batch
+    // map is manifest metadata, r11) — read it before hashing the batch,
+    // and refuse a seq-resolved table BEFORE any batch job
     val m0 = readManifest(spark, dir)
-    // refuse a seq-resolved table BEFORE any batch job: the manifest
-    // holds the answer (readTouched re-checks inside the retry)
-    require(m0.seqCol.isEmpty,
-      s"${cleanDir(dir)} resolves by sequence column '${m0.seqCol}' — " +
-        "upsert/delete/CoW-merge are batch-wins and would break it; " +
-        "append stamped deltas instead (appendDeltaKeyed) and compact")
-    requireLayout(m0, dir, keyCols, nBuckets)
-    val depths0 = m0.depths
-    val kbCol = kb(m0)
-    val upT = updates.map(hashedBatch(_, kbCol))
-    val dkT = deleteKeys.map(k =>
-      hashedBatch(k.select(keyCols.map(F.col): _*), kbCol))
-    val (up, dk) = (upT.map(_._1), dkT.map(_._1))
-    val touched = (upT.toSeq ++ dkT.toSeq).flatMap(_._2).distinct.sorted
+    requireBatchWins(m0, dir, keyCols, nBuckets)
+    val (hashed, touched) = hashedBatch(batch, kb(m0))
     if (touched.isEmpty) return
+    val keys = keyCols.map(F.col)
     withCommitRetry(s"mergeKeyed($dir)") {
       // ONE manifest read per attempt, threaded through base read AND
       // commit: the publish targets exactly the version the merge was
       // computed against
       val m = readManifest(spark, dir)
-      // the batch was hashed under depths0 — a concurrent SPLIT since
-      // would park rows in buckets they no longer hash to
-      require(m.depths == depths0,
+      requireBatchWins(m, dir, keyCols, nBuckets)
+      // the batch was hashed under m0's depths — a concurrent SPLIT
+      // since would park rows in buckets they no longer hash to
+      require(m.depths == m0.depths,
         s"keyed table $dir re-bucketed mid-merge (splitKeyed) — " +
           "re-run the merge")
-      val base = readTouched(spark, dir, m, touched, keyCols, nBuckets)
+      // the touched buckets' live rows, delta chains RESOLVED: the
+      // staged generation folds them (stageMerge drops the chains)
+      val base = resolveBuckets(spark, cleanDir(dir), m, touched)
+      val live = seqCol match {
+        case Some(sc) if base.columns.contains(sc) =>
+          hashed.join(base.select(keys :+ F.col(sc).as("__curseq"): _*),
+            keyCols, "left")
+            .filter(F.col("__curseq").isNull ||
+              F.col(sc) >= F.col("__curseq"))
+            .drop("__curseq")
+        case _ => hashed
+      }
       // no distinct(): an anti join keeps the same rows either way, and
       // on a driver-local batch the aggregate was a shuffle job of its
       // own before the broadcast
-      val gone = (up.map(_.select(keyCols.map(F.col): _*)).toSeq ++
-        dk.map(_.select(keyCols.map(F.col): _*)).toSeq)
-        .reduce(_.unionByName(_))
-      val kept = base.join(gone, keyCols, "left_anti")
-      val merged = up.fold(kept)(u =>
-        kept.unionByName(u, allowMissingColumns = true))
+      val kept = base.join(live.select(keys: _*), keyCols, "left_anti")
+      val merged = kept.unionByName(upserts(live, deleteCol),
+        allowMissingColumns = true)
       commitKeyed(spark, stageMerge(spark, dir, merged, touched, m))
     }
   }
@@ -1463,7 +1478,7 @@ object Maintenance {
     */
   def deleteKeyedWhere(spark: SparkSession, dir: String,
                        cond: Column): Long =
-    dmlKeyedWhere(spark, dir, cond, None)
+    dmlKeyedWhere(spark, dir, cond, Nil)
 
   /** PREDICATE UPDATE — `UPDATE t SET c = e, ... WHERE cond`: same
     * pruned plan and atomic commit as `deleteKeyedWhere`; matched
@@ -1476,7 +1491,7 @@ object Maintenance {
   def updateKeyedWhere(spark: SparkSession, dir: String, cond: Column,
                        assignments: Seq[(String, Column)]): Long = {
     require(assignments.nonEmpty, "updateKeyedWhere: no assignments")
-    dmlKeyedWhere(spark, dir, cond, Some(assignments))
+    dmlKeyedWhere(spark, dir, cond, assignments)
   }
 
   /** MERGE-ON-READ predicate delete: tombstones for the keys matching
@@ -1526,15 +1541,8 @@ object Maintenance {
                             seq: Option[Column] = None): Long = {
     require(assignments.nonEmpty, "updateKeyedWhereDelta: no assignments")
     val clean = cleanDir(dir)
-    val m = deltaDmlTarget(spark, clean, seq, "updateKeyedWhereDelta")
-    assignments.foreach { case (c, _) =>
-      require(!m.keyCols.contains(c),
-        s"updateKeyedWhereDelta cannot reassign key column '$c'")
-      // a typo'd assignment would otherwise report matches while
-      // changing nothing (r13 ADVICE)
-      require(c != "kb" && m.schema.fieldNames.contains(c),
-        s"updateKeyedWhereDelta: '$c' is not a column of $clean")
-    }
+    val m = deltaDmlTarget(spark, clean, seq, "updateKeyedWhereDelta",
+      assignments)
     // every row of the pruned read MATCHES cond, so assignments apply
     // unconditionally; a seq stamp overwrites the row's seq column. The
     // pinned read evaluates once, inside the append's write
@@ -1549,17 +1557,17 @@ object Maintenance {
     }: _*), m.keyCols, m.nBuckets)
   }
 
-  /** The manifest delta DML `op` appends to. Refused: agg states, no
-    * stamp on a seq-resolved table (stored rows would outrank it), and a
-    * stamp on any other (chain order would silently ignore it).
+  /** The manifest delta DML `op` appends to. Refused: what
+    * `requireDmlTarget` refuses, no stamp on a seq-resolved table (stored
+    * rows would outrank it), and a stamp on any other (chain order would
+    * silently ignore it).
     */
   private def deltaDmlTarget(spark: SparkSession, clean: String,
-                             seq: Option[Column], op: String)
+                             seq: Option[Column], op: String,
+                             assignments: Seq[(String, Column)] = Nil)
       : KeyedManifest = {
     val m = readManifest(spark, clean)
-    require(m.nBuckets > 0, s"$clean has no keyed metadata")
-    require(m.resolve != "agg",
-      s"$clean is an agg state — DML runs against its BASE table")
+    requireDmlTarget(m, clean, op, assignments)
     require(m.seqCol.isEmpty || seq.isDefined,
       s"$clean resolves by sequence column '${m.seqCol}' — $op must " +
         "STAMP its rows (pass seq = the statement's sequence value)")
@@ -1570,32 +1578,43 @@ object Maintenance {
     m
   }
 
+  /** What every predicate DML refuses, copy-on-write and merge-on-read
+    * alike, each refusal naming `op`: a dir without keyed metadata, an
+    * agg state (DML runs against its BASE table), and an assignment to a
+    * key column (the row would change buckets) or to a column the table
+    * lacks (a typo'd name would report matches while changing nothing).
+    */
+  private def requireDmlTarget(m: KeyedManifest, clean: String, op: String,
+                               assignments: Seq[(String, Column)]): Unit = {
+    require(m.nBuckets > 0, s"$op: $clean has no keyed metadata")
+    require(m.resolve != "agg",
+      s"$op: $clean is an agg state — DML runs against its BASE table")
+    val have = m.schema.fieldNames
+    assignments.foreach { case (c, _) =>
+      require(!m.keyCols.contains(c),
+        s"$op cannot reassign key column '$c' (the row would change " +
+          "buckets) — delete + re-insert instead")
+      require(c != "kb" && have.contains(c),
+        s"$op: '$c' is not a column of $clean (have ${have.mkString(",")})")
+    }
+  }
+
+  /** Copy-on-write predicate DML: a delete when `assignments` is empty,
+    * else an update.
+    */
   private def dmlKeyedWhere(spark: SparkSession, dir: String,
                             cond: Column,
-                            assignments: Option[Seq[(String, Column)]])
-      : Long = {
+                            assignments: Seq[(String, Column)]): Long = {
     val clean = cleanDir(dir)
-    withCommitRetry(s"dmlKeyedWhere($dir)") {
+    val op = if (assignments.isEmpty) "deleteKeyedWhere" else "updateKeyedWhere"
+    withCommitRetry(s"$op($dir)") {
       val m = readManifest(spark, dir)
-      require(m.nBuckets > 0, s"$clean has no keyed metadata")
-      require(m.resolve != "agg",
-        s"$clean is an agg state — DML runs against its BASE table")
+      requireDmlTarget(m, clean, op, assignments)
       // same batch-wins rule as upsert/delete: a seq-resolved table
       // changes only through stamped appends
       require(m.seqCol.isEmpty,
         s"$clean resolves by sequence column '${m.seqCol}' — " +
           "predicate DML is batch-wins; append stamped deltas instead")
-      assignments.foreach(_.foreach { case (c, _) =>
-        require(!m.keyCols.contains(c),
-          s"updateKeyedWhere cannot reassign key column '$c' (the row " +
-            "would change buckets) — delete + re-insert instead")
-        // a typo'd assignment name would otherwise report a nonzero
-        // matched count while changing nothing (r13 ADVICE)
-        val have = m.schema.fieldNames
-        require(c != "kb" && have.contains(c),
-          s"updateKeyedWhere: '$c' is not a column of $clean " +
-            s"(have ${have.mkString(",")})")
-      })
       // a NONDETERMINISTIC predicate would match different rows when a
       // lost commit race re-runs the body — refuse up front (analyzed
       // against the empty snapshot: zero IO, resolved attributes).
@@ -1630,34 +1649,28 @@ object Maintenance {
         // cond is NULL-safe SQL semantics: NULL matches nothing, so a
         // delete KEEPS NULL-cond rows and an update leaves them alone
         val matches = F.coalesce(cond, F.lit(false))
-        val out = assignments match {
-          case None => resolved.filter(!matches)
-          case Some(as) =>
-            val amap = as.toMap
-            resolved.select(resolved.columns.toSeq.map { c =>
-              amap.get(c) match {
-                case Some(e) => F.when(matches, e).otherwise(F.col(c)).as(c)
-                case None => F.col(c)
-              }
-            }: _*)
-        }
+        val amap = assignments.toMap
+        val out =
+          if (amap.isEmpty) resolved.filter(!matches)
+          else resolved.select(resolved.columns.toSeq.map { c =>
+            amap.get(c).fold(F.col(c))(e =>
+              F.when(matches, e).otherwise(F.col(c)).as(c))
+          }: _*)
         commitKeyed(spark, stageMerge(spark, clean, out, touched, m))
       }
       matched
     }
   }
 
-  /** One CDC micro-batch, merged ATOMICALLY (one manifest commit) with
-    * the cross-batch last-wins guard INSIDE the optimistic-commit
-    * retry — a losing race recomputes the guard against the winner's
-    * snapshot, so concurrent writers can't resurrect a stale sequence
-    * (the pre-r9 shape read the guard once outside the retry).
-    * Semantics (a streaming CDC sink's `foreachBatch` body,
-    * streaming/Streams.upsertKeyedBatch, delegates here):
+  /** One CDC micro-batch (the body of a streaming CDC sink's
+    * `foreachBatch`, streaming/Streams.upsertKeyedBatch): the batch's
+    * per-key winner merges through `mergeKeyed` in ONE manifest commit.
     *  - `seqCol`: last-wins per key within the batch AND against the
-    *    stored row (`>=` keeps exact replays idempotent);
+    *    stored row (`mergeKeyed`'s stored-seq guard);
     *  - `deleteCol`: boolean tombstone — the key's winning row being a
     *    tombstone DELETES it; the column itself never lands.
+    * The first batch bootstraps the table; its tombstones insert
+    * nothing.
     */
   def cdcMergeKeyed(spark: SparkSession, dir: String, batch: DataFrame,
                     keyCol: String, nBuckets: Int,
@@ -1671,7 +1684,7 @@ object Maintenance {
                         keyCols: Seq[String], nBuckets: Int,
                         seqCol: Option[String] = None,
                         deleteCol: Option[String] = None): Unit = {
-    val reduced0 = seqCol match {
+    val reduced = seqCol match {
       case Some(sc) =>
         // per-key max-seq via the native argmax (no per-key sort, and
         // map-side partial reduction — the window had neither). The
@@ -1684,57 +1697,24 @@ object Maintenance {
           .select(F.col("__win.*"))
       case None => batch
     }
-    val m0 =
-      if (manifestVersions(spark, dir).isEmpty) None
-      else Some(readManifest(spark, dir))
-    m0.foreach(requireLayout(_, dir, keyCols, nBuckets))
-    val depths0 = m0.fold(Map.empty[Int, Int])(_.depths)
-    val (reduced, touched) = hashedBatch(reduced0, kb(m0.getOrElse(
-      KeyedManifest(0, Map.empty, keyCols.mkString(","), nBuckets))))
-    if (touched.isEmpty) return
-    def split(last: DataFrame): (DataFrame, Option[DataFrame]) =
-      deleteCol match {
-        case Some(dc) =>
-          (last.filter(!F.coalesce(F.col(dc), F.lit(false))).drop(dc),
-            Some(last.filter(F.coalesce(F.col(dc), F.lit(false)))
-              .select(keyCols.map(F.col): _*)))
-        case None => (last, None)
-      }
-    if (manifestVersions(spark, dir).isEmpty) {
-      // bootstrap: no stored rows to guard against; tombstones in the
-      // very first batch simply don't insert
-      val (ups, _) = split(reduced)
-      writeKeyed(ups.drop("kb"), dir, keyCols, nBuckets)
-      return
-    }
-    withCommitRetry(s"cdcMergeKeyed($dir)") {
-      val m = readManifest(spark, dir)
-      require(m.depths == depths0,
-        s"keyed table $dir re-bucketed mid-merge (splitKeyed) — " +
-          "re-run the merge")
-      val base = readTouched(spark, dir, m, touched, keyCols, nBuckets)
-      // cross-batch last-wins: a late batch carrying an older sequence
-      // for a stored key (out-of-order source, or a replay interleaved
-      // with newer batches) must not regress the row — compare against
-      // the SAME snapshot this attempt will merge into
-      val last = seqCol match {
-        case Some(sc) if base.columns.contains(sc) =>
-          reduced.join(
-            base.select((keyCols.map(F.col) :+
-              F.col(sc).as("__curseq")): _*),
-            keyCols, "left")
-            .filter(F.col("__curseq").isNull ||
-              F.col(sc) >= F.col("__curseq"))
-            .drop("__curseq")
-        case _ => reduced
-      }
-      val (ups, dels) = split(last)
-      val gone = dels.fold(ups.select(keyCols.map(F.col): _*))(d =>
-        ups.select(keyCols.map(F.col): _*).unionByName(d)).distinct()
-      val merged = base.join(gone, keyCols, "left_anti")
-        .unionByName(ups, allowMissingColumns = true)
-      commitKeyed(spark, stageMerge(spark, dir, merged, touched, m))
-    }
+    if (newestManifest(spark, dir).isEmpty)
+      writeKeyed(upserts(reduced, deleteCol), dir, keyCols, nBuckets)
+    else
+      mergeKeyed(spark, dir, reduced, keyCols, nBuckets, deleteCol, seqCol)
+  }
+
+  /** `requireLayout`, and no sequence column: a SEQUENCE-resolved
+    * table's winner is max-seq, so a batch-wins merge would overwrite
+    * newer stored rows with older batch rows — those tables change only
+    * through appendDeltaKeyed (stamped) + compactKeyed.
+    */
+  private def requireBatchWins(m: KeyedManifest, dir: String,
+                               keyCols: Seq[String], nBuckets: Int): Unit = {
+    requireLayout(m, dir, keyCols, nBuckets)
+    require(m.seqCol.isEmpty,
+      s"${cleanDir(dir)} resolves by sequence column '${m.seqCol}' — " +
+        "upsert/delete/CoW-merge are batch-wins and would break it; " +
+        "append stamped deltas instead (appendDeltaKeyed) and compact")
   }
 
   /** A mismatched bucket count or key would hash a batch into the WRONG
@@ -1745,30 +1725,6 @@ object Maintenance {
     require(m.nBuckets == nBuckets && m.keyCols == keyCols,
       s"keyed table ${cleanDir(dir)} is (${m.keyCol}, ${m.nBuckets}) " +
         s"buckets; caller passed (${keyCols.mkString(",")}, $nBuckets)")
-
-  /** The pruned base read: exactly the touched buckets' live rows,
-    * with any delta chains RESOLVED (so a full merge of a bucket folds
-    * its merge-on-read deltas into the staged generation — stageMerge
-    * then drops them from the manifest). When none of the touched
-    * buckets exists yet (pure-insert batch into new buckets) this is
-    * the empty snapshot; the merge unions by name, so its manifest
-    * schema keeps the union aligned.
-    */
-  private def readTouched(spark: SparkSession, dir: String,
-                          m: KeyedManifest, touched: Seq[Int],
-                          keyCols: Seq[String], nBuckets: Int): DataFrame = {
-    val clean = cleanDir(dir)
-    requireLayout(m, dir, keyCols, nBuckets)
-    // a SEQUENCE-resolved table's winner is max-seq, not batch-wins:
-    // the copy-on-write merge/delete paths would silently overwrite
-    // newer stored rows with older batch rows — those tables change
-    // only through appendDeltaKeyed (stamped) + compactKeyed
-    require(m.seqCol.isEmpty,
-      s"$clean resolves by sequence column '${m.seqCol}' — upsert/" +
-        "delete/CoW-merge are batch-wins and would break it; append " +
-        "stamped deltas instead (appendDeltaKeyed) and compact")
-    resolveBuckets(spark, clean, m, touched)
-  }
 
   /** MERGE-ON-READ upsert: append the batch as per-bucket DELTA dirs
     * and publish a manifest whose delta chains grew — the base
@@ -2477,6 +2433,8 @@ object Maintenance {
     val clean = cleanDir(dir)
     val p = new Path(clean)
     val fs = hadoopFs(spark, p)
+    // at or before the cutoff is past the grace: with graceMs = 0, a
+    // file written in this same millisecond is eligible too
     val cutoff = System.currentTimeMillis() - graceMs
     val versions = manifestVersions(spark, dir)
     val (drop0, keep) = versions.splitAt(math.max(0, versions.size - keepVersions))
@@ -2494,7 +2452,7 @@ object Maintenance {
     // a graced old manifest must never outlive its own data.
     drop.foreach { v =>
       val mf = new Path(manifestDir(clean), f"v$v%09d.json")
-      if (fs.exists(mf) && fs.getFileStatus(mf).getModificationTime < cutoff)
+      if (fs.exists(mf) && fs.getFileStatus(mf).getModificationTime <= cutoff)
         fs.delete(mf, false)
     }
     val referenced = manifestVersions(spark, dir)
@@ -2503,7 +2461,7 @@ object Maintenance {
     fs.listStatus(p).toSeq
       .filter(s => s.getPath.getName.matches(genPattern) &&
         !referenced.contains(s.getPath.getName) &&
-        s.getModificationTime < cutoff)
+        s.getModificationTime <= cutoff)
       .foreach(s => fs.delete(s.getPath, true))
     // pointer hygiene: a `_groups` pointer whose decoded group dir no
     // longer has any committed manifest is DEAD — it stopped
@@ -2513,7 +2471,7 @@ object Maintenance {
     // everything else (a freshly-registered group whose first commit
     // is in flight must survive).
     Fs.listOrEmpty(fs, new Path(clean, "_groups"))
-      .filter(_.getModificationTime < cutoff)
+      .filter(_.getModificationTime <= cutoff)
       .filter { s =>
         // the catch is scoped to the LISTING only: an undecodable name
         // is dead by construction, but a transient IO error while
@@ -2529,7 +2487,7 @@ object Maintenance {
     // crashed-writer residue: manifest temps
     Fs.listOrEmpty(fs, manifestDir(clean))
       .filter(s => s.getPath.getName.startsWith(".tmp_") &&
-        s.getModificationTime < cutoff)
+        s.getModificationTime <= cutoff)
       .foreach(s => fs.delete(s.getPath, false))
   }
 

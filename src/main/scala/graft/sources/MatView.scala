@@ -357,15 +357,6 @@ object MatView {
     Maintenance.finalizeAgg(folded, logical, m.aggP)
   }
 
-  /** SESSION-ONLY unregister: removes the in-memory entry but leaves
-    * the durable `<base>/_mvs/` hint, so the registration RESURRECTS
-    * via `ensureLoaded` in a later session (or after `clear()`). Only
-    * for temporarily muting a route in THIS session — a caller that
-    * means "unregister" wants the SparkSession overload, which deletes
-    * the hint file too.
-    */
-  def unregister(mvDir: String): Unit = reg.remove(clean(mvDir))
-
   /** Unregister AND delete the durable hint file, which also stops the
     * view flooring the base's vacuum (the state itself stays on disk).
     */
@@ -419,98 +410,6 @@ object MatView {
   private def routingEnabled(spark: SparkSession): Boolean =
     spark.conf.get("spark.graft.mv.routing", "true").toBoolean
 
-  /** Opt-in AUTO-REFRESH on route (`spark.graft.mv.autorefresh=true`):
-    * when every registered view of the base is merely STALE (not
-    * grain/measure-incompatible) and the caller's frame is pinned at
-    * the base's CURRENT head, a bucket-grain view refreshes
-    * incrementally RIGHT THERE (cost ∝ changed base buckets) and then
-    * serves the query — the full query-time closing of the loop.
-    * Default OFF: a read that commits is surprising, and a fleet of
-    * concurrent dashboards would stampede the refresh (the retry makes
-    * that safe but wasteful). Only fires when the pinned version IS
-    * the head (refresh targets head; serving an older pin from a newer
-    * state would change the frame's rows).
-    */
-  private def autoRefresh(spark: SparkSession): Boolean =
-    spark.conf.get("spark.graft.mv.autorefresh", "false").toBoolean
-
-  /** STAMPEDE CONTROL for query-time auto-refresh: a per-view
-    * `_refresh_lease` published through `Fs.publishIfAbsent` (the
-    * manifest's own atomicity discipline), so of N concurrent readers
-    * hitting the same
-    * stale view exactly ONE pays the changed-bucket re-aggregation;
-    * the others route stale → scan this once, as if auto-refresh were
-    * off. A lease older than `spark.graft.mv.leaseMs` (default 60 s)
-    * is a crashed/hung refresher's — it is broken and re-acquired.
-    * The lease is an EFFICIENCY gate, not a correctness one: the
-    * refresh itself stays safe under any race (idempotent per-tag
-    * replace + manifest CAS), so the rare break-race double-refresh
-    * just wastes the work the lease normally saves.
-    */
-  private def leasePath(mvDir: String) =
-    new Path(s"${clean(mvDir)}/_refresh_lease")
-
-  private def tryAcquireLease(spark: SparkSession, mvDir: String,
-                              ttlMs: Long): Boolean = {
-    val p = leasePath(mvDir)
-    val fs = Fs.forWrite(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    def tryPublish(): Boolean = {
-      val tmp = new Path(s"${clean(mvDir)}/.lease_tmp_${ProcessHandle
-        .current().pid()}x${Thread.currentThread().getId}")
-      val out = fs.create(tmp, true)
-      try out.write(s"${System.currentTimeMillis()}".getBytes("UTF-8"))
-      finally out.close()
-      Fs.publishIfAbsent(fs, tmp, p)
-    }
-    if (tryPublish()) return true
-    // an existing lease younger than the TTL: someone owns the window
-    val stale =
-      try fs.getFileStatus(p).getModificationTime <
-        System.currentTimeMillis() - ttlMs
-      catch { case _: Exception => false } // released between checks
-    if (!stale) return false
-    // break the crashed refresher's lease via RENAME, not delete:
-    // rename of one source succeeds for exactly ONE breaker (the
-    // second gets ENOENT), so two readers racing an expired lease
-    // can't both break-then-acquire — a naive delete+publish could
-    // delete the OTHER breaker's freshly published lease
-    val broken = new Path(s"${clean(mvDir)}/.lease_broken_${ProcessHandle
-      .current().pid()}x${Thread.currentThread().getId}")
-    val won = try fs.rename(p, broken) catch { case _: Exception => false }
-    if (!won) return false
-    fs.delete(broken, false)
-    tryPublish()
-  }
-
-  private def releaseLease(spark: SparkSession, mvDir: String): Unit = {
-    val p = leasePath(mvDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, false)
-  }
-
-  private def maybeAutoRefresh(spark: SparkSession, baseDir: String,
-                               pinnedVersion: Option[Int]): Unit = {
-    if (!autoRefresh(spark)) return
-    val pinned = pinnedVersion.getOrElse(return)
-    forBase(baseDir)
-      .filter(d => d.bucketTag.isDefined && d.baseVersion < pinned)
-      .foreach { d =>
-        // refresh targets the base's CURRENT head; only safe to serve
-        // this frame when head == pinned, so re-check before the work
-        val head = Maintenance.manifestVersions(spark, d.baseDir).last
-        if (head == pinned) {
-          val ttl =
-            spark.conf.get("spark.graft.mv.leaseMs", "60000").toLong
-          if (tryAcquireLease(spark, d.mvDir, ttl))
-            try refreshMvIncremental(spark, d.mvDir)
-            catch { case _: Exception => () } // stale stays stale: scan
-            finally releaseLease(spark, d.mvDir)
-          // lease held elsewhere: route stale -> scan, no wasted work
-        }
-      }
-  }
-
   /** Try to serve `SELECT keys, aggs FROM read_keyed(baseDir)[filters]
     * GROUP BY keys` from a registered view. `keys` = (output name,
     * base column); `aggs` = (output name, op, measure) with op ∈ count
@@ -541,7 +440,6 @@ object MatView {
     val curBase = pinnedVersion.orElse(
       Maintenance.manifestVersions(spark, clean(baseDir)).lastOption)
       .getOrElse(return None)
-    maybeAutoRefresh(spark, baseDir, pinnedVersion)
     forBase(baseDir).iterator
       .filter(_.baseVersion == curBase) // fresh at the PINNED version
       .filter(d => keys.map(_._2).toSet.subsetOf(d.keys.toSet)) // grain
@@ -571,7 +469,6 @@ object MatView {
     val curBase = pinnedVersion.orElse(
       Maintenance.manifestVersions(spark, clean(baseDir)).lastOption)
       .getOrElse(return None)
-    maybeAutoRefresh(spark, baseDir, pinnedVersion)
     forBase(baseDir).iterator
       .filter(_.baseVersion == curBase)
       .map(d => tryBuild(spark, d, curBase, Nil, aggs, filters))

@@ -38,55 +38,9 @@ object Streams {
     */
   def upsertKeyedBatch(batch: DataFrame, dir: String, keyCol: String,
                        nBuckets: Int, seqCol: Option[String] = None,
-                       deleteCol: Option[String] = None,
-                       asDeltas: Boolean = false): Unit =
-    if (asDeltas)
-      deltaKeyedBatch(batch, dir, keyCol, nBuckets, seqCol, deleteCol)
-    else
-      graft.sources.Maintenance.cdcMergeKeyed(batch.sparkSession, dir,
-        batch, keyCol, nBuckets, seqCol, deleteCol)
-
-  /** The MERGE-ON-READ twin of the CDC batch: the reduced batch lands
-    * as per-bucket DELTA dirs (Maintenance.appendDeltaKeyed) — bytes
-    * written ∝ the batch, never the touched buckets, which is what a
-    * high-frequency small-batch stream into large buckets needs; run
-    * `compactKeyed` on a maintenance cadence to fold the chains.
-    * Last-wins across batches is DELTA ORDER (append order): correct
-    * for in-order-per-key delivery (e.g. a log-compacted, key-
-    * partitioned source), and exact replays are idempotent only in
-    * CONTENT (a replayed batch appends an identical delta level — the
-    * resolved rows are unchanged). An out-of-order source needs the
-    * copy-on-write path's stored-seq guard (`asDeltas = false`).
-    */
-  private def deltaKeyedBatch(batch: DataFrame, dir: String, keyCol: String,
-                              nBuckets: Int, seqCol: Option[String],
-                              deleteCol: Option[String]): Unit = {
-    import graft.sources.Maintenance
-    val spark = batch.sparkSession
-    val reduced = seqCol match {
-      case Some(sc) =>
-        // native argmax, not a row_number window (r15; same shape as
-        // cdcMergeKeyedCols): struct-wrapped ord keeps one row for an
-        // all-null-seq key, like the window's nulls-last rank did
-        batch.groupBy(col(keyCol))
-          .agg(graft.plans.TopRow.topRow(spark, F.struct(F.col(sc)),
-            F.struct(batch.columns.map(col(_)): _*)).as("__win"))
-          .select(col("__win.*"))
-      case None => batch
-    }
-    val (ups, dels) = deleteCol match {
-      case Some(dc) =>
-        (reduced.filter(!F.coalesce(col(dc), F.lit(false))).drop(dc),
-          Some(reduced.filter(F.coalesce(col(dc), F.lit(false)))
-            .select(col(keyCol))))
-      case None => (reduced, None)
-    }
-    if (Maintenance.manifestVersions(spark, dir).isEmpty)
-      Maintenance.writeKeyed(ups, dir, keyCol, nBuckets)
-    else
-      Maintenance.appendDeltaKeyed(spark, dir, ups, keyCol, nBuckets,
-        tombstoneKeys = dels)
-  }
+                       deleteCol: Option[String] = None): Unit =
+    graft.sources.Maintenance.cdcMergeKeyed(batch.sparkSession, dir,
+      batch, keyCol, nBuckets, seqCol, deleteCol)
 
   // ---- streaming MATERIALIZED-VIEW maintenance ----------------------------
   //

@@ -740,40 +740,4 @@ class GraphStreamingSpec extends SparkSpec {
     assert(Streams.readChangeCursor(spark, cursor3) ==
       graft.sources.Maintenance.manifestVersions(spark, dir).last)
   }
-
-  test("streaming CDC in delta mode: appends only, bases untouched, compact folds") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.sources.Maintenance
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cdcd").toString + "/tbl"
-    val mem = MemoryStream[(Long, Long, Double, Boolean)]
-    val df = mem.toDF().toDF("k", "seq", "v", "del")
-    val q = eachBatch(df) { (b, _) =>
-      Streams.upsertKeyedBatch(b, dir, "k", 4,
-        seqCol = Some("seq"), deleteCol = Some("del"), asDeltas = true)
-    }
-    // batch 1 bootstraps the base generations
-    mem.addData((1L, 10L, 1.0, false), (2L, 10L, 2.0, false),
-      (3L, 10L, 3.0, false))
-    q.processAllAvailable()
-    val baseFiles = parquetFileState(dir)
-    // batch 2: update k=1 (within-batch seq reduce picks 21), delete
-    // k=3, insert k=4 — lands as DELTA dirs, bases byte-identical
-    mem.addData((1L, 20L, 1.2, false), (1L, 21L, 1.5, false),
-      (3L, 20L, 0.0, true), (4L, 20L, 4.0, false))
-    q.processAllAvailable()
-    q.stop()
-    def snap() = Maintenance.readKeyed(spark, dir).select("k", "v")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(snap() == Map(1L -> 1.5, 2L -> 2.0, 4L -> 4.0))
-    baseFiles.foreach { case (p, st) =>
-      assert(parquetFileState(dir).get(p).contains(st),
-        s"delta-mode batch rewrote a base file: $p")
-    }
-    assert(Maintenance.readManifest(spark, dir).deltas.nonEmpty)
-    // compaction folds the chains; resolved rows unchanged
-    Maintenance.compactKeyed(spark, dir)
-    assert(snap() == Map(1L -> 1.5, 2L -> 2.0, 4L -> 4.0))
-    assert(Maintenance.readManifest(spark, dir).deltas.isEmpty)
-  }
 }

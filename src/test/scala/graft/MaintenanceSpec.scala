@@ -1895,17 +1895,22 @@ class MaintenanceSpec extends SparkSpec {
       Seq((3L, 30L), (50L, 500L), (200L, 2L)).toDF("k", "v"), "k", 4))
     val upsert = jobsOf(M.upsertKeyed(spark, dir,
       Seq((4L, 40L), (60L, 600L), (300L, 3L)).toDF("k", "v"), "k", 4))
+    // a CDC batch with tombstones and no seq column merges through the
+    // upsert's body: same jobs
+    val cdc = jobsOf(M.cdcMergeKeyedCols(spark, dir,
+      Seq((5L, 50L, false), (70L, 0L, true), (400L, 4L, false))
+        .toDF("k", "v", "del"), Seq("k"), 4, deleteCol = Some("del")))
     // the stage job's two (shuffle map + write); the upsert adds the
     // touched buckets' resolve and the broadcast anti join (the batch
     // keys broadcast straight from the driver). A re-read duplicate
     // guard, a batch checkpoint, a kb probe job or a distinct over the
     // batch keys would each raise these
-    assert(append == 2 && upsert == 4,
-      s"append ran $append jobs, upsert $upsert")
+    assert(append == 2 && upsert == 4 && cdc == 4,
+      s"append ran $append jobs, upsert $upsert, CDC merge $cdc")
     val got = M.readKeyed(spark, dir).select("k", "v").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (0L until 100L).map(k => k -> k).toMap ++
+    assert(got == (0L until 100L).map(k => k -> k).toMap - 70L ++
       Map(3L -> 30L, 50L -> 500L, 200L -> 2L, 4L -> 40L, 60L -> 600L,
-        300L -> 3L))
+        300L -> 3L, 5L -> 50L, 400L -> 4L))
   }
 }

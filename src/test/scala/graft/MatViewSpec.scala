@@ -221,11 +221,13 @@ class MatViewSpec extends SparkSpec {
       s"""t = read_keyed("$bdir")
          |t {g => ad: approx_count_distinct(u), n: count()}
          |""".stripMargin
-    MV.unregister(mdir)
-    val scan = graft.lang.Interp.run(spark, script).df
-    assert(scan.inputFiles.exists(_.contains(bdir.split("/").last)))
-    val scanRows = scan.orderBy("g").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
+    var scanRows: Array[(Long, Double, Long)] = null
+    withConfs("spark.graft.mv.routing" -> "false") {
+      val scan = graft.lang.Interp.run(spark, script).df
+      assert(scan.inputFiles.exists(_.contains(bdir.split("/").last)))
+      scanRows = scan.orderBy("g").collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
+    }
     MV.register(spark, mdir, bdir, Seq("v"), distinctKey = Some("u"))
     val routed = graft.lang.Interp.run(spark, script).df
     assert(!routed.inputFiles.exists(_.contains(bdir.split("/").last)),
@@ -730,104 +732,6 @@ class MatViewSpec extends SparkSpec {
             s"(g=${x.getLong(0)}: routed ${x.getDouble(7)} vs " +
             s"scan ${y.getDouble(7)})")
       }
-  }
-
-  test("opt-in auto-refresh: a stale bucket-grain view refreshes AT QUERY TIME and serves") {
-    val bdir = tmp("mv_arb"); val mdir = tmp("mv_ars")
-    val base = mkBase(4000)
-    M.writeKeyed(base, bdir, "k", 8)
-    MV.buildMv(spark, bdir, mdir, Seq("g"), Seq("w"), 4)
-    val ups = spark.range(0, 3).select(col("id").as("k"),
-      (col("id") % 7).as("g"), lit(1.0).as("v"), lit(50L).as("w"))
-    M.upsertKeyed(spark, bdir, ups, "k", 8)
-    val q = Seq(("g", "g")) -> Seq(("n", "count", None: Option[String]),
-      ("sw", "sum", Some("w")))
-    // default OFF: stale view scans
-    assert(MV.route(spark, bdir, q._1, q._2,
-      pinnedVersion = Some(2)).isEmpty)
-    withConfs("spark.graft.mv.autorefresh" -> "true") {
-      // a frame pinned at head triggers the incremental refresh and
-      // routes; the values are the CURRENT base's
-      val routed = MV.route(spark, bdir, q._1, q._2,
-        pinnedVersion = Some(2))
-      assert(routed.isDefined, "auto-refresh must re-arm and route")
-      val now = M.readKeyed(spark, bdir)
-      val expect = now.groupBy("g").agg(F.count(lit(1)).as("n"),
-        F.sum("w").as("sw"))
-      assert(routed.get.orderBy("g").collect().toSeq.map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2))) ==
-        expect.orderBy("g").collect().toSeq.map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2))))
-      // a frame pinned BEHIND head never TRIGGERS a refresh (refresh
-      // targets head; re-arming past an old pin would serve rows the
-      // frame never read): watermark 2, pin 3, head 4 -> no refresh,
-      // no route, watermark unchanged
-      M.upsertKeyed(spark, bdir, ups, "k", 8) // head -> 3
-      M.upsertKeyed(spark, bdir, ups, "k", 8) // head -> 4
-      assert(MV.route(spark, bdir, q._1, q._2,
-        pinnedVersion = Some(3)).isEmpty,
-        "an old pin must not trigger or use an auto-refresh")
-      assert(MV.list().find(_.mvDir == mdir).get.baseVersion == 2,
-        "a skipped auto-refresh must leave the watermark untouched")
-      // ...while the pin that MATCHES the old watermark still serves
-      // (that IS the pinned-version contract)
-      assert(MV.route(spark, bdir, q._1, q._2,
-        pinnedVersion = Some(2)).isDefined)
-    }
-  }
-
-  test("auto-refresh lease: racing readers pay ONE refresh; stale leases break; held leases defer") {
-    val bdir = tmp("mv_lb"); val mdir = tmp("mv_ls")
-    val base = mkBase(4000)
-    M.writeKeyed(base, bdir, "k", 8)
-    MV.buildMv(spark, bdir, mdir, Seq("g"), Seq("w"), 4)
-    val ups = spark.range(0, 3).select(col("id").as("k"),
-      (col("id") % 7).as("g"), lit(1.0).as("v"), lit(50L).as("w"))
-    M.upsertKeyed(spark, bdir, ups, "k", 8) // view stale at head=2
-    val q = Seq(("g", "g")) -> Seq(("n", "count", None: Option[String]))
-    val stV0 = M.manifestVersions(spark, mdir).last
-    withConfs("spark.graft.mv.autorefresh" -> "true") {
-      // N concurrent routed queries over the stale view: the lease
-      // lets exactly ONE run the refresh (one state commit); the rest
-      // route stale -> scan (None) or, if they arrive after the
-      // winner, route fresh — never a second refresh
-      val results = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val ts = (1 to 4).map(_ => new Thread(() =>
-        try results.add(MV.route(spark, bdir, q._1, q._2,
-          pinnedVersion = Some(2)).isDefined)
-        catch { case t: Throwable => errs.add(t) }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      assert(errs.isEmpty, s"racing auto-refresh must be safe: $errs")
-      val stV1 = M.manifestVersions(spark, mdir).last
-      assert(stV1 == stV0 + 1,
-        s"exactly one refresh commit expected: $stV0 -> $stV1")
-      import scala.jdk.CollectionConverters._
-      assert(results.asScala.exists(identity),
-        "the winning reader (at least) must route")
-      // the winner releases: the lease file must be gone
-      val lease = new org.apache.hadoop.fs.Path(s"$mdir/_refresh_lease")
-      val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(!fs.exists(lease), "the lease must be released")
-      // a lease HELD by a live refresher defers: no commit, no route
-      M.upsertKeyed(spark, bdir, ups, "k", 8) // stale again (head=3)
-      fs.create(lease, true).close()
-      assert(MV.route(spark, bdir, q._1, q._2,
-        pinnedVersion = Some(3)).isEmpty,
-        "a held lease must defer the refresh (reader scans this once)")
-      assert(M.manifestVersions(spark, mdir).last == stV1,
-        "no refresh may commit under a held lease")
-      // a CRASHED refresher's lease (older than the TTL) is broken
-      java.nio.file.Files.setLastModifiedTime(
-        java.nio.file.Paths.get(lease.toUri.getPath),
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 10 * 60 * 1000L))
-      assert(MV.route(spark, bdir, q._1, q._2,
-        pinnedVersion = Some(3)).isDefined,
-        "an expired lease must be broken and the refresh run")
-      assert(M.manifestVersions(spark, mdir).last == stV1 + 1)
-      assert(!fs.exists(lease))
-    }
   }
 
   test("refreshMvs sweeps every view of a base; list staleness goes 1 -> 0") {
