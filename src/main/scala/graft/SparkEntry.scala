@@ -1141,7 +1141,7 @@ object SparkEntry {
         orders.filter(col("o_orderkey") % 10 === 0),
         Seq("o_orderpriority"), "o_totalprice")
       graft.sources.Maintenance.finalizeAgg(
-          graft.sources.Maintenance.readAggStateKeyed(s, dir),
+          graft.sources.Maintenance.readKeyed(s, dir),
           Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"),
           F.round(col("total"), 6).as("total"),
@@ -1195,7 +1195,7 @@ object SparkEntry {
         Seq("o_orderpriority"), "o_totalprice",
         distinctKey = Some("o_custkey"))
       graft.sources.Maintenance.finalizeAgg(
-          graft.sources.Maintenance.readAggStateKeyed(s, dir),
+          graft.sources.Maintenance.readKeyed(s, dir),
           Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"),
           F.round(col("total"), 6).as("total"),
@@ -1218,7 +1218,7 @@ object SparkEntry {
         orders.filter(col("o_orderkey") % 10 === 0),
         Seq("o_orderpriority"), "o_totalprice", sampleK = 512)
       graft.sources.Maintenance.finalizeAgg(
-          graft.sources.Maintenance.readAggStateKeyed(s, dir),
+          graft.sources.Maintenance.readKeyed(s, dir),
           Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"), col("approx_p25"),
           col("approx_median"), col("approx_p90"))
@@ -1241,7 +1241,7 @@ object SparkEntry {
         Seq("o_orderpriority"), "o_totalprice", sampleK = 512,
         sampleUnique = Some("o_orderkey"))
       graft.sources.Maintenance.finalizeAgg(
-          graft.sources.Maintenance.readAggStateKeyed(s, dir),
+          graft.sources.Maintenance.readKeyed(s, dir),
           Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"), col("approx_p25"),
           col("approx_median"), col("approx_p90"))
@@ -1263,7 +1263,7 @@ object SparkEntry {
         orders.filter(col("o_orderkey") % 10 === 0),
         Seq("o_orderpriority"), "o_totalprice",
         distinctKey = Some("o_custkey"))
-      M.finalizeAgg(M.readAggStateKeyed(s, dir), Seq("o_orderpriority"))
+      M.finalizeAgg(M.readKeyed(s, dir), Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"),
           F.round(col("total"), 6).as("total"),
           F.round(col("mean"), 6).as("mean"),
@@ -1291,7 +1291,7 @@ object SparkEntry {
         orders.filter(col("o_orderkey") % 20 === 10),
         Seq("o_orderpriority"), "o_totalprice", sampleK = 512,
         asDeltas = true)
-      M.finalizeAgg(M.readAggStateKeyed(s, dir, sampleK = 512),
+      M.finalizeAgg(M.readKeyed(s, dir),
         Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"), col("approx_p25"),
           col("approx_median"), col("approx_p90"))
@@ -1328,7 +1328,7 @@ object SparkEntry {
       val m3 = M.readManifest(s, dir)
       val deltaBytes = m3.deltas.values.flatten
         .map(dd => M.dirBytes(s, dir + "/" + dd)).sum
-      M.compactAggStateKeyed(s, dir)
+      M.compactKeyed(s, dir)
       val m4 = M.readManifest(s, dir)
       // the expected view straight from a one-shot groupBy (same
       // exact-decimal arithmetic finalizeAgg uses) — no second table
@@ -1340,7 +1340,7 @@ object SparkEntry {
           col("__sum").cast(DoubleType).as("total"),
           (col("__sum").cast(DoubleType) / col("n")).as("mean"))
       val fin = M.finalizeAgg(
-        M.readAggStateKeyed(s, dir), Seq("g"))
+        M.readKeyed(s, dir), Seq("g"))
         .select("g", "n", "total", "mean")
       val dif = M.diff(fin, expected, Seq("g"))
       dif.agg((F.count(lit(1)) === g).as("n_ok"),
@@ -1376,8 +1376,8 @@ object SparkEntry {
         orders.filter(col("o_orderkey") % 20 === 10),
         Seq("o_orderpriority"), measures,
         distinctKey = Some("o_custkey"), asDeltas = true)
-      M.compactAggStateKeyed(s, dir)
-      M.finalizeAgg(M.readAggStateKeyed(s, dir), Seq("o_orderpriority"))
+      M.compactKeyed(s, dir)
+      M.finalizeAgg(M.readKeyed(s, dir), Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"),
           F.round(col("total_o_totalprice"), 6).as("total_price"),
           F.round(col("mean_o_totalprice"), 6).as("mean_price"),
@@ -1894,7 +1894,7 @@ object SparkEntry {
       val replayApplied =
         b(orders.filter(col("o_orderkey") % 20 === 0), 1L)
       b(orders.filter(col("o_orderkey") % 20 === 10), 2L, cow = true)
-      M.finalizeAgg(M.readAggStateKeyed(s, dir), Seq("o_orderpriority"))
+      M.finalizeAgg(M.readKeyed(s, dir), Seq("o_orderpriority"))
         .select(col("o_orderpriority"), col("n"),
           F.round(col("total"), 6).as("total"),
           F.round(col("mean"), 6).as("mean"))

@@ -2766,8 +2766,8 @@ object Interp {
             distinctKey = optName(args, 4 + bo), sampleK = ksk,
             sampleUnique = optName(args, 6 + bo))
           PTable(graft.sources.Maintenance.finalizeAgg(
-            graft.sources.Maintenance.readAggStateKeyed(spark,
-              litString(args(3).value), sampleK = ksk), kkeys))
+            graft.sources.Maintenance.readKeyed(spark,
+              litString(args(3).value)), kkeys))
         case "merge_agg_state" | "merge_agg_state_keyed" =>
           // merge_agg_state_keyed(dir, batch, "keys", "value",
           // as_deltas?, "distinct_key"?, sample_k?, "sample_unique"?)
@@ -2803,32 +2803,28 @@ object Interp {
           if (mo == 0)
             graft.sources.Maintenance.vacuumKeyed(spark, mdir, keepVersions = 2)
           PTable(graft.sources.Maintenance.finalizeAgg(
-            graft.sources.Maintenance.readAggStateKeyed(spark, mdir,
-              sampleK = gsk), gkeys))
+            graft.sources.Maintenance.readKeyed(spark, mdir), gkeys))
         case "finalize_agg" =>
           // finalize_agg(dir, "keys") — the user-facing view of a
           // persisted agg state without touching it (read-only)
           if (args.length != 2)
             throw new TypeError("finalize_agg(\"dir\", \"keys\")")
           PTable(graft.sources.Maintenance.finalizeAgg(
-            graft.sources.Maintenance.readAggStateKeyed(spark,
+            graft.sources.Maintenance.readKeyed(spark,
               litString(args(0).value)),
             litString(args(1).value).trim.split("\\s+").toSeq))
         case "compact_agg_state_keyed" =>
-          // compact_agg_state_keyed(dir, "keys", sample_k?) — fold the
-          // delta-partial chains back into base generations (the
-          // re-aggregation twin of compact_keyed); returns the
-          // finalized view
-          if (args.length < 2 || args.length > 3)
-            throw new TypeError(
-              "compact_agg_state_keyed(\"dir\", \"keys\", sample_k?)")
-          val csk = // -1 = the build's recorded sampleK (r10 manifests)
-            if (args.length == 3) constLong(args(2).value).toInt else -1
-          graft.sources.Maintenance.compactAggStateKeyed(spark,
-            litString(args(0).value), sampleK = csk)
+          // compact_agg_state_keyed(dir, "keys") — fold the
+          // delta-partial chains back into base generations
+          // (compact_keyed, which re-aggregates an agg state's
+          // chains); returns the finalized view
+          if (args.length != 2)
+            throw new TypeError("compact_agg_state_keyed(\"dir\", \"keys\")")
+          graft.sources.Maintenance.compactKeyed(spark,
+            litString(args(0).value))
           PTable(graft.sources.Maintenance.finalizeAgg(
-            graft.sources.Maintenance.readAggStateKeyed(spark,
-              litString(args(0).value), sampleK = csk),
+            graft.sources.Maintenance.readKeyed(spark,
+              litString(args(0).value)),
             litString(args(1).value).trim.split("\\s+").toSeq))
         case "commit_group" =>
           // commit_group(group_dir, t1, v1, t2, v2, ...) — pin member

@@ -186,9 +186,9 @@ object Maintenance {
     *  - `statsCols` + `colStats`: per-dir MIN/MAX zone maps for the
     *    columns declared at writeKeyed time; range and predicate reads
     *    prune whole buckets against them.
-    *  - `resolve`: the delta-resolution discipline — empty = last-wins
-    *    row data, "agg" = the chains hold aggregate partials and
-    *    resolution is re-aggregation (the last-wins readers refuse).
+    *  - `resolve`: the delta-resolution discipline `resolveBuckets`
+    *    applies — empty = last-wins row data, "agg" = the chains hold
+    *    aggregate partials and resolution is re-aggregation.
     *  - `txn`: writer-app transaction watermarks (appId → last applied
     *    batch id), carried forward through every commit so the
     *    watermark and the data land in one atomic publish (exactly-once
@@ -208,8 +208,8 @@ object Maintenance {
     * the buckets whose generation or chain moved since `prev`, and
     * `liveBuckets` the buckets holding rows — a base generation or a
     * non-empty chain. This is the one definition of "live"; readers
-    * pass any bucket selection to the resolvers (`resolveBuckets`,
-    * `readAggStateBuckets`), which keep only the live ones.
+    * pass any bucket selection to the one resolver (`resolveBuckets`),
+    * which keeps only the live ones.
     */
   final case class KeyedManifest(version: Int, buckets: Map[Int, String],
                                  keyCol: String = "", nBuckets: Int = 0,
@@ -556,7 +556,8 @@ object Maintenance {
   /** Read the keyed table's snapshot at `version` (latest when None).
     * Scans exactly the bucket dirs the manifest lists; `kb` is a data
     * column in the files. Buckets with merge-on-read delta chains are
-    * resolved last-wins (see `resolveBuckets`); buckets without deltas
+    * resolved by the table's discipline — last-wins, or re-aggregation
+    * for an agg state (see `resolveBuckets`); buckets without deltas
     * read straight through with NO resolution shuffle.
     */
   def readKeyed(spark: SparkSession, dir: String,
@@ -936,10 +937,17 @@ object Maintenance {
     * the window. Levels union by name so delta batches may carry
     * additive schema changes like any merge.
     *
-    * With `readAggStateBuckets`, one of the only two places a manifest
-    * and a bucket selection turn into rows: callers pass any selection
-    * straight through — buckets that are not live are skipped, and a
-    * selection with no live bucket reads as the empty snapshot.
+    * An agg state (`m.resolve == "agg"`) resolves its delta-carrying
+    * buckets by RE-AGGREGATION instead: its chains hold aggregate
+    * partials, every state column is associative, so the per-key fold
+    * of base ⊕ chain (`aggOfState` at the build's recorded `aggP` /
+    * `aggK`) IS the merge, bit for bit in any order; `kb` is recomputed
+    * on the folded rows.
+    *
+    * The one place a manifest and a bucket selection turn into rows:
+    * callers pass any selection straight through — buckets that are
+    * not live are skipped, and a selection with no live bucket reads as
+    * the empty snapshot.
     */
   private[graft] def resolveBuckets(spark: SparkSession, dir: String,
                                     m: KeyedManifest, buckets: Seq[Int],
@@ -948,14 +956,6 @@ object Maintenance {
     val clean = cleanDir(dir)
     val (deltaB, plainB) =
       m.liveBuckets(buckets).partition(m.chain(_).nonEmpty)
-    // an agg-state table's delta chains hold AGGREGATE PARTIALS —
-    // last-wins resolution would silently keep only the newest partial
-    // per key; fail loudly instead (plain chain-free buckets are fine:
-    // a compacted/CoW agg state has unique keys and no resolution)
-    require(m.resolve != "agg" || deltaB.isEmpty,
-      s"$clean stores aggregate partials in its delta chains " +
-        "(resolve=agg) — read through readAggStateKeyed and compact " +
-        "with compactAggStateKeyed, never the last-wins readers")
     def filtered(df: DataFrame): DataFrame = keyFilter.fold(df)(df.filter)
     val plain = plainB.flatMap(m.buckets.get) match {
       case Nil => None
@@ -964,7 +964,12 @@ object Maintenance {
     }
     val resolved =
       if (deltaB.isEmpty) None
-      else {
+      else if (m.resolve == "agg") {
+        val raw = readGenDirs(spark, clean, m, deltaB.flatMap(m.dirsOf),
+          withTomb = true)
+        Some(aggOfState(filtered(raw).drop("kb", "__tomb"), m.keyCols,
+          m.aggP, m.aggK).withColumn("kb", kb(m)))
+      } else {
         val un = chainLevels(spark, clean, m, deltaB).map(filtered)
           .reduce(_.unionByName(_, allowMissingColumns = true))
         // chain-order-wins by default; a table with a registered
@@ -1866,7 +1871,8 @@ object Maintenance {
   }
 
   /** Fold merge-on-read delta chains back into base generations: the
-    * resolved rows of each target bucket stage as a new generation and
+    * resolved rows of each target bucket (re-aggregated for an agg
+    * state, see `resolveBuckets`) stage as a new generation and
     * ONE manifest commit drops the chains — exactly a full merge whose
     * batch is empty, through the same snapshot-isolated commit path.
     * Defaults to every bucket carrying deltas; pass `buckets` to
@@ -2002,12 +2008,8 @@ object Maintenance {
         // resolve by the table's own discipline (chains fold here,
         // exactly like their compaction), rehash under the SHRUNK map
         // — every row lands in its pair's parent leaf
-        val rows =
-          if (m.resolve == "agg")
-            readAggStateBuckets(spark, clean, m, live)
-          else resolveBuckets(spark, clean, m, live).drop("kb")
-        val rehashed = rows.withColumn("kb",
-          kb(m.copy(depths = newDepths)))
+        val rehashed = resolveBuckets(spark, clean, m, live)
+          .withColumn("kb", kb(m.copy(depths = newDepths)))
         val pending = stageMerge(spark, dir, rehashed, children, m)
         commitKeyed(spark,
           pending.copy(manifest = pending.manifest.copy(depths = newDepths)))
@@ -2021,7 +2023,7 @@ object Maintenance {
     * whose live bytes exceed `targetBytes`, worst first, until
     * `budgetBytes` of rewrite is spent (a split rewrites roughly the
     * leaf's bytes); fold any delta chains that reached `minChain`
-    * (dispatching on the table's resolve discipline); then MERGE
+    * (by the table's resolve discipline); then MERGE
     * drained sibling pairs back (combined bytes < targetBytes/2),
     * emptiest first within `mergeBudgetBytes`, cascading up the depth
     * tree until it converges — the contraction half without which leaf
@@ -2049,9 +2051,7 @@ object Maintenance {
     if (chosen.nonEmpty) splitKeyed(spark, dir, chosen)
     // fold chains the split didn't already resolve (splitting a bucket
     // compacts its chain as a side effect)
-    if (readManifest(spark, dir).resolve == "agg")
-      compactAggStateKeyed(spark, dir, minChain = minChain)
-    else compactKeyed(spark, dir, minChain = minChain)
+    compactKeyed(spark, dir, minChain = minChain)
     // contraction, cascading: a merged parent may itself pair with ITS
     // sibling one level up, so re-plan until nothing qualifies or the
     // budget runs out (terminates — each round strictly shrinks the
@@ -2125,12 +2125,8 @@ object Maintenance {
       } else {
         // resolve the split buckets' rows by the table's own
         // discipline (chains fold here, exactly like their compaction)
-        val rows =
-          if (m.resolve == "agg")
-            readAggStateBuckets(spark, clean, m, live)
-          else resolveBuckets(spark, clean, m, live).drop("kb")
-        val rehashed = rows.withColumn("kb",
-          kb(m.copy(depths = newDepths)))
+        val rehashed = resolveBuckets(spark, clean, m, live)
+          .withColumn("kb", kb(m.copy(depths = newDepths)))
         val pending = stageMerge(spark, dir, rehashed, targets, m)
         commitKeyed(spark,
           pending.copy(manifest = pending.manifest.copy(depths = newDepths)))
@@ -2802,13 +2798,14 @@ object Maintenance {
   //    merge-on-read delta dirs — bytes written ∝ THE BATCH, never the
   //    buckets. Every state column is associative (counts, decimal
   //    sums, min/max, register-wise max, bounded bottom-k samples), so
-  //    resolution is RE-AGGREGATION of the chain levels at read
-  //    (`readAggStateKeyed`), and `compactAggStateKeyed` folds chains
-  //    back into base generations on the `minChain` policy.
-  // The manifest records resolve="agg" for these tables, so the
-  // generic last-wins readers (readKeyed/lookupKeyed/compactKeyed)
-  // fail loudly instead of silently keeping the newest partial per key,
-  // and `kb` accepts a NULL group key (one group, one bucket).
+  //    resolution is RE-AGGREGATION of the chain levels at read, and
+  //    `compactKeyed` folds chains back into base generations on the
+  //    `minChain` policy.
+  // The manifest records resolve="agg" (and the build's aggP/aggK) for
+  // these tables, so `resolveBuckets` — behind readKeyed, lookupKeyed,
+  // compactKeyed and every other reader — re-aggregates their chains
+  // instead of keeping the newest partial per key, and `kb` accepts a
+  // NULL group key (one group, one bucket).
 
   /** (Re)build the BUCKETED agg state at `dir` from scratch: the
     * partial-aggregate of `df` written as a keyed table keyed on the
@@ -2852,12 +2849,12 @@ object Maintenance {
       aggP = p, aggK = sampleK, aggSU = sampleUnique.getOrElse(""))
   }
 
-  /** Fold one batch into the bucketed agg state. `p`/`sampleK` default
-    * to the BUILD's values recorded in the manifest (sentinels 0/-1);
-    * an omitted `sampleUnique` inherits the build's recorded grain
-    * and a contradicting one fails loudly; `distinctKey` must match
-    * the build's — a missing state column fails loudly at the align
-    * select (see `partialAggCols`). Copy-on-write mode reads +
+  /** Fold one batch into the bucketed agg state. An omitted
+    * `p`/`sampleK` (sentinels 0/-1) or `sampleUnique` is the build's,
+    * recorded in the manifest, and a contradicting one fails loudly;
+    * `distinctKey` must match the build's — a missing state column
+    * fails loudly at the align select (see `partialAggCols`).
+    * Copy-on-write mode reads +
     * re-aggregates + restages ONLY the touched buckets inside the
     * optimistic-commit retry; `asDeltas` appends the partial as delta
     * dirs (bytes ∝ batch) — the batch partial has unique keys per call
@@ -2894,10 +2891,15 @@ object Maintenance {
     require(m0.resolve == "agg",
       s"$clean is not an agg-state table (resolve='${m0.resolve}') — " +
         "row tables merge through upsertKeyed/appendDeltaKeyed")
-    // p/sampleK default to the BUILD's recorded values (sentinels
-    // 0/-1 = "use the manifest")
-    val pe = if (p > 0) p else m0.aggP
-    val ke = if (sampleK >= 0) sampleK else m0.aggK
+    // p/sampleK are the BUILD's recorded values (sentinels 0/-1 =
+    // "use the manifest"); a contradicting one fails loudly — a smaller
+    // sampleK would truncate the touched buckets' samples under the
+    // build's recorded aggK, a different p would union HLL registers of
+    // two sizes
+    require(p <= 0 || p == m0.aggP,
+      s"$clean records hll p=${m0.aggP}; the merge passed p=$p")
+    require(sampleK < 0 || sampleK == m0.aggK,
+      s"$clean records sampleK=${m0.aggK}; the merge passed sampleK=$sampleK")
     // the sample GRAIN also defaults to the build's recorded column
     // (r12 manifests): a caller passing None no longer silently flips
     // a row-uniform (__smpr) state to the distinct-value grain — and a
@@ -2909,8 +2911,8 @@ object Maintenance {
       s"$clean records sample grain column '${m0.aggSU}'; the merge " +
         s"passed sampleUnique='${sampleUnique.get}'")
     val sue = sampleUnique.orElse(Option(m0.aggSU).filter(_.nonEmpty))
-    val partial = partialAggCols(batch, keys, valueCols, distinctKey, pe,
-      ke, sue)
+    val partial = partialAggCols(batch, keys, valueCols, distinctKey,
+      m0.aggP, m0.aggK, sue)
     if (asDeltas) {
       appendDeltaKeyedCols(spark, dir, partial, keys, m0.nBuckets,
         txn = txn)
@@ -2945,99 +2947,10 @@ object Maintenance {
       val merged = aggOfState(
         base.select(cols.map(F.col): _*)
           .unionByName(withKb.select(cols.map(F.col): _*)),
-        keys, pe, ke)
+        keys, m0.aggP, m0.aggK)
         .withColumn("kb", kb(m))
       commitKeyed(spark, stageMerge(spark, dir, merged, touched, m,
         txn = txn))
-    }
-  }
-
-  /** The bucketed agg state's resolved rows at `version` (latest when
-    * None): chain-free snapshots read straight through; delta-carrying
-    * snapshots RE-AGGREGATE every chain level per key (all state
-    * columns are associative, so the re-aggregate IS the merge —
-    * bit-for-bit, in any order). `p`/`sampleK` must match the build's
-    * when chains exist (same contract as `finalizeAgg`).
-    */
-  def readAggStateKeyed(spark: SparkSession, dir: String,
-                        p: Int = 0, sampleK: Int = -1,
-                        version: Option[Int] = None): DataFrame = {
-    val clean = cleanDir(dir)
-    val m = readManifest(spark, dir, version)
-    require(m.nBuckets > 0 && m.resolve == "agg",
-      s"$clean is not a bucketed agg state (resolve='${m.resolve}')")
-    readAggStateBuckets(spark, clean, m, m.liveBuckets(), p, sampleK)
-  }
-
-  /** The resolved agg-state rows of `buckets` only — the agg twin of
-    * `resolveBuckets` and the other of the only two places a manifest
-    * and a bucket selection turn into rows. Buckets that are not live
-    * are skipped; a selection with no live bucket reads as the empty
-    * state. Bucket-pruned callers (`aggStateChanges`, the MV refresh,
-    * the bounded CDC source) pay O(selected buckets), never state size.
-    */
-  private[graft] def readAggStateBuckets(spark: SparkSession, dir: String,
-                                         m: KeyedManifest, buckets: Seq[Int],
-                                         p: Int = 0, sampleK: Int = -1)
-      : DataFrame = {
-    val clean = cleanDir(dir)
-    val pe = if (p > 0) p else m.aggP
-    val ke = if (sampleK >= 0) sampleK else m.aggK
-    def rd(dirs: Seq[String]): DataFrame =
-      readGenDirs(spark, clean, m, dirs, withTomb = true)
-        .drop("kb", "__tomb")
-    // the re-aggregation shuffle is confined to DELTA-CARRYING buckets
-    // (a key lives in exactly one bucket, so the per-key fold is
-    // complete bucket-by-bucket — same principle as resolveBuckets);
-    // chain-free buckets read straight through with no shuffle
-    val (deltaB, plainB) =
-      m.liveBuckets(buckets).partition(m.chain(_).nonEmpty)
-    val plain = plainB.flatMap(m.buckets.get) match {
-      case Nil => None
-      case dirs => Some(rd(dirs))
-    }
-    val resolved =
-      if (deltaB.isEmpty) None
-      else {
-        val raw = rd(deltaB.flatMap(m.dirsOf))
-        require(ke > 0 ||
-          !raw.columns.exists(c => c == "__smp" || c == "__smpr"),
-          s"$clean tracks a bounded sample — pass the build's sampleK " +
-            "to resolve its delta chains")
-        Some(aggOfState(raw, m.keyCols, pe, ke))
-      }
-    (plain ++ resolved).reduceOption(
-      _.unionByName(_, allowMissingColumns = true))
-      .getOrElse(emptySnapshot(spark, m).drop("kb", "__tomb"))
-  }
-
-  /** Fold the agg state's delta chains back into base generations —
-    * the re-aggregation twin of `compactKeyed` (which is last-wins and
-    * refuses resolve=agg tables). Planned from the manifest: only
-    * buckets whose chain reached `minChain` are read, re-aggregated,
-    * and restaged; one manifest commit drops their chains.
-    */
-  def compactAggStateKeyed(spark: SparkSession, dir: String,
-                           p: Int = 0, sampleK: Int = -1,
-                           buckets: Option[Seq[Int]] = None,
-                           minChain: Int = 1): Unit = {
-    require(minChain >= 1, s"minChain must be >= 1, got $minChain")
-    val clean = cleanDir(dir)
-    if (manifestVersions(spark, dir).isEmpty) return
-    withCommitRetry(s"compactAggStateKeyed($dir)") {
-      val m = readManifest(spark, dir)
-      require(m.resolve == "agg",
-        s"$clean is not an agg-state table — use compactKeyed")
-      val target = buckets.getOrElse(m.deltas.keys.toSeq)
-        .filter(m.chain(_).length >= minChain).sorted
-      if (target.nonEmpty) {
-        // every target carries a chain, so the resolver re-aggregates
-        // each one whole (base ⊕ chain) — exactly the fold to restage
-        val folded = readAggStateBuckets(spark, clean, m, target, p, sampleK)
-          .withColumn("kb",
-            kb(m))
-        commitKeyed(spark, stageMerge(spark, clean, folded, target, m))
-      }
     }
   }
 
@@ -3072,8 +2985,7 @@ object Maintenance {
         s"$clean is not a bucketed agg state (resolve='${m.resolve}')")
       require(m.keyCols.contains(tagCol),
         s"$clean is keyed on (${m.keyCol}) — no tag column '$tagCol'")
-      val st = readAggStateBuckets(spark, clean, m, m.liveBuckets())
-        .withColumn("kb", kb(m))
+      val st = resolveBuckets(spark, clean, m, m.liveBuckets())
       val cond = F.col(tagCol).isin(tags: _*)
       val partKb = part0.withColumn("kb",
         kb(m))
@@ -3209,8 +3121,8 @@ object Maintenance {
   /** Read `tableDir`'s snapshot AT THE VERSION the commit group pins —
     * the consistent-read face. ONE group manifest resolves every
     * member table, so a reader racing a pipeline sees the whole
-    * version set of one atomic group publish. Dispatches on the
-    * member's own manifest discipline (row table vs agg state). A
+    * version set of one atomic group publish; each member resolves by
+    * its own manifest discipline (row table or agg state). A
     * member vacuumed past its pin fails loudly (size the members'
     * vacuum retention to the group's consumers, like CDC cursors).
     */
@@ -3221,9 +3133,7 @@ object Maintenance {
     val v = pins.getOrElse(t, throw new IllegalArgumentException(
       s"commit group ${cleanDir(groupDir)} does not pin $t " +
         s"(pins: ${pins.keys.toSeq.sorted.mkString(", ")})"))
-    if (readManifest(spark, t, Some(v)).resolve == "agg")
-      readAggStateKeyed(spark, t, version = Some(v))
-    else readKeyed(spark, t, Some(v))
+    readKeyed(spark, t, Some(v))
   }
 
   /** Changelog of a MATERIALIZED VIEW (bucketed agg state) between two
@@ -3255,7 +3165,7 @@ object Maintenance {
       else (m1.liveBuckets() ++ m2.liveBuckets()).distinct
     val keys = m2.keyCols
     def side(m: KeyedManifest): DataFrame =
-      finalizeAgg(readAggStateBuckets(spark, clean, m, changed), keys)
+      finalizeAgg(resolveBuckets(spark, clean, m, changed), keys)
     val o = side(m1)
     val n = side(m2)
     val valCols = n.columns.filterNot(keys.contains).toSeq

@@ -347,7 +347,7 @@ object MatView {
   def readMv(spark: SparkSession, mvDir: String): DataFrame = {
     val mv = clean(mvDir)
     val m = Maintenance.readManifest(spark, mv)
-    val st = Maintenance.readAggStateKeyed(spark, mv)
+    val st = Maintenance.resolveBuckets(spark, mv, m, m.liveBuckets())
     val logical = m.keyCols.filterNot(_ == BucketTagCol)
     val folded =
       if (m.keyCols.contains(BucketTagCol))
@@ -494,8 +494,7 @@ object MatView {
       : Option[DataFrame] = {
     val m = Maintenance.readManifest(spark, d.mvDir)
     if (watermark(m, d.baseDir) != baseV) return None
-    val st0 = Maintenance.readAggStateBuckets(spark, d.mvDir, m,
-      m.liveBuckets())
+    val st0 = Maintenance.resolveBuckets(spark, d.mvDir, m, m.liveBuckets())
     if (!filtersRoutable(st0, d.keys, filters)) return None
     val st = if (filters.isEmpty) st0 else st0.filter(filters.reduce(_ && _))
     val cols = st.columns.toSet

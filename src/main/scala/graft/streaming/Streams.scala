@@ -87,8 +87,7 @@ object Streams {
     // maintenance cadence: fold chains past the threshold — planned
     // from the manifest, a no-op while chains are short
     if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-      Maintenance.compactAggStateKeyed(spark, dir, p, sampleK,
-        minChain = 2)
+      Maintenance.compactKeyed(spark, dir, minChain = 2)
     true
   }
 
@@ -191,7 +190,7 @@ object Streams {
     require(m.keyCol.nonEmpty, s"$dir has no keyed metadata")
     if (m.resolve == "agg") {
       val fin = Maintenance.finalizeAgg(
-        Maintenance.readAggStateBuckets(spark, dir, m, buckets), m.keyCols)
+        Maintenance.resolveBuckets(spark, dir, m, buckets), m.keyCols)
       val valCols = fin.columns.filterNot(m.keyCols.contains).toSeq
       fin.select(m.keyCols.map(col) ++
         (F.lit("added").as("status") +: (valCols.map(col) ++

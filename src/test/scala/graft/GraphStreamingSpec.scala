@@ -640,7 +640,7 @@ class GraphStreamingSpec extends SparkSpec {
     mem.addData(("a", 1.0), ("a", 2.0), ("b", 10.0))
     q.processAllAvailable()
     def view() = Maintenance.finalizeAgg(
-      Maintenance.readAggStateKeyed(spark, dir), Seq("g"))
+      Maintenance.readKeyed(spark, dir), Seq("g"))
       .select("g", "n", "total")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
@@ -668,7 +668,7 @@ class GraphStreamingSpec extends SparkSpec {
       "c" -> (1L, 7.0)))
     // ...and compaction (an interleaved maintenance commit) carries
     // the watermark forward instead of blanking it
-    Maintenance.compactAggStateKeyed(spark, dir)
+    Maintenance.compactKeyed(spark, dir)
     assert(Maintenance.readManifest(spark, dir).deltas.values
       .forall(_.isEmpty))
     assert(Maintenance.lastTxn(spark, dir, "view1").contains(2L))

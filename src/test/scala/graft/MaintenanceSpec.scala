@@ -732,7 +732,7 @@ class MaintenanceSpec extends SparkSpec {
       full.filter(col("id") % 5 === 1), Seq("g"), "v")
     Maintenance.mergeAggStateKeyed(spark, dir,
       full.filter(col("id") % 5 >= 2), Seq("g"), "v")
-    val st = Maintenance.readAggStateKeyed(spark, dir)
+    val st = Maintenance.readKeyed(spark, dir)
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3))).toSet
@@ -742,7 +742,7 @@ class MaintenanceSpec extends SparkSpec {
         sum(col("v").cast("decimal(28,2)")).as("__sum")), Seq("g")))
     assert(inc == direct)
     // and the state on disk IS the returned state
-    val disk = Maintenance.readAggStateKeyed(spark, dir)
+    val disk = Maintenance.readKeyed(spark, dir)
     assert(snap(Maintenance.finalizeAgg(disk, Seq("g"))) == inc)
   }
 
@@ -758,7 +758,7 @@ class MaintenanceSpec extends SparkSpec {
       parts.tail.foreach(b =>
         Maintenance.mergeAggStateKeyed(spark, d, b, Seq("g"), "v",
           sampleK = 64))
-      val st = Maintenance.readAggStateKeyed(spark, d)
+      val st = Maintenance.readKeyed(spark, d)
       Maintenance.finalizeAgg(st, Seq("g"))
         .select("g", "approx_median").collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -1031,7 +1031,7 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.buildAggStateKeyed(skewed, dV, Seq("g"), "v",
       nBuckets = 1, sampleK = 64)
     val mV = Maintenance.finalizeAgg(
-        Maintenance.readAggStateKeyed(spark, dV), Seq("g"))
+        Maintenance.readKeyed(spark, dV), Seq("g"))
       .select("approx_median").head().getDouble(0)
     assert(mV < 500, s"distinct-grain median should ignore multiplicity: $mV")
     // row grain: 99% of sampled rows carry the dominant value, so the
@@ -1039,7 +1039,7 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.buildAggStateKeyed(skewed, dR, Seq("g"), "v",
       nBuckets = 1, sampleK = 64, sampleUnique = Some("rk"))
     val mR = Maintenance.finalizeAgg(
-        Maintenance.readAggStateKeyed(spark, dR), Seq("g"))
+        Maintenance.readKeyed(spark, dR), Seq("g"))
       .select("approx_median").head().getDouble(0)
     assert(mR == 1000.0, s"row-grain median should track the multiset: $mR")
     // row-grain merges stay order-free too (the hash is a pure
@@ -1051,7 +1051,7 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.mergeAggStateKeyed(spark, dR2,
       skewed.filter(col("rk") % 2 === 1), Seq("g"), "v",
       sampleK = 64, sampleUnique = Some("rk"))
-    val st2 = Maintenance.readAggStateKeyed(spark, dR2)
+    val st2 = Maintenance.readKeyed(spark, dR2)
     assert(Maintenance.finalizeAgg(st2, Seq("g"))
       .select("approx_median").head().getDouble(0) == mR)
   }
@@ -1123,7 +1123,7 @@ class MaintenanceSpec extends SparkSpec {
     build(named)
     Maintenance.mergeAggStateKeyed(spark, named, df, Seq("g"), "v",
       sampleK = 32, sampleUnique = Some("rk"))
-    def state(d: String) = Maintenance.readAggStateKeyed(spark, d)
+    def state(d: String) = Maintenance.readKeyed(spark, d)
       .collect().toSeq
     assert(state(dir) == state(named))
   }
@@ -1143,7 +1143,7 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.mergeAggStateKeyed(spark, dir,
       full.filter(col("id") % 5 >= 2), Seq("g"), "v",
       distinctKey = Some("u"))
-    val st = Maintenance.readAggStateKeyed(spark, dir)
+    val st = Maintenance.readKeyed(spark, dir)
     // the full single-pass state over everything, same builder
     Maintenance.buildAggStateKeyed(full, dir2, Seq("g"), "v",
       nBuckets = 1, distinctKey = Some("u"))
@@ -1153,7 +1153,7 @@ class MaintenanceSpec extends SparkSpec {
         r.getDouble(6))).toSet
     val inc = snap(Maintenance.finalizeAgg(st, Seq("g")))
     val direct = snap(Maintenance.finalizeAgg(
-      Maintenance.readAggStateKeyed(spark, dir2), Seq("g")))
+      Maintenance.readKeyed(spark, dir2), Seq("g")))
     assert(inc == direct)
     // sanity on the estimate: each group has ~min(537, distinct u per g)
     val est = Maintenance.finalizeAgg(st, Seq("g"))
@@ -1173,7 +1173,7 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.mergeAggStateKeyed(spark, dir3,
       full.filter(col("id") % 5 === 0), Seq("g"), "v",
       distinctKey = Some("u"))
-    val st3 = Maintenance.readAggStateKeyed(spark, dir3)
+    val st3 = Maintenance.readKeyed(spark, dir3)
     assert(snap(Maintenance.finalizeAgg(st3, Seq("g"))) == inc)
   }
 
@@ -1207,8 +1207,8 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.buildAggStateKeyed(
       full.filter(col("id") % 10 =!= 0 || col("g") < 3),
       dir2, Seq("g"), "v", nBuckets = 16)
-    assert(aggRows(Maintenance.readAggStateKeyed(spark, dir)) ==
-      aggRows(Maintenance.readAggStateKeyed(spark, dir2)))
+    assert(aggRows(Maintenance.readKeyed(spark, dir)) ==
+      aggRows(Maintenance.readKeyed(spark, dir2)))
   }
 
   test("bucketed agg state: asDeltas appends partials, read re-aggregates, compact folds") {
@@ -1226,43 +1226,72 @@ class MaintenanceSpec extends SparkSpec {
     // delta appends never move a base generation
     assert(m2.buckets == m1.buckets)
     assert(m2.deltas.values.exists(_.nonEmpty))
-    // generic last-wins readers refuse the agg-partial chains
-    val err = intercept[IllegalArgumentException] {
-      Maintenance.readKeyed(spark, dir).count()
-    }
-    assert(err.getMessage.contains("readAggStateKeyed"), err.getMessage)
-    intercept[IllegalArgumentException] {
-      Maintenance.compactKeyed(spark, dir)
-    }
-    // re-aggregated read == the one-shot recompute (bit-for-bit,
-    // including the bounded sample's quantiles)
+    // every reader resolves the agg-partial chains by re-aggregation
+    // through the one resolver: bit for bit the one-shot recompute,
+    // the bounded sample's quantiles included
     val dir2 = tmp("graft_basd_full")
     Maintenance.buildAggStateKeyed(full, dir2, Seq("g"), "v",
       nBuckets = 16, sampleK = 64)
-    def q(d: String, chainSampleK: Int) =
-      Maintenance.finalizeAgg(
-        Maintenance.readAggStateKeyed(spark, d, sampleK = chainSampleK),
-        Seq("g"))
-        .select("g", "n", "total", "approx_median")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getDouble(3))).toSet
-    assert(q(dir, 64) == q(dir2, 64))
-    // r10 manifests RECORD the build's p/sampleK: the chained read
-    // with default args resolves via the manifest, no caller-repeated
-    // numbers (same rows as the explicit read)
-    assert(q(dir, -1) == q(dir, 64))
-    // ...but a caller explicitly OVERRIDING with sampleK=0 against a
-    // sampled state still fails loudly instead of corrupting it
-    val err2 = intercept[IllegalArgumentException] {
-      Maintenance.readAggStateKeyed(spark, dir, sampleK = 0).count()
-    }
-    assert(err2.getMessage.contains("sampleK"), err2.getMessage)
-    // compaction folds the chains; result unchanged; readKeyed legal again
-    Maintenance.compactAggStateKeyed(spark, dir, sampleK = 64)
+    def q(df: org.apache.spark.sql.DataFrame) =
+      Maintenance.finalizeAgg(df, Seq("g"))
+        .select("g", "n", "total", "mean", "vmin", "vmax", "approx_p25",
+          "approx_median", "approx_p90")
+        .collect().map(_.toSeq).toSet
+    assert(q(Maintenance.readKeyed(spark, dir)) ==
+      q(Maintenance.readKeyed(spark, dir2)))
+    val probe = Seq(0L, 7L, 123L, 499L, 5000L)
+    val looked = q(Maintenance.lookupKeyed(spark, dir, probe))
+    assert(looked.size == 4)
+    assert(looked == q(Maintenance.lookupKeyed(spark, dir2, probe)))
+    // compaction folds the chains; result unchanged
+    Maintenance.compactKeyed(spark, dir)
     val m3 = Maintenance.readManifest(spark, dir)
     assert(m3.deltas.values.forall(_.isEmpty))
-    assert(q(dir, 64) == q(dir2, 64))
+    assert(q(Maintenance.readKeyed(spark, dir)) ==
+      q(Maintenance.readKeyed(spark, dir2)))
     assert(Maintenance.readKeyed(spark, dir).count() == 500)
+  }
+
+  test("an agg-state merge contradicting the build's recorded p or sampleK fails loudly") {
+    val dir = tmp("graft_basp")
+    val full = spark.range(0, 2000)
+      .select((col("id") % 50).as("g"), (col("id") % 97).cast("double").as("v"))
+    Maintenance.buildAggStateKeyed(full.filter(col("id") % 2 === 0),
+      dir, Seq("g"), "v", nBuckets = 4, distinctKey = Some("v"),
+      sampleK = 64)
+    val v0 = Maintenance.manifestVersions(spark, dir).last
+    val batch = full.filter(col("id") % 2 === 1)
+    // a smaller sampleK would truncate the touched buckets' samples
+    // under a manifest still recording 64; a different p would union
+    // HLL registers of two sizes
+    val errK = intercept[IllegalArgumentException] {
+      Maintenance.mergeAggStateKeyed(spark, dir, batch, Seq("g"), "v",
+        distinctKey = Some("v"), sampleK = 16)
+    }
+    assert(errK.getMessage.contains("sampleK"), errK.getMessage)
+    val errP = intercept[IllegalArgumentException] {
+      Maintenance.mergeAggStateKeyed(spark, dir, batch, Seq("g"), "v",
+        distinctKey = Some("v"), p = 14, asDeltas = true)
+    }
+    assert(errP.getMessage.contains("p="), errP.getMessage)
+    assert(Maintenance.manifestVersions(spark, dir).last == v0)
+    // the build's own values, named or omitted, merge
+    Maintenance.mergeAggStateKeyed(spark, dir, batch, Seq("g"), "v",
+      distinctKey = Some("v"), p = 12, sampleK = 64)
+    // register bytes compare by content
+    def state(d: String) = Maintenance.readKeyed(spark, d).drop("kb")
+      .collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }).toSet
+    val named = state(dir)
+    val dirO = tmp("graft_basp_omitted")
+    Maintenance.buildAggStateKeyed(full.filter(col("id") % 2 === 0),
+      dirO, Seq("g"), "v", nBuckets = 4, distinctKey = Some("v"),
+      sampleK = 64)
+    Maintenance.mergeAggStateKeyed(spark, dirO, batch, Seq("g"), "v",
+      distinctKey = Some("v"))
+    assert(state(dirO) == named)
   }
 
   test("bucketed agg state: a state column the batch partial lacks fails loudly (sample grain is identity)") {
@@ -1276,7 +1305,7 @@ class MaintenanceSpec extends SparkSpec {
     // repeated numbers) — the state stays row-uniform (__smpr)
     Maintenance.mergeAggStateKeyed(spark, dir, full, Seq("g"), "v",
       sampleK = 16)
-    assert(Maintenance.readAggStateKeyed(spark, dir)
+    assert(Maintenance.readKeyed(spark, dir)
       .columns.contains("__smpr"))
     // ...and a merge CONTRADICTING the recorded column fails loudly
     // (two salt columns under one __smpr name would silently mix hash
@@ -1547,7 +1576,7 @@ class MaintenanceSpec extends SparkSpec {
     val live = M.manifestVersions(spark, dir).last
     assert(M.readManifest(spark, dir).deltas.nonEmpty)
     MV.buildMv(spark, dir, mvDir, Seq("g"), Seq("v"), 4)
-    val stateFull = M.readAggStateKeyed(spark, mvDir)
+    val stateFull = M.readKeyed(spark, mvDir)
     val mvFull = MV.readMv(spark, mvDir)
     // every key deleted: every bucket is dead at `gone`, and the view's
     // incremental refresh replaces every changed bucket's partials with
@@ -1570,8 +1599,8 @@ class MaintenanceSpec extends SparkSpec {
       ("lookupKeyed of keys in dead buckets",
         M.lookupKeyed(spark, dir, Seq(5L, 6L), Some(gone)),
         M.lookupKeyed(spark, dir, Seq(5L, 6L), Some(live))),
-      ("readAggStateKeyed of an emptied state",
-        M.readAggStateKeyed(spark, mvDir), stateFull),
+      ("readKeyed of an emptied agg state",
+        M.readKeyed(spark, mvDir), stateFull),
       ("readMv after a refresh that emptied every changed bucket",
         MV.readMv(spark, mvDir), mvFull))
     cases.foreach { case (what, empty, full) =>
@@ -1620,11 +1649,11 @@ class MaintenanceSpec extends SparkSpec {
         Seq("g"), "v"), 2),
       ("asDeltas merge", () => M.mergeAggStateKeyed(spark, dir, part(2),
         Seq("g"), "v", asDeltas = true), 3),
-      ("compactAggStateKeyed", () => M.compactAggStateKeyed(spark, dir), 3),
+      ("compactKeyed", () => M.compactKeyed(spark, dir), 3),
       ("splitKeyed", () => M.splitKeyed(spark, dir, 0 until 4), 3))
     val versions = steps.map { case (what, run, fed) =>
       run()
-      val got = view(M.finalizeAgg(M.readAggStateKeyed(spark, dir), Seq("g")))
+      val got = view(M.finalizeAgg(M.readKeyed(spark, dir), Seq("g")))
       val want = scan(part.take(fed).reduce(_.union(_)))
       assert(want.exists(_._1.isEmpty), what)
       assert(got == want, what)
@@ -1820,7 +1849,7 @@ class MaintenanceSpec extends SparkSpec {
     // NULL components (multi-column count_distinct) would refuse this
     M.mergeAggStateKeyed(spark, dir, rows.toDF("g", "h", "v"),
       Seq("g", "h"), "v", asDeltas = true)
-    val got = M.finalizeAgg(M.readAggStateKeyed(spark, dir), Seq("g", "h"))
+    val got = M.finalizeAgg(M.readKeyed(spark, dir), Seq("g", "h"))
       .select("g", "h", "n").collect()
       .map(r => (Option(r.getString(0)), Option(r.getString(1))) ->
         r.getLong(2)).toMap
@@ -1912,5 +1941,30 @@ class MaintenanceSpec extends SparkSpec {
     assert(got == (0L until 100L).map(k => k -> k).toMap - 70L ++
       Map(3L -> 30L, 50L -> 500L, 200L -> 2L, 4L -> 40L, 60L -> 600L,
         300L -> 3L, 5L -> 50L, 400L -> 4L))
+  }
+
+  test("an incremental bucket-grain MV refresh after a 60-key upsert runs a pinned number of Spark jobs") {
+    val M = Maintenance
+    val MV = graft.sources.MatView
+    val dir = tmp("graft_mvjobpin")
+    val mvDir = tmp("graft_mvjobpin_mv")
+    M.writeKeyed(spark.range(0, 2000).select(col("id").as("k"),
+      (col("id") % 50).as("g"), col("id").as("v")), dir, "k", 16)
+    MV.buildMv(spark, dir, mvDir, Seq("g"), Seq("v"), 8)
+    M.upsertKeyed(spark, dir, (0L until 60L).map(i =>
+      (i * 31, i % 7, i * 1000)).toDF("k", "g", "v"), "k", 16)
+    // the refresh reads the chain-free state through resolveBuckets; a
+    // state read that planned an extra scan, probe or exchange would
+    // move this pin
+    val refresh = jobsOf(MV.refreshMvIncremental(spark, mvDir))
+    assert(refresh == 6, s"the MV refresh ran $refresh jobs")
+    val scan = M.readKeyed(spark, dir).groupBy("g")
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val view = MV.readMv(spark, mvDir).select("g", "n", "total")
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2).toLong))
+      .toMap
+    assert(view == scan)
+    MV.unregister(spark, mvDir)
   }
 }

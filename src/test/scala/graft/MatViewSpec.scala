@@ -202,7 +202,7 @@ class MatViewSpec extends SparkSpec {
     assert(tailChanges(dir, cur)((df, _, _) => fold(df)))
     assert(!tailChanges(dir, cur)((_, _, _) => ()),
       "up-to-date consumer must not see a batch")
-    val head = M.finalizeAgg(M.readAggStateKeyed(spark, dir), Seq("g"))
+    val head = M.finalizeAgg(M.readKeyed(spark, dir), Seq("g"))
       .select("g", "n", "total").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(state == head,
@@ -676,7 +676,7 @@ class MatViewSpec extends SparkSpec {
       expect.orderBy("g").collect().toSeq.map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2))))
     // no state rows remain under a tag that is no longer a base leaf
-    val tags = M.readAggStateKeyed(spark, mdir)
+    val tags = M.readKeyed(spark, mdir)
       .select(MV.BucketTagCol).distinct().collect()
       .map(_.getInt(0)).toSet
     val leaves = (M.readManifest(spark, bdir).buckets.keySet ++

@@ -21,7 +21,7 @@ class PlanQualitySpec extends SparkSpec {
     M.buildAggStateKeyed(full, dir, Seq("g"), "v", nBuckets = 8)
     // no chains: the state read is a plain multi-dir scan — zero
     // exchange, zero aggregate (the stored rows ARE the state)
-    val p0 = M.readAggStateKeyed(spark, dir)
+    val p0 = M.readKeyed(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!p0.contains("Exchange") && !p0.contains("HashAggregate"),
       s"chain-free agg-state read gained a shuffle/agg:\n$p0")
@@ -30,7 +30,7 @@ class PlanQualitySpec extends SparkSpec {
     // (2 files in the agg branch), every other bucket scans straight
     M.mergeAggStateKeyed(spark, dir,
       full.filter(col("g") === 3), Seq("g"), "v", asDeltas = true)
-    val df1 = M.readAggStateKeyed(spark, dir)
+    val df1 = M.readKeyed(spark, dir)
     val p1 = df1.queryExecution.executedPlan.toString
     assert(p1.contains("HashAggregate"), s"chain not re-aggregated:\n$p1")
     val m = M.readManifest(spark, dir)
@@ -45,10 +45,10 @@ class PlanQualitySpec extends SparkSpec {
     val dir2 = java.nio.file.Files.createTempDirectory("graft_pq_bas2").toString
     M.buildAggStateKeyed(full.unionByName(full.filter(col("g") === 3)),
       dir2, Seq("g"), "v", nBuckets = 8)
-    val a = M.finalizeAgg(M.readAggStateKeyed(spark, dir), Seq("g"))
+    val a = M.finalizeAgg(M.readKeyed(spark, dir), Seq("g"))
       .select("g", "n", "total").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val b = M.finalizeAgg(M.readAggStateKeyed(spark, dir2), Seq("g"))
+    val b = M.finalizeAgg(M.readKeyed(spark, dir2), Seq("g"))
       .select("g", "n", "total").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(a == b)

@@ -116,7 +116,7 @@ class SplitSpec extends SparkSpec {
         lit(4.0).as("v")))
       .unionByName(spark.range(0, 50).select(col("id").as("g"),
         lit(-2.0).as("v")))
-    val got = M.finalizeAgg(M.readAggStateKeyed(spark, dir), Seq("g"))
+    val got = M.finalizeAgg(M.readKeyed(spark, dir), Seq("g"))
       .select("g", "n", "total").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val want = M.finalizeAgg(
@@ -337,13 +337,13 @@ class SplitSpec extends SparkSpec {
       Seq("g"), "x", asDeltas = true)
     M.mergeLeaves(spark, dir, Seq(1))
     assert(M.readManifest(spark, dir).depths.isEmpty)
-    val got = M.finalizeAgg(M.readAggStateKeyed(spark, dir), Seq("g"))
+    val got = M.finalizeAgg(M.readKeyed(spark, dir), Seq("g"))
     // oracle: the same state built in ONE pass over all the rows
     val dir2 = tmp("sp_aggfold2")
     M.buildAggStateKeyed(
       spark.range(0, 6000).select((col("id") % 50).as("g"),
         col("id").cast("double").as("x")), dir2, Seq("g"), "x", 8)
-    val want = M.finalizeAgg(M.readAggStateKeyed(spark, dir2), Seq("g"))
+    val want = M.finalizeAgg(M.readKeyed(spark, dir2), Seq("g"))
     assert(M.diff(got, want, Seq("g"))
       .filter(col("status") =!= "same").count() == 0)
   }
