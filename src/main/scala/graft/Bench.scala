@@ -13,7 +13,10 @@ import org.apache.spark.sql.SparkSession
   * envelope guaranteed to fit (family totals + slowest queries,
   * budget-capped), and the full per-query detail (median/min/max,
   * full names) is written to `bench_detail.json` in the working
-  * directory instead.
+  * directory instead. Under `sbt runMain`, build.sbt's
+  * `run / outputStrategy := Some(StdoutOutput)` keeps sbt's `[info] `
+  * prefix off that line and `ThisBuild / showSuccess := false` keeps
+  * sbt's `[success] Total time` line from following it.
   *
   * A warmup action runs first so the timings measure query execution,
   * not JVM/codegen/classloading warmup (~10s on first action

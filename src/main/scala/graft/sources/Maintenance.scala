@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{expressions => E}
 import org.apache.spark.sql.{functions => F}
 
 /** Table-maintenance operators for parquet datasets at scale —
@@ -620,176 +621,166 @@ object Maintenance {
     *    equalities; for composite keys an equality per component)
     *    delegate to `lookupKeyed`'s point-read: only the keys' buckets
     *    are scanned and the IN-list pushes into every chain level.
-    *  - Range/equality conjuncts on zone-mapped columns skip buckets
-    *    via the manifest stats (open-ended ranges included) at BUCKET
-    *    granularity — the same delta-safety rule as `readKeyedRange`.
-    *    r11 widens the recognized grammar to DISJUNCTIONS OF RANGES on
-    *    one column: `v IN (…)`, `v BETWEEN a AND b` (it analyzes to two
-    *    conjuncts), and `v < a OR v > b` all prune.
+    *  - Range conjuncts (`ranges`) on zone-mapped columns skip buckets
+    *    via the manifest stats at BUCKET granularity — the same
+    *    delta-safety rule as `readKeyedRange`.
     *  - Unrecognized predicate shapes (e.g. a CROSS-column OR) prune
     *    nothing and filter everything: pruning is never a guess.
     */
   def readKeyedWhere(spark: SparkSession, dir: String, cond: Column,
                      version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.catalyst.{expressions => E}
     val m = readManifest(spark, dir, version)
+    val cs = analyzedConjuncts(spark, m, cond)
+    // a PINNED version threads through to the point read: a base
+    // commit after the caller's read_keyed must not change the frame's
+    // rows (the KeyedMark contract)
+    pinnedKeys(m, cs) match {
+      case Some(ks) => lookupKeyed(spark, dir, ks, version).filter(cond)
+      case None =>
+        val zone = cs.flatMap(ranges(_)).flatMap { case (n, rs) =>
+          m.statsCols.find(_.equalsIgnoreCase(n)).map(real => (real, rs))
+        }
+        resolveBuckets(spark, dir, m, zonePrune(m, m.liveBuckets(), zone))
+          .filter(cond)
+    }
+  }
+
+  /** `cond` resolved against `m`'s snapshot schema, as its conjuncts:
+    * the condition of a filter over the EMPTY snapshot (zero IO) —
+    * attribute names case-normalized, literal-side casts explicit. An
+    * unanalyzable predicate has no conjuncts (it prunes nothing).
+    */
+  private def analyzedConjuncts(spark: SparkSession, m: KeyedManifest,
+                                cond: Column): Seq[E.Expression] = {
     def conjuncts(e: E.Expression): Seq[E.Expression] = e match {
       case E.And(l, r) => conjuncts(l) ++ conjuncts(r)
       case x => Seq(x)
     }
-    def attrName(e: E.Expression): Option[String] = {
-      import org.apache.spark.sql.types._
-      def integral(t: DataType) = t match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-      e match {
-        case a: E.Attribute => Some(a.name)
-        // the analyzer wraps BOTH comparison sides in casts to the
-        // common type (isin puts a no-op cast on the column itself);
-        // identity and integral-widening casts preserve equality and
-        // order against a coerced probe, so they are safe to see
-        // through — anything else (string/float reinterpretations)
-        // changes semantics and prunes nothing
-        case c: E.Cast if c.child.dataType == c.dataType ||
-            (integral(c.child.dataType) && integral(c.dataType)) =>
-          attrName(c.child)
-        case _ => None
-      }
-    }
-    def litVal(e: E.Expression): Option[Any] = e match {
-      case l: E.Literal =>
-        Some(org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .convertToScala(l.value, l.dataType))
-      // analysis casts the LITERAL side to the column's type (an int
-      // probe against a bigint key) — the original value compares fine
-      // (lookupKeyed coerces widenings; zone compares are numeric-
-      // string based). A cast on the ATTRIBUTE side is NOT looked
-      // through: that changes comparison semantics, so prune nothing.
-      case c: E.Cast => litVal(c.child)
-      case _ => None
-    }
-    // = and <=> both pin (the language's `==` is null-safe); a NULL
-    // literal pins nothing (keys are non-null by construction, and
-    // `col = NULL` matches no rows anyway) — conservative, not wrong
-    def eq(e: E.Expression): Option[(String, Any)] = (e match {
-      case E.EqualTo(a, v) if attrName(a).isDefined && litVal(v).isDefined =>
-        Some((attrName(a).get, litVal(v).get))
-      case E.EqualTo(v, a) if attrName(a).isDefined && litVal(v).isDefined =>
-        Some((attrName(a).get, litVal(v).get))
-      case E.EqualNullSafe(a, v)
-          if attrName(a).isDefined && litVal(v).isDefined =>
-        Some((attrName(a).get, litVal(v).get))
-      case E.EqualNullSafe(v, a)
-          if attrName(a).isDefined && litVal(v).isDefined =>
-        Some((attrName(a).get, litVal(v).get))
-      case _ => None
-    }).filter(_._2 != null)
-    // col IN (…) / OR-chain of equalities on one column / plain =
-    def inSet(e: E.Expression): Option[(String, Seq[Any])] = e match {
-      case E.In(a, vs) if attrName(a).isDefined &&
-          vs.forall(litVal(_).isDefined) =>
-        Some((attrName(a).get, vs.map(litVal(_).get)))
-      case E.Or(l, r) =>
-        for {
-          (nl, vl) <- inSet(l)
-          (nr, vr) <- inSet(r)
-          if nl.equalsIgnoreCase(nr)
-        } yield (nl, vl ++ vr)
-      case _ => eq(e).map { case (n, v) => (n, Seq(v)) }
-    }
-    // resolve the predicate against the snapshot's schema by analyzing
-    // a filter over the EMPTY snapshot (zero IO): the Filter node's
-    // condition is the resolved expression tree — attribute names
-    // case-normalized, literal-side casts explicit. Unanalyzable
-    // predicates prune nothing.
-    val cs = scala.util.Try {
+    scala.util.Try {
       emptySnapshot(spark, m).filter(cond)
         .queryExecution.analyzed.collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
             f.condition
         }
     }.toOption.flatten.map(conjuncts).getOrElse(Seq.empty)
+  }
+
+  /** The key tuples the conjuncts `cs` pin: point ranges of a
+    * one-column key (`k = 5`, `k IN (…)`, an OR-chain of equalities);
+    * an equality per component of a composite key. None when they pin
+    * no key, or more than 1000 (a 100k-element IN-list would explode
+    * the pushed predicate and the probe frame; past the cap the
+    * scan+filter path is the better plan anyway).
+    */
+  private def pinnedKeys(m: KeyedManifest, cs: Seq[E.Expression])
+      : Option[Seq[Any]] = {
     val keyCols = m.keyCols
     val keyTuples: Option[Seq[Any]] =
       if (keyCols.length == 1)
-        cs.flatMap(inSet(_)).collectFirst {
-          case (n, vs) if n.equalsIgnoreCase(keyCols.head) => vs
+        cs.flatMap(ranges(_)).collectFirst {
+          case (n, rs) if n.equalsIgnoreCase(keyCols.head) &&
+              rs.forall { case (lo, hi) => lo.isDefined && lo == hi } =>
+            rs.map(_._1.get)
         }
       else if (keyCols.nonEmpty) {
-        val eqs = cs.flatMap(eq(_))
+        val eqs = cs.flatMap(eqPin(_))
           .groupBy(_._1.toLowerCase).map { case (k, v) => k -> v.head._2 }
         if (keyCols.forall(k => eqs.contains(k.toLowerCase)))
           Some(Seq(keyCols.map(k => eqs(k.toLowerCase))))
         else None
       } else None
-    keyTuples match {
-      // the point-read path. Capped: a 100k-element IN-list would
-      // explode the pushed predicate and the probe frame; past the cap
-      // the scan+filter path is the better plan anyway. A PINNED
-      // version threads through to lookupKeyed so the point read
-      // answers from exactly the caller's snapshot — a base commit
-      // between the caller's read_keyed and this selection must not
-      // change the frame's rows (the KeyedMark contract; ADVICE r12).
-      case Some(ks) if ks.nonEmpty && ks.length <= 1000 =>
-        return lookupKeyed(spark, dir, ks, version).filter(cond)
-      case _ => ()
-    }
-    // zone-map pruning: per-conjunct [lo, hi] bounds (conservatively
-    // inclusive — strict bounds keep a touching bucket, never drop one)
-    def bounds(e: E.Expression)
-        : Option[(String, Option[Any], Option[Any])] = e match {
-      case E.GreaterThanOrEqual(a, v) if litVal(v).isDefined =>
-        attrName(a).map(n => (n, Some(litVal(v).get), None))
-      case E.GreaterThan(a, v) if litVal(v).isDefined =>
-        attrName(a).map(n => (n, Some(litVal(v).get), None))
-      case E.LessThanOrEqual(a, v) if litVal(v).isDefined =>
-        attrName(a).map(n => (n, None, Some(litVal(v).get)))
-      case E.LessThan(a, v) if litVal(v).isDefined =>
-        attrName(a).map(n => (n, None, Some(litVal(v).get)))
-      case E.GreaterThanOrEqual(v, a) if litVal(v).isDefined =>
-        attrName(a).map(n => (n, None, Some(litVal(v).get)))
-      case E.GreaterThan(v, a) if litVal(v).isDefined =>
-        attrName(a).map(n => (n, None, Some(litVal(v).get)))
-      case E.LessThanOrEqual(v, a) if litVal(v).isDefined =>
-        attrName(a).map(n => (n, Some(litVal(v).get), None))
-      case E.LessThan(v, a) if litVal(v).isDefined =>
-        attrName(a).map(n => (n, Some(litVal(v).get), None))
-      case _ => eq(e).map { case (n, v) => (n, Some(v), Some(v)) }
-    }
-    // a conjunct reduced to a DISJUNCTION of [lo, hi] ranges on ONE
-    // column: plain comparisons/equalities give one range, `BETWEEN`
-    // arrives as two conjuncts (Column.between analyzes to >= AND <=),
-    // an IN-list gives a point range per element, and OR combines
-    // same-column disjuncts recursively — so `v IN (…)`,
-    // `v < a OR v > b`, and OR-chains of equalities all prune. A
-    // cross-column OR (or any unrecognized disjunct) keeps the whole
-    // conjunct unrecognized → it prunes nothing (never a guess); the
-    // full predicate still applies after resolution either way.
-    def ranges(e: E.Expression)
-        : Option[(String, Seq[(Option[Any], Option[Any])])] = e match {
-      case E.Or(l, r) =>
-        for {
-          (nl, rl) <- ranges(l)
-          (nr, rr) <- ranges(r)
-          if nl.equalsIgnoreCase(nr)
-        } yield (nl, rl ++ rr)
-      case E.In(a, vs) if attrName(a).isDefined &&
-          vs.nonEmpty && vs.forall(litVal(_).isDefined) =>
-        // a NULL element matches no rows, so it contributes no range
-        // (an all-NULL list leaves zero ranges → every bucket prunes,
-        // which is exactly `col IN (NULL)`'s empty answer)
-        Some((attrName(a).get,
-          vs.map(litVal(_).get).filter(_ != null)
-            .map(v => (Some(v), Some(v)))))
-      case _ => bounds(e).map { case (n, lo, hi) => (n, Seq((lo, hi))) }
-    }
-    val zone = cs.flatMap(ranges(_)).flatMap { case (n, rs) =>
-      m.statsCols.find(_.equalsIgnoreCase(n)).map(real => (real, rs))
-    }
-    resolveBuckets(spark, dir, m, zonePrune(m, m.liveBuckets(), zone))
-      .filter(cond)
+    keyTuples.filter(ks => ks.nonEmpty && ks.length <= 1000)
   }
+
+  /** A conjunct reduced to a DISJUNCTION of [lo, hi] ranges on ONE
+    * column (None = unbounded; conservatively inclusive — strict bounds
+    * keep a touching bucket, never drop one): comparisons and
+    * equalities give one range, `BETWEEN` arrives as two conjuncts
+    * (Column.between analyzes to >= AND <=), an IN-list gives a point
+    * range per element, and OR combines same-column disjuncts
+    * recursively — so `v IN (…)`, `v < a OR v > b`, and OR-chains of
+    * equalities all prune. A cross-column OR (or any unrecognized
+    * disjunct) leaves the whole conjunct unrecognized: it prunes
+    * nothing (never a guess).
+    */
+  private def ranges(e: E.Expression)
+      : Option[(String, Seq[(Option[Any], Option[Any])])] = e match {
+    case E.Or(l, r) =>
+      for {
+        (nl, rl) <- ranges(l)
+        (nr, rr) <- ranges(r)
+        if nl.equalsIgnoreCase(nr)
+      } yield (nl, rl ++ rr)
+    case E.In(a, vs) if attrName(a).isDefined &&
+        vs.nonEmpty && vs.forall(litVal(_).isDefined) =>
+      // a NULL element matches no rows, so it contributes no range
+      // (an all-NULL list leaves zero ranges → every bucket prunes,
+      // which is exactly `col IN (NULL)`'s empty answer)
+      Some((attrName(a).get,
+        vs.map(litVal(_).get).filter(_ != null)
+          .map(v => (Some(v), Some(v)))))
+    case c @ (_: E.GreaterThan | _: E.GreaterThanOrEqual | _: E.LessThan |
+              _: E.LessThanOrEqual) =>
+      val b = c.asInstanceOf[E.BinaryComparison]
+      val lower = b.isInstanceOf[E.GreaterThan] ||
+        b.isInstanceOf[E.GreaterThanOrEqual]
+      // `k > v` and `v < k` both bound k from below
+      attrLit(b.left, b.right).map { case (n, v, litLeft) =>
+        (n, Seq(if (lower != litLeft) (Some(v), None) else (None, Some(v))))
+      }
+    case _ => eqPin(e).map { case (n, v) => (n, Seq((Some(v), Some(v)))) }
+  }
+
+  private def attrName(e: E.Expression): Option[String] = {
+    import org.apache.spark.sql.types._
+    def integral(t: DataType) = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    e match {
+      case a: E.Attribute => Some(a.name)
+      // the analyzer wraps BOTH comparison sides in casts to the
+      // common type (isin puts a no-op cast on the column itself);
+      // identity and integral-widening casts preserve equality and
+      // order against a coerced probe, so they are safe to see
+      // through — anything else (string/float reinterpretations)
+      // changes semantics and prunes nothing
+      case c: E.Cast if c.child.dataType == c.dataType ||
+          (integral(c.child.dataType) && integral(c.dataType)) =>
+        attrName(c.child)
+      case _ => None
+    }
+  }
+
+  private def litVal(e: E.Expression): Option[Any] = e match {
+    case l: E.Literal =>
+      Some(org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .convertToScala(l.value, l.dataType))
+    // analysis casts the LITERAL side to the column's type (an int
+    // probe against a bigint key) — the original value compares fine
+    // (lookupKeyed coerces widenings; zone compares are numeric-
+    // string based). A cast on the ATTRIBUTE side is NOT looked
+    // through: that changes comparison semantics, so prune nothing.
+    case c: E.Cast => litVal(c.child)
+    case _ => None
+  }
+
+  /** (column, literal, whether the literal is the LEFT side) of a
+    * comparison of a column with a literal, in either order.
+    */
+  private def attrLit(l: E.Expression, r: E.Expression)
+      : Option[(String, Any, Boolean)] =
+    (for (n <- attrName(l); v <- litVal(r)) yield (n, v, false))
+      .orElse(for (n <- attrName(r); v <- litVal(l)) yield (n, v, true))
+
+  // = and <=> both pin (the language's `==` is null-safe); a NULL
+  // literal pins nothing (keys are non-null by construction, and
+  // `col = NULL` matches no rows anyway) — conservative, not wrong
+  private def eqPin(e: E.Expression): Option[(String, Any)] = (e match {
+    case E.EqualTo(l, r) => attrLit(l, r)
+    case E.EqualNullSafe(l, r) => attrLit(l, r)
+    case _ => None
+  }).collect { case (n, v, _) if v != null => (n, v) }
 
   /** The zone-map pruner behind `readKeyedRange` and `readKeyedWhere`:
     * the buckets among `buckets` that the manifest's min/max stats
@@ -1064,10 +1055,10 @@ object Maintenance {
       bucketCols = if (bucketCols == keyCols) Seq.empty else bucketCols)
     val withKb = df.withColumn("kb", kb(layout))
     def staged(version: Int): KeyedManifest = {
-      val (dirs, rows, cstats, _) = stageBuckets(spark, clean, withKb,
-        version, keyCols, statsCols, nBuckets)
-      layout.copy(version = version, buckets = dirs,
-        schemaDdl = withKb.schema.toDDL, rows = rows, colStats = cstats,
+      val st = stageBuckets(spark, clean, withKb, version, keyCols,
+        statsCols, nBuckets)
+      layout.copy(version = version, buckets = st.dirs,
+        schemaDdl = withKb.schema.toDDL, rows = st.rows, colStats = st.stats,
         txn = txn, counters = counters())
     }
     if (manifestVersions(spark, dir).isEmpty) {
@@ -1226,20 +1217,25 @@ object Maintenance {
     * narrow, so a point lookup's pushed IN-list skips most row groups.
     * The same sort makes equal keys adjacent: each task counts the rows
     * whose key repeats the previous row's under the sort's null-safe
-    * ordering (n − distinct keys). Returns bucket → dir for the buckets
-    * that got rows, dir → rows, dir → zone stats and that count.
+    * ordering (n − distinct keys).
+    *
+    * With `dropHits`, `withKb` also carries the boolean `Hit` flag of a
+    * predicate DML's matching rows: each task counts them per bucket,
+    * drops them when `dropHits` is true (a delete), never writes the
+    * column, and deletes the file of a bucket without one (the bucket
+    * is unchanged). Returns `Staged`.
     */
   private def stageBuckets(spark: SparkSession, clean: String,
                            withKb: DataFrame, version: Int,
                            keyCols: Seq[String],
                            statsCols: Seq[String], nBuckets: Int,
-                           prefix: Char = 'b')
-      : (Map[Int, String], Map[String, Long],
-         Map[String, Map[String, (String, String)]], Long) = {
+                           prefix: Char = 'b',
+                           dropHits: Option[Boolean] = None): Staged = {
     import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
     import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-    import org.apache.spark.sql.catalyst.{InternalRow, expressions => E}
+    import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
     import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.OutputWriter
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     // EXPLICIT partition count (r14): AQE coalesces the session count,
     // so a small commit wrote every bucket file serially in ONE task
@@ -1255,13 +1251,18 @@ object Maintenance {
       // nullability is the optimized plan's (a folded cast is required)
       val schema = qe.executedPlan.schema
       val kbAt = schema.fieldIndex("kb")
+      val hitAt = if (dropHits.isDefined) schema.fieldIndex(Hit) else -1
+      val drop = dropHits.contains(true)
+      val outSchema = org.apache.spark.sql.types.StructType(
+        schema.filterNot(_.name == Hit))
+      val outAt = outSchema.map(f => schema.fieldIndex(f.name)).toIndexedSeq
       val keyOrd = new E.InterpretedOrdering(keyCols.map(c => E.SortOrder(
         E.BoundReference(schema.fieldIndex(c), schema(c).dataType, true),
         E.Ascending)))
       val job = Job.getInstance(spark.sessionState.newHadoopConf())
       Fs.forWrite(job.getConfiguration)
       val writers = new ParquetFileFormat()
-        .prepareWrite(spark, job, Map.empty, schema)
+        .prepareWrite(spark, job, Map.empty, outSchema)
       // one broadcast per write: in the closure every task deserializes it
       val conf = spark.sparkContext.broadcast(
         new org.apache.spark.util.SerializableConfiguration(
@@ -1271,33 +1272,63 @@ object Maintenance {
           new TaskAttemptID())
         val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
         val it = rows.buffered
-        // one file per run of equal kb; each row is written before the
-        // next is read (the sort reuses its row object: keep a copy)
+        val out = ProjectingInternalRow(outSchema, outAt)
+        // one file per run of equal kb, opened at its first kept row;
+        // each row is written before the next is read (the sort reuses
+        // its row object: keep a copy)
         Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
           val b = it.head.getInt(kbAt)
-          val w = writers.newInstance(
-            f"$clean/$prefix$b%05d_g$version%09d-$suffix-$attempt/part" +
-              writers.getFileExtension(ctx), schema, ctx)
+          val dir = new Path(clean,
+            f"$prefix$b%05d_g$version%09d-$suffix-$attempt")
+          var w: OutputWriter = null
           var prev: InternalRow = null
-          var repeats = 0L
+          var repeats, hits = 0L
           try while (it.hasNext && it.head.getInt(kbAt) == b) {
             val r = it.next()
-            if (prev != null && keyOrd.compare(r, prev) == 0) repeats += 1
-            w.write(r)
-            prev = r.copy()
-          } finally w.close()
-          val (n, cs) = footerInfo(conf.value.value, new Path(w.path),
-            statsCols)
-          (b, new Path(w.path).getParent.getName, n, cs, repeats)
+            val hit = hitAt >= 0 && r.getBoolean(hitAt)
+            if (hit) hits += 1
+            if (!(hit && drop)) {
+              if (w == null) w = writers.newInstance(
+                s"$dir/part" + writers.getFileExtension(ctx), outSchema, ctx)
+              if (prev != null && keyOrd.compare(r, prev) == 0) repeats += 1
+              out.project(r)
+              w.write(out)
+              prev = r.copy()
+            }
+          } finally if (w != null) w.close()
+          val unchanged = hitAt >= 0 && hits == 0L
+          if (w != null && unchanged)
+            dir.getFileSystem(conf.value.value).delete(dir, true)
+          if (w == null || unchanged)
+            (b, None, 0L, Map.empty[String, (String, String)], repeats, hits)
+          else {
+            val (n, cs) = footerInfo(conf.value.value, new Path(w.path),
+              statsCols)
+            (b, Some(dir.getName), n, cs, repeats, hits)
+          }
         }
       }.collect()
       finally conf.destroy()
     }
-    (written.map(x => x._1 -> x._2).toMap,
-      written.map(x => x._2 -> x._3).toMap,
-      written.collect { case (_, d, _, cs, _) if cs.nonEmpty => d -> cs }.toMap,
-      written.map(_._5).sum)
+    val files = written.collect { case (b, Some(d), n, cs, _, _) =>
+      (b, d, n, cs) }
+    Staged(files.map(x => x._1 -> x._2).toMap,
+      files.map(x => x._2 -> x._3).toMap,
+      files.collect { case (_, d, _, cs) if cs.nonEmpty => d -> cs }.toMap,
+      written.map(_._5).sum,
+      written.filter(_._6 > 0L).groupMapReduce(_._1)(_._6)(_ + _))
   }
+
+  /** The predicate-DML flag column `stageBuckets` counts (never lands). */
+  private val Hit = "__hit"
+
+  /** `stageBuckets`' result: bucket → dir of every file it left, dir →
+    * rows, dir → zone stats, repeated keys, bucket → flagged rows.
+    */
+  private final case class Staged(dirs: Map[Int, String],
+                                  rows: Map[String, Long],
+                                  stats: Map[String, Map[String, (String, String)]],
+                                  repeats: Long, hits: Map[Int, Long])
 
   /** A staged-but-uncommitted merge: every new bucket-generation dir is
     * on disk, the next manifest is computed, and NO reader can see any
@@ -1305,12 +1336,19 @@ object Maintenance {
     * snapshot-isolation property is directly testable.
     */
   private[graft] final case class PendingCommit(clean: String,
-                                                manifest: KeyedManifest)
+                                                manifest: KeyedManifest,
+                                                matched: Long = 0L)
 
+  /** Stage `merged`, the new rows of the `touched` buckets, and compute
+    * the next manifest. With `dropHits` (see `stageBuckets`), `matched`
+    * is the flagged-row count and only the buckets holding a flagged
+    * row change.
+    */
   private[graft] def stageMerge(spark: SparkSession, dir: String,
                                 merged: DataFrame, touched: Seq[Int],
                                 base: KeyedManifest,
-                                txn: Map[String, Long] = Map.empty)
+                                txn: Map[String, Long] = Map.empty,
+                                dropHits: Option[Boolean] = None)
       : PendingCommit = {
     val clean = cleanDir(dir)
     // the commit targets base.version + 1 — NOT a re-read of the
@@ -1319,25 +1357,30 @@ object Maintenance {
     // would silently drop that writer's changes. Targeting base+1
     // makes the manifest rename fail instead (CommitConflict → the
     // caller recomputes against the fresh snapshot).
-    val (staged, stagedRows, stagedStats, _) = stageBuckets(spark, clean,
-      merged, base.version + 1, base.keyCols, base.statsCols, base.nBuckets)
-    // a touched bucket that wrote no file lost ALL its rows (delete
+    val st = stageBuckets(spark, clean, merged, base.version + 1,
+      base.keyCols, base.statsCols, base.nBuckets, dropHits = dropHits)
+    // a touched bucket without a flagged row keeps its generation and
+    // chain (its task deleted the copy)
+    val changed =
+      if (dropHits.isEmpty) touched else touched.filter(st.hits.contains)
+    // a changed bucket that wrote no file lost ALL its rows (delete
     // path): it simply leaves the manifest
-    val next = base.buckets -- touched ++ staged
+    val next = base.buckets -- changed ++ st.dirs
     // a full merge of a bucket FOLDS its delta chain into the new
     // base generation (the caller merged its resolved rows), so
-    // touched buckets' deltas leave the manifest
-    val nextDeltas = base.deltas -- touched
+    // changed buckets' deltas leave the manifest
+    val nextDeltas = base.deltas -- changed
     val liveDirs = next.values.toSet ++ nextDeltas.values.flatten
-    val nextRows = base.rows.filter { case (d, _) => liveDirs(d) } ++ stagedRows
+    val nextRows = base.rows.filter { case (d, _) => liveDirs(d) } ++ st.rows
     val nextStats = base.colStats.filter { case (d, _) => liveDirs(d) } ++
-      stagedStats
+      st.stats
     // snapshot schema grows additively across merges: prior schema
     // ∪ the merged frame's (which carries any new batch columns)
-    val schema = unionSchema(base.schema, merged.schema).toDDL
+    val schema = unionSchema(base.schema, merged.drop(Hit).schema).toDDL
     PendingCommit(clean, base.copy(version = base.version + 1,
       buckets = next, schemaDdl = schema, deltas = nextDeltas,
-      rows = nextRows, colStats = nextStats, txn = base.txn ++ txn))
+      rows = nextRows, colStats = nextStats, txn = base.txn ++ txn),
+      st.hits.values.sum)
   }
 
   private[graft] def commitKeyed(spark: SparkSession,
@@ -1605,7 +1648,13 @@ object Maintenance {
   }
 
   /** Copy-on-write predicate DML: a delete when `assignments` is empty,
-    * else an update.
+    * else an update. ONE write query per attempt: the touched buckets'
+    * resolved rows carry the `Hit` flag of `cond`, and `stageBuckets`
+    * counts the flagged rows (the returned count), drops them for a
+    * delete, and keeps every bucket without one unchanged. A predicate
+    * that pins keys (`readKeyedWhere`'s point-read shapes) names its
+    * buckets on the driver; any other finds them by one probe over its
+    * pruned read. Nothing matched publishes nothing.
     */
   private def dmlKeyedWhere(spark: SparkSession, dir: String,
                             cond: Column,
@@ -1621,49 +1670,39 @@ object Maintenance {
         s"$clean resolves by sequence column '${m.seqCol}' — " +
           "predicate DML is batch-wins; append stamped deltas instead")
       // a NONDETERMINISTIC predicate would match different rows when a
-      // lost commit race re-runs the body — refuse up front (analyzed
-      // against the empty snapshot: zero IO, resolved attributes).
-      // current_timestamp()/current_date()/now() are Catalyst-
-      // "deterministic" but re-stamp per query execution, so the probe
-      // job and the rewrite job could disagree within ONE statement —
-      // refused explicitly (r13 ADVICE).
-      val det = scala.util.Try {
-        import org.apache.spark.sql.catalyst.{expressions => E}
-        val exprs = emptySnapshot(spark, m).filter(cond)
-          .queryExecution.analyzed.expressions
-        exprs.forall(_.deterministic) && !exprs.exists(_.exists {
+      // lost commit race re-runs the body; current_timestamp()-style
+      // functions are Catalyst-"deterministic" but re-stamp per query
+      // execution. Both refused. Unanalyzable: the write fails loudly.
+      val cs = analyzedConjuncts(spark, m, cond)
+      require(cs.forall(_.deterministic) && !cs.exists(_.exists {
           case _: E.CurrentTimestamp | _: E.CurrentDate | _: E.Now |
                _: E.LocalTimestamp => true
           case _ => false
-        })
-      }.getOrElse(true) // unanalyzable -> the filter below fails loudly
-      require(det, "DML predicate must be deterministic " +
+        }), "DML predicate must be deterministic " +
         "(current_timestamp/current_date re-stamp per execution — " +
         "resolve them to literals first)")
-      // matching rows AT THIS manifest version, bucket-pruned by the
-      // predicate's structure; ONE metadata job finds the buckets that
-      // actually hold matches (bounded by the leaf count)
-      val hit = readKeyedWhere(spark, clean, cond,
-        version = Some(m.version))
-      val probe = hit.agg(F.count(F.lit(1)),
-        F.collect_set(F.col("kb"))).head
-      val matched = probe.getLong(0)
-      val touched = probe.getSeq[Int](1).sorted
-      if (matched > 0L) {
+      val touched = pinnedKeys(m, cs) match {
+        case Some(ks) => keyProbe(spark, m, clean, ks)._1
+        case None => readKeyedWhere(spark, clean, cond,
+          version = Some(m.version)).agg(F.collect_set(F.col("kb"))).head
+          .getSeq[Int](0).sorted
+      }
+      if (touched.isEmpty) 0L
+      else {
         val resolved = resolveBuckets(spark, clean, m, touched)
         // cond is NULL-safe SQL semantics: NULL matches nothing, so a
         // delete KEEPS NULL-cond rows and an update leaves them alone
-        val matches = F.coalesce(cond, F.lit(false))
+        val hit = F.coalesce(cond, F.lit(false))
         val amap = assignments.toMap
-        val out =
-          if (amap.isEmpty) resolved.filter(!matches)
-          else resolved.select(resolved.columns.toSeq.map { c =>
-            amap.get(c).fold(F.col(c))(e =>
-              F.when(matches, e).otherwise(F.col(c)).as(c))
-          }: _*)
-        commitKeyed(spark, stageMerge(spark, clean, out, touched, m))
+        val out = resolved.select(resolved.columns.toSeq.map { c =>
+          amap.get(c).fold(F.col(c))(e =>
+            F.when(hit, e).otherwise(F.col(c)).as(c))
+        } :+ hit.as(Hit): _*)
+        val pending = stageMerge(spark, clean, out, touched, m,
+          dropHits = Some(amap.isEmpty))
+        if (pending.matched > 0L) commitKeyed(spark, pending)
+        pending.matched
       }
-      matched
     }
   }
 
@@ -1829,17 +1868,17 @@ object Maintenance {
     // the rows that would commit: duplicate keys at one precedence level
     // have no resolution order, so refuse before publishing and delete
     // the unreferenced stagings.
-    val (staged, stagedRows, stagedStats, repeats) = stageBuckets(spark,
-      clean, withKb, m0.version + 1, keyCols, m0.statsCols, nBuckets, 'd')
+    val st = stageBuckets(spark, clean, withKb, m0.version + 1, keyCols,
+      m0.statsCols, nBuckets, 'd')
     val added = counters()
     // a batch with no rows still commits what it adds to the counters
     // (a search index's documents without tokens count in n_docs)
-    if (staged.isEmpty && added.values.forall(_ == 0L)) return 0L
-    if (repeats != 0L) {
+    if (st.dirs.isEmpty && added.values.forall(_ == 0L)) return 0L
+    if (st.repeats != 0L) {
       val fs = hadoopFs(spark, new Path(clean))
-      staged.values.foreach(d => fs.delete(new Path(clean, d), true))
+      st.dirs.values.foreach(d => fs.delete(new Path(clean, d), true))
       throw new IllegalArgumentException(
-        s"appendDeltaKeyed($clean): $repeats " +
+        s"appendDeltaKeyed($clean): ${st.repeats} " +
           "duplicate keys within one call — a delta level has no " +
           "intra-level resolution order; reduce the batch per key first " +
           "(cdcMergeKeyed does this by sequence)")
@@ -1855,19 +1894,19 @@ object Maintenance {
         s"keyed table $clean re-bootstrapped/re-bucketed to " +
           s"(${m.keyCol}, ${m.nBuckets}) buckets mid-append; caller " +
           s"staged for ($keyCol, $nBuckets) — re-run the append")
-      val nextDeltas = m.deltas ++ staged.map { case (b, d) =>
+      val nextDeltas = m.deltas ++ st.dirs.map { case (b, d) =>
         b -> (m.chain(b) :+ d)
       }
       val schema = unionSchema(m.schema,
         withKb.drop("__tomb").schema).toDDL
       writeManifest(spark, clean, m.copy(version = m.version + 1,
-        schemaDdl = schema, deltas = nextDeltas, rows = m.rows ++ stagedRows,
-        colStats = m.colStats ++ stagedStats, txn = m.txn ++ txn,
+        schemaDdl = schema, deltas = nextDeltas, rows = m.rows ++ st.rows,
+        colStats = m.colStats ++ st.stats, txn = m.txn ++ txn,
         seqCol = seqEff.getOrElse(m.seqCol),
         counters = m.counters ++ added.map { case (k, v) =>
           k -> (m.counters.getOrElse(k, 0L) + v) }))
     }
-    stagedRows.values.sum
+    st.rows.values.sum
   }
 
   /** Fold merge-on-read delta chains back into base generations: the
@@ -1998,23 +2037,25 @@ object Maintenance {
         val cleared = ds - p - sib
         if (d - 1 == 0) cleared else cleared + (p -> (d - 1))
       }
-      val children = pairs.flatMap { case (p, sib, _) => Seq(p, sib) }
-      val live = m.liveBuckets(children)
-      if (live.isEmpty) {
-        // depth-only commit: the merged leaves held no rows
-        writeManifest(spark, clean,
-          m.copy(version = m.version + 1, depths = newDepths))
-      } else {
-        // resolve by the table's own discipline (chains fold here,
-        // exactly like their compaction), rehash under the SHRUNK map
-        // — every row lands in its pair's parent leaf
-        val rehashed = resolveBuckets(spark, clean, m, live)
-          .withColumn("kb", kb(m.copy(depths = newDepths)))
-        val pending = stageMerge(spark, dir, rehashed, children, m)
-        commitKeyed(spark,
-          pending.copy(manifest = pending.manifest.copy(depths = newDepths)))
-      }
+      // under the SHRUNK map every row lands in its pair's parent leaf
+      relayout(spark, dir, m,
+        pairs.flatMap { case (p, sib, _) => Seq(p, sib) }, newDepths)
     }
+  }
+
+  /** Commit `m` under the depth map `depths`: the live rows of
+    * `buckets`, resolved by the table's own discipline (chains fold,
+    * exactly like their compaction), rehash into their new leaves as
+    * one staged generation; with no live row it is a depth-only commit.
+    */
+  private def relayout(spark: SparkSession, dir: String, m: KeyedManifest,
+                       buckets: Seq[Int], depths: Map[Int, Int]): Unit = {
+    val live = m.liveBuckets(buckets)
+    val next =
+      if (live.isEmpty) m.copy(version = m.version + 1)
+      else stageMerge(spark, dir, resolveBuckets(spark, dir, m, live)
+        .withColumn("kb", kb(m.copy(depths = depths))), buckets, m).manifest
+    writeManifest(spark, cleanDir(dir), next.copy(depths = depths))
   }
 
   /** ONE maintenance pass — the policy loop over `splitCandidates` +
@@ -2117,45 +2158,33 @@ object Maintenance {
       require((n.toLong << dmax) <= 100000,
         s"splitKeyed($clean): depth $dmax over $n base buckets exceeds " +
           "the 100000-leaf layout cap")
-      val live = m.liveBuckets(targets)
-      if (live.isEmpty) {
-        // depth-only commit: the split buckets held no rows
-        writeManifest(spark, clean,
-          m.copy(version = m.version + 1, depths = newDepths))
-      } else {
-        // resolve the split buckets' rows by the table's own
-        // discipline (chains fold here, exactly like their compaction)
-        val rehashed = resolveBuckets(spark, clean, m, live)
-          .withColumn("kb", kb(m.copy(depths = newDepths)))
-        val pending = stageMerge(spark, dir, rehashed, targets, m)
-        commitKeyed(spark,
-          pending.copy(manifest = pending.manifest.copy(depths = newDepths)))
-      }
+      relayout(spark, dir, m, targets, newDepths)
     }
   }
 
   /** Point lookup on the keyed table: the rows whose key is in `keys`,
-    * reading ONLY the bucket dirs those keys hash into — the read-side
-    * twin of the merge's path pruning. The table's own manifest
-    * metadata supplies keyCol and bucket count (never a caller guess),
-    * so the cost is O(|keys| buckets' files), independent of table
-    * size: this is what a 100 TB key-value probe should cost.
-    *
-    * Works for EVERY key type the table can store: the probe buckets
-    * are the ENGINE'S OWN bucket hash of a tiny local key frame
-    * (`bucketsOf`: no Spark job), bit-identical to the stored layout
-    * for every key type. A key with a NULL component pins no bucket
-    * and matches no row, as `k = NULL` does. Composite-key tables take
-    * each key as a Seq of the components in manifest order.
-    * `version` pins the snapshot the probe answers from (time-travel
-    * point reads, and the pinned-frame selection path) — latest when
-    * None.
+    * reading ONLY the bucket dirs those keys hash into (`keyProbe`), so
+    * the cost is O(|keys| buckets' files), independent of table size.
+    * A key with a NULL component matches no row, as `k = NULL` does.
+    * Composite-key tables take each key as a Seq of the components in
+    * manifest order. `version` pins the snapshot the probe answers from
+    * (time travel, the pinned-frame selection path); latest when None.
     */
   def lookupKeyed(spark: SparkSession, dir: String,
                   keys: Seq[Any], version: Option[Int] = None): DataFrame = {
     require(keys.nonEmpty, "lookupKeyed: no keys")
-    val clean = cleanDir(dir)
     val m = readManifest(spark, dir, version)
+    val (touched, filt) = keyProbe(spark, m, cleanDir(dir), keys)
+    resolveBuckets(spark, dir, m, touched, Some(filt))
+  }
+
+  /** The buckets under `m` that hold `keys` and the filter matching
+    * exactly those keys. The buckets are the engine's own hash of a tiny
+    * local key frame (`bucketsOf`: no Spark job), bit-identical to the
+    * stored layout for every key type; a NULL component pins nothing.
+    */
+  private def keyProbe(spark: SparkSession, m: KeyedManifest, clean: String,
+                       keys: Seq[Any]): (Seq[Int], Column) = {
     require(m.nBuckets > 0,
       s"$clean has no keyed metadata (a commit group)")
     val keyCols = m.keyCols
@@ -2190,7 +2219,7 @@ object Maintenance {
     import scala.jdk.CollectionConverters._
     val touched = bucketsOf(m, spark.createDataFrame(rows.asJava,
       StructType(keyFields.map(f => StructField(f.name, f.dataType)))))
-    // native-typed IN-list (not a string cast) so the predicate
+    // native-typed key values (not a string cast) so the predicate
     // PUSHES into the parquet scan of EVERY chain level and the
     // within-bucket key sort lets row-group min/max stats skip most
     // of each bucket file; delta chains resolve AFTER the pushed
@@ -2198,13 +2227,37 @@ object Maintenance {
     // across chain levels, so a key filter is resolution-invariant)
     val filt =
       if (keyCols.length == 1)
-        F.col(keyCols.head).isin(
-          tuples.map(t => coerce(t.head, keyFields.head.dataType)): _*)
+        inSetOf(spark, keyFields.head,
+          rows.map(_.get(0)).distinct)
       else tuples.map(t =>
         t.zip(keyFields).map { case (v, f) =>
           F.col(f.name) === F.lit(coerce(v, f.dataType))
         }.reduce(_ && _)).reduce(_ || _)
-    resolveBuckets(spark, clean, m, touched, Some(filt))
+    (touched, filt)
+  }
+
+  /** `field IN values` as an `InSet` at any size when every value's
+    * literal type is the field's (else `isin`, whose `In` inlines its
+    * literals into generated code: a class per fresh small key set).
+    * Parquet pushdown stays: `DataSourceStrategy` translates InSet.
+    */
+  private def inSetOf(spark: SparkSession,
+                      field: org.apache.spark.sql.types.StructField,
+                      values: Seq[Any]): Column = {
+    val fn = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_in_set")
+    val registry = spark.sessionState.functionRegistry
+    if (!values.forall(v => scala.util.Try(E.Literal(v).dataType).toOption
+        .contains(field.dataType)))
+      return F.col(field.name).isin(values: _*)
+    if (!registry.functionExists(fn))
+      registry.registerFunction(fn,
+        new E.ExpressionInfo(classOf[E.InSet].getName, fn.funcName),
+        // a HashSet at every size: the code casts to the set's class,
+        // and sets of 1-4 elements each have their own
+        (es: Seq[E.Expression]) => E.InSet(es.head,
+          scala.collection.immutable.HashSet.from(
+            es.tail.map(_.asInstanceOf[E.Literal].value))))
+    F.call_function(fn.funcName, F.col(field.name) +: values.map(F.lit): _*)
   }
 
   /** Changelog between two snapshots of the keyed table: one row per
@@ -2963,12 +3016,13 @@ object Maintenance {
     * (which FOLDS partials into existing rows — correct only for
     * insert-only feeds), replace handles updates and deletes, and is
     * IDEMPOTENT: re-running the same refresh reproduces the same state.
-    * `txn` lands in the same commit (a view's watermark), which is
-    * published even when no state row changed.
+    * `txn` lands in the same commit (a view's watermark).
     *
-    * Cost: O(state) to locate the condemned rows (the state is orders
-    * smaller than its base by construction) plus a rewrite of only the
-    * state buckets holding condemned or fresh rows.
+    * Cost: ONE write query. The state is bucketed on `tagCol` alone, so
+    * the condemned rows and the partial's sit in the tags' own buckets
+    * (`bucketsOf`, on the driver), the only ones read and rewritten. The
+    * partial is computed in the write (a retry recomputes it from its
+    * pinned inputs); a row of it outside `tags` fails the write job.
     */
   private[graft] def replaceAggStateByTag(spark: SparkSession, dir: String,
                                          partial: DataFrame, tagCol: String,
@@ -2976,45 +3030,24 @@ object Maintenance {
                                          txn: Map[String, Long]): Unit = {
     require(tags.nonEmpty, "replaceAggStateByTag: no tags")
     val clean = cleanDir(dir)
-    // freeze the caller's partial BEFORE the retry loop: its lineage
-    // reads the BASE table, and a commit conflict must not re-scan it
-    val part0 = partial.localCheckpoint()
     withCommitRetry(s"replaceAggStateByTag($dir)") {
       val m = readManifest(spark, dir)
-      require(m.resolve == "agg",
-        s"$clean is not a bucketed agg state (resolve='${m.resolve}')")
-      require(m.keyCols.contains(tagCol),
-        s"$clean is keyed on (${m.keyCol}) — no tag column '$tagCol'")
-      val st = resolveBuckets(spark, clean, m, m.liveBuckets())
-      val cond = F.col(tagCol).isin(tags: _*)
-      val partKb = part0.withColumn("kb",
-        kb(m))
-      // ONE probe job (r15; was three — an isEmpty guard plus one
-      // distinct-collect per side, each a job + a driver gap on a path
-      // the profiler showed is job-count bound): a tagged union folds
-      // the outside-tag guard count and BOTH sides' touched-bucket
-      // sets into a single aggregate over (checkpointed partial ∪
-      // replaced state rows).
-      val probe = partKb.select(F.col("kb"),
-          F.when(!cond, 1L).otherwise(0L).as("__bad"))
-        .unionByName(st.filter(cond).select(F.col("kb"),
-          F.lit(0L).as("__bad")))
-        .agg(F.collect_set(F.col("kb")).as("kbs"),
-          F.coalesce(F.sum(F.col("__bad")), F.lit(0L)).as("bad"))
-        .head
-      require(probe.getLong(1) == 0L,
-        s"replaceAggStateByTag($clean): partial carries rows outside " +
-          s"the replaced tag set — those would merge, not replace")
-      val touched = probe.getSeq[Int](0).distinct.sorted
-      if (touched.nonEmpty) {
-        val touchedCol = F.col("kb").isin(touched: _*)
-        val merged = st.filter(touchedCol && !cond)
-          .unionByName(partKb.filter(touchedCol),
-            allowMissingColumns = true)
-        commitKeyed(spark, stageMerge(spark, dir, merged, touched, m, txn))
-      } else if (txn.nonEmpty)
-        writeManifest(spark, clean,
-          m.copy(version = m.version + 1, txn = m.txn ++ txn))
+      require(m.resolve == "agg" && m.bucketKey == Seq(tagCol),
+        s"$clean is not an agg state bucketed on '$tagCol' (resolve=" +
+          s"'${m.resolve}', bucket key ${m.bucketKey.mkString(",")})")
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+      val touched = bucketsOf(m, spark.createDataFrame(
+        tags.map(org.apache.spark.sql.Row(_)).asJava,
+        StructType(Seq(StructField(tagCol, IntegerType)))))
+      val cond = F.coalesce(F.col(tagCol).isin(tags: _*), F.lit(false))
+      val partKb = partial.withColumn("kb", F.when(!cond, F.raise_error(
+        F.lit(s"replaceAggStateByTag($clean): partial carries rows " +
+          "outside the replaced tag set — those would merge, not replace")))
+        .otherwise(kb(m)).cast(IntegerType))
+      val merged = resolveBuckets(spark, clean, m, touched).filter(!cond)
+        .unionByName(partKb, allowMissingColumns = true)
+      commitKeyed(spark, stageMerge(spark, dir, merged, touched, m, txn))
     }
   }
 

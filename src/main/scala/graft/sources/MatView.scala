@@ -228,19 +228,38 @@ object MatView {
               sampleK: Int = 0,
               sampleUnique: Option[String] = None): MvDef = {
     val base = clean(baseDir)
+    val v0 = buildState(spark, base, mvDir, keys, Some(BucketTagCol),
+      valueCols, nBuckets, distinctKey, 12, sampleK, sampleUnique)
+    register(spark, mvDir, base, valueCols, distinctKey, floatSums,
+      baseVersion = Some(v0))
+  }
+
+  /** Build the state of `base`'s pinned snapshot at `mvDir` and return
+    * that pinned version, which the build's commit records as the
+    * watermark. A bucket-grain state keys on (`tag`, keys...) and
+    * buckets on the tag alone, so a base bucket's partials all sit in
+    * one state bucket that `replaceAggStateByTag` finds on the driver.
+    */
+  private def buildState(spark: SparkSession, base: String, mvDir: String,
+                         keys: Seq[String], tag: Option[String],
+                         valueCols: Seq[String], nBuckets: Int,
+                         distinctKey: Option[String], p: Int, sampleK: Int,
+                         sampleUnique: Option[String]): Int = {
     val (rows, v0) = Maintenance.readKeyedPinned(spark, base)
     require(rows.columns.contains("kb"),
       s"$base is not a manifest-keyed table (no kb column)")
-    require(!rows.columns.contains(BucketTagCol),
+    require(tag.forall(!rows.columns.contains(_)),
       s"$base already has a '$BucketTagCol' column — bucket-grain " +
         "views reserve that name")
-    Maintenance.buildAggStateKeyedCols(
-      rows.withColumn(BucketTagCol, F.col("kb")), mvDir,
-      keys :+ BucketTagCol, valueCols, nBuckets,
-      distinctKey = distinctKey, sampleK = sampleK,
-      sampleUnique = sampleUnique, txn = Map(base -> v0.toLong))
-    register(spark, mvDir, base, valueCols, distinctKey, floatSums,
-      baseVersion = Some(v0))
+    val mv = new Path(clean(mvDir))
+    mv.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(mv, true)
+    Maintenance.writeKeyedInternal(Maintenance.partialAggCols(
+        tag.fold(rows)(rows.withColumn(_, F.col("kb"))), tag.toSeq ++ keys,
+        valueCols, distinctKey, p, sampleK, sampleUnique),
+      mvDir, tag.toSeq ++ keys, nBuckets, Seq.empty, resolve = "agg",
+      txn = Map(base -> v0.toLong), aggP = p, aggK = sampleK,
+      aggSU = sampleUnique.getOrElse(""), bucketCols = tag.toSeq)
+    v0
   }
 
   /** Re-arm the watermark after the caller merged the base's changes
@@ -276,37 +295,27 @@ object MatView {
     */
   def rebuildMv(spark: SparkSession, mvDir: String): MvDef = {
     val d = registered(mvDir)
-    val mv = d.mvDir
-    val m = Maintenance.readManifest(spark, mv)
-    val su = Option(m.aggSU).filter(_.nonEmpty)
-    val (rows, v0) = Maintenance.readKeyedPinned(spark, d.baseDir)
-    val df = d.bucketTag match {
-      case Some(tag) => rows.withColumn(tag, F.col("kb"))
-      case None => rows
-    }
-    Maintenance.buildAggStateKeyedCols(
-      df, mv, d.keys ++ d.bucketTag, d.valueCols,
-      m.nBuckets, distinctKey = d.distinctKey,
-      p = m.aggP,
-      sampleK = m.aggK, sampleUnique = su,
-      txn = Map(d.baseDir -> v0.toLong))
-    armed(d, v0)
+    val m = Maintenance.readManifest(spark, d.mvDir)
+    armed(d, buildState(spark, d.baseDir, d.mvDir, d.keys, d.bucketTag,
+      d.valueCols, m.nBuckets, d.distinctKey, m.aggP, m.aggK,
+      Option(m.aggSU).filter(_.nonEmpty)))
   }
 
   /** INCREMENTAL refresh from the base's own change history — one
     * call, cost ∝ the base buckets that changed since the watermark:
-    * the two manifests say which buckets moved (zero data IO), the
-    * changed buckets' CURRENT rows re-aggregate into per-(group,
-    * bucket) partials, and `replaceAggStateByTag` swaps exactly those
-    * tags' state rows and moves the watermark in ONE commit (the
-    * watermark alone when no bucket changed; nothing when up to date).
+    * the two manifests say which buckets moved (zero data IO), and ONE
+    * write query re-aggregates the changed buckets' CURRENT rows into
+    * per-(group, bucket) partials while `replaceAggStateByTag` swaps
+    * exactly those tags' state rows and moves the watermark in the same
+    * commit (the watermark alone when no bucket changed; nothing when
+    * up to date).
     * Handles upserts, deletes, delta appends, and splits (a split
     * bucket's old tag is condemned, its children's partials land under
     * the new ids). Re-running after a crash replays the SAME replace —
     * idempotent by construction. Falls back to `rebuildMv` when the
-    * view has no bucket tag, the base re-bootstrapped, or a forced
-    * vacuum dropped the watermark manifest (the registration floors
-    * the base's vacuum at the watermark).
+    * view's state is not bucketed on its tag, the base re-bootstrapped,
+    * or a forced vacuum dropped the watermark manifest (the
+    * registration floors the base's vacuum at the watermark).
     */
   def refreshMvIncremental(spark: SparkSession, mvDir: String): MvDef = {
     val d = registered(mvDir)
@@ -315,8 +324,10 @@ object MatView {
     val from = watermark(mSt, d.baseDir)
     val head = Maintenance.manifestVersions(spark, d.baseDir).last
     if (head == from) return armed(d, head)
-    if (d.bucketTag.isEmpty) return rebuildMv(spark, mv)
-    val tag = d.bucketTag.get
+    // a state not bucketed on its tag (no tag, or a layout older than
+    // the tag prefix) cannot replace in place: rebuild it
+    val tag = d.bucketTag.filter(t => mSt.bucketKey == Seq(t))
+      .getOrElse(return rebuildMv(spark, mv))
     val (mFrom, mTo) =
       try (Maintenance.readManifest(spark, d.baseDir, Some(from)),
         Maintenance.readManifest(spark, d.baseDir, Some(head)))

@@ -1893,22 +1893,31 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   /** Spark jobs `body` starts on this thread. */
-  private def jobsOf(body: => Unit): Int = {
+  private def jobsOf(body: => Unit): Int = jobStats(body)._1
+
+  /** Spark jobs `body` starts on this thread, and the distinct SQL
+    * executions (queries) they ran under.
+    */
+  private def jobStats(body: => Unit): (Int, Int) = {
     val group = "graft-jobpin"
+    val execs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (Option(js.properties).exists(
-              _.getProperty("spark.jobGroup.id") == group))
+              _.getProperty("spark.jobGroup.id") == group)) {
           jobs.incrementAndGet()
+          execs.add(String.valueOf(
+            js.properties.getProperty("spark.sql.execution.id")))
+        }
     }
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setJobGroup(group, "keyed commit job pin")
     try {
       body
       Thread.sleep(300) // let listener events drain
-      jobs.get
+      (jobs.get, execs.size)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
@@ -1953,11 +1962,12 @@ class MaintenanceSpec extends SparkSpec {
     MV.buildMv(spark, dir, mvDir, Seq("g"), Seq("v"), 8)
     M.upsertKeyed(spark, dir, (0L until 60L).map(i =>
       (i * 31, i % 7, i * 1000)).toDF("k", "g", "v"), "k", 16)
-    // the refresh reads the chain-free state through resolveBuckets; a
-    // state read that planned an extra scan, probe or exchange would
-    // move this pin
-    val refresh = jobsOf(MV.refreshMvIncremental(spark, mvDir))
-    assert(refresh == 6, s"the MV refresh ran $refresh jobs")
+    // ONE write query: the partial's aggregate exchange, the stage's
+    // repartition and its write. A probe of the state, a checkpoint of
+    // the partial or a read of untouched state buckets would move this pin
+    val (refresh, queries) = jobStats(MV.refreshMvIncremental(spark, mvDir))
+    assert(refresh == 3 && queries == 1,
+      s"the MV refresh ran $refresh jobs in $queries queries")
     val scan = M.readKeyed(spark, dir).groupBy("g")
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -1966,5 +1976,84 @@ class MaintenanceSpec extends SparkSpec {
       .toMap
     assert(view == scan)
     MV.unregister(spark, mvDir)
+  }
+
+  test("a key-pinned predicate delete runs one write query; a pinned bucket without a match keeps its generation") {
+    val M = Maintenance
+    val dir = tmp("graft_deljobpin")
+    M.writeKeyed(spark.range(0, 100).select(col("id").as("k"),
+      col("id").as("v")), dir, "k", 4)
+    val m0 = M.readManifest(spark, dir)
+    def bucketOf(k: Long) = M.bucketsOf(m0, Seq(k).toDF("k")).head
+    val hitBuckets = Seq(3L, 50L).map(bucketOf).toSet
+    // two absent keys, one of them in a bucket no live key hits
+    val absent = (1000L until 2000L).find(k => !hitBuckets(bucketOf(k))).get
+    val noHit = bucketOf(absent)
+    var n = -1L
+    val (jobs, queries) = jobStats {
+      n = M.deleteKeyedWhere(spark, dir, col("k").isin(3L, 50L, 999L, absent))
+    }
+    // the stage job's two (shuffle map + write) and no probe of the
+    // matching rows before it
+    assert(n == 2L && jobs == 2 && queries == 1,
+      s"deleted $n rows in $jobs jobs and $queries queries")
+    val got = M.readKeyed(spark, dir).select("k", "v").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (0L until 100L).map(k => k -> k).toMap - 3L - 50L)
+    val m1 = M.readManifest(spark, dir)
+    assert(m1.version == m0.version + 1)
+    assert(m1.buckets(noHit) == m0.buckets(noHit),
+      "a pinned bucket without a match was rewritten")
+    hitBuckets.foreach(b => assert(m1.buckets(b) != m0.buckets(b)))
+    // its task removed the copy it wrote
+    val staged = new java.io.File(dir).list().toSeq
+      .filter(_.startsWith(f"b$noHit%05d_g${m1.version}%09d"))
+    assert(staged.isEmpty, s"left unreferenced copies: $staged")
+    // nothing matched: nothing published
+    assert(M.deleteKeyedWhere(spark, dir, col("k").isin(3L, absent)) == 0L)
+    assert(M.readManifest(spark, dir).version == m1.version)
+  }
+
+  test("replaceAggStateByTag: a partial row outside the replaced tags fails the write and commits nothing") {
+    val M = Maintenance
+    val MV = graft.sources.MatView
+    val dir = tmp("graft_replguard")
+    val mvDir = tmp("graft_replguard_mv")
+    M.writeKeyed(spark.range(0, 200).select(col("id").as("k"),
+      (col("id") % 7).as("g"), col("id").as("v")), dir, "k", 4)
+    MV.buildMv(spark, dir, mvDir, Seq("g"), Seq("v"), 2)
+    val before = M.manifestVersions(spark, mvDir)
+    val view = MV.readMv(spark, mvDir).collect().toSet
+    // the state's own rows are partials of every tag; replace one tag
+    val partial = M.readKeyed(spark, mvDir).drop("kb")
+    val err = intercept[Exception] {
+      M.replaceAggStateByTag(spark, mvDir, partial, MV.BucketTagCol, Seq(0),
+        Map(dir -> 99L))
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage)
+        .contains("outside the replaced tag set")), err.toString)
+    assert(M.manifestVersions(spark, mvDir) == before)
+    assert(MV.readMv(spark, mvDir).collect().toSet == view)
+    MV.unregister(spark, mvDir)
+  }
+
+  test("lookupKeyed: fresh small key sets compile no new code after the first") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val M = Maintenance
+    val dir = tmp("graft_lkcodegen")
+    M.writeKeyed(spark.range(0, 1000).select(col("id").as("k"),
+      (col("id") * 3).as("v")), dir, "k", 8)
+    assert(M.lookupKeyed(spark, dir, Seq(1L, 2L, 3L)).collect().length == 3)
+    // an IN-list of literals inlines them into the generated code: each
+    // fresh set below the InSet threshold compiled its own classes
+    val sets = Seq(Seq(17L), Seq(5L, 900L, 33L, 41L),
+      (100L until 110L), Seq(7L, 8L))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    sets.foreach(ks =>
+      assert(M.lookupKeyed(spark, dir, ks).collect().map(_.getLong(0)).toSet ==
+        ks.toSet))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiles == 0, s"lookups 2-5 compiled $compiles classes")
   }
 }
